@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: every registered query on SPARK_GRAFT_SF_DIR,
   * one JSON line. A failing query reports an explicit "err" marker (and a
@@ -66,14 +65,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.core.Graft.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Graft.session("graft-bench", cpus, cpus.toInt)
     // warm the JVM/codegen/scan/agg/join paths so the first measured query
     // isn't charged for JIT + classloading (~5s on a cold session)
     locally {
@@ -150,12 +142,14 @@ object Bench {
     }
     val repeat = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEAT", "2").toInt
     var gcs = Map.empty[String, Long]
+    var compiles = Map.empty[String, Long]
     // per query: min over passes of the successful runs (-1 only if EVERY
     // pass failed — a flaky pass must not mask a broken query, and a
     // broken pass must not hide a working one)
     var best = Map.empty[String, Double]
     def runOne(q: Q, pass: String): Unit = {
       val gc0 = gcTotalMs
+      val cc0 = graft.core.Graft.codegenCompiles
       val t0 = System.nanoTime()
       val ok =
         // execute the query's OWN physical plan (toRdd) — a .count() would
@@ -173,11 +167,13 @@ object Bench {
       // published gc_ms must describe the same run as the seconds, or
       // the "slow with flat gc => host noise" triage misfires
       val gcMs = gcTotalMs - gc0
+      val ccN = graft.core.Graft.codegenCompiles - cc0
       sweep()
-      System.err.println(f"[bench] pass $pass ${q.name} ${sec}%.3f s gc $gcMs ms")
+      System.err.println(f"[bench] pass $pass ${q.name} ${sec}%.3f s gc $gcMs ms compiles $ccN")
       if (ok && sec < best.getOrElse(q.name, Double.MaxValue)) {
         best += q.name -> sec
         gcs += q.name -> gcMs
+        compiles += q.name -> ccN
       }
     }
     for (pass <- 1 to repeat)
@@ -196,8 +192,10 @@ object Bench {
     val results = selected.toVector.map(q => q.name -> best.getOrElse(q.name, -1.0))
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val gcJson = results.map { case (k, _) => "\"" + k + "\":" + gcs.getOrElse(k, 0L) }
-      .mkString("{", ",", "}")
+    def perQuery(m: Map[String, Long]) =
+      results.map { case (k, _) => "\"" + k + "\":" + m.getOrElse(k, 0L) }
+        .mkString("{", ",", "}")
+    val gcJson = perQuery(gcs)
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
     // report only queries that failed EVERY pass (flaky single-pass
     // failures still show in stderr)
@@ -207,11 +205,13 @@ object Bench {
     val calibParPost = calibParMs
     val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"gc_ms":$gcJson,"errors":$errJson,"calib_spin_ms":$calibPre,"calib_spin_ms_post":$calibPost,"calib_par_ms":$calibParPre,"calib_par_ms_post":$calibParPost,"sf":"$sfDir"}"""
     // full-fidelity record goes to a file (benchgate + gate.sh read it);
-    // written BEFORE the stdout lines so the stderr note can't trail them
+    // written BEFORE the stdout lines so the stderr note can't trail them;
+    // only it carries codegen_compiles (of each query's min pass; ~0 warm)
     scala.util.Try {
       val p = java.nio.file.Paths.get("target/bench_latest.json")
       java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.write(p, (json + "\n").getBytes("UTF-8"))
+      val record = json.dropRight(1) + s""","codegen_compiles":${perQuery(compiles)}}"""
+      java.nio.file.Files.write(p, (record + "\n").getBytes("UTF-8"))
       System.err.println(s"[bench] wrote ${p.toAbsolutePath}")
     }
     println(json)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Fresh-session serve CLI for a persisted k-NN index — the daily-pipeline
@@ -41,13 +40,7 @@ object KnnServeMain {
     }
     val indexPath = args(0)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.core.Graft.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Graft.session("graft-knn-serve", cpus, cpus.toInt)
     // serving posture: pin the NARROW artifacts (ids/cells/ranks — ~1% of
     // the index bytes) so the serve's repeated uses don't re-list the
     // cell-partitioned store; the wide vector/code tables stream from disk
@@ -119,13 +112,7 @@ object RagServeMain {
       sys.exit(2)
     } else 20
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.core.Graft.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Graft.session("graft-rag-serve", cpus, cpus.toInt)
     val t0 = System.nanoTime()
     var v = graft.core.IndexStore.latest(spark, indexPath).getOrElse(
       sys.error(s"RagServeMain: no committed index at $indexPath")).version

@@ -16,14 +16,7 @@ object PlanDump {
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "plans/r20")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "before")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.core.Graft.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Graft.session("graft-plandump", cpus, cpus.toInt)
     val byName = SparkEntry.registry.map(q => q.name -> q).toMap
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     args.foreach { name =>

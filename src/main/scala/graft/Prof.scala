@@ -8,19 +8,14 @@ package graft
   *
   * Usage: SPARK_GRAFT_SF_DIR=... tools/run.sh graft.Prof <lane> [lane...]
   * Lanes: rag_disk, rag_stream, knn_persisted, cc_incremental, ...
+  * PHASE lines also count generated classes compiled: name a lane twice,
+  * and a warm phase that still compiles has outgrown the codegen cache.
   */
 object Prof {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.core.Graft.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Graft.session("graft-prof", cpus, cpus.toInt)
     // per-job seconds with descriptions, so phases decompose into jobs
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
@@ -68,10 +63,12 @@ object Prof {
       })
     def phase[T](name: String)(f: => T): T = {
       spark.sparkContext.setJobDescription(name)
+      val cc0 = graft.core.Graft.codegenCompiles
       val t0 = System.nanoTime()
       val r = f
       val sec = (System.nanoTime() - t0) / 1e9
-      System.err.println(f"[prof] PHASE $name%-28s ${sec}%7.3f s")
+      val cc = graft.core.Graft.codegenCompiles - cc0
+      System.err.println(f"[prof] PHASE $name%-28s ${sec}%7.3f s  compiles $cc%5d")
       spark.sparkContext.setJobDescription(null)
       r
     }

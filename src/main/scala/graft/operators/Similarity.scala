@@ -1446,15 +1446,22 @@ object Similarity {
     // the array elements — the former posexplode multiplied the corpus
     // by dims through a shuffle before aggregating; this shape partial-
     // aggregates map-side to ONE row (guide §2.3), same exact stats.
-    // dims probes one row (vectors are fixed-width by contract).
+    // dims probes one row; the same job checks the fixed-width contract
+    // over every row (a separate width pass costs k-NN arcs a shuffle
+    // job), so a ragged corpus fails loudly instead of dropping dims from
+    // the overflow budget. `get` reads null past a short row's end.
     val dims = corpus.select(size(col("xvec")).as("d")).first().getInt(0)
-    val aggs = (0 until dims).flatMap(d => Seq(
-      min(col("xs")(d)).as(s"mn$d"), max(col("xs")(d)).as(s"mx$d")))
+    val aggs = Seq(min(array_size(col("xs"))), max(array_size(col("xs")))) ++
+      (0 until dims).flatMap(d => Seq(
+        min(get(col("xs"), lit(d))).as(s"mn$d"), max(get(col("xs"), lit(d))).as(s"mx$d")))
     val row = corpus.select(scaled(col("xvec")).as("xs"))
       .agg(aggs.head, aggs.tail: _*)
       .first()
+    require(row.getInt(0) == dims && row.getInt(1) == dims,
+      s"sq8 stats: ragged corpus — vector widths range over " +
+        s"[${row.getInt(0)}, ${row.getInt(1)}]; SQ8 needs one fixed width")
     val stats = (0 until dims).map(d =>
-      (row.getLong(2 * d), row.getLong(2 * d + 1)))
+      (row.getLong(2 + 2 * d), row.getLong(3 + 2 * d)))
     val maxAbs = stats.map(s => math.max(math.abs(s._1), math.abs(s._2))).max
     val budget = sq8Budget(dims)
     require(maxAbs <= budget,

@@ -1087,6 +1087,10 @@ object MiscQueries {
     // Same aggregates, same values — the second scan is far cheaper
     // than sorting the expanded stream (and prunes to the same 5
     // columns).
+    // SNAPSHOT ASSUMPTION: the two scans read lineitem independently, so
+    // the row is consistent only while the table is immutable (true of
+    // the fixtures); on mutable data ndv could come from another snapshot
+    // than n_rows/nulls/min/max — profile a checkpointed base then.
     val base = table(s, dir, "lineitem").select(cols.map(col): _*)
     val mmAggs = count(lit(1)).as("n_rows") +: cols.flatMap(c => Seq(
       count(col(c)).as(s"nn_$c"),

@@ -18,6 +18,8 @@ class ExtensionsSpec extends AnyFunSuite {
         .master("local[2]")
         .appName("graft-ext-test")
         .config("spark.sql.shuffle.partitions", "2")
+        .config("spark.sql.codegen.cache.maxEntries",
+          graft.core.Graft.CodegenCacheEntries.toString)
         .config("spark.ui.enabled", "false")
         .withExtensions(new GraftExtensions)
         .getOrCreate()

@@ -185,6 +185,25 @@ class RecallSpec extends AnyFunSuite {
       "a vector must retrieve itself after SQ8 quantization")
   }
 
+  test("SQ8 fails loudly on a ragged corpus instead of trusting one row's width") {
+    val emb = spark.read.parquet(s"${TestSpark.sf0001}/embeddings.parquet")
+    val queries = emb.filter(col("vec_id") < 2)
+      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+    // one 2-wide vector in a single partition, probed first (a one-row
+    // width probe would train stats over too few dims) or last (the
+    // probe sees full width and the short row runs out of elements)
+    Seq(col("xid").asc, col("xid").desc).foreach { order =>
+      val ragged = emb.select(col("vec_id").as("xid"),
+          when(col("vec_id") === 0, slice(col("embedding"), 1, 2))
+            .otherwise(col("embedding")).as("xvec"))
+        .repartition(1).sortWithinPartitions(order)
+      val err = intercept[IllegalArgumentException](
+        Similarity.sq8TopK(queries, ragged, K).collect())
+      assert(err.getMessage.contains("ragged corpus"), err.getMessage)
+      assert(err.getMessage.contains("[2, "), err.getMessage)
+    }
+  }
+
   /** What PQ training GUARANTEES is its objective: Lloyd strictly
     * decreases reconstruction MSE. Ranking recall only follows where the
     * corpus has cluster structure — this one is iid near-orthogonal, and

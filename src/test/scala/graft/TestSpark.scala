@@ -14,6 +14,10 @@ object TestSpark {
         sys.env.getOrElse("GRAFT_TEST_SHUFFLE", "4"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // same codegen cache as Graft.session: static, sized at the JVM's
+      // first compile, so this first session of the test JVM fixes it
+      .config("spark.sql.codegen.cache.maxEntries",
+        graft.core.Graft.CodegenCacheEntries.toString)
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-wh").toString)
       .config("spark.ui.enabled", "false")
