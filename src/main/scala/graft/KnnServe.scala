@@ -1,5 +1,8 @@
 package graft
 
+import graft.core.{IndexFamily, IndexStore}
+import graft.operators.Similarity
+import graft.queries.TextQueries
 import org.apache.spark.sql.functions.col
 
 /** Fresh-session serve CLI for a persisted k-NN index — the daily-pipeline
@@ -50,16 +53,18 @@ object KnnServeMain {
       assignD2 = raw.assignD2.localCheckpoint(true),
       directed = raw.directed.localCheckpoint(true))
     val t0 = System.nanoTime()
-    var v = graft.core.IndexStore.latest(spark, indexPath).getOrElse(
-      sys.error(s"KnnServeMain: no committed index at $indexPath")).version
-    var idx = pinned(graft.operators.Similarity.knnIndexLoad(spark, indexPath))
+    // every load reads the directory of the one commit it resolved, so
+    // `v` is always the version the batch was answered from
+    val (c0, idx0) = IndexFamily.load[Similarity.KnnIndex](spark, indexPath)
+    var v = c0.version
+    var idx = pinned(idx0)
     val load = (System.nanoTime() - t0) / 1e9
     val batches = args.drop(1).toSeq.map { deltaPath =>
       val t1 = System.nanoTime()
-      val nv = graft.core.IndexStore.latest(spark, indexPath).get.version
-      if (nv != v) { // a writer moved the store — refresh before folding
-        idx = pinned(graft.operators.Similarity.knnIndexLoad(spark, indexPath))
-        v = nv
+      val c = IndexStore.committed(spark, indexPath)
+      if (c.version != v) { // a writer moved the store — refresh before folding
+        idx = pinned(IndexFamily.read[Similarity.KnnIndex](spark, indexPath, c))
+        v = c.version
       }
       val delta = spark.read.parquet(deltaPath).select(col("xid"), col("xvec"))
       idx = graft.operators.Similarity.knnGraphAppend(idx, delta)
@@ -114,16 +119,17 @@ object RagServeMain {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = graft.core.Graft.session("graft-rag-serve", cpus, cpus.toInt)
     val t0 = System.nanoTime()
-    var v = graft.core.IndexStore.latest(spark, indexPath).getOrElse(
-      sys.error(s"RagServeMain: no committed index at $indexPath")).version
-    var idx = graft.queries.TextQueries.ragIndexLoad(spark, indexPath)
+    // as in KnnServeMain: `v` is always the version the query read
+    val (c0, idx0) = IndexFamily.load[TextQueries.RagIndex](spark, indexPath)
+    var v = c0.version
+    var idx = idx0
     val load = (System.nanoTime() - t0) / 1e9
     val queries = qdocs.map { qdoc =>
       val t1 = System.nanoTime()
-      val nv = graft.core.IndexStore.latest(spark, indexPath).get.version
-      if (nv != v) { // a writer moved the store — serve the new version
-        idx = graft.queries.TextQueries.ragIndexLoad(spark, indexPath)
-        v = nv
+      val c = IndexStore.committed(spark, indexPath)
+      if (c.version != v) { // a writer moved the store — serve the new version
+        idx = IndexFamily.read[TextQueries.RagIndex](spark, indexPath, c)
+        v = c.version
       }
       // the query doc is ONE row — scan the corpus for it once (pushdown
       // on doc_id), then derive terms and the dense vector from that row

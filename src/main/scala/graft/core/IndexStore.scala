@@ -25,9 +25,9 @@ import org.apache.spark.sql.SparkSession
   * }}}
   *
   * The COMMIT marker carries the store metadata (currently the last
-  * folded streaming batch id — the replay-idempotence cursor the
-  * ingest classes resume from). It is written as `COMMIT.tmp` and
-  * RENAMED into place: rename-to-fresh-target is the one atomic
+  * folded streaming batch id — the replay-idempotence cursor
+  * [[graft.core.Ingest]] resumes from). It is written as `COMMIT.tmp`
+  * and RENAMED into place: rename-to-fresh-target is the one atomic
   * primitive every Hadoop `FileSystem` guarantees, so a marker either
   * exists with complete content or not at all — existence alone is the
   * commit signal, exactly the `_SUCCESS` contract. A marker that
@@ -45,7 +45,7 @@ import org.apache.spark.sql.SparkSession
   * lock guards the DIRECTORY, not the store: concurrent savers of the
   * same store commit distinct versions and the highest wins — callers
   * that need one logical winner still serialize at their own layer
-  * (the ingest classes are `synchronized`). Exclusive create is atomic
+  * ([[graft.core.Ingest]] is `synchronized`). Exclusive create is atomic
   * on HDFS and local filesystems; on object stores without an atomic
   * create-if-absent (e.g. S3A, where the Hadoop FS spec makes it
   * check-then-act) the lock is ADVISORY only — same caveat class as
@@ -54,11 +54,11 @@ import org.apache.spark.sql.SparkSession
   *
   * BASELINE TRACKING: every commit records the version its config
   * DESCENDS from — itself for a full (re)build, the originating
-  * build's version for an append/ingest save (the ingests propagate
-  * it). The baseline is what a staleness probe compares against: the
-  * quantizer/geometry were derived THERE, so "how stale is this
-  * store" means "what drifted since the baseline", not "since the
-  * last save". [[prune]] never reclaims the latest commit's baseline,
+  * build's version for an append/ingest save ([[graft.core.Ingest]]
+  * propagates it). The baseline is what a staleness probe compares
+  * against: the quantizer/geometry were derived THERE, so "how stale
+  * is this store" means "what drifted since the baseline", not "since
+  * the last save". [[prune]] never reclaims the latest commit's baseline,
   * so the probe's base artifacts stay loadable no matter how many
   * append-saves stack on top; a REBUILD commit (baseline = itself)
   * naturally releases the old baseline for reclaim.
@@ -69,13 +69,19 @@ import org.apache.spark.sql.SparkSession
   * rest — so a long-lived serving JVM holding FileScans over `v=n`
   * (the `KnnServeMain`/`RagServeMain` daemon posture) survives a
   * writer committing `v=n+1`: its frames keep reading retained files.
-  * The serve-refresh contract: a reader re-resolves [[latestDir]] at
-  * its own cadence; one retained version buys one full re-index cycle
+  * The serve-refresh contract: a reader re-resolves [[latest]] at
+  * its own cadence and reads the directory of the commit it resolved
+  * ([[dirOf]]); one retained version buys one full re-index cycle
   * of grace — a reader older than `retain` re-index cycles must
   * re-resolve before its files are reclaimed. Torn (uncommitted)
   * versions below the new commit are always deleted; versions ABOVE
   * the kept one are left alone — they are a concurrent writer's
   * in-flight staging, not garbage.
+  *
+  * Index families never call [[begin]]/[[commit]]/[[prune]] themselves:
+  * every save goes through [[save]], and the lifecycle around it (load,
+  * maintain, streaming ingest) is written once in
+  * [[graft.core.IndexFamily]].
   */
 object IndexStore {
 
@@ -84,8 +90,8 @@ object IndexStore {
     * did not come from a streaming ingest). `baseVersion` is the
     * version this save's CONFIG descends from: itself for a full
     * build, the build's version for an append-descended save — the
-    * staleness baseline [[graft.operators.Similarity.knnMaintain]]
-    * probes against.
+    * staleness baseline [[graft.core.IndexFamily.maintain]] probes
+    * against.
     */
   final case class Commit(version: Long, lastBatch: Long, baseVersion: Long)
 
@@ -170,23 +176,42 @@ object IndexStore {
       .collectFirst(Function.unlift(committedMeta(fs, path, _)))
   }
 
-  /** Directory of the highest committed version — what loaders read.
-    * Fails loudly on a store with no committed version (serving a torn
-    * or absent store silently is the failure mode this layer removes).
+  /** The highest committed version. Fails loudly on a store with no
+    * committed version (serving a torn or absent store silently is the
+    * failure mode this layer removes).
     */
-  def latestDir(s: SparkSession, path: String): String = {
-    val c = latest(s, path).getOrElse(sys.error(
+  def committed(s: SparkSession, path: String): Commit =
+    latest(s, path).getOrElse(sys.error(
       s"IndexStore: no committed index version under $path " +
         "(either never saved, or every save crashed before commit)"))
-    versionDir(path, c.version)
-  }
+
+  /** Directory of commit `c` — what a loader reads after resolving `c`
+    * once. Resolving the store a second time could pair one version's
+    * replay cursor or baseline with another version's tables.
+    */
+  def dirOf(path: String, c: Commit): String = versionDir(path, c.version)
 
   /** Directory of version `v` when `v` is committed (marker parses),
-    * None otherwise — how [[graft.operators.Similarity.knnMaintain]]
-    * resolves the staleness baseline a commit names.
+    * None otherwise — how [[graft.core.IndexFamily.maintain]] resolves
+    * the staleness baseline a commit names.
     */
   def committedDirOf(s: SparkSession, path: String, v: Long): Option[String] =
     committedMeta(fsOf(s, path), path, v).map(c => versionDir(path, c.version))
+
+  /** The one save sequence: claim a version ([[begin]]), stage the
+    * tables under its directory (`write`), [[commit]] it, then
+    * [[prune]] superseded versions keeping `retain` of them. Returns
+    * the commit, so the caller can re-read exactly what it wrote.
+    */
+  def save(s: SparkSession, path: String, lastBatch: Long = -1L,
+           baseVersion: Long = -1L, retain: Int = 1)
+          (write: String => Unit): Commit = {
+    val (dir, v) = begin(s, path)
+    write(dir)
+    commit(s, path, v, lastBatch, baseVersion)
+    prune(s, path, v, retain)
+    Commit(v, lastBatch, if (baseVersion < 0) v else baseVersion)
+  }
 
   /** Start a save: claim the next free version directory (past every
     * existing one, committed or torn) by atomically creating its

@@ -285,8 +285,8 @@ object Dedup {
     * buckets (candidate volume grows). Fires when the geometry
     * re-derived from the CURRENT corpus count differs from the frozen
     * one. `curCount` is the corpus count under the build's own
-    * definition (document count — [[ccIndexSave]] persists the build's
-    * and [[graft.streaming.CcIngest]] accumulates it per fold), NOT a
+    * definition ([[CcIndex.docCount]] — [[ccIndexSave]] persists the
+    * build's and every streamed fold adds its rows), NOT a
     * band-table distinct: documents with <2 tokens produce no band rows,
     * so the two n's differ and near a geometry step a band-derived
     * probe could fire inconsistently with the build convention
@@ -310,110 +310,147 @@ object Dedup {
         "bands_recommended", "rows_recommended", "stale")
   }
 
-  /** PERSIST the incremental-CC artifacts (the dedup family's index: the
-    * band table under its frozen geometry + the component labels) as one
-    * crash-atomic committed version ([[graft.core.IndexStore]] — the
-    * same two-phase discipline as the k-NN and RAG stores; the marker
-    * carries the streaming replay cursor). Bands partition by `band`
-    * (bounded directories) so a rebuild or audit can read one band
-    * without the rest; labels and the 3-scalar config (geometry + the
-    * corpus count under the build's definition — what [[ccStaleness]]
-    * compares against) are small tables.
+  /** The dedup family's index: the band table (id, band, key) under its
+    * FROZEN geometry (signatures never re-derive mid-increment — the
+    * q110/q183 versioned-geometry convention), the component labels
+    * (id, lbl — full-graph component minima), and the corpus count under
+    * the build's definition (document count — build count + every
+    * folded batch's rows), the n [[ccStaleness]] compares geometry
+    * against.
     */
-  def ccIndexSave(bands: DataFrame, labels: DataFrame,
-                  bnd: Int, rpb: Int, corpusCount: Long, path: String,
-                  lastBatch: Long = -1L, baseVersion: Long = -1L,
-                  retain: Int = 1): Unit = {
-    val s = bands.sparkSession
-    import s.implicits._
-    val (dir, v) = graft.core.IndexStore.begin(s, path)
-    // explicit shuffle width: repartition(col) alone lets AQE coalesce a
-    // small shuffle to one partition, serializing every band directory's
-    // write through a single task (see knnIndexSaveTables)
-    bands.repartition(s.sessionState.conf.numShufflePartitions, col("band"))
-      .write.mode("overwrite").partitionBy("band").parquet(s"$dir/bands")
-    labels.write.mode("overwrite").parquet(s"$dir/labels")
-    Seq((bnd.toLong, rpb.toLong, corpusCount))
-      .toDF("bands", "rows_per_band", "corpus_count")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/config")
-    graft.core.IndexStore.commit(s, path, v, lastBatch, baseVersion)
-    graft.core.IndexStore.prune(s, path, v, retain)
+  final case class CcIndex(bands: DataFrame, labels: DataFrame,
+                           nBands: Int, rowsPerBand: Int, docCount: Long)
+
+  /** The dedup family's instance of the shared index lifecycle
+    * ([[graft.core.IndexFamily]]). Unlike the k-NN/RAG dials, CC's
+    * staleness needs no baseline artifacts — the geometry law is
+    * count-only — so the current version's config alone carries the
+    * frozen side, and the probe runs at the count of the corpus passed
+    * to maintain (the source of truth — the q183d convention), not at
+    * the stored count.
+    */
+  implicit object CcFamily extends graft.core.IndexFamily[CcIndex] {
+    def session(idx: CcIndex): org.apache.spark.sql.SparkSession =
+      idx.bands.sparkSession
+
+    /** Bands partition by `band` (bounded directories) so a rebuild or
+      * audit can read one band without the rest; labels and the
+      * 3-scalar config (geometry + the corpus count) are small tables.
+      */
+    def write(idx: CcIndex, dir: String): Unit = {
+      val s = idx.bands.sparkSession
+      import s.implicits._
+      // explicit shuffle width: repartition(col) alone lets AQE coalesce a
+      // small shuffle to one partition, serializing every band directory's
+      // write through a single task (see the k-NN family's write)
+      idx.bands.repartition(s.sessionState.conf.numShufflePartitions, col("band"))
+        .write.mode("overwrite").partitionBy("band").parquet(s"$dir/bands")
+      idx.labels.write.mode("overwrite").parquet(s"$dir/labels")
+      Seq((idx.nBands.toLong, idx.rowsPerBand.toLong, idx.docCount))
+        .toDF("bands", "rows_per_band", "corpus_count")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/config")
+    }
+
+    /** The band partition column casts back to its build dtype. */
+    def read(s: org.apache.spark.sql.SparkSession, dir: String): CcIndex = {
+      // EXPLICIT schemas matching the save's inferred layout (partition
+      // column `band` in its inferred type and position): a schema'd read
+      // skips the per-table footer-inference job, so the load's only
+      // driver action is the config row (guide §6)
+      import org.apache.spark.sql.types.StructType
+      def rd(t: String, ddl: String) =
+        s.read.schema(StructType.fromDDL(ddl)).parquet(s"$dir/$t")
+      val conf = rd("config",
+        "bands BIGINT,rows_per_band BIGINT,corpus_count BIGINT").first()
+      CcIndex(rd("bands", "id BIGINT,key STRING,band INT")
+        .select(col("id"), col("band").cast("int").as("band"), col("key")),
+        rd("labels", "id BIGINT,lbl BIGINT").select(col("id"), col("lbl")),
+        conf.getAs[Long]("bands").toInt, conf.getAs[Long]("rows_per_band").toInt,
+        conf.getAs[Long]("corpus_count"))
+    }
+
+    /** One micro-batch of (doc_id, text) rows:
+      *  1. minhashes + bands under the FROZEN (bands, rowsPerBand) config;
+      *  2. derives the delta-scale star edges ([[ccDeltaStarEdges]] — only
+      *     buckets the batch touches re-window, hub changes included);
+      *  3. folds them through [[ccIncrementalServe]] (contract through the
+      *     labels, CC the delta-sized graph, compose) — the returned labels
+      *     are again full-graph minima, which is exactly what makes
+      *     consecutive batches CHAIN;
+      *  4. appends the batch's bands to the band table.
+      * Labels checkpoint every fold (they are the next fold's contraction
+      * input); the band table's union chain is what [[flatten]] cuts.
+      */
+    def append(idx: CcIndex, batch: DataFrame): Option[CcIndex] = {
+      val batchN = batch.count()
+      if (batchN == 0) None
+      else {
+        val db = lshBands(
+          minhash(batch, col("doc_id"), bigrams(col("text")),
+            idx.nBands * idx.rowsPerBand),
+          idx.nBands, idx.rowsPerBand).localCheckpoint(true)
+        val labels = ccIncrementalServe(idx.labels,
+            ccDeltaStarEdges(idx.bands, db))
+          .select(col("doc_id").as("id"), col("component").as("lbl"))
+          .localCheckpoint(true)
+        Some(CcIndex(idx.bands.unionByName(db), labels, idx.nBands,
+          idx.rowsPerBand, idx.docCount + batchN))
+      }
+    }
+
+    def flatten(idx: CcIndex): CcIndex =
+      idx.copy(bands = idx.bands.localCheckpoint(true))
+
+    def dials(base: => CcIndex, cur: CcIndex, n: => Long): DataFrame =
+      ccDials(n, cur.nBands, cur.rowsPerBand, cur.labels)
+
+    /** Re-index the (doc_id, text) corpus at [[lshGeometry]]'s
+      * re-derived (bands, rows).
+      */
+    def rebuild(cur: CcIndex, corpus: DataFrame, n: => Long): CcIndex = {
+      val (b2, r2) = lshGeometry(n)
+      val bands2 = lshBands(
+        minhash(corpus, col("doc_id"), bigrams(col("text")), b2 * r2),
+        b2, r2).localCheckpoint(true)
+      CcIndex(bands2, connectedComponents(bucketStarEdges(bands2)), b2, r2, n)
+    }
   }
+
+  /** PERSIST the incremental-CC artifacts as one crash-atomic committed
+    * version ([[graft.core.IndexStore]] — the same two-phase discipline
+    * as the k-NN and RAG stores; the marker carries the streaming
+    * replay cursor). The table layout is [[CcFamily]]'s `write`.
+    */
+  def ccIndexSave(idx: CcIndex, path: String,
+                  lastBatch: Long = -1L): graft.core.IndexStore.Commit =
+    graft.core.IndexFamily.save(idx, path, lastBatch)
 
   /** Reconstitute [[ccIndexSave]] artifacts from the latest committed
-    * version: (bands, labels, bandCount, rowsPerBand, corpusCount) —
-    * every frame a FileScan; the band partition column casts back to
-    * its build dtype.
+    * version — every frame a FileScan.
     */
   def ccIndexLoad(s: org.apache.spark.sql.SparkSession,
-                  rootPath: String): (DataFrame, DataFrame, Int, Int, Long) = {
-    val dir = graft.core.IndexStore.latestDir(s, rootPath)
-    // EXPLICIT schemas matching the save's inferred layout (partition
-    // column `band` in its inferred type and position): a schema'd read
-    // skips the per-table footer-inference job, so the load's only
-    // driver action is the config row (guide §6)
-    import org.apache.spark.sql.types.StructType
-    def rd(t: String, ddl: String) =
-      s.read.schema(StructType.fromDDL(ddl)).parquet(s"$dir/$t")
-    val conf = rd("config",
-      "bands BIGINT,rows_per_band BIGINT,corpus_count BIGINT").first()
-    (rd("bands", "id BIGINT,key STRING,band INT")
-      .select(col("id"), col("band").cast("int").as("band"), col("key")),
-      rd("labels", "id BIGINT,lbl BIGINT").select(col("id"), col("lbl")),
-      conf.getAs[Long]("bands").toInt, conf.getAs[Long]("rows_per_band").toInt,
-      conf.getAs[Long]("corpus_count"))
-  }
+                  rootPath: String): CcIndex =
+    graft.core.IndexFamily.load[CcIndex](s, rootPath)._2
 
-  /** The dedup family's unified maintenance entry — the third twin of
-    * [[graft.operators.Similarity.knnMaintain]], one cron-able call:
-    * load the committed index's FROZEN geometry + labels, probe
-    * [[ccStaleness]] at the CURRENT corpus count (`docs` is the source
-    * of truth — the q183d convention), and when the geometry step
-    * fires re-index the corpus at [[lshGeometry]]'s re-derived
-    * (bands, rows), save as the new baseline, probe again. Unlike the
-    * k-NN/RAG dials, CC's staleness needs no baseline artifacts — the
-    * geometry law is count-only — so the store's config alone carries
-    * the frozen side. Each phase row also carries the label-table
-    * stats (`n_labeled`, `n_components`) of the index SERVING in that
-    * phase, so the gate hash pins the rebuild's artifacts, not just
-    * its config arithmetic (q183f gates the fired arc against q183e's
-    * oracle). The rebuild carries the replay cursor forward.
+  /** [[graft.core.IndexFamily.maintain]] over a persisted CC store:
+    * `docs` is the (doc_id, text) corpus the probe counts and the
+    * re-index runs from (q183f gates this call against q183e's oracle).
     */
   def ccMaintain(s: org.apache.spark.sql.SparkSession, path: String,
-                 docs: DataFrame, retain: Int = 1): DataFrame = {
-    val store = graft.core.IndexStore
-    val c = store.latest(s, path).getOrElse(sys.error(
-      s"ccMaintain: no committed index at $path — build and save first"))
-    val (_, labels, bnd, rpb, _) = ccIndexLoad(s, path)
-    val n = docs.count()
-    val before = ccPhaseRow("before", n, bnd, rpb, labels)
-    if (!before.first().getAs[Boolean]("stale"))
-      return graft.operators.Similarity.phased(before)
-    val (b2, r2) = lshGeometry(n)
-    val bands2 = lshBands(
-      minhash(docs, col("doc_id"), bigrams(col("text")), b2 * r2),
-      b2, r2).localCheckpoint(true)
-    val labels2 = connectedComponents(bucketStarEdges(bands2))
-    ccIndexSave(bands2, labels2, b2, r2, n, path, lastBatch = c.lastBatch,
-      retain = retain)
-    val (_, loaded2, _, _, _) = ccIndexLoad(s, path)
-    graft.operators.Similarity.phased(before.unionByName(
-      ccPhaseRow("after", n, b2, r2, loaded2)))
-  }
+                 docs: DataFrame): DataFrame =
+    graft.core.IndexFamily.maintain[CcIndex](s, path, docs)
 
-  /** One phase-tagged dial row of the CC maintenance arc: the
-    * [[ccStaleness]] columns plus the serving label table's row and
-    * component counts (artifact-derived — what makes the arc's hash
-    * pin the rebuild itself).
+  /** The dial row of the CC maintenance arc: the [[ccStaleness]] columns
+    * plus the serving label table's row and component counts
+    * (artifact-derived — what makes the arc's hash pin the rebuild
+    * itself).
     */
-  private[graft] def ccPhaseRow(phase: String, curCount: Long,
-      bnd: Int, rpb: Int, labels: DataFrame): DataFrame =
+  private[graft] def ccDials(curCount: Long, bnd: Int, rpb: Int,
+                             labels: DataFrame): DataFrame =
     ccStaleness(curCount, bnd, rpb)
-      .withColumn("phase", lit(phase))
       .crossJoin(broadcast(labels.agg(
         count(lit(1)).as("n_labeled"),
         count_distinct(col("lbl")).as("n_components"))))
-      .localCheckpoint(true)
 
   /** Release the cached blocks behind a (possibly projected)
     * localCheckpoint'd frame. Safe only once nothing will recompute from

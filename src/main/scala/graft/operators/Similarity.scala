@@ -690,120 +690,139 @@ object Similarity {
     * later session serves from disk; the reference's MapFileOutputFormat
     * persisted-store + getEntry lookup split,
     * `src/mapred/org/apache/hadoop/mapred/MapFileOutputFormat.java:109`).
-    * Layout is the 100 TB one: the per-member table (codes, centrality
-    * d², serving flag) is PARTITIONED BY CELL ID, as are the probe
-    * lists, so a serve's touched-cell and probed-cell reads prune to
-    * directories instead of scanning the corpus; centroids, the frozen
-    * quantizer, and the config are small unpartitioned tables. One
-    * member row per vector: every member has exactly one rn=1
-    * assignment, so codes/assignment/serving-flag fold into a single
-    * cell-partitioned table instead of three stores.
-    *
-    * Saves are CRASH-ATOMIC ([[graft.core.IndexStore]] — the
-    * FileOutputCommitter two-phase discipline at index granularity):
-    * the 6 tables stage under a fresh `v=<n>/` directory and one
-    * marker rename commits the version, so a crash between table
+    * The table layout is [[KnnFamily]]'s `write`. Saves are
+    * CRASH-ATOMIC ([[graft.core.IndexStore]] — the FileOutputCommitter
+    * two-phase discipline at index granularity): a crash between table
     * writes can never leave a torn store a loader would serve from —
     * [[knnIndexLoad]] always resolves the latest COMMITTED version.
-    * `lastBatch` persists the streaming ingest's replay cursor
-    * ([[graft.streaming.KnnIngest]]); −1 for non-streaming saves.
-    * `baseVersion` is the staleness baseline this save's config
-    * descends from (−1 ⇒ this save IS a full build); `retain` widens
-    * the concurrent-reader grace window ([[graft.core.IndexStore
-    * .prune]]) without library edits.
+    * `lastBatch` persists a streaming ingest's replay cursor; −1 for
+    * non-streaming saves.
     */
-  def knnIndexSave(idx: KnnIndex, path: String, lastBatch: Long = -1L,
-                   baseVersion: Long = -1L, retain: Int = 1): Unit = {
-    val s = idx.centroids.sparkSession
-    val (dir, v) = graft.core.IndexStore.begin(s, path)
-    knnIndexSaveTables(idx, dir)
-    graft.core.IndexStore.commit(s, path, v, lastBatch, baseVersion)
-    graft.core.IndexStore.prune(s, path, v, retain)
-  }
-
-  /** The uncommitted table writes of [[knnIndexSave]] — package-visible
-    * so the torn-save spec can stage a version without committing it.
-    */
-  private[graft] def knnIndexSaveTables(idx: KnnIndex, path: String): Unit = {
-    val s = idx.centroids.sparkSession
-    import s.implicits._
-    idx.centroids.coalesce(1).write.mode("overwrite")
-      .parquet(s"$path/centroids")
-    // config + quantizer stats merged into ONE 1-row `meta` table (stats
-    // as dim-ordered arrays): one write job and one read action per
-    // save/load cycle instead of two+ of each (the arc lanes load 3x)
-    Seq((idx.nProbe.toLong, idx.k.toLong, idx.cap,
-      idx.stats.map(_._1), idx.stats.map(_._2)))
-      .toDF("n_probe", "k", "cap", "mns", "rngs")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    // repartition BY cid before partitionBy: each cell's rows land in one
-    // task, so the store writes ~one file per cell, not tasks × cells.
-    // The count is EXPLICIT (session shuffle parallelism): without it AQE
-    // coalesces the small shuffle to one partition and a single task
-    // writes every cell directory sequentially — the measured bulk of
-    // the save wall. One file per cell either way.
-    val p = s.sessionState.conf.numShufflePartitions
-    idx.enc
-      .join(idx.assignD2.select(col("nid").as("xid"), col("cid"), col("d2")), "xid")
-      .join(idx.servable.select(col("nid").as("xid"), col("cid"),
-        lit(true).as("serving")), Seq("xid", "cid"), "left")
-      .na.fill(false, Seq("serving"))
-      .repartition(p, col("cid"))
-      .write.mode("overwrite").partitionBy("cid").parquet(s"$path/members")
-    idx.xn.write.mode("overwrite").parquet(s"$path/xn")
-    idx.probes.repartition(p, col("cid"))
-      .write.mode("overwrite").partitionBy("cid").parquet(s"$path/probes")
-    idx.directed.write.mode("overwrite").parquet(s"$path/directed")
-  }
+  def knnIndexSave(idx: KnnIndex, path: String,
+                   lastBatch: Long = -1L): graft.core.IndexStore.Commit =
+    graft.core.IndexFamily.save(idx, path, lastBatch)
 
   /** Reconstitute a [[KnnIndex]] from [[knnIndexSave]] artifacts in a
-    * FRESH session: every frame is a FileScan over the saved tables (no
-    * in-session lineage — q167e's PlanSpec guard), cell-partitioned
-    * where the serve path joins on cells. Partition-column inference
-    * types `cid` from directory names, so it is cast back to long and
-    * columns re-selected in the build-time order. Reads the latest
-    * COMMITTED version ([[graft.core.IndexStore.latestDir]]) — a save
-    * that crashed between tables is invisible.
+    * FRESH session, from the latest COMMITTED version — a save that
+    * crashed between tables is invisible.
     */
   def knnIndexLoad(s: org.apache.spark.sql.SparkSession,
                    rootPath: String): KnnIndex =
-    knnIndexLoadAt(s, graft.core.IndexStore.latestDir(s, rootPath))
+    graft.core.IndexFamily.load[KnnIndex](s, rootPath)._2
 
-  /** [[knnIndexLoad]] of one EXPLICIT committed version directory —
-    * how [[knnMaintain]] reconstitutes the staleness baseline while
-    * the latest version keeps serving.
+  /** The k-NN family's instance of the shared index lifecycle
+    * ([[graft.core.IndexFamily]]: save, load, maintain, streaming
+    * ingest).
     */
-  private[graft] def knnIndexLoadAt(s: org.apache.spark.sql.SparkSession,
-                                    path: String): KnnIndex = {
-    // EXPLICIT schemas (matching the save's inferred layout bit-for-bit,
-    // partition columns in their inferred type and position): a schema'd
-    // read skips the per-table footer-inference job, so a load costs ONE
-    // driver action (the meta row) instead of ~7 (guide §6)
-    import org.apache.spark.sql.types.StructType
-    def rd(t: String, ddl: String) =
-      s.read.schema(StructType.fromDDL(ddl)).parquet(s"$path/$t")
-    val m = rd("meta",
-      "n_probe BIGINT,k BIGINT,cap BIGINT,mns ARRAY<BIGINT>,rngs ARRAY<BIGINT>")
-      .first()
-    val stats = m.getAs[scala.collection.Seq[Long]]("mns")
-      .zip(m.getAs[scala.collection.Seq[Long]]("rngs")).toSeq
-    val centroids = rd("centroids", "cid BIGINT,cvec ARRAY<FLOAT>")
-      .select(col("cid"), col("cvec"))
-    val members = rd("members",
-      "xid BIGINT,rx ARRAY<BIGINT>,xnorm DOUBLE,d2 BIGINT,serving BOOLEAN,cid INT")
-    val cidL = col("cid").cast("long").as("cid")
-    KnnIndex(
-      centroids, stats,
-      rd("xn", "xid BIGINT,xs ARRAY<BIGINT>,norm DOUBLE")
-        .select(col("xid"), col("xs"), col("norm")),
-      members.select(col("xid"), col("rx"), col("xnorm")),
-      members.select(col("xid").as("nid"), cidL, col("d2")),
-      members.filter(col("serving")).select(col("xid").as("nid"), cidL),
-      rd("probes", "qid BIGINT,cid INT").select(col("qid"), cidL),
-      rd("directed", "qid BIGINT,nid BIGINT,cos DOUBLE")
-        .select(col("qid"), col("nid"), col("cos")),
-      m.getAs[Long]("n_probe").toInt, m.getAs[Long]("k").toInt,
-      m.getAs[Long]("cap"))
+  implicit object KnnFamily extends graft.core.IndexFamily[KnnIndex] {
+    def session(idx: KnnIndex): org.apache.spark.sql.SparkSession =
+      idx.centroids.sparkSession
+
+    /** Layout is the 100 TB one: the per-member table (codes,
+      * centrality d², serving flag) is PARTITIONED BY CELL ID, as are
+      * the probe lists, so a serve's touched-cell and probed-cell reads
+      * prune to directories instead of scanning the corpus; centroids,
+      * the frozen quantizer, and the config are small unpartitioned
+      * tables. One member row per vector: every member has exactly one
+      * rn=1 assignment, so codes/assignment/serving-flag fold into a
+      * single cell-partitioned table instead of three stores.
+      */
+    def write(idx: KnnIndex, path: String): Unit = {
+      val s = idx.centroids.sparkSession
+      import s.implicits._
+      idx.centroids.coalesce(1).write.mode("overwrite")
+        .parquet(s"$path/centroids")
+      // config + quantizer stats merged into ONE 1-row `meta` table (stats
+      // as dim-ordered arrays): one write job and one read action per
+      // save/load cycle instead of two+ of each (the arc lanes load 3x)
+      Seq((idx.nProbe.toLong, idx.k.toLong, idx.cap,
+        idx.stats.map(_._1), idx.stats.map(_._2)))
+        .toDF("n_probe", "k", "cap", "mns", "rngs")
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+      // repartition BY cid before partitionBy: each cell's rows land in one
+      // task, so the store writes ~one file per cell, not tasks × cells.
+      // The count is EXPLICIT (session shuffle parallelism): without it AQE
+      // coalesces the small shuffle to one partition and a single task
+      // writes every cell directory sequentially — the measured bulk of
+      // the save wall. One file per cell either way.
+      val p = s.sessionState.conf.numShufflePartitions
+      idx.enc
+        .join(idx.assignD2.select(col("nid").as("xid"), col("cid"), col("d2")), "xid")
+        .join(idx.servable.select(col("nid").as("xid"), col("cid"),
+          lit(true).as("serving")), Seq("xid", "cid"), "left")
+        .na.fill(false, Seq("serving"))
+        .repartition(p, col("cid"))
+        .write.mode("overwrite").partitionBy("cid").parquet(s"$path/members")
+      idx.xn.write.mode("overwrite").parquet(s"$path/xn")
+      idx.probes.repartition(p, col("cid"))
+        .write.mode("overwrite").partitionBy("cid").parquet(s"$path/probes")
+      idx.directed.write.mode("overwrite").parquet(s"$path/directed")
+    }
+
+    /** Every frame a FileScan over the saved tables (no in-session
+      * lineage — q167e's PlanSpec guard), cell-partitioned where the
+      * serve path joins on cells. Partition-column inference types `cid`
+      * from directory names, so it is cast back to long and columns
+      * re-selected in the build-time order.
+      */
+    def read(s: org.apache.spark.sql.SparkSession, path: String): KnnIndex = {
+      // EXPLICIT schemas (matching the save's inferred layout bit-for-bit,
+      // partition columns in their inferred type and position): a schema'd
+      // read skips the per-table footer-inference job, so a load costs ONE
+      // driver action (the meta row) instead of ~7 (guide §6)
+      import org.apache.spark.sql.types.StructType
+      def rd(t: String, ddl: String) =
+        s.read.schema(StructType.fromDDL(ddl)).parquet(s"$path/$t")
+      val m = rd("meta",
+        "n_probe BIGINT,k BIGINT,cap BIGINT,mns ARRAY<BIGINT>,rngs ARRAY<BIGINT>")
+        .first()
+      val stats = m.getAs[scala.collection.Seq[Long]]("mns")
+        .zip(m.getAs[scala.collection.Seq[Long]]("rngs")).toSeq
+      val centroids = rd("centroids", "cid BIGINT,cvec ARRAY<FLOAT>")
+        .select(col("cid"), col("cvec"))
+      val members = rd("members",
+        "xid BIGINT,rx ARRAY<BIGINT>,xnorm DOUBLE,d2 BIGINT,serving BOOLEAN,cid INT")
+      val cidL = col("cid").cast("long").as("cid")
+      KnnIndex(
+        centroids, stats,
+        rd("xn", "xid BIGINT,xs ARRAY<BIGINT>,norm DOUBLE")
+          .select(col("xid"), col("xs"), col("norm")),
+        members.select(col("xid"), col("rx"), col("xnorm")),
+        members.select(col("xid").as("nid"), cidL, col("d2")),
+        members.filter(col("serving")).select(col("xid").as("nid"), cidL),
+        rd("probes", "qid BIGINT,cid INT").select(col("qid"), cidL),
+        rd("directed", "qid BIGINT,nid BIGINT,cos DOUBLE")
+          .select(col("qid"), col("nid"), col("cos")),
+        m.getAs[Long]("n_probe").toInt, m.getAs[Long]("k").toInt,
+        m.getAs[Long]("cap"))
+    }
+
+    /** A micro-batch of (xid, xvec) rows through [[knnGraphAppend]]. */
+    def append(idx: KnnIndex, batch: DataFrame): Option[KnnIndex] =
+      if (batch.isEmpty) None else Some(knnGraphAppend(idx, batch))
+
+    /** The wide tables only: the narrow serve-path frames already
+      * checkpoint inside every append.
+      */
+    def flatten(idx: KnnIndex): KnnIndex = idx.copy(
+      xn = idx.xn.localCheckpoint(true),
+      enc = idx.enc.localCheckpoint(true),
+      assignD2 = idx.assignD2.localCheckpoint(true),
+      probes = idx.probes.localCheckpoint(true))
+
+    def dials(base: => KnnIndex, cur: KnnIndex, n: => Long): DataFrame =
+      knnStaleness(base, cur)
+
+    /** Geometry, centroids and quantizer all re-derive from the raw
+      * (xid, xvec) corpus; k carries over.
+      */
+    def rebuild(cur: KnnIndex, corpus: DataFrame, n: => Long): KnnIndex = {
+      val cells = ivfCellsFor(n)
+      val cents = corpus.orderBy(col("xid")).limit(cells)
+        .select(col("xid").as("cid"), col("xvec").as("cvec"))
+      knnGraphBuild(corpus, cents, ivfProbesFor(cells), cur.k,
+        knnCellCapFor(n, cells, cur.k))
+    }
   }
 
   /** CONFIG-STALENESS probe over persisted index artifacts — the cheap
@@ -951,58 +970,20 @@ object Similarity {
       cur.assignD2.select(col("cid")),
       cur.stats, cur.centroids.count().toInt)
 
-  /** The UNIFIED MAINTENANCE ENTRY a scheduler crons against a
-    * persisted k-NN store — one call composing the gated pieces the
-    * q167i arc wires by hand: load the latest committed version and
-    * its recorded staleness BASELINE (the last full build — the
-    * commit marker names it and [[graft.core.IndexStore.prune]] never
-    * reclaims it), probe [[knnStaleness]] between them, and when the
-    * dial FIRES re-index `corpus` (the raw (xid, xvec) source of
-    * truth — geometry, centroids and quantizer all re-derive from it)
-    * at the re-derived config, save it as the NEW baseline (the
-    * rebuild commit names itself, releasing the old baseline for
-    * reclaim), and probe again. Returns the phase-tagged dial rows —
-    * `before` alone when the store is healthy, `before` + a quiet
-    * `after` when a re-index ran (exactly q167i's two-row arc, which
-    * is how q167j gates this call against the same oracle). The
-    * rebuild carries the replay cursor forward: the corpus already
-    * contains every folded batch, so a resumed ingest must keep
-    * skipping them.
-    */
-  def knnMaintain(s: org.apache.spark.sql.SparkSession, path: String,
-                  corpus: DataFrame, retain: Int = 1): DataFrame = {
-    val store = graft.core.IndexStore
-    val c = store.latest(s, path).getOrElse(sys.error(
-      s"knnMaintain: no committed index at $path — build and save first"))
-    val cur = knnIndexLoadAt(s, store.committedDirOf(s, path, c.version).get)
-    val base =
-      if (c.baseVersion == c.version) cur
-      else knnIndexLoadAt(s, store.committedDirOf(s, path, c.baseVersion)
-        .getOrElse(sys.error(
-          s"knnMaintain: baseline v=${c.baseVersion} of $path is gone — " +
-            "it must stay retained until a rebuild resets it (widen " +
-            "`retain` if an external cleaner removed it)")))
-    val before = knnStaleness(base, cur)
-      .withColumn("phase", lit("before")).localCheckpoint(true)
-    if (!before.first().getAs[Boolean]("stale")) return phased(before)
-    val n = corpus.count()
-    val cells = ivfCellsFor(n)
-    val cents = corpus.orderBy(col("xid")).limit(cells)
-      .select(col("xid").as("cid"), col("xvec").as("cvec"))
-    val idx2 = knnGraphBuild(corpus, cents, ivfProbesFor(cells), cur.k,
-      knnCellCapFor(n, cells, cur.k))
-    knnIndexSave(idx2, path, lastBatch = c.lastBatch, retain = retain)
-    val cur2 = knnIndexLoad(s, path)
-    phased(before.unionByName(
-      knnStaleness(cur2, cur2).withColumn("phase", lit("after"))))
+  /** Read-outs of a k-NN [[graft.core.Ingest]] (`graft.streaming.KnnIngest`). */
+  implicit final class KnnIngestOps(private val in: graft.core.Ingest[KnnIndex])
+      extends AnyVal {
+    /** The mutual k-NN edges of everything ingested so far. */
+    def edges: DataFrame = mutualize(in.index.directed)
   }
 
-  /** Column order of the maintain/arc dial rows — phase first (shared
-    * by the three families' maintain entries).
+  /** [[graft.core.IndexFamily.maintain]] over a persisted k-NN store:
+    * `corpus` is the raw (xid, xvec) source of truth the re-index runs
+    * from (q167j gates this call against q167i's oracle).
     */
-  private[graft] def phased(dials: DataFrame): DataFrame =
-    dials.select(col("phase") +:
-      dials.columns.filterNot(_ == "phase").map(col).toSeq: _*)
+  def knnMaintain(s: org.apache.spark.sql.SparkSession, path: String,
+                  corpus: DataFrame): DataFrame =
+    graft.core.IndexFamily.maintain[KnnIndex](s, path, corpus)
 
   /** The ONE md5-parity ±1 matrix derivation behind [[srpSigns]] and
     * [[projSigns]]: entry (j, d) = parity of the last digest byte of

@@ -1300,7 +1300,8 @@ object DedupQueries {
     // BUILD persists; the ingest RESUMES from the committed version —
     // the daily pipeline's actual cross-session shape
     val path = graft.core.Graft.scratch("q183b_cc_index")
-    Dedup.ccIndexSave(baseBands, baseLabels, bnd, rpb, base.count(), path)
+    Dedup.ccIndexSave(
+      Dedup.CcIndex(baseBands, baseLabels, bnd, rpb, base.count()), path)
     val ingest = graft.streaming.CcIngest.resume(s, path)
     val delta = docs.filter(col("doc_id") % 10 === 0)
     val b = (0 until 3).map(r =>
@@ -1309,7 +1310,7 @@ object DedupQueries {
     ingest.foldBatch(b(1), 1L)
     ingest.foldBatch(b(1), 1L) // the at-least-once replay — must no-op
     ingest.foldBatch(b(2), 2L)
-    ingest.labels
+    ingest.index.labels
       .select(col("id").as("doc_id"), col("lbl").as("component"),
         (col("id") === col("lbl")).as("keep"))
   }
@@ -1545,7 +1546,8 @@ object DedupQueries {
       .reduce(_ unionByName _)
       .repartition(p)
     val curN = n * f
-    val before = Dedup.ccPhaseRow("before", curN, bnd, rpb, labels)
+    val before = Dedup.ccDials(curN, bnd, rpb, labels)
+      .withColumn("phase", lit("before")).localCheckpoint(true)
     // the geometry dial FIRED — re-index the grown corpus at the
     // re-derived config (the production response the dial schedules)
     val (b2, r2) = Dedup.lshGeometry(curN)
@@ -1554,8 +1556,9 @@ object DedupQueries {
       b2, r2)
     val labels2 = Dedup.connectedComponents(Dedup.bucketStarEdges(bands2))
       .localCheckpoint(true)
-    val after = Dedup.ccPhaseRow("after", curN, b2, r2, labels2)
-    graft.operators.Similarity.phased(before.unionByName(after))
+    val after = Dedup.ccDials(curN, b2, r2, labels2)
+      .withColumn("phase", lit("after")).localCheckpoint(true)
+    graft.core.IndexFamily.phased(before.unionByName(after))
   }
 
   /** q183e's arc through [[Dedup.ccMaintain]] — the third family's
@@ -1580,7 +1583,7 @@ object DedupQueries {
       bnd, rpb).localCheckpoint(true)
     val labels = Dedup.connectedComponents(Dedup.bucketStarEdges(bands))
     val path = graft.core.Graft.scratch("q183f_cc_index")
-    Dedup.ccIndexSave(bands, labels, bnd, rpb, n, path)
+    Dedup.ccIndexSave(Dedup.CcIndex(bands, labels, bnd, rpb, n), path)
     // same grown-union repartition as q183e: spread the re-index's
     // minhash map stage across the session's shuffle width
     val f = (65536L / n + 1L).toInt

@@ -2187,107 +2187,128 @@ object TextQueries {
     * knnIndexSave; reference pattern: MapFileOutputFormat's persisted
     * sorted store + getEntry lookup,
     * `src/mapred/org/apache/hadoop/mapred/MapFileOutputFormat.java:109`).
-    * Layout is the 100 TB pruning one: postings and term stats land
-    * TERM-BUCKETED — directory-partitioned on a 64-way md5 word of the
-    * term, the `bucketBy(term)` layout expressible without a catalog —
-    * so a query batch's sparse reads skip every bucket its terms don't
-    * hash to; the SQ8 code store is CELL-PARTITIONED so the dense side
-    * reads only probed cells. Totals, centroids, and the corpus count
-    * are small unpartitioned tables.
-    *
-    * Saves are CRASH-ATOMIC ([[graft.core.IndexStore]], shared with the
-    * k-NN store): tables stage under a fresh `v=<n>/` directory, one
-    * marker rename commits, and [[ragIndexLoad]] resolves only the
-    * latest committed version — a crash between the 7 table writes can
-    * never serve new postings beside old codes. `lastBatch` persists
-    * the streaming ingest's replay cursor
-    * ([[graft.streaming.RagIngest]]); −1 for non-streaming saves.
+    * The table layout is [[RagFamily]]'s `write`. Saves are
+    * CRASH-ATOMIC ([[graft.core.IndexStore]], shared with the k-NN
+    * store): a crash between the table writes can never serve new
+    * postings beside old codes. `lastBatch` persists a streaming
+    * ingest's replay cursor; −1 for non-streaming saves.
     */
   private[graft] def ragIndexSave(idx: RagIndex, path: String,
-      lastBatch: Long = -1L, baseVersion: Long = -1L,
-      retain: Int = 1): Unit = {
-    val s = idx.postings.sparkSession
-    val (dir, v) = graft.core.IndexStore.begin(s, path)
-    ragIndexSaveTables(idx, dir)
-    graft.core.IndexStore.commit(s, path, v, lastBatch, baseVersion)
-    graft.core.IndexStore.prune(s, path, v, retain)
-  }
-
-  /** The uncommitted table writes of [[ragIndexSave]] — package-visible
-    * so the torn-save spec can stage a version without committing it.
-    */
-  private[graft] def ragIndexSaveTables(idx: RagIndex, path: String): Unit = {
-    // explicit shuffle width: repartition(col) alone lets AQE coalesce
-    // the (small) shuffle to ONE partition, which serializes every
-    // partition-directory's file write through a single task — the
-    // measured bulk of the save wall. An explicit count (the session's
-    // shuffle parallelism — scale-adaptive, not a local constant) keeps
-    // the writers parallel; each bucket/cell still lands wholly in one
-    // task, so the one-file-per-directory layout is unchanged.
-    val p = idx.postings.sparkSession.sessionState.conf.numShufflePartitions
-    def tb(d: org.apache.spark.sql.DataFrame) =
-      d.withColumn("tb", (Hashing.hash32(col("term")) % 64).cast("int"))
-        .repartition(p, col("tb"))
-    tb(idx.postings)
-      .write.mode("overwrite").partitionBy("tb").parquet(s"$path/postings")
-    tb(idx.termStats)
-      .write.mode("overwrite").partitionBy("tb").parquet(s"$path/term_stats")
-    // totals + config + quantizer stats merged into ONE 1-row `meta`
-    // table (stats as dim-ordered arrays): one write job and one read
-    // action per save/load cycle instead of three of each — the arc
-    // lanes (q150i/j, q167i/j, q183e/f) pay this per store round trip
-    val s = idx.postings.sparkSession
-    import s.implicits._
-    idx.tot.select(col("nd"), col("tt"))
-      .crossJoin(Seq((idx.corpusCount, idx.cells.toLong,
-        idx.stats.map(_._1), idx.stats.map(_._2)))
-        .toDF("n", "cells", "mns", "rngs"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    idx.centroids.coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/centroids")
-    idx.index.repartition(p, col("cid"))
-      .write.mode("overwrite").partitionBy("cid").parquet(s"$path/codes")
-  }
+      lastBatch: Long = -1L): graft.core.IndexStore.Commit =
+    graft.core.IndexFamily.save(idx, path, lastBatch)
 
   /** Reconstitute the [[RagIndex]] from [[ragIndexSave]] artifacts in a
-    * fresh session — every frame a FileScan. The bucket/cell partition
-    * columns stay in their INFERRED types and positions: filters on them
-    * must hit the raw partition column (a cast would defeat directory
-    * pruning), and every consumer joins through them type-coerced.
-    * Reads the latest COMMITTED version
-    * ([[graft.core.IndexStore.latestDir]]) — a torn save is invisible.
+    * fresh session, from the latest COMMITTED version — a torn save is
+    * invisible.
     */
   private[graft] def ragIndexLoad(s: org.apache.spark.sql.SparkSession,
                                   rootPath: String): RagIndex =
-    ragIndexLoadAt(s, graft.core.IndexStore.latestDir(s, rootPath))
+    graft.core.IndexFamily.load[RagIndex](s, rootPath)._2
 
-  /** [[ragIndexLoad]] of one EXPLICIT committed version directory —
-    * how [[ragMaintain]] reconstitutes the staleness baseline.
+  /** The RAG family's instance of the shared index lifecycle
+    * ([[graft.core.IndexFamily]]).
     */
-  private[graft] def ragIndexLoadAt(s: org.apache.spark.sql.SparkSession,
-                                    path: String): RagIndex = {
-    // EXPLICIT schemas (matching the save's inferred layout bit-for-bit,
-    // partition columns in their inferred type and position): a schema'd
-    // read skips the per-table footer-inference job, so a load costs ONE
-    // driver action (the meta row) instead of ~7 — the maintain lanes
-    // load 3x per pass (guide §6)
-    import org.apache.spark.sql.types.StructType
-    def rd(t: String, ddl: String) =
-      s.read.schema(StructType.fromDDL(ddl)).parquet(s"$path/$t")
-    val metaDf = rd("meta",
-      "nd BIGINT,tt BIGINT,n BIGINT,cells BIGINT,mns ARRAY<BIGINT>,rngs ARRAY<BIGINT>")
-    val m = metaDf.first()
-    RagIndex(
-      rd("postings", "xid BIGINT,term STRING,tf BIGINT,dl BIGINT,tb INT"),
-      rd("term_stats", "term STRING,df BIGINT,tb INT"),
-      broadcast(metaDf.select(col("nd"), col("tt"))),
-      m.getAs[Long]("n"),
-      rd("centroids", "cid BIGINT,cvec ARRAY<DOUBLE>")
-        .select(col("cid"), col("cvec")),
-      rd("codes", "xid BIGINT,rx ARRAY<BIGINT>,xnorm DOUBLE,cid INT"),
-      m.getAs[scala.collection.Seq[Long]]("mns")
-      .zip(m.getAs[scala.collection.Seq[Long]]("rngs")).toSeq,
-      m.getAs[Long]("cells").toInt)
+  private[graft] implicit object RagFamily
+      extends graft.core.IndexFamily[RagIndex] {
+    def session(idx: RagIndex): org.apache.spark.sql.SparkSession =
+      idx.postings.sparkSession
+
+    /** Layout is the 100 TB pruning one: postings and term stats land
+      * TERM-BUCKETED — directory-partitioned on a 64-way md5 word of the
+      * term, the `bucketBy(term)` layout expressible without a catalog —
+      * so a query batch's sparse reads skip every bucket its terms don't
+      * hash to; the SQ8 code store is CELL-PARTITIONED so the dense side
+      * reads only probed cells. Totals, centroids, and the corpus count
+      * are small unpartitioned tables.
+      */
+    def write(idx: RagIndex, path: String): Unit = {
+      // explicit shuffle width: repartition(col) alone lets AQE coalesce
+      // the (small) shuffle to ONE partition, which serializes every
+      // partition-directory's file write through a single task — the
+      // measured bulk of the save wall. An explicit count (the session's
+      // shuffle parallelism — scale-adaptive, not a local constant) keeps
+      // the writers parallel; each bucket/cell still lands wholly in one
+      // task, so the one-file-per-directory layout is unchanged.
+      val p = idx.postings.sparkSession.sessionState.conf.numShufflePartitions
+      def tb(d: org.apache.spark.sql.DataFrame) =
+        d.withColumn("tb", (Hashing.hash32(col("term")) % 64).cast("int"))
+          .repartition(p, col("tb"))
+      tb(idx.postings)
+        .write.mode("overwrite").partitionBy("tb").parquet(s"$path/postings")
+      tb(idx.termStats)
+        .write.mode("overwrite").partitionBy("tb").parquet(s"$path/term_stats")
+      // totals + config + quantizer stats merged into ONE 1-row `meta`
+      // table (stats as dim-ordered arrays): one write job and one read
+      // action per save/load cycle instead of three of each — the arc
+      // lanes (q150i/j, q167i/j, q183e/f) pay this per store round trip
+      val s = idx.postings.sparkSession
+      import s.implicits._
+      idx.tot.select(col("nd"), col("tt"))
+        .crossJoin(Seq((idx.corpusCount, idx.cells.toLong,
+          idx.stats.map(_._1), idx.stats.map(_._2)))
+          .toDF("n", "cells", "mns", "rngs"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+      idx.centroids.coalesce(1)
+        .write.mode("overwrite").parquet(s"$path/centroids")
+      idx.index.repartition(p, col("cid"))
+        .write.mode("overwrite").partitionBy("cid").parquet(s"$path/codes")
+    }
+
+    /** Every frame a FileScan. The bucket/cell partition columns stay in
+      * their INFERRED types and positions: filters on them must hit the
+      * raw partition column (a cast would defeat directory pruning), and
+      * every consumer joins through them type-coerced.
+      */
+    def read(s: org.apache.spark.sql.SparkSession, path: String): RagIndex = {
+      // EXPLICIT schemas (matching the save's inferred layout bit-for-bit,
+      // partition columns in their inferred type and position): a schema'd
+      // read skips the per-table footer-inference job, so a load costs ONE
+      // driver action (the meta row) instead of ~7 — the maintain lanes
+      // load 3x per pass (guide §6)
+      import org.apache.spark.sql.types.StructType
+      def rd(t: String, ddl: String) =
+        s.read.schema(StructType.fromDDL(ddl)).parquet(s"$path/$t")
+      val metaDf = rd("meta",
+        "nd BIGINT,tt BIGINT,n BIGINT,cells BIGINT,mns ARRAY<BIGINT>,rngs ARRAY<BIGINT>")
+      val m = metaDf.first()
+      RagIndex(
+        rd("postings", "xid BIGINT,term STRING,tf BIGINT,dl BIGINT,tb INT"),
+        rd("term_stats", "term STRING,df BIGINT,tb INT"),
+        broadcast(metaDf.select(col("nd"), col("tt"))),
+        m.getAs[Long]("n"),
+        rd("centroids", "cid BIGINT,cvec ARRAY<DOUBLE>")
+          .select(col("cid"), col("cvec")),
+        rd("codes", "xid BIGINT,rx ARRAY<BIGINT>,xnorm DOUBLE,cid INT"),
+        m.getAs[scala.collection.Seq[Long]]("mns")
+        .zip(m.getAs[scala.collection.Seq[Long]]("rngs")).toSeq,
+        m.getAs[Long]("cells").toInt)
+    }
+
+    /** A micro-batch of (doc_id, text) rows through [[ragIndexAppend]]
+      * (sparse half exactly incremental, dense half under the frozen
+      * build quantizer/centroids).
+      */
+    def append(idx: RagIndex,
+               batch: org.apache.spark.sql.DataFrame): Option[RagIndex] =
+      if (batch.isEmpty) None else Some(ragIndexAppend(idx, batch))
+
+    /** Postings and the code store: term stats and totals already
+      * checkpoint inside every append.
+      */
+    def flatten(idx: RagIndex): RagIndex = idx.copy(
+      postings = idx.postings.localCheckpoint(true),
+      index = idx.index.localCheckpoint(true))
+
+    def dials(base: => RagIndex, cur: RagIndex,
+              n: => Long): org.apache.spark.sql.DataFrame =
+      ragStaleness(base, cur)
+
+    /** [[ragIndexBuildOf]] over the raw (doc_id, text) corpus: the
+      * geometry re-derives from its chunk count.
+      */
+    def rebuild(cur: RagIndex, corpus: org.apache.spark.sql.DataFrame,
+                n: => Long): RagIndex =
+      ragIndexBuildOf(corpus)
   }
 
   /** APPEND new documents to a built (or loaded) chunk index and return
@@ -2403,42 +2424,14 @@ object TextQueries {
       cur.stats, cur.cells) // cur's frozen geometry (≡ base's while cur
                             // descends from it; right after a rebuild)
 
-  /** The RAG family's unified maintenance entry — the retrieval twin
-    * of [[graft.operators.Similarity.knnMaintain]], one cron-able
-    * call: load the latest committed chunk index and its recorded
-    * staleness baseline (the last full build — prune keeps it), probe
-    * [[ragStaleness]], and when the dial fires re-index `docs` (the
-    * raw (doc_id, text) corpus) with [[ragIndexBuildOf]] at the
-    * re-derived geometry, save as the new baseline, probe again.
-    * Returns the phase-tagged dial rows (`before` alone when quiet —
-    * q150j gates the fired arc against q150i's oracle). The rebuild
-    * carries the replay cursor forward (the corpus already contains
-    * every folded batch).
+  /** [[graft.core.IndexFamily.maintain]] over a persisted RAG store:
+    * `docs` is the raw (doc_id, text) corpus the re-index runs from
+    * (q150j gates this call against q150i's oracle).
     */
   private[graft] def ragMaintain(s: org.apache.spark.sql.SparkSession,
-      path: String, docs: org.apache.spark.sql.DataFrame,
-      retain: Int = 1): org.apache.spark.sql.DataFrame = {
-    import graft.operators.Similarity
-    val store = graft.core.IndexStore
-    val c = store.latest(s, path).getOrElse(sys.error(
-      s"ragMaintain: no committed index at $path — build and save first"))
-    val cur = ragIndexLoadAt(s, store.committedDirOf(s, path, c.version).get)
-    val base =
-      if (c.baseVersion == c.version) cur
-      else ragIndexLoadAt(s, store.committedDirOf(s, path, c.baseVersion)
-        .getOrElse(sys.error(
-          s"ragMaintain: baseline v=${c.baseVersion} of $path is gone — " +
-            "it must stay retained until a rebuild resets it")))
-    val before = ragStaleness(base, cur)
-      .withColumn("phase", lit("before")).localCheckpoint(true)
-    if (!before.first().getAs[Boolean]("stale"))
-      return Similarity.phased(before)
-    val idx2 = ragIndexBuildOf(docs)
-    ragIndexSave(idx2, path, lastBatch = c.lastBatch, retain = retain)
-    val cur2 = ragIndexLoad(s, path)
-    Similarity.phased(before.unionByName(
-      ragStaleness(cur2, cur2).withColumn("phase", lit("after"))))
-  }
+      path: String, docs: org.apache.spark.sql.DataFrame
+  ): org.apache.spark.sql.DataFrame =
+    graft.core.IndexFamily.maintain[RagIndex](s, path, docs)
 
   /** The RAG serve from DISK artifacts — q150c made the build/serve
     * split's cost honest; this row makes it DEPLOYABLE: the index is
@@ -2731,7 +2724,7 @@ object TextQueries {
     // re-derived config (the production response the dial schedules)
     val idx2 = ragIndexBuildOf(docs)
     val after = ragStaleness(idx2, idx2).withColumn("phase", lit("after"))
-    graft.operators.Similarity.phased(before.unionByName(after))
+    graft.core.IndexFamily.phased(before.unionByName(after))
   }
 
   /** q150i's oracle — shared verbatim by q150j (the [[ragMaintain]]

@@ -64,8 +64,8 @@ class CcIndexSpec extends AnyFunSuite {
     val dels = baseLabels.filter(col("id") === col("lbl"))
       .select(col("id")).limit(3).localCheckpoint(true)
     val (bands2, labels2) = Dedup.ccRetire(baseBands, baseLabels, dels)
-    val ingest = new CcIngest(bands2, labels2, bnd, rpb,
-      base.count() - dels.count())
+    val ingest = new CcIngest(Dedup.CcIndex(bands2, labels2, bnd, rpb,
+      base.count() - dels.count()))
     ingest.foldBatch(delta, 0L)
 
     val net = bandsOf(base, bnd, rpb)
@@ -73,7 +73,7 @@ class CcIndexSpec extends AnyFunSuite {
       .select("id", "band", "key")
       .unionByName(bandsOf(delta, bnd, rpb))
     val rebuilt = Dedup.connectedComponents(Dedup.bucketStarEdges(net))
-    same(ingest.labels, rebuilt, "retire→append chain")
+    same(ingest.index.labels, rebuilt, "retire→append chain")
   }
 
   test("maintenance cycle through the store: save → load → append → retire → save → load ≡ rebuild") {
@@ -91,24 +91,25 @@ class CcIndexSpec extends AnyFunSuite {
     val baseBands = bandsOf(base, bnd, rpb).localCheckpoint(true)
     val baseLabels = Dedup.connectedComponents(Dedup.bucketStarEdges(baseBands))
     val p = graft.core.Graft.scratch("spec_cc_cycle")
-    Dedup.ccIndexSave(baseBands, baseLabels, bnd, rpb, base.count(), p)
+    Dedup.ccIndexSave(
+      Dedup.CcIndex(baseBands, baseLabels, bnd, rpb, base.count()), p)
     // day 1: resume from disk, stream the delta in
     val ingest = CcIngest.resume(spark, p)
     ingest.foldBatch(delta, 0L)
     // retire hubs + a residue slice from the APPENDED state (the
     // hardest delete shape: splits possible)
-    val appended = ingest.labels.localCheckpoint(true)
+    val appended = ingest.index.labels.localCheckpoint(true)
     val dels = appended.filter(col("id") === col("lbl")).select(col("id"))
       .limit(4)
       .unionByName(appended.filter(col("id") % 13 === 2).select(col("id")))
       .distinct().localCheckpoint(true)
     assert(dels.count() > 0, "fixture must delete something")
-    val (bands2, labels2) = Dedup.ccRetire(ingest.bands, appended, dels)
-    Dedup.ccIndexSave(bands2, labels2, bnd, rpb,
-      ingest.docCount - dels.count(), p)
-    val (bandsL, labelsL, bndL, rpbL, cntL) = Dedup.ccIndexLoad(spark, p)
+    val (bands2, labels2) = Dedup.ccRetire(ingest.index.bands, appended, dels)
+    Dedup.ccIndexSave(Dedup.CcIndex(bands2, labels2, bnd, rpb,
+      ingest.index.docCount - dels.count()), p)
+    val Dedup.CcIndex(bandsL, labelsL, bndL, rpbL, cntL) = Dedup.ccIndexLoad(spark, p)
     assert((bndL, rpbL) === ((bnd, rpb)), "frozen geometry must round-trip")
-    assert(cntL === ingest.docCount - dels.count(),
+    assert(cntL === ingest.index.docCount - dels.count(),
       "the corpus-count definition must round-trip")
     val net = bandsOf(base, bnd, rpb).unionByName(bandsOf(delta, bnd, rpb))
       .join(dels.withColumnRenamed("id", "d"), col("id") === col("d"),

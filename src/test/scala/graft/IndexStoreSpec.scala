@@ -1,7 +1,9 @@
 package graft
 
-import graft.operators.Similarity
+import graft.operators.{Dedup, Similarity}
 import graft.queries.TextQueries
+import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -27,6 +29,26 @@ class IndexStoreSpec extends AnyFunSuite {
     */
   private def poisoned(c: String) =
     expr(s"if($c is not null, cast(raise_error('torn save') as long), $c)")
+
+  private def knnIndexOf(base: DataFrame): Similarity.KnnIndex = {
+    val nb = base.count()
+    val cells = Similarity.ivfCellsFor(nb)
+    val cents = base.orderBy(col("xid")).limit(cells)
+      .select(col("xid").as("cid"), col("xvec").as("cvec"))
+    Similarity.knnGraphBuild(base, cents, Similarity.ivfProbesFor(cells), 3,
+      Similarity.knnCellCapFor(nb, cells, 3))
+  }
+
+  private def ccIndexOf(docs: DataFrame): Dedup.CcIndex = {
+    val n = docs.count()
+    val (bnd, rpb) = Dedup.lshGeometry(n)
+    val bands = Dedup.lshBands(
+      Dedup.minhash(docs, col("doc_id"), Dedup.bigrams(col("text")), bnd * rpb),
+      bnd, rpb).localCheckpoint(true)
+    Dedup.CcIndex(bands,
+      Dedup.connectedComponents(Dedup.bucketStarEdges(bands))
+        .localCheckpoint(true), bnd, rpb, n)
+  }
 
   test("knn store: a save crashing between tables keeps serving the prior version") {
     val emb = spark.read.parquet(s"${TestSpark.sf0001}/embeddings.parquet")
@@ -94,10 +116,36 @@ class IndexStoreSpec extends AnyFunSuite {
       v1Postings, "postings after recovered save")
   }
 
+  test("cc store: a save crashing between tables keeps serving the prior version") {
+    val docs = spark.read.parquet(s"${TestSpark.sf0001}/documents.parquet")
+      .select(col("doc_id"), col("text"))
+    val idx = ccIndexOf(docs)
+    val path = graft.core.Graft.scratch("spec_store_cc")
+
+    Dedup.ccIndexSave(idx, path) // v1, committed
+    val v1 = Dedup.ccIndexLoad(spark, path).labels.localCheckpoint(true)
+
+    // poison the LABELS table (2nd of 3): the band table of the torn
+    // version is fully on disk when the save dies
+    val poisonedIdx = idx.copy(labels = idx.labels.withColumn("lbl", poisoned("lbl")))
+    intercept[Exception] { Dedup.ccIndexSave(poisonedIdx, path) }
+
+    val after = Dedup.ccIndexLoad(spark, path)
+    sameFrame(after.labels, v1, "labels after torn save")
+    assert(after.docCount === idx.docCount)
+    assert(graft.core.IndexStore.latest(spark, path).get.version === 1L)
+
+    Dedup.ccIndexSave(idx, path, lastBatch = 4L)
+    val c = graft.core.IndexStore.latest(spark, path).get
+    assert(c.version > 1L && c.lastBatch === 4L)
+    sameFrame(Dedup.ccIndexLoad(spark, path).labels, v1,
+      "labels after recovered save")
+  }
+
   test("store with no committed version refuses to load") {
     val path = graft.core.Graft.scratch("spec_store_empty")
     val e = intercept[RuntimeException] {
-      graft.core.IndexStore.latestDir(spark, path)
+      graft.core.IndexStore.committed(spark, path)
     }
     assert(e.getMessage.contains("no committed index version"))
   }
@@ -165,7 +213,7 @@ class IndexStoreSpec extends AnyFunSuite {
     val afterEmpty = store.latest(spark, path).get
     assert(afterEmpty.version === v1 && afterEmpty.lastBatch === 5L,
       s"empty marker must fall through to v=$v1: $afterEmpty")
-    assert(store.latestDir(spark, path) === d1)
+    assert(store.dirOf(path, store.committed(spark, path)) === d1)
 
     // a garbled marker behaves the same
     val out = fs.create(new org.apache.hadoop.fs.Path(d2, "COMMIT"), true)
@@ -228,7 +276,8 @@ class IndexStoreSpec extends AnyFunSuite {
       Similarity.knnCellCapFor(nb, cells, 3))
     val path = graft.core.Graft.scratch("spec_store_retain2")
     (1 to 4).foreach(i =>
-      Similarity.knnIndexSave(idx, path, lastBatch = i, retain = 2))
+      graft.core.IndexStore.save(spark, path, lastBatch = i, retain = 2)(
+        Similarity.KnnFamily.write(idx, _)))
     // two superseded committed versions retained (v2, v3) + the live v4:
     // a reader may lag TWO full re-index cycles before re-resolving
     assert(dirsUnder(path) === Set("v=2", "v=3", "v=4"),
@@ -270,5 +319,102 @@ class IndexStoreSpec extends AnyFunSuite {
     store.commit(spark, path, v1, -1L)
     store.commit(spark, path, v2, -1L)
     assert(store.latest(spark, path).get.version === math.max(v1, v2))
+  }
+
+  /** Saves v1 (replay cursor 5), arms [[RacingLocalFs]] to commit v2
+    * (cursor 9) right after the first listing of the store root, then
+    * resumes an ingest through the racing scheme: its cursor and every
+    * file its index reads must come from ONE version — resolving the
+    * store twice pairs v1's cursor with v2's tables.
+    */
+  private def resumesOneVersion(name: String)(save: (String, Long) => Unit)(
+      resume: String => (Long, Seq[DataFrame])): Unit = {
+    val path = graft.core.Graft.scratch(s"spec_store_race_$name")
+    save(path, 5L)
+    RacingLocalFs.arm(path)(save(path, 9L))
+    val (lastBatch, frames) = resume(s"${RacingLocalFs.Scheme}://$path")
+    assert(!RacingLocalFs.armed, "the racing commit never ran")
+    assert(graft.core.IndexStore.latest(spark, path).get.lastBatch === 9L)
+    val v = if (lastBatch == 5L) 1 else 2
+    val files = frames.flatMap(_.inputFiles)
+    assert(files.nonEmpty, "the resumed index reads no files")
+    val foreign = files.filterNot(_.contains(s"/v=$v/"))
+    assert(foreign.isEmpty, s"cursor $lastBatch is v=$v's, but the index " +
+      s"read ${foreign.length} files of another version: ${foreign.take(1)}")
+  }
+
+  test("knn resume reads the one version it resolved") {
+    RacingLocalFs.register(spark)
+    val emb = spark.read.parquet(s"${TestSpark.sf0001}/embeddings.parquet")
+    val idx = knnIndexOf(emb.select(col("vec_id").as("xid"), col("embedding").as("xvec")))
+    resumesOneVersion("knn")((p, b) => Similarity.knnIndexSave(idx, p, lastBatch = b)) { p =>
+      val in = graft.streaming.KnnIngest.resume(spark, p)
+      val i = in.index
+      (in.lastBatch, Seq(i.centroids, i.xn, i.enc, i.assignD2, i.servable,
+        i.probes, i.directed))
+    }
+  }
+
+  test("rag resume reads the one version it resolved") {
+    RacingLocalFs.register(spark)
+    val docs = spark.read.parquet(s"${TestSpark.sf0001}/documents.parquet")
+      .select(col("doc_id"), col("text"))
+    val idx = TextQueries.ragIndexBuildOf(docs)
+    resumesOneVersion("rag")((p, b) => TextQueries.ragIndexSave(idx, p, lastBatch = b)) { p =>
+      val in = graft.streaming.RagIngest.resume(spark, p)
+      val i = in.index
+      (in.lastBatch, Seq(i.postings, i.termStats, i.tot, i.centroids, i.index))
+    }
+  }
+
+  test("cc resume reads the one version it resolved") {
+    RacingLocalFs.register(spark)
+    val docs = spark.read.parquet(s"${TestSpark.sf0001}/documents.parquet")
+      .select(col("doc_id"), col("text"))
+    val idx = ccIndexOf(docs)
+    resumesOneVersion("cc")((p, b) => Dedup.ccIndexSave(idx, p, lastBatch = b)) { p =>
+      val in = graft.streaming.CcIngest.resume(spark, p)
+      (in.lastBatch, Seq(in.index.bands, in.index.labels))
+    }
+  }
+}
+
+/** The local filesystem under a scratch scheme, with one hook: a store
+  * root armed by [[RacingLocalFs.arm]] gets a concurrent writer's
+  * commit right after its first listing — the window between a reader
+  * resolving the latest version and reading its tables.
+  */
+class RacingLocalFs extends RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create(s"${RacingLocalFs.Scheme}:///")
+
+  override def listStatus(p: Path): Array[FileStatus] = {
+    val listed = super.listStatus(p)
+    RacingLocalFs.afterListing(p.toUri.getPath)
+    listed
+  }
+}
+
+object RacingLocalFs {
+  val Scheme = "racefs"
+  @volatile private var hook: Option[(String, () => Unit)] = None
+
+  def register(s: org.apache.spark.sql.SparkSession): Unit = {
+    val conf = s.sparkContext.hadoopConfiguration
+    conf.set(s"fs.$Scheme.impl", classOf[RacingLocalFs].getName)
+    conf.setBoolean(s"fs.$Scheme.impl.disable.cache", true)
+  }
+
+  /** Run `commit` once, right after the next listing of `root`. */
+  def arm(root: String)(commit: => Unit): Unit = hook = Some((root, () => commit))
+
+  def armed: Boolean = hook.isDefined
+
+  private def afterListing(path: String): Unit = synchronized {
+    hook match {
+      case Some((root, commit)) if path.stripSuffix("/") == root.stripSuffix("/") =>
+        hook = None
+        commit()
+      case _ =>
+    }
   }
 }

@@ -568,16 +568,17 @@ class SoakTest extends AnyFunSuite {
     time("build_save_committed") {
       val bb = bandsOf(baseDocs).localCheckpoint(true)
       val bl = Dedup.connectedComponents(Dedup.bucketStarEdges(bb))
-      Dedup.ccIndexSave(bb, bl, bnd, rpb, baseDocs.count(), s"$dir/index")
+      Dedup.ccIndexSave(Dedup.CcIndex(bb, bl, bnd, rpb, baseDocs.count()),
+        s"$dir/index")
       bl.count()
     }
     val ingest = CcIngest.resume(spark, s"$dir/index")
     time("stream_fold_10pct") {
       ingest.foldBatch(deltaDocs, 0L)
-      ingest.labels.count()
+      ingest.index.labels.count()
     }
     time("staleness_probe") {
-      val r = Dedup.ccStaleness(ingest.docCount, bnd, rpb).first()
+      val r = Dedup.ccStaleness(ingest.index.docCount, bnd, rpb).first()
       println(s"SOAKCC staleness: $r")
       assert(!r.getAs[Boolean]("stale"),
         s"10% growth inside the geometry step must stay quiet: $r")
@@ -585,11 +586,11 @@ class SoakTest extends AnyFunSuite {
     }
     var retired: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = null
     time("retire_1000_incl_hubs") {
-      val dels = ingest.labels.filter(col("id") === col("lbl"))
+      val dels = ingest.index.labels.filter(col("id") === col("lbl"))
         .select(col("id")).limit(200)
-        .unionByName(ingest.labels.filter(col("id") % 997 === 3).select(col("id")))
+        .unionByName(ingest.index.labels.filter(col("id") % 997 === 3).select(col("id")))
         .limit(1000).localCheckpoint(true)
-      retired = Dedup.ccRetire(ingest.bands, ingest.labels, dels)
+      retired = Dedup.ccRetire(ingest.index.bands, ingest.index.labels, dels)
       retired._2.localCheckpoint(true).count()
     }
     // parity at posture scale: retire ≡ rebuild over the surviving bands

@@ -824,39 +824,110 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("knn ingest: a replayed micro-batch folds as a no-op") {
-    // foreachBatch is AT-LEAST-ONCE on restart: the sink may see the same
-    // (batch, batchId) again. The ingest tracks its last folded id, so a
-    // replay must leave every artifact bit-identical — a double-append
-    // would violate the unique-id contract and duplicate graph edges.
-    import graft.operators.Similarity
-    import graft.streaming.KnnIngest
-    import org.apache.spark.sql.functions._
-    val emb = spark.read.parquet(s"${TestSpark.sf0001}/embeddings.parquet")
-    val base = emb.filter(col("vec_id") % 10 =!= 9)
-      .select(col("vec_id").as("xid"), col("embedding").as("xvec"))
-    val delta = emb.filter(col("vec_id") % 10 === 9)
-      .select(col("vec_id").as("xid"), col("embedding").as("xvec"))
-    val nb = base.count()
-    val cells = Similarity.ivfCellsFor(nb)
-    val centroids = base.orderBy(col("xid")).limit(cells)
-      .select(col("xid").as("cid"), col("xvec").as("cvec"))
-    val idx0 = Similarity.knnGraphBuild(base, centroids,
-      Similarity.ivfProbesFor(cells), 3,
-      Similarity.knnCellCapFor(nb, cells, 3))
-    val ingest = new KnnIngest(idx0)
-    val b0 = delta.filter(col("xid") % 2 === 0).localCheckpoint(true)
-    val b1 = delta.filter(col("xid") % 2 === 1).localCheckpoint(true)
-    ingest.foldBatch(b0, 0L)
-    ingest.foldBatch(b1, 1L)
-    val before = ingest.edges.localCheckpoint(true)
-    ingest.foldBatch(b1, 1L) // the restart replay
-    ingest.foldBatch(b0, 0L) // an even staler replay
-    val after = ingest.edges.localCheckpoint(true)
-    assert(after.exceptAll(before).isEmpty && before.exceptAll(after).isEmpty,
-      "replayed batches must not change the graph")
-    assert(ingest.lastBatch === 1L)
+  /** One index family's lifecycle fixture: a built index over a base
+    * slice, the delta its ingest folds (split into batches on `idCol`),
+    * and the frames the lifecycle tests compare. Each family's view
+    * normalizes what a store round trip changes (partition columns
+    * added, cell ids re-typed) so a reloaded index compares against an
+    * in-memory one.
+    */
+  private final class Lifecycle[I](
+      val name: String, idCol: String,
+      val build: () => (I, org.apache.spark.sql.DataFrame),
+      val view: I => Seq[org.apache.spark.sql.DataFrame])(
+      implicit val family: graft.core.IndexFamily[I]) {
+    def batches(delta: org.apache.spark.sql.DataFrame,
+                k: Int): Seq[org.apache.spark.sql.DataFrame] = {
+      import org.apache.spark.sql.functions.col
+      (0 until k).map(r =>
+        delta.filter(col(idCol) % k === r).localCheckpoint(true))
+    }
   }
+
+  private def knnLifecycle = {
+    import graft.operators.Similarity
+    import org.apache.spark.sql.functions._
+    new Lifecycle[Similarity.KnnIndex]("knn", "xid", { () =>
+      val emb = spark.read.parquet(s"${TestSpark.sf0001}/embeddings.parquet")
+      val base = emb.filter(col("vec_id") % 10 =!= 9)
+        .select(col("vec_id").as("xid"), col("embedding").as("xvec"))
+      val delta = emb.filter(col("vec_id") % 10 === 9)
+        .select(col("vec_id").as("xid"), col("embedding").as("xvec"))
+      val nb = base.count()
+      val cells = Similarity.ivfCellsFor(nb)
+      val centroids = base.orderBy(col("xid")).limit(cells)
+        .select(col("xid").as("cid"), col("xvec").as("cvec"))
+      (Similarity.knnGraphBuild(base, centroids,
+        Similarity.ivfProbesFor(cells), 3,
+        Similarity.knnCellCapFor(nb, cells, 3)), delta)
+    }, i => Seq(Similarity.mutualize(i.directed)))
+  }
+
+  private def ragLifecycle = {
+    import graft.queries.TextQueries
+    import org.apache.spark.sql.functions._
+    new Lifecycle[TextQueries.RagIndex]("rag", "doc_id", { () =>
+      val docs = spark.read.parquet(s"${TestSpark.sf0001}/documents.parquet")
+        .select(col("doc_id"), col("text"))
+      (TextQueries.ragIndexBuildOf(docs.filter(col("doc_id") % 50 =!= 49)),
+        docs.filter(col("doc_id") % 50 === 49))
+    }, i => Seq(
+      i.postings.select("xid", "term", "tf", "dl"),
+      i.termStats.select("term", "df"),
+      i.tot.select("nd", "tt"),
+      i.index.select(col("xid"), col("rx"), col("xnorm"),
+        col("cid").cast("long"))))
+  }
+
+  private def ccLifecycle = {
+    import graft.operators.Dedup
+    import org.apache.spark.sql.functions._
+    new Lifecycle[Dedup.CcIndex]("cc", "doc_id", { () =>
+      val docs = spark.read.parquet(s"${TestSpark.sf0001}/documents.parquet")
+        .select(col("doc_id"), col("text"))
+      val base = docs.filter(col("doc_id") % 10 =!= 0)
+      val n = base.count()
+      val (bnd, rpb) = Dedup.lshGeometry(n)
+      val bands = Dedup.lshBands(
+        Dedup.minhash(base, col("doc_id"), Dedup.bigrams(col("text")), bnd * rpb),
+        bnd, rpb).localCheckpoint(true)
+      val labels = Dedup.connectedComponents(Dedup.bucketStarEdges(bands))
+        .localCheckpoint(true)
+      (Dedup.CcIndex(bands, labels, bnd, rpb, n),
+        docs.filter(col("doc_id") % 10 === 0))
+    }, i => Seq(i.labels, i.bands.select("id", "band", "key")))
+  }
+
+  private def sameFrames(got: Seq[org.apache.spark.sql.DataFrame],
+                         want: Seq[org.apache.spark.sql.DataFrame],
+                         what: String): Unit =
+    got.zip(want).foreach { case (a, b) =>
+      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty, what)
+    }
+
+  private def replayFoldsAsNoOp[I](l: Lifecycle[I]): Unit =
+    test(s"${l.name} ingest: a replayed micro-batch folds as a no-op") {
+      // foreachBatch is AT-LEAST-ONCE on restart: the sink may see the
+      // same (batch, batchId) again. The ingest tracks its last folded
+      // id, so a replay must leave every artifact bit-identical — a
+      // double-append would violate the unique-id contract and
+      // duplicate graph edges, postings or band rows.
+      import l.family
+      val (idx0, delta) = l.build()
+      val ingest = new graft.core.Ingest(idx0)
+      val Seq(b0, b1) = l.batches(delta, 2)
+      ingest.foldBatch(b0, 0L)
+      ingest.foldBatch(b1, 1L)
+      val before = l.view(ingest.index).map(_.localCheckpoint(true))
+      ingest.foldBatch(b1, 1L) // the restart replay
+      ingest.foldBatch(b0, 0L) // an even staler replay
+      val after = l.view(ingest.index).map(_.localCheckpoint(true))
+      sameFrames(after, before, "replayed batches must not change the graph")
+      assert(ingest.lastBatch === 1L)
+    }
+  replayFoldsAsNoOp(knnLifecycle)
+  replayFoldsAsNoOp(ragLifecycle)
+  replayFoldsAsNoOp(ccLifecycle)
 
   test("knn ingest: resume from a saved checkpoint restores the replay cursor") {
     // KnnIngest.resume's half of the crash/restart contract (RagIngest's
@@ -899,47 +970,34 @@ class StreamingSpec extends AnyFunSuite {
     assert(resumed.lastBatch === 1L)
   }
 
-  test("knn ingest: fold→save→fold→save→fold stays exact past the second prune") {
-    // ADVICE r18's exact shape: one long-lived ingest saving at a
-    // checkpoint cadence while it keeps folding. The SECOND save's
-    // prune reclaims the version the pre-first-save frames referenced
-    // (retention buys one cycle of grace); save()'s re-point at the
-    // just-committed version is what keeps fold #3 off deleted files.
-    import graft.operators.Similarity
-    import graft.streaming.KnnIngest
-    import org.apache.spark.sql.functions._
-    val emb = spark.read.parquet(s"${TestSpark.sf0001}/embeddings.parquet")
-    val base = emb.filter(col("vec_id") % 10 =!= 9)
-      .select(col("vec_id").as("xid"), col("embedding").as("xvec"))
-    val delta = emb.filter(col("vec_id") % 10 === 9)
-      .select(col("vec_id").as("xid"), col("embedding").as("xvec"))
-    val nb = base.count()
-    val cells = Similarity.ivfCellsFor(nb)
-    val centroids = base.orderBy(col("xid")).limit(cells)
-      .select(col("xid").as("cid"), col("xvec").as("cvec"))
-    val idx0 = Similarity.knnGraphBuild(base, centroids,
-      Similarity.ivfProbesFor(cells), 3,
-      Similarity.knnCellCapFor(nb, cells, 3))
-    val b = (0 until 3).map(r =>
-      delta.filter(col("xid") % 3 === r).localCheckpoint(true))
-    val path = graft.core.Graft.scratch("spec_knn_save_chain")
-    val ingest = new KnnIngest(idx0)
-    ingest.foldBatch(b(0), 0L)
-    ingest.save(path) // v1
-    ingest.foldBatch(b(1), 1L)
-    ingest.save(path) // v2 commits; prune retains v1
-    ingest.foldBatch(b(2), 2L) // v3 era: pre-v1 frames would be gone
-    ingest.save(path) // v3 commits; prune RECLAIMS v1
-    // serving and one more fold must still work from the live frames
-    val got = ingest.edges.localCheckpoint(true)
-    val want = Similarity.mutualize(Similarity.knnGraphAppend(
-        Similarity.knnGraphAppend(Similarity.knnGraphAppend(
-          idx0, b(0)), b(1)), b(2)).directed)
-      .localCheckpoint(true)
-    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
-      "save-interleaved folds diverged from the chained appends")
-    assert(graft.core.IndexStore.latest(spark, path).get.version === 3L)
-  }
+  private def saveChainStaysExact[I](l: Lifecycle[I]): Unit =
+    test(s"${l.name} ingest: fold→save→fold→save→fold stays exact past the second prune") {
+      // ADVICE r18's exact shape: one long-lived ingest saving at a
+      // checkpoint cadence while it keeps folding. The SECOND save's
+      // prune reclaims the version the pre-first-save frames referenced
+      // (retention buys one cycle of grace); save()'s re-point at the
+      // just-committed version is what keeps fold #3 off deleted files.
+      import l.family
+      val (idx0, delta) = l.build()
+      val b = l.batches(delta, 3)
+      val path = graft.core.Graft.scratch(s"spec_${l.name}_save_chain")
+      val ingest = new graft.core.Ingest(idx0)
+      ingest.foldBatch(b(0), 0L)
+      ingest.save(path) // v1
+      ingest.foldBatch(b(1), 1L)
+      ingest.save(path) // v2 commits; prune retains v1
+      ingest.foldBatch(b(2), 2L) // v3 era: pre-v1 frames would be gone
+      ingest.save(path) // v3 commits; prune RECLAIMS v1
+      // serving and one more fold must still work from the live frames
+      val want = b.foldLeft(idx0)((i, d) => l.family.append(i, d).get)
+      sameFrames(l.view(ingest.index).map(_.localCheckpoint(true)),
+        l.view(want).map(_.localCheckpoint(true)),
+        "save-interleaved folds diverged from the chained appends")
+      assert(graft.core.IndexStore.latest(spark, path).get.version === 3L)
+    }
+  saveChainStaysExact(knnLifecycle)
+  saveChainStaysExact(ragLifecycle)
+  saveChainStaysExact(ccLifecycle)
 
   test("cc ingest: chained micro-batch folds equal the one-shot incremental serve") {
     // the dedup family's streaming lane (CcIngest — q183b's engine):
@@ -965,8 +1023,8 @@ class StreamingSpec extends AnyFunSuite {
       .localCheckpoint(true)
 
     val path = graft.core.Graft.scratch("spec_cc_resume")
-    Dedup.ccIndexSave(baseBands, baseLabels, bnd, rpb, base.count(), path,
-      lastBatch = -1L)
+    Dedup.ccIndexSave(Dedup.CcIndex(baseBands, baseLabels, bnd, rpb,
+      base.count()), path, lastBatch = -1L)
     val ingest = CcIngest.resume(spark, path)
     assert(ingest.lastBatch === -1L)
     val b = (0 until 3).map(r =>
@@ -980,7 +1038,7 @@ class StreamingSpec extends AnyFunSuite {
     resumed.foldBatch(b(1), 1L)
     resumed.foldBatch(b(1), 1L) // duplicate — must no-op
     resumed.foldBatch(b(2), 2L)
-    val got = resumed.labels.localCheckpoint(true)
+    val got = resumed.index.labels.localCheckpoint(true)
 
     // one-shot: the q183 shape over the same frozen geometry
     val oneShotEdges = Dedup.ccDeltaStarEdges(baseBands, bandsOf(delta))

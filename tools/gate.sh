@@ -1,9 +1,9 @@
 #!/bin/bash
 # Commit gate: compile (main + test), run the full verify dump at sf0.001,
 # and oracle-check it with DuckDB. Every commit must pass this first.
-# When engine code (operators/queries/api/sources/functions) is touched,
-# also run the plan-guard suites so a plan regression (unbounded window,
-# lost broadcast, lost pushdown) can't land silently.
+# When engine code (operators/queries/api/sources/functions/core/streaming)
+# is touched, also run the plan-guard suites so a plan regression
+# (unbounded window, lost broadcast, lost pushdown) can't land silently.
 # Usage: tools/gate.sh [sfDir]   (default /root/testdata/sf0.001)
 set -e -o pipefail
 cd /root/repo
@@ -16,7 +16,7 @@ ENGINE_TOUCHED=0
 # silently skipped the plan-guard + bench gates whenever the match came
 # early in the output
 CHANGED=$({ git status --porcelain; git diff --name-only HEAD~1 2>/dev/null; } || true)
-if grep -qE 'src/main/scala/graft/(operators|queries|api|sources|functions|core)/' \
+if grep -qE 'src/main/scala/graft/(operators|queries|api|sources|functions|core|streaming)/' \
     <<< "$CHANGED"; then
   ENGINE_TOUCHED=1
   echo "[gate] engine code touched -> running plan-guard suites"
