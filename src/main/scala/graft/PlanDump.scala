@@ -2,7 +2,10 @@ package graft
 
 /** Measurement tool (optimization rounds, guide §1): dump
   * `.explain("formatted")` for the named queries to
-  * `$SPARK_GRAFT_PLAN_DIR/<name>_$SPARK_GRAFT_PLAN_SUFFIX.txt`.
+  * `$SPARK_GRAFT_PLAN_DIR/<name>_$SPARK_GRAFT_PLAN_SUFFIX.txt`. The
+  * directory defaults to `target/plans` (git-ignored) and the suffix to
+  * `before`; the committed records under `plans/` are written only when
+  * `SPARK_GRAFT_PLAN_DIR` names them.
   *
   * Runs each query's builder (which may execute eager sub-jobs — index
   * builds materialize through localCheckpoint) and prints the FINAL
@@ -13,7 +16,7 @@ package graft
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "plans/r20")
+    val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "target/plans")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "before")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = graft.core.Graft.session("graft-plandump", cpus, cpus.toInt)

@@ -7,7 +7,10 @@ package graft
   * part of the driver contract.
   *
   * Usage: SPARK_GRAFT_SF_DIR=... tools/run.sh graft.Prof <lane> [lane...]
-  * Lanes: rag_disk, rag_stream, knn_persisted, cc_incremental, ...
+  * Lanes: rag_disk, rag_build_detail, rag_incr_detail, setsim_detail,
+  * vec_micro, store_schemas, or any registered query name (PHASE
+  * `<name> build` times frame construction, eager checkpoints included,
+  * then PHASE `<name>` the drain).
   * PHASE lines also count generated classes compiled: name a lane twice,
   * and a warm phase that still compiles has outgrown the codegen cache.
   */
@@ -173,9 +176,6 @@ object Prof {
             .filter(lit(100) * col("inter") >= lit(80) * (col("na") + col("nb") - col("inter")))
             .select(col("a"), col("b"), col("inter"), col("na"), col("nb"))))
         phase("setsim FULL q128")(drain(Dedup.setSimJoin(docs, 80)))
-      case "knn_persisted" =>
-        val q = SparkEntry.registry.find(_.name == "q167e_knn_graph_persisted").get
-        phase("q167e full")(drain(q.run(spark, sfDir)))
       case "vec_micro" =>
         // isolates the quantize/encode kernels (ScaleLongs/Sq8Recon255 vs
         // the HOF forms they replaced) at a row count where per-element
@@ -228,7 +228,7 @@ object Prof {
       case name =>
         val q = SparkEntry.registry.find(_.name == name)
           .getOrElse(sys.error(s"unknown lane/query '$name'"))
-        val df = q.run(spark, sfDir)
+        val df = phase(s"$name build")(q.run(spark, sfDir))
         phase(name)(drain(df))
         // AQE FINAL plan (post-execution): what actually ran, including
         // AQEShuffleRead coalescing and runtime join-strategy changes

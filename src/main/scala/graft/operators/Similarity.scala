@@ -1,11 +1,12 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Embedding similarity search: brute-force cosine top-k as the exact
-  * baseline, and sign-random-projection LSH bucketing as the 100 TB path
-  * (candidates restricted to matching hash buckets before exact scoring).
+/** Embedding similarity search: exact, SQ8- and PQ-scored top-k scans,
+  * SRP LSH and IVF candidate pruning, k-means and SemDeDup, and the
+  * persisted mutual k-NN graph with its delta append and retire.
   *
   * Cross-engine exactness: every float element is quantized ONCE to a
   * scaled long, `round(x * 10^6)` — exact because float(24-bit) * 10^6
@@ -16,6 +17,12 @@ import org.apache.spark.sql.functions._
   * scale-invariant so the 10^12 factor drops out of the identical op
   * tree. All vector math is codegen'd primitives — no UDFs, no boxed
   * decimals in the hot loop.
+  *
+  * The scoring core ([[normScaled]], [[cosScaled]], [[d2Scaled]] and the
+  * three ranks [[topK]], [[nearestCells]], [[capCells]]) is the one place
+  * those exact op trees and their id tiebreaks are written. Every surface
+  * here scores and ranks through it; the DuckDB oracle SQL replays the
+  * same trees by hand, as the independent reference.
   */
 object Similarity {
 
@@ -53,37 +60,109 @@ object Similarity {
   /** Exact scaled dot product of two raw float-array columns. */
   def dotDecimal(a: Column, b: Column): Column = dotScaled(scaled(a), scaled(b))
 
+  // ---- the scoring core: each exact op tree and tiebreak, written once
+
+  /** Euclidean norm of a pre-scaled long array, as a double. */
+  private def normScaled(sv: Column): Column =
+    sqrt(dotScaled(sv, sv).cast("double"))
+
+  /** Cosine of two pre-scaled vectors from their precomputed norms. */
+  private def cosScaled(a: Column, b: Column, na: Column, nb: Column): Column =
+    dotScaled(a, b).cast("double") / (na * nb)
+
+  /** Exact squared distance `x·x − 2·x·c + c·c` of two pre-scaled
+    * vectors, in integer math.
+    */
+  private def d2Scaled(x: Column, c: Column): Column =
+    dotScaled(x, x) - lit(2L) * dotScaled(x, c) + dotScaled(c, c)
+
+  /** Per-query top-k of scored (qid, `id`, cos) rows: cosine descending,
+    * then the smaller id. Adds the int `rank` (≤ k).
+    */
+  private def topK(scored: DataFrame, id: String, k: Int): DataFrame =
+    scored.withColumn("rank", row_number().over(
+        Window.partitionBy(col("qid")).orderBy(col("cos").desc, col(id))))
+      .filter(col("rank") <= k)
+
+  /** Nearest cells per `by` group of (…, cid, d2) rows: d² ascending,
+    * then the smaller cid. Adds the int `rn` (≤ n).
+    */
+  private def nearestCells(scored: DataFrame, n: Int, by: String*): DataFrame =
+    scored.withColumn("rn", row_number().over(
+        Window.partitionBy(by.map(col): _*).orderBy(col("d2"), col("cid"))))
+      .filter(col("rn") <= n)
+
+  /** The per-cell centrality cap over (nid, cid, d2) members: each cell
+    * keeps its `cap` members nearest its centroid, the smaller nid first
+    * on equal d² — (nid, cid). Build, capped assign, append and retire
+    * all (re-)rank serving lists through it.
+    */
+  private def capCells(members: DataFrame, cap: Long): DataFrame =
+    members.withColumn("crn", row_number().over(
+        Window.partitionBy(col("cid")).orderBy(col("d2"), col("nid"))))
+      .filter(col("crn") <= cap)
+      .select(col("nid"), col("cid"))
+
+  /** Every (`id`, `vec`) row against every broadcast centroid, both sides
+    * scaled: (`id`, xs, cid, cs, d2).
+    */
+  private def cellDistances(rows: DataFrame, id: String, vec: String,
+                            centroids: DataFrame): DataFrame =
+    rows.select(col(id), scaled(col(vec)).as("xs"))
+      .crossJoin(broadcast(centroids.select(col("cid"), scaled(col("cvec")).as("cs"))))
+      .withColumn("d2", d2Scaled(col("xs"), col("cs")))
+
+  /** The exact vector store of (xid, xvec) rows: (xid, xs, norm), the
+    * [[KnnIndex]] `xn` layout.
+    */
+  private def exactStore(rows: DataFrame): DataFrame =
+    rows.select(col("xid"), scaled(col("xvec")).as("xs"))
+      .withColumn("norm", normScaled(col("xs")))
+
+  /** An exact store as a member store (xid, rx, xnorm): the exact vector
+    * is its own reconstruction.
+    */
+  private def asMembers(xn: DataFrame): DataFrame =
+    xn.select(col("xid"), col("xs").as("rx"), col("norm").as("xnorm"))
+
+  /** The query side of every scan: (qid, qs, qnorm). */
+  private def queryStore(queries: DataFrame): DataFrame =
+    queries.select(col("qid"), scaled(col("qvec")).as("qs"))
+      .withColumn("qnorm", normScaled(col("qs")))
+
+  /** Query side (qs, qnorm) against member side (rx, xnorm). */
+  private def queryCos: Column =
+    cosScaled(col("qs"), col("rx"), col("qnorm"), col("xnorm")).as("cos")
+
+  /** The public top-k shape of scored (qid, xid, cos) rows:
+    * (qid, xid, cos, rank).
+    */
+  private def rankedTopK(scored: DataFrame, k: Int): DataFrame =
+    topK(scored, "xid", k)
+      .select(col("qid"), col("xid"), col("cos"), col("rank").cast("long").as("rank"))
+
+  /** The one broadcast scan: the (small) query set against every row of
+    * a member store (xid, rx, xnorm), per-query top-k (a partitioned
+    * window, bounded per group — scale-safe). Norms are computed ONCE per
+    * vector, not per pair: at N queries × M rows that turns 3·N·M dot
+    * products into N·M + N + M.
+    */
+  private def scanTopK(queries: DataFrame, store: DataFrame, k: Int): DataFrame =
+    rankedTopK(store.crossJoin(broadcast(queryStore(queries)))
+      .select(col("qid"), col("xid"), queryCos), k)
+
   /** Cosine similarity over raw float arrays (scale factor cancels in the
     * identical double op tree).
     */
   def cosine(a: Column, b: Column): Column =
-    dotDecimal(a, b).cast("double") /
-      (sqrt(dotDecimal(a, a).cast("double")) * sqrt(dotDecimal(b, b).cast("double")))
+    cosScaled(scaled(a), scaled(b), normScaled(scaled(a)), normScaled(scaled(b)))
 
-  /** Brute-force top-k: broadcast the (small) query set against all
-    * candidates, rank per query with a partitioned window (bounded per
-    * group — scale-safe).
+  /** Brute-force top-k of (qid, qvec) queries over an (xid, xvec) corpus:
+    * the exact scan.
     */
   def bruteForceTopK(
-      queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    // queries: (qid, qvec); corpus: (xid, xvec). Norms are computed ONCE
-    // per vector (not per pair) — at N queries × M corpus rows that turns
-    // 3·N·M dot products into N·M + N + M.
-    val qn = queries.select(col("qid"), scaled(col("qvec")).as("qs"))
-      .withColumn("qnorm", sqrt(dotScaled(col("qs"), col("qs")).cast("double")))
-    val xn = corpus.select(col("xid"), scaled(col("xvec")).as("xs"))
-      .withColumn("xnorm", sqrt(dotScaled(col("xs"), col("xs")).cast("double")))
-    val scored = xn.crossJoin(broadcast(qn))
-      .select(col("qid"), col("xid"),
-        (dotScaled(col("qs"), col("xs")).cast("double") /
-          (col("qnorm") * col("xnorm"))).as("cos"))
-    import org.apache.spark.sql.expressions.Window
-    scored
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("xid"))))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("xid"), col("cos"), col("rank").cast("long").as("rank"))
-  }
+      queries: DataFrame, corpus: DataFrame, k: Int): DataFrame =
+    scanTopK(queries, asMembers(exactStore(corpus)), k)
 
   /** Sign-random-projection bucket id: bit j = 1 iff Σ_d vec[d]·sign[j][d] > 0.
     * `signs(j)(d)` ∈ {-1, 1} is a deterministic hyperplane matrix shared
@@ -123,48 +202,18 @@ object Similarity {
   def ivfTopK(
       queries: DataFrame, corpus: DataFrame, centroids: DataFrame,
       nProbe: Int, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // distance of every corpus vector to every centroid (small C)
-    val scored = corpus.select(col("xid"), scaled(col("xvec")).as("xs"))
-      .crossJoin(broadcast(centroids.select(col("cid"), scaled(col("cvec")).as("cs"))))
-      .select(col("xid"), col("xs"), col("cid"),
-        (dotScaled(col("xs"), col("xs")) -
-          lit(2L) * dotScaled(col("xs"), col("cs")) +
-          dotScaled(col("cs"), col("cs"))).as("d2"))
-    val byDist = Window.partitionBy(col("xid")).orderBy(col("d2"), col("cid"))
-    val ranked = scored.withColumn("rn", row_number().over(byDist))
-    val assign = ranked.filter(col("rn") === 1).select(col("xid"), col("cid"))
+    val assign = nearestCells(cellDistances(corpus, "xid", "xvec", centroids), 1, "xid")
+      .select(col("xid"), col("cid"))
     // probe cells are ranked from the QUERY vectors themselves — queries
     // need not be members of the corpus
-    val qScored = queries.select(col("qid"), scaled(col("qvec")).as("qsv"))
-      .crossJoin(broadcast(centroids.select(col("cid").as("qcid"), scaled(col("cvec")).as("qcs"))))
-      .select(col("qid"), col("qcid"),
-        (dotScaled(col("qsv"), col("qsv")) -
-          lit(2L) * dotScaled(col("qsv"), col("qcs")) +
-          dotScaled(col("qcs"), col("qcs"))).as("qd2"))
-    val probes = qScored
-      .withColumn("qrn", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("qd2"), col("qcid"))))
-      .filter(col("qrn") <= nProbe)
-      .select(col("qid"), col("qcid").as("cid"))
-    val cand = probes.alias("p")
+    val cand = cellProbes(queries, centroids, nProbe).alias("p")
       .join(assign.alias("a"), col("p.cid") === col("a.cid"))
       .select(col("p.qid").as("qid"), col("a.xid").as("xid"))
-    val qn = queries.select(col("qid"), scaled(col("qvec")).as("qs"))
-      .withColumn("qnorm", sqrt(dotScaled(col("qs"), col("qs")).cast("double")))
-    val xn = corpus.select(col("xid"), scaled(col("xvec")).as("xs2"))
-      .withColumn("xnorm", sqrt(dotScaled(col("xs2"), col("xs2")).cast("double")))
-    val exact = cand
-      .join(broadcast(qn), "qid")
-      .join(xn, "xid")
-      .select(col("qid"), col("xid"),
-        (dotScaled(col("qs"), col("xs2")).cast("double") /
-          (col("qnorm") * col("xnorm"))).as("cos"))
-    exact
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("xid"))))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("xid"), col("cos"), col("rank").cast("long").as("rank"))
+    rankedTopK(cand
+      .join(broadcast(queryStore(queries)), "qid")
+      .join(asMembers(exactStore(corpus)), "xid")
+      .select(col("qid"), col("xid"), queryCos), k)
   }
 
   /** Mutual k-NN GRAPH over the whole corpus — the all-vectors variant of
@@ -209,7 +258,6 @@ object Similarity {
   private[graft] def knnProbesAndAssign(corpus: DataFrame, centroids: DataFrame,
                                         nProbe: Int,
                                         capPerCell: Long): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
     val ranked = cellRanked(corpus, centroids, nProbe)
     // Per-cell candidate cap (the production posture past ~100k vectors):
     // each cell's SERVABLE member list is its capPerCell most central
@@ -225,12 +273,8 @@ object Similarity {
         ranked.filter(col("rn") === 1)
           .select(col("xid").as("nid"), col("cid"))
       else
-        ranked.filter(col("rn") === 1)
-          .select(col("xid").as("nid"), col("cid"), col("d2"))
-          .withColumn("crn", row_number().over(
-            Window.partitionBy(col("cid")).orderBy(col("d2"), col("nid"))))
-          .filter(col("crn") <= capPerCell)
-          .select(col("nid"), col("cid"))
+        capCells(ranked.filter(col("rn") === 1)
+          .select(col("xid").as("nid"), col("cid"), col("d2")), capPerCell)
     (ranked.select(col("xid").as("qid"), col("cid")), assign)
   }
 
@@ -245,16 +289,8 @@ object Similarity {
     */
   private[graft] def cellRanked(corpus: DataFrame, centroids: DataFrame,
                                 nProbe: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    corpus.select(col("xid"), scaled(col("xvec")).as("xs"))
-      .crossJoin(broadcast(centroids.select(col("cid"), scaled(col("cvec")).as("cs"))))
-      .select(col("xid"), col("cid"),
-        (dotScaled(col("xs"), col("xs")) -
-          lit(2L) * dotScaled(col("xs"), col("cs")) +
-          dotScaled(col("cs"), col("cs"))).as("d2"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("xid")).orderBy(col("d2"), col("cid"))))
-      .filter(col("rn") <= math.max(nProbe, 1))
+    nearestCells(cellDistances(corpus, "xid", "xvec", centroids)
+        .select(col("xid"), col("cid"), col("d2")), math.max(nProbe, 1), "xid")
       .localCheckpoint(true) // one distance pass feeds assign AND probes
   }
 
@@ -264,30 +300,10 @@ object Similarity {
     */
   private[graft] def knnDirected(corpus: DataFrame, centroids: DataFrame,
                                  nProbe: Int, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val (probes, assign) = knnProbesAndAssign(corpus, centroids, nProbe, Long.MaxValue)
-    val xn = corpus.select(col("xid"), scaled(col("xvec")).as("xs"))
-      .select(col("xid"), col("xs"),
-        sqrt(dotScaled(col("xs"), col("xs")).cast("double")).as("norm"))
+    val xn = exactStore(corpus)
       .localCheckpoint(true) // reused on both sides of the scoring join
-    // payloads attach to each SIDE (corpus-scale shuffles), the sides
-    // meet on the cell key, and the per-query top-k prunes map-side —
-    // the candidate explosion never writes a shuffle (see
-    // knnProbesAndAssign's scale note)
-    probes
-      .join(xn.select(col("xid").as("qid"), col("xs").as("qs"),
-        col("norm").as("qnorm")), "qid")
-      .join(assign
-        .join(xn.select(col("xid").as("nid"), col("xs").as("ns"),
-          col("norm").as("nnorm")), "nid"), "cid")
-      .filter(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"),
-        (dotScaled(col("qs"), col("ns")).cast("double") /
-          (col("qnorm") * col("nnorm"))).as("cos"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), col("cos"))
+    scoreDirected(probes, assign, asMembers(xn), xn, k)
   }
 
   /** [[knnGraph]] scored over SQ8 CODES — the production serving shape
@@ -303,10 +319,20 @@ object Similarity {
     * a quantization hair; the mutual edge keeps the a<b direction's
     * value. Same N²·cells^(−1/2) candidate volume as [[knnGraph]] —
     * SQ8 bounds MEMORY, the coarse cells bound COMPUTE.
+    *
+    * A finite `capPerCell` ([[knnCellCapFor]]) is the full production
+    * posture past ~100k vectors: SQ8 codes bound the resident store (4×
+    * smaller), coarse cells bound the scan fraction (nProbe/cells), and
+    * the per-cell cap bounds the candidate SHUFFLE (≤ N·nProbe·cap rows
+    * no matter how skewed the cells are — the uncapped graph's failure
+    * mode at 200k vectors was exactly this shuffle exceeding one box's
+    * disk). Capped candidates are a strict subset of the uncapped
+    * graph's; RecallSpec floors the edge recall against uncapped scoring.
     */
   def knnGraphSq8(corpus: DataFrame, centroids: DataFrame,
-                  nProbe: Int, k: Int): DataFrame = {
-    val directed = knnDirectedSq8(corpus, centroids, nProbe, k)
+                  nProbe: Int, k: Int,
+                  capPerCell: Long = Long.MaxValue): DataFrame = {
+    val directed = knnDirectedSq8(corpus, centroids, nProbe, k, capPerCell)
       .localCheckpoint(true) // both sides of the mutuality self-join
     mutualize(directed)
   }
@@ -328,53 +354,18 @@ object Similarity {
   def knnCellCapFor(n: Long, cells: Int, k: Int): Long =
     math.max(k + 1L, math.ceil(n.toDouble / cells).toLong)
 
-  /** [[knnGraphSq8]] with the per-cell candidate cap — the full
-    * production posture for all-vectors graphs past ~100k vectors: SQ8
-    * codes bound the resident store (4× smaller), coarse cells bound the
-    * scan fraction (nProbe/cells), and the per-cell cap bounds the
-    * candidate SHUFFLE (≤ N·nProbe·cap rows no matter how skewed the
-    * cells are — the uncapped graph's failure mode at 200k vectors was
-    * exactly this shuffle exceeding one box's disk). Candidates are a
-    * strict subset of the uncapped graph's; RecallSpec floors the edge
-    * recall against uncapped scoring.
-    */
-  def knnGraphSq8Capped(corpus: DataFrame, centroids: DataFrame,
-                        nProbe: Int, k: Int, capPerCell: Long): DataFrame = {
-    val directed = knnDirectedSq8(corpus, centroids, nProbe, k, capPerCell)
-      .localCheckpoint(true) // both sides of the mutuality self-join
-    mutualize(directed)
-  }
-
   /** Directed SQ8-scored top-k stage of [[knnGraphSq8]], exposed like
     * [[knnDirected]] for plan assertions and recall floors.
     */
   private[graft] def knnDirectedSq8(corpus: DataFrame, centroids: DataFrame,
                                     nProbe: Int, k: Int,
                                     capPerCell: Long = Long.MaxValue): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val (probes, assign) = knnProbesAndAssign(corpus, centroids, nProbe, capPerCell)
-    val enc = sq8EncodeScaled(corpus) // (xid, rx, xnorm), the code store
-    val qn = corpus.select(col("xid").as("qid"), scaled(col("xvec")).as("qs"))
-      .withColumn("qnorm", sqrt(dotScaled(col("qs"), col("qs")).cast("double")))
-    // same cell-key meet as knnDirected: the code store attaches to the
-    // member side, query vectors to the probe side, and the per-query
-    // top-k prunes map-side before the only candidate-keyed shuffle
-    probes
-      .join(qn, "qid")
-      .join(assign
-        .join(enc.select(col("xid").as("nid"), col("rx"), col("xnorm")), "nid"), "cid")
-      .filter(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"),
-        (dotScaled(col("qs"), col("rx")).cast("double") /
-          (col("qnorm") * col("xnorm"))).as("cos"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), col("cos"))
+    scoreDirected(probes, assign, sq8EncodeScaled(corpus), exactStore(corpus), k)
   }
 
   /** Persisted-artifact BUILD of the capped SQ8-scored mutual k-NN graph
-    * ([[knnGraphSq8Capped]] decomposed into the q183/q150c build/serve
+    * ([[knnGraphSq8]] with a cap, decomposed into the q183/q150c build/serve
     * contract): everything query-independent a daily pipeline stores —
     * the frozen index CONFIG (centroids, SQ8 quantizer stats, per-cell
     * cap, probe count, k) plus the artifact tables a delta append serves
@@ -398,56 +389,47 @@ object Similarity {
 
   def knnGraphBuild(corpus: DataFrame, centroids: DataFrame,
                     nProbe: Int, k: Int, cap: Long): KnnIndex = {
-    import org.apache.spark.sql.expressions.Window
     val cents = centroids.localCheckpoint(true)
     val ranked = cellRanked(corpus, cents, nProbe)
     val assignD2 = ranked.filter(col("rn") === 1)
       .select(col("xid").as("nid"), col("cid"), col("d2"))
       .localCheckpoint(true)
-    val servable = assignD2
-      .withColumn("crn", row_number().over(
-        Window.partitionBy(col("cid")).orderBy(col("d2"), col("nid"))))
-      .filter(col("crn") <= cap)
-      .select(col("nid"), col("cid"))
-      .localCheckpoint(true)
+    val servable = capCells(assignD2, cap).localCheckpoint(true)
     val probes = ranked.select(col("xid").as("qid"), col("cid"))
       .localCheckpoint(true)
     val stats = sq8StatsOf(corpus)
     val enc = sq8EncodeFrozen(corpus, stats)
-    val xn = corpus.select(col("xid"), scaled(col("xvec")).as("xs"))
-      .withColumn("norm", sqrt(dotScaled(col("xs"), col("xs")).cast("double")))
-      .localCheckpoint(true)
+    val xn = exactStore(corpus).localCheckpoint(true)
     val directed = scoreDirected(probes, servable, enc, xn, k)
       .localCheckpoint(true)
     KnnIndex(cents, stats, xn, enc, assignD2, servable, probes, directed,
       nProbe, k, cap)
   }
 
-  /** The shared ADC scoring core over explicit artifact tables — q167c's
-    * scoring shape ([[knnDirectedSq8]]): payloads attach to each SIDE
-    * (exact query vectors to the probe side, SQ8 codes to the servable
-    * member side), the sides meet on the cell key, and the per-query
-    * top-k prunes map-side (WindowGroupLimit) — the candidate explosion
-    * never writes a shuffle.
+  /** The directed scoring path of every all-vectors graph over explicit
+    * tables: probes (qid, cid), servable members (nid, cid), the member
+    * store `enc` (xid, rx, xnorm) — SQ8 codes, or an exact store through
+    * [[asMembers]] — and the exact query-side store `xn` (xid, xs, norm).
+    * Payloads attach to each SIDE (exact query vectors to the probe side,
+    * member vectors to the servable side; corpus-scale shuffles), the
+    * sides meet on the cell key, and the per-query top-k prunes map-side
+    * (WindowGroupLimit) — the candidate explosion never writes a shuffle
+    * (see [[knnProbesAndAssign]]'s scale note). Returns (qid, nid, cos).
     */
   private[graft] def scoreDirected(probes: DataFrame, servable: DataFrame,
                                    enc: DataFrame, xn: DataFrame,
-                                   k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    probes
+                                   k: Int): DataFrame =
+    directedTopK(probes
       .join(xn.select(col("xid").as("qid"), col("xs").as("qs"),
         col("norm").as("qnorm")), "qid")
       .join(servable
         .join(enc.select(col("xid").as("nid"), col("rx"), col("xnorm")), "nid"), "cid")
       .filter(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"),
-        (dotScaled(col("qs"), col("rx")).cast("double") /
-          (col("qnorm") * col("xnorm"))).as("cos"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), col("cos"))
-  }
+      .select(col("qid"), col("nid"), queryCos), k)
+
+  /** The stored top-k shape of scored (qid, nid, cos) rows. */
+  private def directedTopK(scored: DataFrame, k: Int): DataFrame =
+    topK(scored, "nid", k).select(col("qid"), col("nid"), col("cos"))
 
   /** The a<b mutual-edge closure of a directed top-k list — the final
     * stage every graph surface shares ([[knnGraphBuild]]'s serve, the
@@ -505,7 +487,6 @@ object Similarity {
     * re-materializes the base payloads.
     */
   def knnGraphAppend(idx: KnnIndex, delta: DataFrame): KnnIndex = {
-    import org.apache.spark.sql.expressions.Window
     val dRanked = cellRanked(delta, idx.centroids, idx.nProbe)
     val dAssign = dRanked.filter(col("rn") === 1)
       .select(col("xid").as("nid"), col("cid"), col("d2"))
@@ -513,12 +494,8 @@ object Similarity {
     val dProbes = dRanked.select(col("xid").as("qid"), col("cid"))
       .localCheckpoint(true) // feeds fullDirected and the new index
     val touched = dAssign.select(col("cid")).distinct().localCheckpoint(true)
-    val servTouched = idx.assignD2.unionByName(dAssign)
-      .join(broadcast(touched), "cid")
-      .withColumn("crn", row_number().over(
-        Window.partitionBy(col("cid")).orderBy(col("d2"), col("nid"))))
-      .filter(col("crn") <= idx.cap)
-      .select(col("nid"), col("cid"))
+    val servTouched = capCells(idx.assignD2.unionByName(dAssign)
+        .join(broadcast(touched), "cid"), idx.cap)
       .localCheckpoint(true) // feeds servNew, inserted, displaced
     val servNew = idx.servable
       .join(broadcast(touched), Seq("cid"), "left_anti")
@@ -535,10 +512,7 @@ object Similarity {
     // checkpoints internally); the unions stay lazy over checkpointed
     // inputs so the base vectors never re-materialize on a chained serve
     val encAll = idx.enc.unionByName(sq8EncodeFrozen(delta, idx.stats))
-    val xnAll = idx.xn.unionByName(
-      delta.select(col("xid"), scaled(col("xvec")).as("xs"))
-        .withColumn("norm", sqrt(dotScaled(col("xs"), col("xs")).cast("double")))
-        .localCheckpoint(true))
+    val xnAll = idx.xn.unionByName(exactStore(delta).localCheckpoint(true))
     // FULL re-score only where the merge shortcut below is inexact: a
     // query whose STORED neighbor was displaced (promotions from outside
     // the stored top-k become possible, so the stored list is no longer
@@ -554,35 +528,47 @@ object Similarity {
       servNew, encAll, xnAll, idx.k)
     // INCREMENTAL merge for every other query probing a touched cell:
     // its candidate set changed only by (inserted ∪ displaced) members
-    // of its touched probe cells, none of its stored top-k left, and
-    // removing candidates outside a top-k never changes the top-k — so
-    // top-k(new set) = top-k(stored top-k ∪ inserted-member scores),
-    // EXACTLY. The inserted members rank through the same cell-meet
-    // core (bounded at k per query, map-side pruned), then one window
-    // over ≤ 2k rows per query merges. Candidate volume is
-    // Σ_inserted (probe in-degree of its cell) — delta-driven, never
-    // affected × nProbe × cap.
-    val incrProbes = idx.probes
-      .join(broadcast(touched), "cid")
-      .join(fullQ, Seq("qid"), "left_anti")
-      .localCheckpoint(true) // feeds the ranking AND the splice key set
-    val addTopK = scoreDirected(incrProbes, inserted, encAll, xnAll, idx.k)
-    val incrQ = incrProbes.select(col("qid")).distinct()
-    val merged = idx.directed.join(incrQ, "qid").unionByName(addTopK)
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))))
-      .filter(col("rank") <= idx.k)
-      .select(col("qid"), col("nid"), col("cos"))
-    val rescored = incrQ.unionByName(fullQ).localCheckpoint(true)
-    val directed = idx.directed.join(rescored, Seq("qid"), "left_anti")
-      .unionByName(merged)
-      .unionByName(fullDirected)
-      .localCheckpoint(true) // both sides of the mutuality self-join
+    // of its touched probe cells and none of its stored top-k left.
+    // Candidate volume is Σ_inserted (probe in-degree of its cell) —
+    // delta-driven, never affected × nProbe × cap.
+    val directed = spliceTopK(idx, idx.probes, touched, fullQ, fullDirected,
+      inserted, encAll, xnAll)
     KnnIndex(idx.centroids, idx.stats, xnAll, encAll,
       idx.assignD2.unionByName(dAssign),
       servNew.localCheckpoint(true), // narrow (nid, cid); flattens chains
       idx.probes.unionByName(dProbes),
       directed, idx.nProbe, idx.k, idx.cap)
+  }
+
+  /** The merge-and-splice tail of [[knnGraphAppend]] and
+    * [[knnGraphRetire]]: replace the stored top-k lists of the affected
+    * queries and keep everyone else's verbatim. A query probing one of
+    * `cells` (where serving lists may have gained the `added` members)
+    * and outside the full re-score set `fullQ` MERGES: its stored top-k
+    * kept all its members, and removing candidates outside a top-k never
+    * changes it, so top-k(stored ∪ added-member scores) is exact — the
+    * added members rank through [[scoreDirected]] (bounded at k per
+    * query, map-side pruned), then one window over ≤ 2k rows per query.
+    * `fullQ`'s lists are replaced by `rescored`, and the `gone` queries
+    * (retired ids) drop.
+    */
+  private def spliceTopK(idx: KnnIndex, probes: DataFrame, cells: DataFrame,
+                         fullQ: DataFrame, rescored: DataFrame,
+                         added: DataFrame, enc: DataFrame, xn: DataFrame,
+                         gone: DataFrame*): DataFrame = {
+    val incrProbes = probes.join(broadcast(cells), "cid")
+      .join(fullQ, Seq("qid"), "left_anti")
+      .localCheckpoint(true) // feeds the ranking AND the splice key set
+    val addTopK = scoreDirected(incrProbes, added, enc, xn, idx.k)
+    val incrQ = incrProbes.select(col("qid")).distinct()
+    val merged = directedTopK(
+      idx.directed.join(incrQ, "qid").unionByName(addTopK), idx.k)
+    val dropped = (Seq(incrQ, fullQ) ++ gone).reduce(_ unionByName _)
+      .localCheckpoint(true)
+    idx.directed.join(dropped, Seq("qid"), "left_anti")
+      .unionByName(merged)
+      .unionByName(rescored)
+      .localCheckpoint(true) // both sides of the mutuality self-join
   }
 
   /** SERVE a delta append: the mutual k-NN edges after [[knnGraphAppend]]
@@ -626,7 +612,6 @@ object Similarity {
     * contract.
     */
   def knnGraphRetire(idx: KnnIndex, ids: DataFrame): KnnIndex = {
-    import org.apache.spark.sql.expressions.Window
     val del = ids.select(col(ids.columns.head).cast("long").as("nid"))
       .distinct().localCheckpoint(true)
     val delQ = del.select(col("nid").as("qid"))
@@ -634,11 +619,7 @@ object Similarity {
     val touched = idx.assignD2.join(broadcast(del), "nid")
       .select(col("cid")).distinct().localCheckpoint(true)
     val assignNew = idx.assignD2.join(broadcast(del), Seq("nid"), "left_anti")
-    val servTouched = assignNew.join(broadcast(touched), "cid")
-      .withColumn("crn", row_number().over(
-        Window.partitionBy(col("cid")).orderBy(col("d2"), col("nid"))))
-      .filter(col("crn") <= idx.cap)
-      .select(col("nid"), col("cid"))
+    val servTouched = capCells(assignNew.join(broadcast(touched), "cid"), idx.cap)
       .localCheckpoint(true) // feeds servNew and promoted
     val servNew = idx.servable
       .join(broadcast(touched), Seq("cid"), "left_anti") // untouched cells hold no deleted member
@@ -661,25 +642,10 @@ object Similarity {
     val fullDirected = scoreDirected(
       probesNew.join(fullQ, "qid"), servNew, encNew, xnNew, idx.k)
     // INCREMENTAL merge for queries probing a cell with a promotion:
-    // their stored top-k lost nothing (else fullQ), so
-    // top-k(stored ∪ promoted-member scores) is exact
-    val promCells = promoted.select(col("cid")).distinct()
-    val incrProbes = probesNew.join(broadcast(promCells), "cid")
-      .join(fullQ, Seq("qid"), "left_anti")
-      .localCheckpoint(true) // feeds the ranking AND the splice key set
-    val addTopK = scoreDirected(incrProbes, promoted, encNew, xnNew, idx.k)
-    val incrQ = incrProbes.select(col("qid")).distinct()
-    val merged = idx.directed.join(incrQ, "qid").unionByName(addTopK)
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))))
-      .filter(col("rank") <= idx.k)
-      .select(col("qid"), col("nid"), col("cos"))
-    val dropped = incrQ.unionByName(fullQ).unionByName(delQ)
-      .localCheckpoint(true)
-    val directed = idx.directed.join(dropped, Seq("qid"), "left_anti")
-      .unionByName(merged)
-      .unionByName(fullDirected)
-      .localCheckpoint(true)
+    // their stored top-k lost nothing (else fullQ); deleted ids drop
+    val directed = spliceTopK(idx, probesNew,
+      promoted.select(col("cid")).distinct(), fullQ, fullDirected,
+      promoted, encNew, xnNew, delQ)
     KnnIndex(idx.centroids, idx.stats, xnNew, encNew, assignNew,
       servNew, probesNew, directed, idx.nProbe, idx.k, idx.cap)
   }
@@ -700,7 +666,7 @@ object Similarity {
     */
   def knnIndexSave(idx: KnnIndex, path: String,
                    lastBatch: Long = -1L): graft.core.IndexStore.Commit =
-    graft.core.IndexFamily.save(idx, path, lastBatch)
+    graft.core.IndexFamily.save(idx, path, lastBatch)(KnnFamily)
 
   /** Reconstitute a [[KnnIndex]] from [[knnIndexSave]] artifacts in a
     * FRESH session, from the latest COMMITTED version — a save that
@@ -708,7 +674,7 @@ object Similarity {
     */
   def knnIndexLoad(s: org.apache.spark.sql.SparkSession,
                    rootPath: String): KnnIndex =
-    graft.core.IndexFamily.load[KnnIndex](s, rootPath)._2
+    graft.core.IndexFamily.load(s, rootPath)(KnnFamily)._2
 
   /** The k-NN family's instance of the shared index lifecycle
     * ([[graft.core.IndexFamily]]: save, load, maintain, streaming
@@ -1187,24 +1153,16 @@ object Similarity {
     val masks = probeMasks(signs.size, hammingProbe)
     val qb = queries.select(col("qid"), scaled(col("qvec")).as("qs"),
       srpBucket(col("qvec"), signs).as("home"))
-      .withColumn("qnorm", sqrt(dotScaled(col("qs"), col("qs")).cast("double")))
+      .withColumn("qnorm", normScaled(col("qs")))
       // distinct masks → distinct probe buckets per query, so no pair is
       // generated (or scored) twice
       .withColumn("bucket",
         explode(array(masks.map(m => col("home").bitwiseXOR(lit(m))): _*)))
-    val xb = corpus.select(col("xid"), scaled(col("xvec")).as("xs"),
+    val xb = corpus.select(col("xid"), scaled(col("xvec")).as("rx"),
       srpBucket(col("xvec"), signs).as("xbucket"))
-      .withColumn("xnorm", sqrt(dotScaled(col("xs"), col("xs")).cast("double")))
-    val scored = xb.join(broadcast(qb), col("bucket") === col("xbucket"))
-      .select(col("qid"), col("xid"),
-        (dotScaled(col("qs"), col("xs")).cast("double") /
-          (col("qnorm") * col("xnorm"))).as("cos"))
-    import org.apache.spark.sql.expressions.Window
-    scored
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("xid"))))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("xid"), col("cos"), col("rank").cast("long").as("rank"))
+      .withColumn("xnorm", normScaled(col("rx")))
+    rankedTopK(xb.join(broadcast(qb), col("bucket") === col("xbucket"))
+      .select(col("qid"), col("xid"), queryCos), k)
   }
 
   /** One distributed Lloyd (k-means) iteration — the offline step that
@@ -1225,18 +1183,9 @@ object Similarity {
     * the convergence and the starvation contract).
     */
   def kmeansStep(corpus: DataFrame, centroids: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types.DecimalType
-    val scored = corpus.select(col("xid"), scaled(col("xvec")).as("xs"))
-      .crossJoin(broadcast(centroids.select(col("cid"), scaled(col("cvec")).as("cs"))))
-      .select(col("xid"), col("xs"), col("cid"),
-        (dotScaled(col("xs"), col("xs")) -
-          lit(2L) * dotScaled(col("xs"), col("cs")) +
-          dotScaled(col("cs"), col("cs"))).as("d2"))
-    val assign = scored
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("xid")).orderBy(col("d2"), col("cid"))))
-      .filter(col("rn") === 1)
+    val assign = nearestCells(cellDistances(corpus, "xid", "xvec", centroids)
+        .select(col("xid"), col("xs"), col("cid"), col("d2")), 1, "xid")
       .select(col("cid"), col("xs"))
     assign
       .select(col("cid"), posexplode(col("xs")).as(Seq("dim0", "v")))
@@ -1304,16 +1253,10 @@ object Similarity {
     */
   def semanticDedup(
       corpus: DataFrame, centroids: DataFrame, threshold: Double): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val scored = corpus.select(col("xid"), scaled(col("xvec")).as("xs"))
-      .crossJoin(broadcast(centroids.select(col("cid"), scaled(col("cvec")).as("cs"))))
-      .select(col("xid"), col("xs"), col("cid"),
-        (dotScaled(col("xs"), col("xs")) -
-          lit(2L) * dotScaled(col("xs"), col("cs")) +
-          dotScaled(col("cs"), col("cs"))).as("d2"),
-        (dotScaled(col("xs"), col("cs")).cast("double") /
-          (sqrt(dotScaled(col("xs"), col("xs")).cast("double")) *
-            sqrt(dotScaled(col("cs"), col("cs")).cast("double")))).as("ccos"))
+    val scored = cellDistances(corpus, "xid", "xvec", centroids)
+      .select(col("xid"), col("xs"), col("cid"), col("d2"),
+        cosScaled(col("xs"), col("cs"), normScaled(col("xs")), normScaled(col("cs")))
+          .as("ccos"))
     // The assignment (N × cells integer dots — the dominant stage) feeds
     // THREE consumers: both sides of the pair self-join and the final
     // keep-flag join. An eager localCheckpoint materializes it once
@@ -1321,12 +1264,9 @@ object Similarity {
     // blocks ride until the caller releases them ([[Dedup.release]]) or
     // Bench's between-query sweep frees them — same lifecycle as q58's
     // component labels.
-    val assign = scored
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("xid")).orderBy(col("d2"), col("cid"))))
-      .filter(col("rn") === 1)
+    val assign = nearestCells(scored, 1, "xid")
       .select(col("xid"), col("cid"), col("xs"), col("ccos"),
-        sqrt(dotScaled(col("xs"), col("xs")).cast("double")).as("xnorm"))
+        normScaled(col("xs")).as("xnorm"))
       .localCheckpoint(true)
     val pairs = assign
       .select(col("cid"), col("xid").as("x1"), col("xs").as("s1"),
@@ -1334,8 +1274,7 @@ object Similarity {
       .join(assign.select(col("cid"), col("xid").as("x2"), col("xs").as("s2"),
         col("xnorm").as("n2"), col("ccos").as("c2")), Seq("cid"))
       .filter(col("x1") < col("x2"))
-      .filter(dotScaled(col("s1"), col("s2")).cast("double") /
-        (col("n1") * col("n2")) >= lit(threshold))
+      .filter(cosScaled(col("s1"), col("s2"), col("n1"), col("n2")) >= lit(threshold))
     val dropped = pairs
       .select(when(col("c1") > col("c2") ||
           (col("c1") === col("c2") && col("x1") > col("x2")),
@@ -1361,34 +1300,6 @@ object Similarity {
         expr("transform(dims, d -> cast(d.mean_scaled / 1e6 as float))")
           .as("cvec"))
 
-  /** Scalar quantization (SQ8, the FAISS `SQ8` storage path) + asymmetric
-    * top-k: learn per-dimension `[min, max]` over the corpus, store each
-    * coordinate as ONE byte `code = ⌊(v − min)·255 / (max − min)⌋`, and
-    * score queries against the RECONSTRUCTED codes — a 4× (float32) /
-    * 8× (float64) memory cut that is what lets a 100 TB embedding store
-    * sit in executor memory instead of spilling; the codes column is what
-    * production persists, reconstruction rides the scan.
-    *
-    * Exactness: everything stays in the scaled-long integer domain. The
-    * reconstruction is kept at 255× scale — `recon255 = 255·min +
-    * code·(max − min)` — so no division ever happens on the corpus side,
-    * and the query side stays at 1× scale: cosine's normalization cancels
-    * the 255 factor, so `dot(q, recon255)/(|q|·|recon255|)` equals the
-    * cosine of the reconstructed vector exactly, with every intermediate
-    * a bit-identical integer in Spark and DuckDB. The one non-integer op,
-    * the encode's floor-divide, is exact in double: numerators stay under
-    * 2^53, and a non-integer true quotient sits ≥ 1/range from any
-    * integer — 10 orders of magnitude beyond one ulp — so the correctly
-    * rounded division can never cross the floor boundary.
-    *
-    * Overflow guard: |recon255| ≤ 255·maxAbs per element; the norm sum
-    * over `dims` elements must fit a long, so maxAbs is bounded by
-    * ⌊√(Long.MaxValue/dims)⌋/255 — COMPUTED from the actual dimension
-    * count (≈1.49e6 scaled, |x| ≤ 1.49, at 64 dims), asserted from the
-    * stats that are collected anyway, loudly, per the fail-loud
-    * convention. A fixed cap independent of dims would either waste
-    * headroom at low dims or silently wrap the long norm at high ones.
-    */
   /** Largest scaled coordinate magnitude [[sq8TopK]] accepts at `dims`
     * dimensions: the reconstructed norm sums `dims` squares of elements
     * bounded by 255·maxAbs, so the long budget is
@@ -1477,42 +1388,41 @@ object Similarity {
         GraftBridge.toExpr(sv), stats.map(_._1), stats.map(_._2)))
     corpus.select(col("xid"), scaled(col("xvec")).as("xs"))
       .select(col("xid"), recon255(col("xs")).as("rx"))
-      .withColumn("xnorm", sqrt(dotScaled(col("rx"), col("rx")).cast("double")))
+      .withColumn("xnorm", normScaled(col("rx")))
       .localCheckpoint(true)
   }
 
-  def sq8TopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val enc = sq8EncodeScaled(corpus)
-    val qn = queries.select(col("qid"), scaled(col("qvec")).as("qs"))
-      .withColumn("qnorm", sqrt(dotScaled(col("qs"), col("qs")).cast("double")))
-    enc.crossJoin(broadcast(qn))
-      .select(col("qid"), col("xid"),
-        (dotScaled(col("qs"), col("rx")).cast("double") /
-          (col("qnorm") * col("xnorm"))).as("cos"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("xid"))))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("xid"), col("cos"), col("rank").cast("long").as("rank"))
-  }
-
-  /** IVF × SQ8 — the composed 100 TB ANN serving path: the coarse
-    * quantizer ([[ivfTopK]]'s cell assignment) prunes the scan to the
-    * query's `nProbe` nearest cells, and the fine storage layer
-    * ([[sq8EncodeScaled]]) scores those candidates against their one-
-    * byte-per-coordinate reconstructions. Alone, each half solves a
-    * different scale problem — IVF bounds COMPUTE (each query touches
-    * ≈ cells^(−1/2) of the corpus) while SQ8 bounds MEMORY (4× smaller
-    * resident store) — composed, a 100 TB embedding table becomes a 25 TB
-    * code store of which a query scans a shrinking fraction. Results
-    * equal [[sq8TopK]] restricted to the probed cells (exact same scoring
-    * domain), which is what the oracle replays; cell assignment and probe
-    * ranking are the engine-identical scaled-long d² of [[ivfTopK]].
+  /** Scalar quantization (SQ8, the FAISS `SQ8` storage path) + asymmetric
+    * top-k: learn per-dimension `[min, max]` over the corpus, store each
+    * coordinate as ONE byte `code = ⌊(v − min)·255 / (max − min)⌋`, and
+    * score queries against the RECONSTRUCTED codes — a 4× (float32) /
+    * 8× (float64) memory cut that is what lets a 100 TB embedding store
+    * sit in executor memory instead of spilling; the codes column is what
+    * production persists, reconstruction rides the scan.
     *
-    * Scale shape: the corpus partitions by cell id; centroids and the
-    * query side broadcast; the SQ8 stats pass is one map-side-combined
-    * agg; nothing driver-side exceeds (cells + dims) rows.
+    * Exactness: everything stays in the scaled-long integer domain. The
+    * reconstruction is kept at 255× scale — `recon255 = 255·min +
+    * code·(max − min)` — so no division ever happens on the corpus side,
+    * and the query side stays at 1× scale: cosine's normalization cancels
+    * the 255 factor, so `dot(q, recon255)/(|q|·|recon255|)` equals the
+    * cosine of the reconstructed vector exactly, with every intermediate
+    * a bit-identical integer in Spark and DuckDB. The one non-integer op,
+    * the encode's floor-divide, is exact in double: numerators stay under
+    * 2^53, and a non-integer true quotient sits ≥ 1/range from any
+    * integer — 10 orders of magnitude beyond one ulp — so the correctly
+    * rounded division can never cross the floor boundary.
+    *
+    * Overflow guard: |recon255| ≤ 255·maxAbs per element; the norm sum
+    * over `dims` elements must fit a long, so maxAbs is bounded by
+    * ⌊√(Long.MaxValue/dims)⌋/255 — COMPUTED from the actual dimension
+    * count (≈1.49e6 scaled, |x| ≤ 1.49, at 64 dims), asserted from the
+    * stats that are collected anyway, loudly, per the fail-loud
+    * convention. A fixed cap independent of dims would either waste
+    * headroom at low dims or silently wrap the long norm at high ones.
     */
+  def sq8TopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame =
+    scanTopK(queries, sq8EncodeScaled(corpus), k)
+
   /** Nearest-cell assignment per corpus vector (exact scaled-long d²,
     * cid tiebreak): the BUILD half of the composed indexes — (xid, cid).
     */
@@ -1540,41 +1450,21 @@ object Similarity {
     * SERVE half of the routing — (qid, cid).
     */
   private[graft] def cellProbes(queries: DataFrame, centroids: DataFrame,
-                                nProbe: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val cs = centroids.select(col("cid"), scaled(col("cvec")).as("cs"))
-    queries.select(col("qid"), scaled(col("qvec")).as("qsv"))
-      .crossJoin(broadcast(cs.select(col("cid").as("qcid"), col("cs").as("qcs"))))
-      .select(col("qid"), col("qcid"),
-        (dotScaled(col("qsv"), col("qsv")) -
-          lit(2L) * dotScaled(col("qsv"), col("qcs")) +
-          dotScaled(col("qcs"), col("qcs"))).as("qd2"))
-      .withColumn("qrn", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("qd2"), col("qcid"))))
-      .filter(col("qrn") <= nProbe)
-      .select(col("qid"), col("qcid").as("cid"))
-  }
+                                nProbe: Int): DataFrame =
+    nearestCells(cellDistances(queries, "qid", "qvec", centroids)
+        .select(col("qid"), col("cid"), col("d2")), nProbe, "qid")
+      .select(col("qid"), col("cid"))
 
   /** Score SQ8/PQ-style reconstructions against queries, restricted to
     * the probed cells, bounded top-k per query. `enc` must carry
     * (xid, cid, rx, xnorm).
     */
   private def probedTopK(enc: DataFrame, probes: DataFrame,
-                         queries: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val qn = queries.select(col("qid"), scaled(col("qvec")).as("qs"))
-      .withColumn("qnorm", sqrt(dotScaled(col("qs"), col("qs")).cast("double")))
-    enc
+                         queries: DataFrame, k: Int): DataFrame =
+    rankedTopK(enc
       .join(broadcast(probes), "cid")
-      .join(broadcast(qn), "qid")
-      .select(col("qid"), col("xid"),
-        (dotScaled(col("qs"), col("rx")).cast("double") /
-          (col("qnorm") * col("xnorm"))).as("cos"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("xid"))))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("xid"), col("cos"), col("rank").cast("long").as("rank"))
-  }
+      .join(broadcast(queryStore(queries)), "qid")
+      .select(col("qid"), col("xid"), queryCos), k)
 
   /** BUILD the IVF×SQ8 index once: SQ8 codes + norms with the cell id
     * riding along — (xid, cid, rx, xnorm), the table production persists
@@ -1591,10 +1481,36 @@ object Similarity {
                   nProbe: Int, k: Int): DataFrame =
     probedTopK(index, cellProbes(queries, centroids, nProbe), queries, k)
 
+  /** IVF × SQ8 — the composed 100 TB ANN serving path: the coarse
+    * quantizer ([[ivfTopK]]'s cell assignment) prunes the scan to the
+    * query's `nProbe` nearest cells, and the fine storage layer
+    * ([[sq8EncodeScaled]]) scores those candidates against their one-
+    * byte-per-coordinate reconstructions. Alone, each half solves a
+    * different scale problem — IVF bounds COMPUTE (each query touches
+    * ≈ cells^(−1/2) of the corpus) while SQ8 bounds MEMORY (4× smaller
+    * resident store) — composed, a 100 TB embedding table becomes a 25 TB
+    * code store of which a query scans a shrinking fraction. Results
+    * equal [[sq8TopK]] restricted to the probed cells (exact same scoring
+    * domain), which is what the oracle replays; cell assignment and probe
+    * ranking are the engine-identical scaled-long d² of [[ivfTopK]].
+    *
+    * Scale shape: the corpus partitions by cell id; centroids and the
+    * query side broadcast; the SQ8 stats pass is one map-side-combined
+    * agg; nothing driver-side exceeds (cells + dims) rows.
+    */
   def ivfSq8TopK(
       queries: DataFrame, corpus: DataFrame, centroids: DataFrame,
       nProbe: Int, k: Int): DataFrame =
     ivfSq8Serve(ivfSq8Build(corpus, centroids), queries, centroids, nProbe, k)
+
+  /** BUILD the IVFPQ index once: PQ codes' reconstructions + norms with
+    * the cell id — same persisted-artifact contract as [[ivfSq8Build]],
+    * at 32× compression (`subspaces` bytes/vector).
+    */
+  def ivfPqBuild(corpus: DataFrame, centroids: DataFrame,
+                 codebook: DataFrame, subspaces: Int): DataFrame =
+    pqStore(corpus, codebook, subspaces)
+      .join(cellAssign(corpus, centroids), "xid")
 
   /** IVFPQ (Jégou et al. 2011) — the canonical FAISS production index,
     * composed from the same two layers as [[ivfSq8TopK]] but with the PQ
@@ -1606,18 +1522,6 @@ object Similarity {
     * the oracle replays. Production trains the codebook offline with
     * [[pqTrainCodebook]] and the centroids with [[kmeansStep]].
     */
-  /** BUILD the IVFPQ index once: PQ codes' reconstructions + norms with
-    * the cell id — same persisted-artifact contract as [[ivfSq8Build]],
-    * at 32× compression (`subspaces` bytes/vector).
-    */
-  def ivfPqBuild(corpus: DataFrame, centroids: DataFrame,
-                 codebook: DataFrame, subspaces: Int): DataFrame =
-    pqReconScaled(corpus, codebook, subspaces)
-      .select(col("xid"), col("rx"))
-      .withColumn("xnorm", sqrt(dotScaled(col("rx"), col("rx")).cast("double")))
-      .localCheckpoint(true) // same materialization barrier as pqTopK
-      .join(cellAssign(corpus, centroids), "xid")
-
   def ivfPqTopK(
       queries: DataFrame, corpus: DataFrame, centroids: DataFrame,
       codebook: DataFrame, subspaces: Int, nProbe: Int, k: Int): DataFrame =
@@ -1650,7 +1554,6 @@ object Similarity {
     // separate jobs (the round-12 restructure: 3 jobs, not 24, for the
     // standard 8×3 config; per-slice math is expression-identical to
     // kmeansStep/centroidsFromStep, so the q120b oracle pins the change)
-    import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types.DecimalType
     val sub = corpus
       .select(col("xid"), col("xvec"),
@@ -1664,16 +1567,11 @@ object Similarity {
       .select(col("m"), col("cid"),
         expr(s"slice(cvec, m * $w + 1, $w)").as("cvec"))
     for (_ <- 1 to iters) {
-      val next = sub
+      val next = nearestCells(sub
         .join(broadcast(cents.select(col("m"), col("cid"),
           scaled(col("cvec")).as("cs"))), "m")
         .select(col("m"), col("xid"), col("xs"), col("cid"),
-          (dotScaled(col("xs"), col("xs")) -
-            lit(2L) * dotScaled(col("xs"), col("cs")) +
-            dotScaled(col("cs"), col("cs"))).as("d2"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("m"), col("xid")).orderBy(col("d2"), col("cid"))))
-        .filter(col("rn") === 1)
+          d2Scaled(col("xs"), col("cs")).as("d2")), 1, "m", "xid")
         .select(col("m"), col("cid"), posexplode(col("xs")).as(Seq("dim0", "v")))
         .groupBy(col("m"), col("cid"), (col("dim0") + 1).cast("long").as("dim"))
         .agg(count(lit(1)).as("n"), sum(col("v")).as("sum_scaled"))
@@ -1697,26 +1595,8 @@ object Similarity {
       .select(col("cid"), flatten(expr("transform(blocks, b -> b.cvec)")).as("cvec"))
   }
 
-  /** Product quantization (PQ — Jégou et al. 2011, the FAISS `PQ`/`IVFPQ`
-    * fine-quantizer) + asymmetric top-k: split each vector into
-    * `subspaces` contiguous blocks, encode every block as the id of its
-    * nearest codebook centroid (exact scaled-long d², lowest-id
-    * tiebreak), and score queries against the codebook RECONSTRUCTION of
-    * each corpus vector. Storage per vector collapses to `subspaces`
-    * small ints (8 bytes here vs 256 float bytes — a 32× cut); at 100 TB
-    * the codes table is what persists and shuffles, the codebook is a
-    * broadcast literal (k_sub × dims scaled longs), and reconstruction +
-    * scoring ride the scan with no extra shuffle. Production trains the
-    * codebook per subspace with [[kmeansStep]] offline; here the caller
-    * passes any (cid, cvec) table (the queries use the deterministic
-    * first-vectors sample, same convention as [[ivfTopK]]).
-    *
-    * All distances/dots are integer math at 1× scale (magnitudes well
-    * under the long budget — see [[sq8TopK]]'s bound with 255× headroom
-    * to spare), so assignments and scores are bit-identical cross-engine.
-    */
-  /** PQ encode+reconstruct pass shared by [[pqTopK]] (which checkpoints
-    * the narrow (xid, rx, norm) projection) and [[pqReconMse]]: each
+  /** PQ encode+reconstruct pass shared by [[pqStore]] (which checkpoints
+    * the narrow (xid, rx, xnorm) projection) and [[pqReconMse]]: each
     * corpus vector's per-subspace nearest codeword (exact scaled-long d²,
     * lowest-cid tiebreak — the FIRST array minimum), reconstructed and
     * concatenated back to full width. Returns (xid, xs, rx) — original
@@ -1775,26 +1655,39 @@ object Similarity {
       .select((col("sse") / col("n") / lit(1e12)).as("mse"))
       .head().getDouble(0)
 
+  /** Product quantization (PQ — Jégou et al. 2011, the FAISS `PQ`/`IVFPQ`
+    * fine-quantizer) + asymmetric top-k: split each vector into
+    * `subspaces` contiguous blocks, encode every block as the id of its
+    * nearest codebook centroid (exact scaled-long d², lowest-id
+    * tiebreak), and score queries against the codebook RECONSTRUCTION of
+    * each corpus vector. Storage per vector collapses to `subspaces`
+    * small ints (8 bytes here vs 256 float bytes — a 32× cut); at 100 TB
+    * the codes table is what persists and shuffles, the codebook is a
+    * broadcast literal (k_sub × dims scaled longs), and reconstruction +
+    * scoring ride the scan with no extra shuffle. Production trains the
+    * codebook per subspace with [[kmeansStep]] offline; here the caller
+    * passes any (cid, cvec) table (the queries use the deterministic
+    * first-vectors sample, same convention as [[ivfTopK]]).
+    *
+    * All distances/dots are integer math at 1× scale (magnitudes well
+    * under the long budget — see [[sq8TopK]]'s bound with 255× headroom
+    * to spare), so assignments and scores are bit-identical cross-engine.
+    */
   def pqTopK(queries: DataFrame, corpus: DataFrame, codebook: DataFrame,
-             subspaces: Int, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // same materialization barrier as sq8TopK: the per-subspace argmin
-    // encode is ~16 distance expressions per block — letting
-    // CollapseProject re-inline it per query-pair multiplies the encode
-    // cost by the query count; the codes table is the persisted artifact
-    val enc = pqReconScaled(corpus, codebook, subspaces)
+             subspaces: Int, k: Int): DataFrame =
+    scanTopK(queries, pqStore(corpus, codebook, subspaces), k)
+
+  /** The PQ member store (xid, rx, xnorm) of [[pqTopK]] and
+    * [[ivfPqBuild]], materialized once — the same barrier as
+    * [[sq8EncodeFrozen]]: the per-subspace argmin encode is ~16 distance
+    * expressions per block, and letting CollapseProject re-inline it per
+    * query pair multiplies the encode cost by the query count; the codes
+    * table is the persisted artifact.
+    */
+  private def pqStore(corpus: DataFrame, codebook: DataFrame,
+                      subspaces: Int): DataFrame =
+    pqReconScaled(corpus, codebook, subspaces)
       .select(col("xid"), col("rx"))
-      .withColumn("xnorm", sqrt(dotScaled(col("rx"), col("rx")).cast("double")))
+      .withColumn("xnorm", normScaled(col("rx")))
       .localCheckpoint(true)
-    val qn = queries.select(col("qid"), scaled(col("qvec")).as("qs"))
-      .withColumn("qnorm", sqrt(dotScaled(col("qs"), col("qs")).cast("double")))
-    enc.crossJoin(broadcast(qn))
-      .select(col("qid"), col("xid"),
-        (dotScaled(col("qs"), col("rx")).cast("double") /
-          (col("qnorm") * col("xnorm"))).as("cos"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("xid"))))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("xid"), col("cos"), col("rank").cast("long").as("rank"))
-  }
 }

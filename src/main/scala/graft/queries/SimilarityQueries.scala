@@ -785,8 +785,8 @@ object SimilarityQueries {
     Similarity.knnGraphSq8(corpus, centroids, Similarity.ivfProbesFor(cells), K)
   }
 
-  /** q167b with the PER-CELL CANDIDATE CAP
-    * ([[Similarity.knnGraphSq8Capped]]) — the last layer of the
+  /** q167b with the PER-CELL CANDIDATE CAP ([[Similarity.knnGraphSq8]]
+    * with a finite `capPerCell`) — the last layer of the
     * production posture for all-vectors graphs, registered: SQ8 codes
     * bound the resident store, coarse cells bound the scan fraction, and
     * the cap bounds the candidate SHUFFLE at N·nProbe·⌈n/cells⌉ rows no
@@ -856,7 +856,7 @@ object SimilarityQueries {
     val corpus = emb.select(col("vec_id").as("xid"), col("embedding").as("xvec"))
     val centroids = emb.filter(col("vec_id") < cells)
       .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-    Similarity.knnGraphSq8Capped(corpus, centroids,
+    Similarity.knnGraphSq8(corpus, centroids,
       Similarity.ivfProbesFor(cells), K, Similarity.knnCellCapFor(n, cells, K))
   }
 

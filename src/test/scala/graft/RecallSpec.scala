@@ -399,7 +399,7 @@ class RecallSpec extends AnyFunSuite {
     val uncapped = Similarity.knnGraphSq8(corpus, centroids, probes, 3)
       .select(col("a"), col("b")).as[(Long, Long)].collect().toSet
     val cap = Similarity.knnCellCapFor(n, cells, 3)
-    val capped = Similarity.knnGraphSq8Capped(corpus, centroids, probes, 3, cap)
+    val capped = Similarity.knnGraphSq8(corpus, centroids, probes, 3, cap)
       .select(col("a"), col("b")).as[(Long, Long)].collect().toSet
     assert(uncapped.nonEmpty, "degenerate fixture: uncapped graph is empty")
     val recall = (capped intersect uncapped).size.toDouble / uncapped.size
@@ -440,7 +440,7 @@ class RecallSpec extends AnyFunSuite {
     info(s"hot cell: $hotSize members uncapped -> $cap servable capped")
     assert(hotSize > 800, s"fixture failed to concentrate the hot cell: $hotSize")
     // and the capped graph over this corpus still builds
-    val edges = Similarity.knnGraphSq8Capped(corpus, centroids, 4, 3, cap).count()
+    val edges = Similarity.knnGraphSq8(corpus, centroids, 4, 3, cap).count()
     assert(edges > 0, "capped graph over the skewed corpus is empty")
   }
 

@@ -307,7 +307,7 @@ class SoakTest extends AnyFunSuite {
     // The uncapped 200k-vector graph at board geometry (448 cells, 22
     // probes) produced ~2e9 candidates = N²·cells^(−1/2) and spilled
     // >46 GB of shuffle before ENOSPC on this box. The per-cell cap is
-    // the promised fix, now code (Similarity.knnGraphSq8Capped): with
+    // the promised fix, now code (Similarity.knnGraphSq8 with a capPerCell): with
     // cap = ⌈avg⌉/4 = 112 the candidate join is bounded at
     // N·nProbe·cap ≈ 4.9e8 rows — a 4× volume reduction at the SAME
     // geometry, the only change being the cap. (The other production
@@ -336,7 +336,7 @@ class SoakTest extends AnyFunSuite {
       .filter(col("vec_id") < cells)
       .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
     val t0 = System.nanoTime()
-    val edges = Similarity.knnGraphSq8Capped(corpus, centroids, probes, 3, cap).count()
+    val edges = Similarity.knnGraphSq8(corpus, centroids, probes, 3, cap).count()
     println(f"SOAK167C q167c_capped        ${(System.nanoTime() - t0) / 1e9}%7.1fs  rows=$edges")
     assert(edges > 0, "capped graph produced no mutual edges")
     // The cell-key join shape ALONE (registered q167b geometry, no cap):
@@ -466,7 +466,7 @@ class SoakTest extends AnyFunSuite {
       .filter(col("vec_id") < cells)
       .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
     val t0 = System.nanoTime()
-    val edges = Similarity.knnGraphSq8Capped(corpus, centroids, probes, 3, cap).count()
+    val edges = Similarity.knnGraphSq8(corpus, centroids, probes, 3, cap).count()
     println(f"SOAK167C500 q167c_capped_500k ${(System.nanoTime() - t0) / 1e9}%7.1fs  rows=$edges")
     assert(edges > 0, "capped graph produced no mutual edges")
   }
