@@ -1,8 +1,7 @@
 package graft
 
 import graft.core.{IndexFamily, IndexStore}
-import graft.operators.Similarity
-import graft.queries.TextQueries
+import graft.operators.{Retrieval, Similarity}
 import org.apache.spark.sql.functions.col
 
 /** Fresh-session serve CLI for a persisted k-NN index — the daily-pipeline
@@ -81,10 +80,10 @@ object KnnServeMain {
 
 /** Fresh-session serve CLI for a persisted RAG chunk index — the same
   * cross-session contract as [[KnnServeMain]] for the retrieval family:
-  * load the [[graft.queries.TextQueries.ragIndexSave]] artifacts
+  * load the [[graft.operators.Retrieval.ragIndexSave]] artifacts
   * (term-bucketed postings, cell-partitioned SQ8 codes), ask one query
   * doc's hybrid top-k through the bucket/cell-pruned
-  * [[graft.queries.TextQueries.ragServeDisk]] path, print one JSON line.
+  * [[graft.operators.Retrieval.ragServeDisk]] path, print one JSON line.
   *
   * Per-query timings separate the cold first query (artifact listing,
   * codegen warmup) from the steady-state marginal cost q150c's curve
@@ -120,7 +119,7 @@ object RagServeMain {
     val spark = graft.core.Graft.session("graft-rag-serve", cpus, cpus.toInt)
     val t0 = System.nanoTime()
     // as in KnnServeMain: `v` is always the version the query read
-    val (c0, idx0) = IndexFamily.load[TextQueries.RagIndex](spark, indexPath)
+    val (c0, idx0) = IndexFamily.load[Retrieval.RagIndex](spark, indexPath)
     var v = c0.version
     var idx = idx0
     val load = (System.nanoTime() - t0) / 1e9
@@ -128,21 +127,21 @@ object RagServeMain {
       val t1 = System.nanoTime()
       val c = IndexStore.committed(spark, indexPath)
       if (c.version != v) { // a writer moved the store — serve the new version
-        idx = IndexFamily.read[TextQueries.RagIndex](spark, indexPath, c)
+        idx = IndexFamily.read[Retrieval.RagIndex](spark, indexPath, c)
         v = c.version
       }
       // the query doc is ONE row — scan the corpus for it once (pushdown
       // on doc_id), then derive terms and the dense vector from that row
       val qdocRow = spark.read.parquet(docsPath)
         .filter(col("doc_id") === qdoc).localCheckpoint(true)
-      val res = graft.queries.TextQueries.ragServeDisk(idx,
-        graft.queries.TextQueries.ragQueryTermsOf(qdocRow, qdoc).localCheckpoint(true),
-        graft.queries.TextQueries.ragQueryVectorOf(qdocRow, qdoc).localCheckpoint(true),
+      val res = Retrieval.ragServeDisk(idx,
+        Retrieval.ragQueryTermsOf(qdocRow, qdoc).localCheckpoint(true),
+        Retrieval.ragQueryVectorOf(qdocRow, qdoc).localCheckpoint(true),
         k).localCheckpoint(true)
       val hits = res.count()
       val sum = res.agg(org.apache.spark.sql.functions.coalesce(
         org.apache.spark.sql.functions.expr(
-          s"sum((doc_id * ${graft.queries.TextQueries.ChunkIdBase} + chunk_id) * rank)"),
+          s"sum((doc_id * ${Retrieval.ChunkIdBase} + chunk_id) * rank)"),
         org.apache.spark.sql.functions.lit(0L))).first().getLong(0)
       val line = f"""{"qdoc":$qdoc,"hits":$hits,"sum":$sum,"v":$v,""" +
         f""""sec":${(System.nanoTime() - t1) / 1e9}%.1f}"""

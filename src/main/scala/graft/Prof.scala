@@ -7,8 +7,8 @@ package graft
   * part of the driver contract.
   *
   * Usage: SPARK_GRAFT_SF_DIR=... tools/run.sh graft.Prof <lane> [lane...]
-  * Lanes: rag_disk, rag_build_detail, rag_incr_detail, setsim_detail,
-  * vec_micro, store_schemas, or any registered query name (PHASE
+  * Lanes: rag_disk, rag_incr_detail, setsim_detail, vec_micro,
+  * store_schemas, or any registered query name (PHASE
   * `<name> build` times frame construction, eager checkpoints included,
   * then PHASE `<name>` the drain).
   * PHASE lines also count generated classes compiled: name a lane twice,
@@ -98,63 +98,30 @@ object Prof {
         import org.apache.spark.sql.functions._
         val docs = graft.core.Graft.table(spark, sfDir, "documents")
         val path = graft.core.Graft.scratch("prof_rag_index")
-        val idx = phase("rag build")(queries.TextQueries.ragIndexBuildOf(docs))
-        phase("rag save")(queries.TextQueries.ragIndexSave(idx, path))
-        val loaded = phase("rag load")(queries.TextQueries.ragIndexLoad(spark, path))
+        val idx = phase("rag build")(operators.Retrieval.ragIndexBuildOf(docs))
+        phase("rag save")(operators.Retrieval.ragIndexSave(idx, path))
+        val loaded = phase("rag load")(operators.Retrieval.ragIndexLoad(spark, path))
         val qt = phase("rag qterms")(
-          queries.TextQueries.ragQueryTermsOf(docs, 13L).localCheckpoint(true))
+          operators.Retrieval.ragQueryTermsOf(docs, 13L).localCheckpoint(true))
         val qv = phase("rag qvec")(
-          queries.TextQueries.ragQueryVectorOf(docs, 13L).localCheckpoint(true))
+          operators.Retrieval.ragQueryVectorOf(docs, 13L).localCheckpoint(true))
         val served = phase("rag serve")(
-          queries.TextQueries.ragServeDisk(loaded, qt, qv, 20))
+          operators.Retrieval.ragServeDisk(loaded, qt, qv, 20))
         phase("rag serve exec")(drain(served))
-      case "rag_build_detail" =>
-        import org.apache.spark.sql.functions._
-        import graft.operators.Similarity
-        val docs = graft.core.Graft.table(spark, sfDir, "documents")
-        val ctoks = phase("ctoks (chunk+explode+ckpt)")(
-          queries.TextQueries.ragChunkToksOf(docs))
-        val tf = phase("tf agg+ckpt")(
-          ctoks.groupBy(col("xid"), col("term")).agg(count(lit(1)).as("tf"))
-            .localCheckpoint(true))
-        val cl = phase("cl agg (from tf)")(
-          tf.groupBy(col("xid")).agg(sum(col("tf")).as("dl"))
-            .localCheckpoint(true))
-        val postings = phase("postings join+ckpt")(
-          tf.join(cl, "xid").localCheckpoint(true))
-        phase("termStats agg+ckpt")(
-          postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
-            .localCheckpoint(true))
-        phase("tot agg (from cl)")(
-          cl.agg(count(lit(1)).as("nd"),
-            sum(col("dl")).as("tt")).localCheckpoint(true))
-        val corpus = phase("chunk vectors+ckpt")(
-          queries.TextQueries.ragChunkVectors(ctoks).localCheckpoint(true))
-        val n = phase("corpus count")(corpus.count())
-        val cells = Similarity.ivfCellsFor(n)
-        val centroids = phase("centroids+ckpt")(
-          corpus.orderBy(col("xid")).limit(cells)
-            .select(col("xid").as("cid"), col("xvec").as("cvec"))
-            .localCheckpoint(true))
-        val stats = phase("sq8 stats collect")(Similarity.sq8StatsOf(corpus))
-        phase("encode+assign+ckpt")(
-          Similarity.sq8EncodeFrozen(corpus, stats)
-            .join(Similarity.cellAssign(corpus, centroids), "xid")
-            .localCheckpoint(true))
       case "rag_incr_detail" =>
         import org.apache.spark.sql.functions._
         val docs = graft.core.Graft.table(spark, sfDir, "documents")
         val path = graft.core.Graft.scratch("prof_rag_incr")
         val baseIdx = phase("base build (49/50)")(
-          queries.TextQueries.ragIndexBuildOf(docs.filter(col("doc_id") % 50 =!= 49)))
-        phase("save")(queries.TextQueries.ragIndexSave(baseIdx, path))
-        val loaded = phase("load")(queries.TextQueries.ragIndexLoad(spark, path))
+          operators.Retrieval.ragIndexBuildOf(docs.filter(col("doc_id") % 50 =!= 49)))
+        phase("save")(operators.Retrieval.ragIndexSave(baseIdx, path))
+        val loaded = phase("load")(operators.Retrieval.ragIndexLoad(spark, path))
         val appended = phase("append 1/50")(
-          queries.TextQueries.ragIndexAppend(loaded, docs.filter(col("doc_id") % 50 === 49)))
-        val qt = queries.TextQueries.ragQueryTermsOf(docs, 23L).localCheckpoint(true)
-        val qv = queries.TextQueries.ragQueryVectorOf(docs, 23L).localCheckpoint(true)
+          operators.Retrieval.ragIndexAppend(loaded, docs.filter(col("doc_id") % 50 === 49)))
+        val qt = operators.Retrieval.ragQueryTermsOf(docs, 23L).localCheckpoint(true)
+        val qv = operators.Retrieval.ragQueryVectorOf(docs, 23L).localCheckpoint(true)
         val served = phase("serve plan")(
-          queries.TextQueries.ragServeDisk(appended, qt, qv, 20))
+          operators.Retrieval.ragServeDisk(appended, qt, qv, 20))
         phase("serve exec")(drain(served))
       case "setsim_detail" =>
         import org.apache.spark.sql.functions._

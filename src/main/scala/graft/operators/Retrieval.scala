@@ -1,0 +1,605 @@
+package graft.operators
+
+import graft.core.Graft.table
+import graft.core.{IndexFamily, IndexStore}
+import graft.functions.Hashing
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+
+/** Lexical retrieval and the persisted RAG chunk index: the BM25 scorer,
+  * its ranked top-k and reciprocal-rank fusion, q118's sliding chunk
+  * windows, and the RAG family — build, append, retire, staleness,
+  * save/load/maintain through [[RagFamily]], and the pruned disk serve.
+  *
+  * The lexical core ([[bm25Term]], [[bm25Scored]], [[ranked]],
+  * [[bm25TopK]] and [[rrfFuse]]) is the one place the integer BM25 term
+  * score, its (score desc, then key) rank and the RRF term are written.
+  * q129, q135, q150*, q186 and the RAG serve paths score and rank
+  * through it; the DuckDB oracle SQL replays the same trees by hand, as
+  * the independent reference.
+  */
+object Retrieval {
+
+  // ---- the lexical core: each exact op tree and tiebreak, written once
+
+  /** The integer BM25 (Robertson–Spärck Jones / Okapi) term score over
+    * (tf, df, dl, nd, tt) columns: tf SATURATION and document-LENGTH
+    * normalization, the two effects q75's raw tf·N/df lacks.
+    *
+    * All-integer so the per-doc SUM is exact across engines (float
+    * accumulation order is engine-private — the q77 lesson): k1 = 6/5
+    * and b = 3/4 exactly, the log-free RSJ idf (2N−2df+1)/(2df+1) (each
+    * +0.5 doubled into integers), and the score in millionths via floor
+    * division — Spark `div` ≡ DuckDB `//` on non-negative longs:
+    *   score = (10⁶·44·tf·(2N−2df+1)) div ((2df+1)·(20·tf + 6 + (18·dl·N) div T))
+    * where dl = doc length, N = nd documents, T = tt total corpus tokens
+    * (avgdl = T/N). The inner (18·dl·N) div T folds the length norm into
+    * a bounded int first, keeping every product under 2⁶³ even at 100×
+    * this corpus.
+    */
+  private[graft] def bm25Term: Column =
+    expr("""(1000000 * 44 * tf * (2 * nd - 2 * df + 1)) div
+           ((2 * df + 1) * (20 * tf + 6 + (18 * dl * nd) div tt))""")
+
+  /** A collection's BM25 terms against the distinct query terms `qt`:
+    * tf rows (`keys`, term, tf), lengths (`keys`, dl) and the 1-row
+    * totals (nd, tt) in, one (`keys`, sc) row per matched (key, query
+    * term) out. df derives from tf (one token-stream shuffle total, the
+    * q75 trick); the query terms and totals broadcast, so scoring touches
+    * only tf rows that hit a query term.
+    */
+  private[graft] def bm25Scored(tf: DataFrame, dl: DataFrame, tot: DataFrame,
+                                qt: DataFrame, keys: String*): DataFrame = {
+    val q = broadcast(qt)
+    // df restricted to the query's terms BEFORE the big join: at corpus
+    // scale the full vocabulary outgrows a broadcast, the ~|query| rows
+    // that matter never do
+    val dfq = broadcast(tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
+      .join(q, "term"))
+    tf.join(q, "term")
+      .join(dfq, "term")
+      .join(dl, keys)
+      .crossJoin(broadcast(tot))
+      .select(keys.map(col) :+ bm25Term.as("sc"): _*)
+  }
+
+  /** The `k` rows of `rows` with the largest `score`, the smaller `keys`
+    * first on ties, with the int `rank` stamped on them: a bounded
+    * TakeOrderedAndProject, then a window over the k rows only (never a
+    * 1-partition window over the collection).
+    */
+  private[graft] def ranked(rows: DataFrame, score: String, k: Int,
+                            rank: String, keys: Seq[String]): DataFrame = {
+    val order = col(score).desc +: keys.map(col)
+    rows.orderBy(order: _*).limit(k)
+      .withColumn(rank, row_number().over(Window.orderBy(order: _*)))
+  }
+
+  /** BM25 top-k of [[bm25Scored]] rows: each key's summed score, ranked —
+    * (`keys`, score, `rank`).
+    */
+  private[graft] def bm25TopK(scored: DataFrame, k: Int, rank: String,
+                              keys: String*): DataFrame =
+    ranked(scored.groupBy(keys.map(col): _*).agg(sum(col("sc")).as("score")),
+      "score", k, rank, keys)
+
+  /** Reciprocal-rank fusion of a (`key`, bm25_rank) and a (`key`,
+    * cos_rank) list: integer RRF `Σ 10⁶ div (60 + rank)` (a list missing
+    * the key adds 0), top 10 by rrf, the smaller key first on ties —
+    * (`key`, bm25_rank, cos_rank, rrf, rank). Fusion touches 2k rows.
+    */
+  private[graft] def rrfFuse(bm: DataFrame, dense: DataFrame,
+                             key: String): DataFrame = {
+    def rrf(rank: String) = coalesce(expr(s"1000000 div (60 + $rank)"), lit(0L))
+    ranked(bm.join(dense, Seq(key), "full_outer")
+      .select(col(key), col("bm25_rank"), col("cos_rank"),
+        (rrf("bm25_rank") + rrf("cos_rank")).as("rrf")),
+      "rrf", 10, "rank", Seq(key))
+  }
+
+  // ---- chunking: q118's windows and the packed chunk ids
+
+  // Retrieval-chunking geometry: 64-token windows advancing 48 tokens
+  // (16-token overlap) — the standard RAG corpus-construction shape.
+  private[graft] val ChunkW = 64
+  private[graft] val ChunkS = 48
+
+  /** (doc_id, text) documents as token arrays `w` (of length `n`),
+    * exploded over the window index `k`: chunk k covers tokens
+    * [k·S, min(k·S+W, n)), a document shorter than one window has the one
+    * chunk k = 0, and the last window is short rather than padded. `keep`
+    * names the columns of (doc_id, w, n) carried along.
+    */
+  private[graft] def chunkWindows(docs: DataFrame, keep: String*): DataFrame =
+    docs.select(col("doc_id"), split(col("text"), " ").as("w"))
+      .withColumn("n", size(col("w")))
+      .select(keep.map(col) :+ explode(expr(
+        s"sequence(0, cast(ceil(greatest(n - $ChunkW, 0) / $ChunkS.0) as int))"))
+        .as("k"): _*)
+
+  /** Window `k`'s token slice of `w`, as SQL. */
+  private[graft] val chunkSlice = s"slice(w, k * $ChunkS + 1, $ChunkW)"
+
+  /** Chunk-id packing base: `xid = doc_id * ChunkIdBase + chunk_k`.
+    * THE one constant behind the encoding — [[docIdOf]] is its inverse
+    * and every consumer (retire's membership derivation, the hybrid
+    * output's unpacking, RagIndexSpec) goes through them, so a future
+    * re-packing cannot silently desynchronize a consumer. Chunk counts
+    * are bounded by n_tokens/48, so 10⁶ holds any plausible document.
+    */
+  private[graft] val ChunkIdBase = 1000000L
+
+  /** Inverse of the chunk-id packing: the document id of a packed chunk
+    * id column (integral `div` — exact at any long scale).
+    */
+  private[graft] def docIdOf(xidCol: String): Column =
+    expr(s"$xidCol div $ChunkIdBase")
+
+  /** Chunk-token stream (xid, term) — checkpointed once; feeds the BM25
+    * stats AND the hashed feature vectors.
+    */
+  private[graft] def ragChunkToks(s: SparkSession, dir: String): DataFrame =
+    ragChunkToksOf(table(s, dir, "documents"))
+
+  private[graft] def ragChunkToksOf(docs: DataFrame): DataFrame =
+    // Token stream DIRECTLY from the chunk slices — building chunk_text
+    // with array_join and re-splitting it with tokens() is the identity
+    // on the slice (tokens come from a split on ' ', so no element
+    // contains the separator; slices are never empty — the last chunk's
+    // start k·S+1 ≤ n−(W−S) < n because W > S, and a short doc's single
+    // k=0 slice is the whole w, which is non-empty even for empty text)
+    // — so skipping the string build + re-tokenize is value-exact while
+    // saving one string materialization per chunk per direction (guide
+    // §1.2 step 2: per-task work).
+    // (Dedup.widen() before the chunking was measured a net LOSS across
+    // the whole RAG family — 46.5→52.8 s min-of-2 over 8 lanes: the
+    // split/slice maps the 1-partition checkpoint serializes cost less
+    // than widen's extra exchange plus 32-way-tiny-task overhead on
+    // every downstream consumer. Same boundary as setSimSorted: widen
+    // pays only for md5-heavy serialized maps.)
+    chunkWindows(docs, "doc_id", "w")
+      .select((col("doc_id") * ChunkIdBase + col("k")).as("xid"),
+        explode(expr(chunkSlice)).as("term"))
+      .localCheckpoint(true)
+
+  /** Chunk-grain BM25 statistics of a (xid, term) stream: tf (xid, term,
+    * tf) and lengths (xid, dl). dl = Σ_term tf derives from tf's
+    * exchange (reused by the planner for both branches) instead of a
+    * second full pass over the raw token stream — exact counts.
+    */
+  private def chunkTf(ctoks: DataFrame): (DataFrame, DataFrame) = {
+    val tf = ctoks.groupBy(col("xid"), col("term")).agg(count(lit(1)).as("tf"))
+    (tf, tf.groupBy(col("xid")).agg(sum(col("tf")).as("dl")))
+  }
+
+  /** 64-dim hashed-unigram tf vectors (the feature-hashing trick, the
+    * q147 dimensioning) over the chunk corpus: dim = md5-hash(term) mod
+    * 64, value = count/len — length-normalized so every coordinate sits
+    * in [0, 1], inside [[Similarity.sq8Budget]]'s scaled domain. Returns
+    * (xid, xvec).
+    */
+  private[graft] def ragChunkVectors(ctoks: DataFrame): DataFrame =
+    // ONE grouped aggregation with 64 bucket counters (plus dl = their
+    // sum, since every token hashes to exactly one bucket): the former
+    // shape paid two shuffle rounds — (xid, d) counts, then a per-xid
+    // map assembly (and before round 20, a third pass for dl) — where a
+    // fixed 64-bucket histogram is a flat aggregation buffer that
+    // partial-aggregates map-side straight to one row per chunk (guide
+    // §2.3). cs[d] ≡ the old coalesce(m[d], 0) count, dl identical, so
+    // the c/dl doubles — and the xvec — are bit-identical.
+    ctoks
+      .select(col("xid"), (Hashing.hash32(col("term")) % 64).as("d"))
+      .groupBy(col("xid"))
+      .agg(count(lit(1)).as("dl"),
+        array((0 until 64).map(i =>
+          sum(when(col("d") === i, 1L).otherwise(0L))): _*).as("cs"))
+      .select(col("xid"), expr(
+        "transform(cs, c -> cast(coalesce(c, 0L) as double) / cast(dl as double))")
+        .as("xvec"))
+
+  /** A query doc's tokens (term), duplicates kept. */
+  private def queryTokens(docs: DataFrame, qdoc: Long): DataFrame =
+    docs.filter(col("doc_id") === qdoc)
+      .select(explode(Dedup.tokens(col("text"))).as("term"))
+
+  /** A query doc's distinct terms — the sparse-side query payload. */
+  private[graft] def ragQueryTermsOf(docs: DataFrame, qdoc: Long): DataFrame =
+    queryTokens(docs, qdoc).distinct()
+
+  /** A query doc's whole text featurized like [[ragChunkVectors]] — the
+    * dense query vector (qid, qvec). q150b asks as doc 42, q150c as doc 7.
+    */
+  private[graft] def ragQueryVector(s: SparkSession, dir: String,
+                                    qdoc: Long = 42L): DataFrame =
+    ragQueryVectorOf(table(s, dir, "documents"), qdoc)
+
+  private[graft] def ragQueryVectorOf(docs: DataFrame, qdoc: Long): DataFrame =
+    queryTokens(docs, qdoc)
+      .groupBy((Hashing.hash32(col("term")) % 64).as("d"))
+      .agg(count(lit(1)).as("c"))
+      .agg(map_from_entries(collect_list(struct(col("d"), col("c")))).as("m"),
+        sum(col("c")).as("qdl"))
+      .select(lit(qdoc).as("qid"), expr(
+        "transform(sequence(0L, 63L), d -> cast(coalesce(m[d], 0L) as double) / cast(qdl as double))")
+        .as("qvec"))
+
+  /** A term's store bucket: the 64-way md5 word of the term the persisted
+    * postings and term stats are directory-partitioned on (`tb`).
+    */
+  private def termBucket: Column = (Hashing.hash32(col("term")) % 64).cast("int")
+
+  // ---- in-query retrieval over the chunk corpus
+
+  /** BM25 top-k chunks for doc 42's terms (the q150 scorer keyed on the
+    * packed xid) — (xid, bm25_rank).
+    */
+  private[graft] def ragBm25Top(s: SparkSession, dir: String, ctoks: DataFrame,
+                                k: Int): DataFrame = {
+    val (tf, cl) = chunkTf(ctoks)
+    // (nd, tt) = (rows, Σ dl) of the chunk-grain cl: both derive from
+    // tf's exchange instead of two more full passes over the raw tokens
+    val tot = cl.agg(count(lit(1)).as("nd"), sum(col("dl")).as("tt"))
+    bm25TopK(bm25Scored(tf, cl, tot,
+        ragQueryTermsOf(table(s, dir, "documents"), 42L), "xid"),
+      k, "bm25_rank", "xid")
+      .select(col("xid"), col("bm25_rank"))
+  }
+
+  /** RRF fusion of the two chunk lists + unpacked ids — shared by the
+    * q150b–q150g serves and RecallSpec's exact-fusion reference.
+    */
+  private[graft] def ragFuse(bm: DataFrame, dense: DataFrame): DataFrame =
+    rrfFuse(bm, dense, "xid")
+      .select(docIdOf("xid").as("doc_id"),
+        expr(s"xid % $ChunkIdBase").as("chunk_id"),
+        col("bm25_rank"), col("cos_rank"), col("rrf"), col("rank"))
+
+  // ---- the persisted chunk index
+
+  /** The persisted chunk-index artifacts a production RAG deployment
+    * stores once and serves every query batch from (the q183/q124
+    * build/serve contract applied to retrieval): BM25 postings keyed by
+    * term, per-term document frequencies, the 2-scalar totals row, the
+    * IVF×SQ8 dense index (codes + cell ids), and its centroids. All
+    * checkpointed — the materialization barrier standing in for the
+    * parquet write a daily pipeline does once (the 100× soak writes the
+    * real parquet and prices both halves).
+    */
+  private[graft] final case class RagIndex(
+      postings: DataFrame,  // (xid, term, tf, dl); bucketed by term at scale
+      termStats: DataFrame, // (term, df)
+      tot: DataFrame,       // (nd, tt), 1 row
+      corpusCount: Long,    // CURRENT chunk count (append/retire update it)
+      centroids: DataFrame, // (cid, cvec)
+      index: DataFrame,     // SQ8 codes + cells (xid, rx, xnorm, cid)
+      stats: Seq[(Long, Long)], // FROZEN SQ8 quantizer (per-dim min, range)
+      cells: Int)           // FROZEN coarse-cell count (geometry never re-derives)
+
+  /** The RAG family's instance of the shared index lifecycle
+    * ([[graft.core.IndexFamily]]). Defined above every use and passed
+    * explicitly inside this object; the implicit serves callers outside
+    * it (the streaming ingest, the serve CLI).
+    */
+  private[graft] implicit object RagFamily extends IndexFamily[RagIndex] {
+    def session(idx: RagIndex): SparkSession = idx.postings.sparkSession
+
+    /** Layout is the 100 TB pruning one: postings and term stats land
+      * TERM-BUCKETED — directory-partitioned on a 64-way md5 word of the
+      * term, the `bucketBy(term)` layout expressible without a catalog —
+      * so a query batch's sparse reads skip every bucket its terms don't
+      * hash to; the SQ8 code store is CELL-PARTITIONED so the dense side
+      * reads only probed cells. Totals, centroids, and the corpus count
+      * are small unpartitioned tables.
+      */
+    def write(idx: RagIndex, path: String): Unit = {
+      // explicit shuffle width: repartition(col) alone lets AQE coalesce
+      // the (small) shuffle to ONE partition, which serializes every
+      // partition-directory's file write through a single task — the
+      // measured bulk of the save wall. An explicit count (the session's
+      // shuffle parallelism — scale-adaptive, not a local constant) keeps
+      // the writers parallel; each bucket/cell still lands wholly in one
+      // task, so the one-file-per-directory layout is unchanged.
+      val p = idx.postings.sparkSession.sessionState.conf.numShufflePartitions
+      def tb(d: DataFrame) = d.withColumn("tb", termBucket).repartition(p, col("tb"))
+      tb(idx.postings)
+        .write.mode("overwrite").partitionBy("tb").parquet(s"$path/postings")
+      tb(idx.termStats)
+        .write.mode("overwrite").partitionBy("tb").parquet(s"$path/term_stats")
+      // totals + config + quantizer stats merged into ONE 1-row `meta`
+      // table (stats as dim-ordered arrays): one write job and one read
+      // action per save/load cycle instead of three of each — the arc
+      // lanes (q150i/j, q167i/j, q183e/f) pay this per store round trip
+      val s = idx.postings.sparkSession
+      import s.implicits._
+      idx.tot.select(col("nd"), col("tt"))
+        .crossJoin(Seq((idx.corpusCount, idx.cells.toLong,
+          idx.stats.map(_._1), idx.stats.map(_._2)))
+          .toDF("n", "cells", "mns", "rngs"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+      idx.centroids.coalesce(1)
+        .write.mode("overwrite").parquet(s"$path/centroids")
+      idx.index.repartition(p, col("cid"))
+        .write.mode("overwrite").partitionBy("cid").parquet(s"$path/codes")
+    }
+
+    /** Every frame a FileScan. The bucket/cell partition columns stay in
+      * their INFERRED types and positions: filters on them must hit the
+      * raw partition column (a cast would defeat directory pruning), and
+      * every consumer joins through them type-coerced.
+      */
+    def read(s: SparkSession, path: String): RagIndex = {
+      // EXPLICIT schemas (matching the save's inferred layout bit-for-bit,
+      // partition columns in their inferred type and position): a schema'd
+      // read skips the per-table footer-inference job, so a load costs ONE
+      // driver action (the meta row) instead of ~7 — the maintain lanes
+      // load 3x per pass (guide §6)
+      import org.apache.spark.sql.types.StructType
+      def rd(t: String, ddl: String) =
+        s.read.schema(StructType.fromDDL(ddl)).parquet(s"$path/$t")
+      val metaDf = rd("meta",
+        "nd BIGINT,tt BIGINT,n BIGINT,cells BIGINT,mns ARRAY<BIGINT>,rngs ARRAY<BIGINT>")
+      val m = metaDf.first()
+      RagIndex(
+        rd("postings", "xid BIGINT,term STRING,tf BIGINT,dl BIGINT,tb INT"),
+        rd("term_stats", "term STRING,df BIGINT,tb INT"),
+        broadcast(metaDf.select(col("nd"), col("tt"))),
+        m.getAs[Long]("n"),
+        rd("centroids", "cid BIGINT,cvec ARRAY<DOUBLE>")
+          .select(col("cid"), col("cvec")),
+        rd("codes", "xid BIGINT,rx ARRAY<BIGINT>,xnorm DOUBLE,cid INT"),
+        m.getAs[scala.collection.Seq[Long]]("mns")
+        .zip(m.getAs[scala.collection.Seq[Long]]("rngs")).toSeq,
+        m.getAs[Long]("cells").toInt)
+    }
+
+    /** A micro-batch of (doc_id, text) rows through [[ragIndexAppend]]
+      * (sparse half exactly incremental, dense half under the frozen
+      * build quantizer/centroids).
+      */
+    def append(idx: RagIndex, batch: DataFrame): Option[RagIndex] =
+      if (batch.isEmpty) None else Some(ragIndexAppend(idx, batch))
+
+    /** Postings and the code store: term stats and totals already
+      * checkpoint inside every append.
+      */
+    def flatten(idx: RagIndex): RagIndex = idx.copy(
+      postings = idx.postings.localCheckpoint(true),
+      index = idx.index.localCheckpoint(true))
+
+    def dials(base: => RagIndex, cur: RagIndex, n: => Long): DataFrame =
+      ragStaleness(base, cur)
+
+    /** [[ragIndexBuildOf]] over the raw (doc_id, text) corpus: the
+      * geometry re-derives from its chunk count.
+      */
+    def rebuild(cur: RagIndex, corpus: DataFrame, n: => Long): RagIndex =
+      ragIndexBuildOf(corpus)
+  }
+
+  /** BUILD the chunk index once — every query-independent artifact. The
+    * quantizer stats and cell count are captured EXPLICITLY (not left
+    * implicit in ivfSq8Build) because they are the FROZEN half of the
+    * incremental contract: [[ragIndexAppend]] encodes delta chunks under
+    * these stats (clamped) and assigns under these centroids, exactly as
+    * [[Similarity.knnGraphAppend]] does for the graph.
+    */
+  private[graft] def ragIndexBuild(s: SparkSession, dir: String): RagIndex =
+    ragIndexBuildOf(table(s, dir, "documents"))
+
+  private[graft] def ragIndexBuildOf(docs: DataFrame): RagIndex = {
+    val ctoks = ragChunkToksOf(docs)
+    val (tf, cl0) = chunkTf(ctoks)
+    val cl = cl0.localCheckpoint(true) // totals read it too
+    val postings = tf.join(cl, "xid").localCheckpoint(true)
+    val termStats = postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
+      .localCheckpoint(true)
+    // nd = one row per chunk in cl; tt = Σ dl ≡ Σ tf ≡ the token count —
+    // a 2-scalar agg over the chunk-grain cl instead of a
+    // count_distinct(xid) expansion over the posting grain
+    val tot = broadcast(cl.agg(
+      count(lit(1)).as("nd"), sum(col("dl")).as("tt")))
+    val corpus = ragChunkVectors(ctoks).localCheckpoint(true)
+    val n = corpus.count()
+    val cells = Similarity.ivfCellsFor(n)
+    val centroids = corpus.orderBy(col("xid")).limit(cells)
+      .select(col("xid").as("cid"), col("xvec").as("cvec"))
+      .localCheckpoint(true)
+    val stats = Similarity.sq8StatsOf(corpus)
+    // ≡ ivfSq8Build: frozen-stats encode over the training corpus is the
+    // trained encode (the clamp is a no-op in range)
+    val index = Similarity.sq8EncodeFrozen(corpus, stats)
+      .join(Similarity.cellAssign(corpus, centroids), "xid")
+      .localCheckpoint(true)
+    RagIndex(postings, termStats, tot, n, centroids, index, stats, cells)
+  }
+
+  /** SERVE the BM25 half from the persisted postings: per-batch work is
+    * the query-term join over the term-keyed postings (at 100 TB the
+    * postings are bucketed by term, so the scan prunes to the query's
+    * terms) plus one bounded top-k — no tokenization, no df pass, no
+    * totals pass; those are build artifacts.
+    */
+  private[graft] def ragBm25Serve(idx: RagIndex, qt: DataFrame,
+                                  k: Int): DataFrame = {
+    // dfq already restricts to the query's terms (termStats ⋈ qt), so
+    // the postings join it broadcasts is the ONLY per-batch term join.
+    // qt deduplicates HERE, not by caller contract: BM25 sums one score
+    // per (chunk, query term) — a duplicated query term would double a
+    // posting's contribution, so distinctness is load-bearing
+    val dfq = broadcast(idx.termStats.join(qt.distinct(), "term"))
+    bm25TopK(idx.postings.join(dfq, "term")
+        .crossJoin(idx.tot)
+        .select(col("xid"), bm25Term.as("sc")),
+      k, "bm25_rank", "xid")
+      .select(col("xid"), col("bm25_rank"))
+  }
+
+  /** PERSIST the chunk-index artifacts as parquet — the deployable shape
+    * of the q150c split (same discipline as the k-NN index's
+    * knnIndexSave; reference pattern: MapFileOutputFormat's persisted
+    * sorted store + getEntry lookup,
+    * `src/mapred/org/apache/hadoop/mapred/MapFileOutputFormat.java:109`).
+    * The table layout is [[RagFamily]]'s `write`. Saves are
+    * CRASH-ATOMIC ([[graft.core.IndexStore]], shared with the k-NN
+    * store): a crash between the table writes can never serve new
+    * postings beside old codes. `lastBatch` persists a streaming
+    * ingest's replay cursor; −1 for non-streaming saves.
+    */
+  private[graft] def ragIndexSave(idx: RagIndex, path: String,
+                                  lastBatch: Long = -1L): IndexStore.Commit =
+    IndexFamily.save(idx, path, lastBatch)(RagFamily)
+
+  /** Reconstitute the [[RagIndex]] from [[ragIndexSave]] artifacts in a
+    * fresh session, from the latest COMMITTED version — a torn save is
+    * invisible.
+    */
+  private[graft] def ragIndexLoad(s: SparkSession, rootPath: String): RagIndex =
+    IndexFamily.load(s, rootPath)(RagFamily)._2
+
+  /** APPEND new documents to a built (or loaded) chunk index and return
+    * the updated [[RagIndex]] — the daily RAG ingest, closing the last
+    * build/serve family without a delta path (the q167d contract for
+    * retrieval). The SPARSE half is EXACTLY incremental — counts are
+    * counts: the delta's postings union in, per-term document
+    * frequencies merge by addition (new terms enter), and the totals
+    * row adds the delta's chunk and token counts; serve over the
+    * appended index is bit-identical to a full rebuild's sparse half.
+    * The DENSE half is frozen-config, like the k-NN append: delta
+    * chunks featurize, encode under the build-time quantizer
+    * ([[Similarity.sq8EncodeFrozen]] — clamped for out-of-range
+    * coordinates) and assign under the build-time centroids;
+    * cells/nProbe never re-derive (the [[RagIndex.cells]] freeze). Chunk
+    * ids must be new — document ids unique across base ∪ delta (the
+    * append contract; [[ragIndexRetire]] frees one). Delta artifacts
+    * checkpoint; base payloads ride as lazy unions, so chained appends
+    * never re-materialize the corpus.
+    */
+  private[graft] def ragIndexAppend(idx: RagIndex, newDocs: DataFrame): RagIndex = {
+    val dtoks = ragChunkToksOf(newDocs)
+    val (tfD, clD) = chunkTf(dtoks)
+    val postingsD = tfD.join(clD, "xid").localCheckpoint(true)
+    // a LOADED index carries the term-bucket partition column; delta rows
+    // compute theirs so bucket pruning stays exact over the union
+    val withTb = idx.postings.columns.contains("tb")
+    def tbOf(d: DataFrame) = if (withTb) d.withColumn("tb", termBucket) else d
+    val postings2 = idx.postings.unionByName(tbOf(postingsD))
+    val dfD = postingsD.groupBy(col("term")).agg(count(lit(1)).as("dfd"))
+    val termStats2 = tbOf(
+      idx.termStats.drop("tb").join(dfD, Seq("term"), "full_outer")
+        .withColumn("df",
+          coalesce(col("df"), lit(0L)) + coalesce(col("dfd"), lit(0L)))
+        .drop("dfd"))
+      .localCheckpoint(true)
+    val totD = postingsD.agg(
+      count_distinct(col("xid")).as("ndd"), sum(col("tf")).as("ttd"))
+    val tot2 = broadcast(idx.tot.crossJoin(totD)
+      .select((col("nd") + col("ndd")).as("nd"),
+        (col("tt") + coalesce(col("ttd"), lit(0L))).as("tt"))
+      .localCheckpoint(true))
+    val corpusD = ragChunkVectors(dtoks).localCheckpoint(true)
+    val nD = corpusD.count()
+    // align the delta's cid dtype to the stored index's (a loaded store
+    // infers the partition column) so filters keep pruning the base side
+    val cidT = idx.index.schema(idx.index.schema.fieldIndex("cid")).dataType
+    val codesD = Similarity.sq8EncodeFrozen(corpusD, idx.stats)
+      .join(Similarity.cellAssign(corpusD, idx.centroids), "xid")
+      .withColumn("cid", col("cid").cast(cidT))
+      .localCheckpoint(true)
+    RagIndex(postings2, termStats2, tot2, idx.corpusCount + nD,
+      idx.centroids, idx.index.unionByName(codesD), idx.stats, idx.cells)
+  }
+
+  /** RETIRE documents from the chunk index (tombstone deletes — the
+    * dual of [[ragIndexAppend]]): every artifact here is count-shaped,
+    * so deletion is EXACT with no frozen-config caveat at all — the
+    * retired docs' posting rows leave, per-term document frequencies
+    * decrement by exactly the rows that left (terms reaching zero drop
+    * out of the stats), the totals row subtracts their chunk and token
+    * counts, and their SQ8 codes anti-join away. `docIds` is the
+    * tombstone batch (first column taken as the doc id),
+    * broadcast-sized by contract.
+    */
+  private[graft] def ragIndexRetire(idx: RagIndex, docIds: DataFrame): RagIndex = {
+    val del = docIds.select(col(docIds.columns.head).cast("long").as("del_doc"))
+      .distinct().localCheckpoint(true)
+    val onDel = docIdOf("xid") === col("del_doc")
+    val removedP = idx.postings.join(broadcast(del), onDel)
+      .localCheckpoint(true) // feeds df decrements, totals, and the chunk count
+    val postings2 = idx.postings.join(broadcast(del), onDel, "left_anti")
+    val dfR = removedP.groupBy(col("term")).agg(count(lit(1)).as("dfr"))
+    val termStats2 = idx.termStats.join(dfR, Seq("term"), "left")
+      .withColumn("df", col("df") - coalesce(col("dfr"), lit(0L)))
+      .filter(col("df") > 0)
+      .drop("dfr")
+      .localCheckpoint(true)
+    val totR = removedP.agg(
+      count_distinct(col("xid")).as("ndr"), sum(col("tf")).as("ttr"))
+    val tot2 = broadcast(idx.tot.crossJoin(totR)
+      .select((col("nd") - col("ndr")).as("nd"),
+        (col("tt") - coalesce(col("ttr"), lit(0L))).as("tt"))
+      .localCheckpoint(true))
+    val nR = removedP.select(col("xid")).distinct().count()
+    RagIndex(postings2, termStats2, tot2, idx.corpusCount - nR,
+      idx.centroids,
+      idx.index.join(broadcast(del), onDel, "left_anti"),
+      idx.stats, idx.cells)
+  }
+
+  /** [[Similarity.indexStaleness]] over two [[RagIndex]] states (base =
+    * the persisted build, cur = after its appends): the dense half shares
+    * the k-NN family's config-decay modes exactly — frozen √n cells,
+    * frozen SQ8 quantizer, cell occupancy — because it IS the same
+    * artifact shape (the cell-partitioned SQ8 code store). The sparse
+    * half never goes stale: counts are counts.
+    */
+  private[graft] def ragStaleness(base: RagIndex, cur: RagIndex): DataFrame =
+    Similarity.indexStaleness(
+      base.index.select(col("xid"), col("rx")),
+      cur.index.select(col("xid"), col("rx")),
+      base.index.select(col("cid")),
+      cur.index.select(col("cid")),
+      cur.stats, cur.cells) // cur's frozen geometry (≡ base's while cur
+                            // descends from it; right after a rebuild)
+
+  /** [[graft.core.IndexFamily.maintain]] over a persisted RAG store:
+    * `docs` is the raw (doc_id, text) corpus the re-index runs from
+    * (q150j gates this call against q150i's oracle).
+    */
+  private[graft] def ragMaintain(s: SparkSession, path: String,
+                                 docs: DataFrame): DataFrame =
+    IndexFamily.maintain(s, path, docs)(RagFamily)
+
+  /** Hybrid serve over a LOADED [[RagIndex]] with both reads statically
+    * pruned: the query's term buckets and probed cells are bounded sets
+    * (≤ 64 and nProbe — the same bounded-probe class as the 1-row
+    * concentration probes), collected once and pushed as isin partition
+    * filters, so the sparse read touches only directories the query's
+    * terms hash to and the dense read only probed cells (PlanSpec pins
+    * both PartitionFilters). Shared by q150d–q150g and the fresh-JVM
+    * [[graft.RagServeMain]].
+    */
+  private[graft] def ragServeDisk(idx: RagIndex, qt: DataFrame, qv: DataFrame,
+                                  k: Int): DataFrame = {
+    // the `tb` bucket column exists on persisted+loaded indexes (and on
+    // appends over them); an index straight from ragIndexBuildOf has no
+    // buckets to prune, so the sparse side serves unfiltered — same
+    // answer, just without the directory skip (the guard ragIndexAppend
+    // already applies on its side)
+    val sparse = if (!idx.postings.columns.contains("tb")) idx else {
+      val tbs = qt.select(termBucket.as("tb"))
+        .distinct().collect().map(_.getInt(0)).toSeq
+      idx.copy(
+        postings = idx.postings.filter(col("tb").isin(tbs: _*)),
+        termStats = idx.termStats.filter(col("tb").isin(tbs: _*)))
+    }
+    val nProbe = Similarity.ivfProbesFor(idx.cells)
+    val cids = Similarity.cellProbes(qv, idx.centroids, nProbe)
+      .select(col("cid")).distinct().collect().map(_.getLong(0)).toSeq
+    val dense = Similarity.ivfSq8Serve(
+        idx.index.filter(col("cid").isin(cids: _*)), qv, idx.centroids,
+        nProbe, k)
+      .select(col("xid"), col("rank").as("cos_rank"))
+    ragFuse(ragBm25Serve(sparse, qt, k), dense)
+  }
+}

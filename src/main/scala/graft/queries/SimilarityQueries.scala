@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Q
 import graft.core.Graft.table
-import graft.operators.Similarity
+import graft.operators.{Retrieval, Similarity}
 import org.apache.spark.sql.functions._
 
 /** Embedding similarity search over `embeddings` (builder brief): exact
@@ -594,8 +594,8 @@ object SimilarityQueries {
     * lexical scorer catches exact-term matches embeddings smear, the
     * dense scorer catches paraphrases lexical misses — composed entirely
     * from oracle-pinned parts (q129's scorer, q60's cosine) plus a
-    * bounded 20∪20-row fusion join, so the oracle pins the END-TO-END
-    * pipeline, not just each retriever.
+    * bounded 20∪20-row fusion join ([[Retrieval.rrfFuse]]), so the
+    * oracle pins the END-TO-END pipeline, not just each retriever.
     *
     * Scale shape: each retriever is its own proven plan (broadcast
     * scoring / brute cosine — swap [[Similarity.ivfSq8TopK]] in for the
@@ -641,11 +641,8 @@ object SimilarityQueries {
        |SELECT doc_id, bm25_rank, cos_rank, rrf,
        |  row_number() OVER (ORDER BY rrf DESC, doc_id) AS rank
        |FROM fused QUALIFY rank <= 10""") { (s, dir) =>
-    import org.apache.spark.sql.expressions.Window
-    val bm = graft.queries.TextQueries.bm25Scores(s, dir, 42L)
-      .orderBy(col("score").desc, col("doc_id")).limit(20)
-      .withColumn("bm25_rank",
-        row_number().over(Window.orderBy(col("score").desc, col("doc_id"))))
+    val bm = Retrieval.bm25TopK(TextQueries.bm25Scores(s, dir, 42L), 20,
+        "bm25_rank", "doc_id")
       .select(col("doc_id"), col("bm25_rank"))
     val emb = table(s, dir, "embeddings")
     val ann = Similarity.bruteForceTopK(
@@ -653,13 +650,7 @@ object SimilarityQueries {
           .select(col("vec_id").as("qid"), col("embedding").as("qvec")),
         emb.select(col("vec_id").as("xid"), col("embedding").as("xvec")), 20)
       .select(col("xid").as("doc_id"), col("rank").as("cos_rank"))
-    bm.join(ann, Seq("doc_id"), "full_outer")
-      .select(col("doc_id"), col("bm25_rank"), col("cos_rank"),
-        (coalesce(expr("1000000 div (60 + bm25_rank)"), lit(0L)) +
-          coalesce(expr("1000000 div (60 + cos_rank)"), lit(0L))).as("rrf"))
-      .orderBy(col("rrf").desc, col("doc_id")).limit(10)
-      .withColumn("rank",
-        row_number().over(Window.orderBy(col("rrf").desc, col("doc_id"))))
+    Retrieval.rrfFuse(bm, ann, "doc_id")
   }
 
   /** Mutual k-NN graph over the WHOLE corpus

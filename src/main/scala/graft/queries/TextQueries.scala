@@ -3,6 +3,7 @@ package graft.queries
 import graft.Q
 import graft.core.Graft.table
 import graft.functions.Hashing
+import graft.operators.Retrieval._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
@@ -1063,11 +1064,6 @@ object TextQueries {
       table(s, dir, "documents"), col("n_chars"), budget = 15000L)
   }
 
-  // Retrieval-chunking geometry: 64-token windows advancing 48 tokens
-  // (16-token overlap) — the standard RAG corpus-construction shape.
-  private val ChunkW = 64
-  private val ChunkS = 48
-
   /** Sliding-window token chunking: split every document into overlapping
     * token windows (size [[ChunkW]], stride [[ChunkS]]) with stable chunk
     * ids and token offsets — the corpus-construction step for retrieval
@@ -1091,17 +1087,12 @@ object TextQueries {
        |  CAST(least($ChunkW, n - k * $ChunkS) AS BIGINT) AS n_toks,
        |  array_to_string(w[(k*$ChunkS+1):(k*$ChunkS+$ChunkW)], ' ') AS chunk_text
        |FROM idx""") { (s, dir) =>
-    table(s, dir, "documents")
-      .select(col("doc_id"), split(col("text"), " ").as("w"))
-      .withColumn("n", size(col("w")))
-      .select(col("doc_id"), col("w"), col("n"), explode(expr(
-        s"sequence(0, cast(ceil(greatest(n - $ChunkW, 0) / $ChunkS.0) as int))"))
-        .as("k"))
+    chunkWindows(table(s, dir, "documents"), "doc_id", "w", "n")
       .select(col("doc_id"),
         col("k").cast("long").as("chunk_id"),
         (col("k") * ChunkS).cast("long").as("tok_start"),
         least(lit(ChunkW), col("n") - col("k") * ChunkS).cast("long").as("n_toks"),
-        expr(s"array_join(slice(w, k * $ChunkS + 1, $ChunkW), ' ')").as("chunk_text"))
+        expr(s"array_join($chunkSlice, ' ')").as("chunk_text"))
   }
 
   /** C4-style heuristic filter battery (Raffel et al. 2020 §2.2 + the
@@ -1248,62 +1239,31 @@ object TextQueries {
         expr("(2 * sum(ppm) + count(1)) div (2 * count(1))").as("fluency_ppm"))
   }
 
-  /** BM25 retrieval (Robertson–Spärck Jones / Okapi): rank documents
-    * against a query term set with tf SATURATION and document-LENGTH
-    * normalization — the two effects q75's raw tf·N/df lacks, and the
-    * standard lexical-retrieval scorer a RAG / training-data pipeline
-    * runs next to its embedding ANN. The query is doc 42's distinct
-    * token set (self-contained; swap in any term list).
-    *
-    * All-integer scoring so the per-doc SUM is exact across engines
-    * (float accumulation order is engine-private — the q77 lesson):
-    * k1 = 6/5 and b = 3/4 exactly, the log-free RSJ idf (2N−2df+1)/(2df+1)
-    * (each +0.5 doubled into integers), and per-term score in millionths
-    * via floor division — Spark `div` ≡ DuckDB `//` on non-negative
-    * longs:
-    *   score = (10⁶·44·tf·(2N−2df+1)) div ((2df+1)·(20·tf + 6 + (18·dl·N) div T))
-    * where dl = doc length, T = total corpus tokens (avgdl = T/N). The
-    * inner (18·dl·N) div T folds the length norm into a bounded int
-    * first, keeping every product under 2⁶³ even at 100× this corpus.
-    *
-    * Scale shape: tf/df/dl are map-side-combined aggregations (df derived
-    * from tf — one token-stream shuffle total, the q75 trick); the query
-    * term set and the 1-row corpus totals broadcast, so scoring touches
-    * only tf rows that hit a query term; top-10 is TakeOrderedAndProject
-    * (never a 1-partition window) with the rank stamped on the collected
-    * 10 rows.
-    */
-  /** Per-doc integer BM25 score against `queryDoc`'s distinct term set —
-    * the scoring core shared by q129 (top-10) and q135's hybrid fusion
-    * (top-20 list). See q129's Scaladoc for the exact-arithmetic form.
+  /** Per-(doc, query term) integer BM25 terms ([[bm25Scored]]) against
+    * `queryDoc`'s distinct term set — shared by q129 (top-10) and q135's
+    * hybrid fusion (top-20 list). tf/df/dl are map-side-combined
+    * aggregations over one token stream.
     */
   private[queries] def bm25Scores(s: org.apache.spark.sql.SparkSession,
                                   dir: String, queryDoc: Long): org.apache.spark.sql.DataFrame = {
     import graft.operators.Dedup
     val toks = table(s, dir, "documents")
       .select(col("doc_id"), explode(Dedup.tokens(col("text"))).as("term"))
-    val tf = toks.groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-    val dl = toks.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-    val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val tot = broadcast(toks.agg(
-      count_distinct(col("doc_id")).as("nd"), count(lit(1)).as("tt")))
-    val qt = broadcast(toks.filter(col("doc_id") === queryDoc)
-      .select(col("term")).distinct())
-    // df restricted to the query's terms BEFORE the big join: at corpus
-    // scale the full vocabulary outgrows a broadcast, the ~|query| rows
-    // that matter never do
-    val dfq = broadcast(df.join(qt, "term"))
-    tf.join(qt, "term")
-      .join(dfq, "term")
-      .join(dl, "doc_id")
-      .crossJoin(tot)
-      .select(col("doc_id"),
-        expr("""(1000000 * 44 * tf * (2 * nd - 2 * df + 1)) div
-               ((2 * df + 1) * (20 * tf + 6 + (18 * dl * nd) div tt))""").as("sc"))
-      .groupBy(col("doc_id")).agg(sum(col("sc")).as("score"))
+    bm25Scored(
+      toks.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf")),
+      toks.groupBy(col("doc_id")).agg(count(lit(1)).as("dl")),
+      toks.agg(count_distinct(col("doc_id")).as("nd"), count(lit(1)).as("tt")),
+      toks.filter(col("doc_id") === queryDoc).select(col("term")).distinct(),
+      "doc_id")
   }
 
+  /** BM25 retrieval: rank documents against a query term set with the
+    * exact integer score of [[graft.operators.Retrieval.bm25Term]] — the
+    * standard lexical-retrieval scorer a RAG / training-data pipeline
+    * runs next to its embedding ANN. The query is doc 42's distinct
+    * token set (self-contained; swap in any term list). Top-10 is
+    * TakeOrderedAndProject with the rank stamped on the collected rows.
+    */
   val q129Bm25 = Q.checked(
     "q129_bm25",
     """WITH toks AS (
@@ -1323,12 +1283,7 @@ object TextQueries {
       |r AS (SELECT doc_id, score,
       |  row_number() OVER (ORDER BY score DESC, doc_id) AS rank FROM agg)
       |SELECT doc_id, score, rank FROM r WHERE rank <= 10""") { (s, dir) =>
-    import org.apache.spark.sql.expressions.Window
-    bm25Scores(s, dir, 42L)
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(10)
-      .withColumn("rank",
-        row_number().over(Window.orderBy(col("score").desc, col("doc_id"))))
+    bm25TopK(bm25Scores(s, dir, 42L), 10, "rank", "doc_id")
   }
 
   /** Per-source term drift — the distribution-monitoring query a mixture
@@ -1702,211 +1657,21 @@ object TextQueries {
        |  row_number() OVER (ORDER BY score DESC, doc_id, chunk_id) AS rank FROM agg)
        |SELECT doc_id, chunk_id, score, rank FROM r WHERE rank <= 10""") { (s, dir) =>
     import graft.operators.Dedup
-    import org.apache.spark.sql.expressions.Window
-    val chunks = table(s, dir, "documents")
-      .select(col("doc_id"), split(col("text"), " ").as("w"))
-      .withColumn("n", size(col("w")))
-      .select(col("doc_id"), col("w"), explode(expr(
-        s"sequence(0, cast(ceil(greatest(n - $ChunkW, 0) / $ChunkS.0) as int))"))
-        .as("k"))
+    val docs = table(s, dir, "documents")
+    val ctoks = chunkWindows(docs, "doc_id", "w")
       .select(col("doc_id"), col("k").cast("long").as("chunk_id"),
-        expr(s"array_join(slice(w, k * $ChunkS + 1, $ChunkW), ' ')").as("chunk_text"))
-    val ctoks = chunks
+        expr(s"array_join($chunkSlice, ' ')").as("chunk_text"))
       .select(col("doc_id"), col("chunk_id"),
         explode(Dedup.tokens(col("chunk_text"))).as("term"))
       .localCheckpoint(true) // feeds tf, lengths, totals
-    val tf = ctoks.groupBy(col("doc_id"), col("chunk_id"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-    val cl = ctoks.groupBy(col("doc_id"), col("chunk_id"))
-      .agg(count(lit(1)).as("dl"))
-    val dfr = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val tot = broadcast(ctoks.agg(
-      count_distinct(col("doc_id"), col("chunk_id")).as("nd"),
-      count(lit(1)).as("tt")))
-    val qt = broadcast(table(s, dir, "documents")
-      .filter(col("doc_id") === 42)
-      .select(explode(Dedup.tokens(col("text"))).as("term")).distinct())
-    val dfq = broadcast(dfr.join(qt, "term"))
-    tf.join(qt, "term")
-      .join(dfq, "term")
-      .join(cl, Seq("doc_id", "chunk_id"))
-      .crossJoin(tot)
-      .select(col("doc_id"), col("chunk_id"),
-        expr("""(1000000 * 44 * tf * (2 * nd - 2 * df + 1)) div
-               ((2 * df + 1) * (20 * tf + 6 + (18 * dl * nd) div tt))""").as("sc"))
-      .groupBy(col("doc_id"), col("chunk_id")).agg(sum(col("sc")).as("score"))
-      .orderBy(col("score").desc, col("doc_id"), col("chunk_id"))
-      .limit(10)
-      .withColumn("rank", row_number().over(
-        Window.orderBy(col("score").desc, col("doc_id"), col("chunk_id"))))
-  }
-
-  /** q150's sliding chunks with a single packed key
-    * `xid = doc_id·10⁶ + chunk_id` (chunk counts are bounded by
-    * n_tokens/48, so 10⁶ holds any plausible document) — the chunk
-    * corpus both q150b retrieval sides share.
-    */
-  private def ragChunks(s: org.apache.spark.sql.SparkSession,
-                        dir: String): org.apache.spark.sql.DataFrame =
-    ragChunksOf(table(s, dir, "documents"))
-
-  /** Chunk-id packing base: `xid = doc_id * ChunkIdBase + chunk_k`.
-    * THE one constant behind the encoding — [[docIdOf]] is its inverse
-    * and every consumer (retire's membership derivation, the hybrid
-    * output's unpacking, RagIndexSpec) goes through them, so a future
-    * re-packing cannot silently desynchronize a consumer.
-    */
-  private[graft] val ChunkIdBase = 1000000L
-
-  /** Inverse of the chunk-id packing: the document id of a packed chunk
-    * id column (integral `div` — exact at any long scale).
-    */
-  private[graft] def docIdOf(xidCol: String): org.apache.spark.sql.Column =
-    expr(s"$xidCol div $ChunkIdBase")
-
-  private def ragChunksOf(
-      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    docs
-      .select(col("doc_id"), split(col("text"), " ").as("w"))
-      .withColumn("n", size(col("w")))
-      .select(col("doc_id"), col("w"), explode(expr(
-        s"sequence(0, cast(ceil(greatest(n - $ChunkW, 0) / $ChunkS.0) as int))"))
-        .as("k"))
-      .select((col("doc_id") * ChunkIdBase + col("k")).as("xid"),
-        expr(s"array_join(slice(w, k * $ChunkS + 1, $ChunkW), ' ')").as("chunk_text"))
-
-  /** Chunk-token stream (xid, term) for q150b — checkpointed once; feeds
-    * the BM25 stats AND the hashed feature vectors.
-    */
-  private[graft] def ragChunkToks(s: org.apache.spark.sql.SparkSession,
-                                  dir: String): org.apache.spark.sql.DataFrame =
-    ragChunkToksOf(table(s, dir, "documents"))
-
-  private[graft] def ragChunkToksOf(
-      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    // Token stream DIRECTLY from the chunk slices — the chunk_text
-    // array_join → re-split round trip of [[ragChunksOf]] + tokens() is
-    // the identity on the slice (tokens come from a split on ' ', so no
-    // element contains the separator; slices are never empty — the last
-    // chunk's start k·S+1 ≤ n−(W−S) < n because W > S, and a short doc's
-    // single k=0 slice is the whole w, which is non-empty even for empty
-    // text) — so skipping the string build + re-tokenize is value-exact
-    // while saving one string materialization per chunk per direction
-    // (guide §1.2 step 2: per-task work).
-    // (Dedup.widen() before the chunking was measured a net LOSS across
-    // the whole RAG family — 46.5→52.8 s min-of-2 over 8 lanes: the
-    // split/slice maps the 1-partition checkpoint serializes cost less
-    // than widen's extra exchange plus 32-way-tiny-task overhead on
-    // every downstream consumer. Same boundary as setSimSorted: widen
-    // pays only for md5-heavy serialized maps.)
-    docs
-      .select(col("doc_id"), split(col("text"), " ").as("w"))
-      .withColumn("n", size(col("w")))
-      .select(col("doc_id"), col("w"), explode(expr(
-        s"sequence(0, cast(ceil(greatest(n - $ChunkW, 0) / $ChunkS.0) as int))"))
-        .as("k"))
-      .select((col("doc_id") * ChunkIdBase + col("k")).as("xid"),
-        explode(expr(s"slice(w, k * $ChunkS + 1, $ChunkW)")).as("term"))
-      .localCheckpoint(true)
-
-  /** 64-dim hashed-unigram tf vectors (the feature-hashing trick, the
-    * q147 dimensioning) over the chunk corpus: dim = md5-hash(term) mod
-    * 64, value = count/len — length-normalized so every coordinate sits
-    * in [0, 1], inside [[graft.operators.Similarity.sq8Budget]]'s scaled
-    * domain. Returns (xid, xvec).
-    */
-  private[graft] def ragChunkVectors(
-      ctoks: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    // ONE grouped aggregation with 64 bucket counters (plus dl = their
-    // sum, since every token hashes to exactly one bucket): the former
-    // shape paid two shuffle rounds — (xid, d) counts, then a per-xid
-    // map assembly (and before round 20, a third pass for dl) — where a
-    // fixed 64-bucket histogram is a flat aggregation buffer that
-    // partial-aggregates map-side straight to one row per chunk (guide
-    // §2.3). cs[d] ≡ the old coalesce(m[d], 0) count, dl identical, so
-    // the c/dl doubles — and the xvec — are bit-identical.
-    ctoks
-      .select(col("xid"), (Hashing.hash32(col("term")) % 64).as("d"))
-      .groupBy(col("xid"))
-      .agg(count(lit(1)).as("dl"),
-        array((0 until 64).map(i =>
-          sum(when(col("d") === i, 1L).otherwise(0L))): _*).as("cs"))
-      .select(col("xid"), expr(
-        "transform(cs, c -> cast(coalesce(c, 0L) as double) / cast(dl as double))")
-        .as("xvec"))
-
-  /** A query doc's whole text featurized the same way — the dense query
-    * vector (qid, qvec). q150b asks as doc 42, q150c as doc 7.
-    */
-  private[graft] def ragQueryVector(s: org.apache.spark.sql.SparkSession,
-                                    dir: String,
-                                    qdoc: Long = 42L): org.apache.spark.sql.DataFrame =
-    ragQueryVectorOf(table(s, dir, "documents"), qdoc)
-
-  private[graft] def ragQueryVectorOf(docs: org.apache.spark.sql.DataFrame,
-      qdoc: Long): org.apache.spark.sql.DataFrame = {
-    import graft.operators.Dedup
-    docs.filter(col("doc_id") === qdoc)
-      .select(explode(Dedup.tokens(col("text"))).as("term"))
-      .groupBy((Hashing.hash32(col("term")) % 64).as("d"))
-      .agg(count(lit(1)).as("c"))
-      .agg(map_from_entries(collect_list(struct(col("d"), col("c")))).as("m"),
-        sum(col("c")).as("qdl"))
-      .select(lit(qdoc).as("qid"), expr(
-        "transform(sequence(0L, 63L), d -> cast(coalesce(m[d], 0L) as double) / cast(qdl as double))")
-        .as("qvec"))
-  }
-
-  /** BM25 top-k chunks for doc 42's terms (the q150 scorer keyed on the
-    * packed xid) — (xid, bm25_rank).
-    */
-  private[graft] def ragBm25Top(s: org.apache.spark.sql.SparkSession,
-      dir: String, ctoks: org.apache.spark.sql.DataFrame,
-      k: Int): org.apache.spark.sql.DataFrame = {
-    import graft.operators.Dedup
-    import org.apache.spark.sql.expressions.Window
-    val tf = ctoks.groupBy(col("xid"), col("term")).agg(count(lit(1)).as("tf"))
-    // dl = Σ_term tf and (nd, tt) = (rows, Σ dl) of the chunk-grain cl:
-    // both derive from tf's exchange (reused by the planner) instead of
-    // two more full passes over the raw token stream — exact counts
-    val cl = tf.groupBy(col("xid")).agg(sum(col("tf")).as("dl"))
-    val dfr = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val tot = broadcast(cl.agg(
-      count(lit(1)).as("nd"), sum(col("dl")).as("tt")))
-    val qt = broadcast(table(s, dir, "documents")
-      .filter(col("doc_id") === 42)
-      .select(explode(Dedup.tokens(col("text"))).as("term")).distinct())
-    val dfq = broadcast(dfr.join(qt, "term"))
-    tf.join(qt, "term")
-      .join(dfq, "term")
-      .join(cl, "xid")
-      .crossJoin(tot)
-      .select(col("xid"),
-        expr("""(1000000 * 44 * tf * (2 * nd - 2 * df + 1)) div
-               ((2 * df + 1) * (20 * tf + 6 + (18 * dl * nd) div tt))""").as("sc"))
-      .groupBy(col("xid")).agg(sum(col("sc")).as("score"))
-      .orderBy(col("score").desc, col("xid")).limit(k)
-      .withColumn("bm25_rank", row_number().over(
-        Window.orderBy(col("score").desc, col("xid"))))
-      .select(col("xid"), col("bm25_rank"))
-  }
-
-  /** RRF fusion of the two chunk lists + unpacked ids — shared by q150b
-    * and RecallSpec's exact-fusion reference.
-    */
-  private[graft] def ragFuse(bm: org.apache.spark.sql.DataFrame,
-      dense: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    bm.join(dense, Seq("xid"), "full_outer")
-      .select(col("xid"), col("bm25_rank"), col("cos_rank"),
-        (coalesce(expr("1000000 div (60 + bm25_rank)"), lit(0L)) +
-          coalesce(expr("1000000 div (60 + cos_rank)"), lit(0L))).as("rrf"))
-      .orderBy(col("rrf").desc, col("xid")).limit(10)
-      .withColumn("rank", row_number().over(
-        Window.orderBy(col("rrf").desc, col("xid"))))
-      .select(docIdOf("xid").as("doc_id"),
-        expr(s"xid % $ChunkIdBase").as("chunk_id"),
-        col("bm25_rank"), col("cos_rank"), col("rrf"), col("rank"))
+    bm25TopK(bm25Scored(
+        ctoks.groupBy(col("doc_id"), col("chunk_id"), col("term"))
+          .agg(count(lit(1)).as("tf")),
+        ctoks.groupBy(col("doc_id"), col("chunk_id")).agg(count(lit(1)).as("dl")),
+        ctoks.agg(count_distinct(col("doc_id"), col("chunk_id")).as("nd"),
+          count(lit(1)).as("tt")),
+        ragQueryTermsOf(docs, 42L), "doc_id", "chunk_id"),
+      10, "rank", "doc_id", "chunk_id")
   }
 
   /** Hybrid RAG serving over the chunk index — q150's corpus with the
@@ -2043,96 +1808,6 @@ object TextQueries {
        |  row_number() OVER (ORDER BY rrf DESC, xid) AS rank
        |FROM fused QUALIFY rank <= 10"""
 
-  /** The persisted chunk-index artifacts a production RAG deployment
-    * stores once and serves every query batch from (the q183/q124
-    * build/serve contract applied to retrieval): BM25 postings keyed by
-    * term, per-term document frequencies, the 2-scalar totals row, the
-    * IVF×SQ8 dense index (codes + cell ids), and its centroids. All
-    * checkpointed — the materialization barrier standing in for the
-    * parquet write a daily pipeline does once (the 100× soak writes the
-    * real parquet and prices both halves).
-    */
-  private[graft] final case class RagIndex(
-      postings: org.apache.spark.sql.DataFrame,  // (xid, term, tf, dl); bucketed by term at scale
-      termStats: org.apache.spark.sql.DataFrame, // (term, df)
-      tot: org.apache.spark.sql.DataFrame,       // (nd, tt), 1 row
-      corpusCount: Long,                         // CURRENT chunk count (append/retire update it)
-      centroids: org.apache.spark.sql.DataFrame, // (cid, cvec)
-      index: org.apache.spark.sql.DataFrame,     // SQ8 codes + cells (xid, rx, xnorm, cid)
-      stats: Seq[(Long, Long)],                  // FROZEN SQ8 quantizer (per-dim min, range)
-      cells: Int)                                // FROZEN coarse-cell count (geometry never re-derives)
-
-  /** BUILD the chunk index once — every query-independent artifact. The
-    * quantizer stats and cell count are captured EXPLICITLY (not left
-    * implicit in ivfSq8Build) because they are the FROZEN half of the
-    * incremental contract: [[ragIndexAppend]] encodes delta chunks under
-    * these stats (clamped) and assigns under these centroids, exactly as
-    * [[graft.operators.Similarity.knnGraphAppend]] does for the graph.
-    */
-  private[graft] def ragIndexBuild(s: org.apache.spark.sql.SparkSession,
-                                   dir: String): RagIndex =
-    ragIndexBuildOf(table(s, dir, "documents"))
-
-  private[graft] def ragIndexBuildOf(
-      docs: org.apache.spark.sql.DataFrame): RagIndex = {
-    import graft.operators.Similarity
-    val ctoks = ragChunkToksOf(docs)
-    val tf = ctoks.groupBy(col("xid"), col("term")).agg(count(lit(1)).as("tf"))
-    // dl = Σ_term tf per chunk — derived from tf (whose exchange the
-    // planner reuses for both branches) instead of a second full pass
-    // over the raw token stream; checkpointed because totals read it too
-    val cl = tf.groupBy(col("xid")).agg(sum(col("tf")).as("dl"))
-      .localCheckpoint(true)
-    val postings = tf.join(cl, "xid").localCheckpoint(true)
-    val termStats = postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
-      .localCheckpoint(true)
-    // nd = one row per chunk in cl; tt = Σ dl ≡ Σ tf ≡ the token count —
-    // a 2-scalar agg over the chunk-grain cl instead of a
-    // count_distinct(xid) expansion over the posting grain
-    val tot = broadcast(cl.agg(
-      count(lit(1)).as("nd"), sum(col("dl")).as("tt")))
-    val corpus = ragChunkVectors(ctoks).localCheckpoint(true)
-    val n = corpus.count()
-    val cells = Similarity.ivfCellsFor(n)
-    val centroids = corpus.orderBy(col("xid")).limit(cells)
-      .select(col("xid").as("cid"), col("xvec").as("cvec"))
-      .localCheckpoint(true)
-    val stats = Similarity.sq8StatsOf(corpus)
-    // ≡ ivfSq8Build: frozen-stats encode over the training corpus is the
-    // trained encode (the clamp is a no-op in range)
-    val index = Similarity.sq8EncodeFrozen(corpus, stats)
-      .join(Similarity.cellAssign(corpus, centroids), "xid")
-      .localCheckpoint(true)
-    RagIndex(postings, termStats, tot, n, centroids, index, stats, cells)
-  }
-
-  /** SERVE the BM25 half from the persisted postings: per-batch work is
-    * the query-term join over the term-keyed postings (at 100 TB the
-    * postings are bucketed by term, so the scan prunes to the query's
-    * terms) plus one bounded top-k — no tokenization, no df pass, no
-    * totals pass; those are build artifacts.
-    */
-  private[graft] def ragBm25Serve(idx: RagIndex,
-      qt: org.apache.spark.sql.DataFrame, k: Int): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // dfq already restricts to the query's terms (termStats ⋈ qt), so
-    // the postings join it broadcasts is the ONLY per-batch term join.
-    // qt deduplicates HERE, not by caller contract: BM25 sums one score
-    // per (chunk, query term) — a duplicated query term would double a
-    // posting's contribution, so distinctness is load-bearing
-    val dfq = broadcast(idx.termStats.join(qt.distinct(), "term"))
-    idx.postings.join(dfq, "term")
-      .crossJoin(idx.tot)
-      .select(col("xid"),
-        expr("""(1000000 * 44 * tf * (2 * nd - 2 * df + 1)) div
-               ((2 * df + 1) * (20 * tf + 6 + (18 * dl * nd) div tt))""").as("sc"))
-      .groupBy(col("xid")).agg(sum(col("sc")).as("score"))
-      .orderBy(col("score").desc, col("xid")).limit(k)
-      .withColumn("bm25_rank", row_number().over(
-        Window.orderBy(col("score").desc, col("xid"))))
-      .select(col("xid"), col("bm25_rank"))
-  }
-
   val q150bRagHybrid = Q.checked(
     "q150b_rag_hybrid",
     ragHybridOracleSql(42)) { (s, dir) =>
@@ -2171,267 +1846,15 @@ object TextQueries {
   val q150cRagServe = Q.checked(
     "q150c_rag_serve",
     ragHybridOracleSql(7)) { (s, dir) =>
-    import graft.operators.{Dedup, Similarity}
+    import graft.operators.Similarity
     val idx = ragIndexBuild(s, dir) // BUILD — persisted once in production
     // SERVE — artifact consumers only
-    val qt = table(s, dir, "documents").filter(col("doc_id") === 7)
-      .select(explode(Dedup.tokens(col("text"))).as("term")).distinct()
+    val qt = ragQueryTermsOf(table(s, dir, "documents"), 7L)
     val dense = Similarity.ivfSq8Serve(idx.index, ragQueryVector(s, dir, 7L),
         idx.centroids, Similarity.ivfProbesFor(idx.cells), 20)
       .select(col("xid"), col("rank").as("cos_rank"))
     ragFuse(ragBm25Serve(idx, qt, 20), dense)
   }
-
-  /** PERSIST the chunk-index artifacts as parquet — the deployable shape
-    * of the q150c split (same discipline as the k-NN index's
-    * knnIndexSave; reference pattern: MapFileOutputFormat's persisted
-    * sorted store + getEntry lookup,
-    * `src/mapred/org/apache/hadoop/mapred/MapFileOutputFormat.java:109`).
-    * The table layout is [[RagFamily]]'s `write`. Saves are
-    * CRASH-ATOMIC ([[graft.core.IndexStore]], shared with the k-NN
-    * store): a crash between the table writes can never serve new
-    * postings beside old codes. `lastBatch` persists a streaming
-    * ingest's replay cursor; −1 for non-streaming saves.
-    */
-  private[graft] def ragIndexSave(idx: RagIndex, path: String,
-      lastBatch: Long = -1L): graft.core.IndexStore.Commit =
-    graft.core.IndexFamily.save(idx, path, lastBatch)
-
-  /** Reconstitute the [[RagIndex]] from [[ragIndexSave]] artifacts in a
-    * fresh session, from the latest COMMITTED version — a torn save is
-    * invisible.
-    */
-  private[graft] def ragIndexLoad(s: org.apache.spark.sql.SparkSession,
-                                  rootPath: String): RagIndex =
-    graft.core.IndexFamily.load[RagIndex](s, rootPath)._2
-
-  /** The RAG family's instance of the shared index lifecycle
-    * ([[graft.core.IndexFamily]]).
-    */
-  private[graft] implicit object RagFamily
-      extends graft.core.IndexFamily[RagIndex] {
-    def session(idx: RagIndex): org.apache.spark.sql.SparkSession =
-      idx.postings.sparkSession
-
-    /** Layout is the 100 TB pruning one: postings and term stats land
-      * TERM-BUCKETED — directory-partitioned on a 64-way md5 word of the
-      * term, the `bucketBy(term)` layout expressible without a catalog —
-      * so a query batch's sparse reads skip every bucket its terms don't
-      * hash to; the SQ8 code store is CELL-PARTITIONED so the dense side
-      * reads only probed cells. Totals, centroids, and the corpus count
-      * are small unpartitioned tables.
-      */
-    def write(idx: RagIndex, path: String): Unit = {
-      // explicit shuffle width: repartition(col) alone lets AQE coalesce
-      // the (small) shuffle to ONE partition, which serializes every
-      // partition-directory's file write through a single task — the
-      // measured bulk of the save wall. An explicit count (the session's
-      // shuffle parallelism — scale-adaptive, not a local constant) keeps
-      // the writers parallel; each bucket/cell still lands wholly in one
-      // task, so the one-file-per-directory layout is unchanged.
-      val p = idx.postings.sparkSession.sessionState.conf.numShufflePartitions
-      def tb(d: org.apache.spark.sql.DataFrame) =
-        d.withColumn("tb", (Hashing.hash32(col("term")) % 64).cast("int"))
-          .repartition(p, col("tb"))
-      tb(idx.postings)
-        .write.mode("overwrite").partitionBy("tb").parquet(s"$path/postings")
-      tb(idx.termStats)
-        .write.mode("overwrite").partitionBy("tb").parquet(s"$path/term_stats")
-      // totals + config + quantizer stats merged into ONE 1-row `meta`
-      // table (stats as dim-ordered arrays): one write job and one read
-      // action per save/load cycle instead of three of each — the arc
-      // lanes (q150i/j, q167i/j, q183e/f) pay this per store round trip
-      val s = idx.postings.sparkSession
-      import s.implicits._
-      idx.tot.select(col("nd"), col("tt"))
-        .crossJoin(Seq((idx.corpusCount, idx.cells.toLong,
-          idx.stats.map(_._1), idx.stats.map(_._2)))
-          .toDF("n", "cells", "mns", "rngs"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-      idx.centroids.coalesce(1)
-        .write.mode("overwrite").parquet(s"$path/centroids")
-      idx.index.repartition(p, col("cid"))
-        .write.mode("overwrite").partitionBy("cid").parquet(s"$path/codes")
-    }
-
-    /** Every frame a FileScan. The bucket/cell partition columns stay in
-      * their INFERRED types and positions: filters on them must hit the
-      * raw partition column (a cast would defeat directory pruning), and
-      * every consumer joins through them type-coerced.
-      */
-    def read(s: org.apache.spark.sql.SparkSession, path: String): RagIndex = {
-      // EXPLICIT schemas (matching the save's inferred layout bit-for-bit,
-      // partition columns in their inferred type and position): a schema'd
-      // read skips the per-table footer-inference job, so a load costs ONE
-      // driver action (the meta row) instead of ~7 — the maintain lanes
-      // load 3x per pass (guide §6)
-      import org.apache.spark.sql.types.StructType
-      def rd(t: String, ddl: String) =
-        s.read.schema(StructType.fromDDL(ddl)).parquet(s"$path/$t")
-      val metaDf = rd("meta",
-        "nd BIGINT,tt BIGINT,n BIGINT,cells BIGINT,mns ARRAY<BIGINT>,rngs ARRAY<BIGINT>")
-      val m = metaDf.first()
-      RagIndex(
-        rd("postings", "xid BIGINT,term STRING,tf BIGINT,dl BIGINT,tb INT"),
-        rd("term_stats", "term STRING,df BIGINT,tb INT"),
-        broadcast(metaDf.select(col("nd"), col("tt"))),
-        m.getAs[Long]("n"),
-        rd("centroids", "cid BIGINT,cvec ARRAY<DOUBLE>")
-          .select(col("cid"), col("cvec")),
-        rd("codes", "xid BIGINT,rx ARRAY<BIGINT>,xnorm DOUBLE,cid INT"),
-        m.getAs[scala.collection.Seq[Long]]("mns")
-        .zip(m.getAs[scala.collection.Seq[Long]]("rngs")).toSeq,
-        m.getAs[Long]("cells").toInt)
-    }
-
-    /** A micro-batch of (doc_id, text) rows through [[ragIndexAppend]]
-      * (sparse half exactly incremental, dense half under the frozen
-      * build quantizer/centroids).
-      */
-    def append(idx: RagIndex,
-               batch: org.apache.spark.sql.DataFrame): Option[RagIndex] =
-      if (batch.isEmpty) None else Some(ragIndexAppend(idx, batch))
-
-    /** Postings and the code store: term stats and totals already
-      * checkpoint inside every append.
-      */
-    def flatten(idx: RagIndex): RagIndex = idx.copy(
-      postings = idx.postings.localCheckpoint(true),
-      index = idx.index.localCheckpoint(true))
-
-    def dials(base: => RagIndex, cur: RagIndex,
-              n: => Long): org.apache.spark.sql.DataFrame =
-      ragStaleness(base, cur)
-
-    /** [[ragIndexBuildOf]] over the raw (doc_id, text) corpus: the
-      * geometry re-derives from its chunk count.
-      */
-    def rebuild(cur: RagIndex, corpus: org.apache.spark.sql.DataFrame,
-                n: => Long): RagIndex =
-      ragIndexBuildOf(corpus)
-  }
-
-  /** APPEND new documents to a built (or loaded) chunk index and return
-    * the updated [[RagIndex]] — the daily RAG ingest, closing the last
-    * build/serve family without a delta path (the q167d contract for
-    * retrieval). The SPARSE half is EXACTLY incremental — counts are
-    * counts: the delta's postings union in, per-term document
-    * frequencies merge by addition (new terms enter), and the totals
-    * row adds the delta's chunk and token counts; serve over the
-    * appended index is bit-identical to a full rebuild's sparse half.
-    * The DENSE half is frozen-config, like the k-NN append: delta
-    * chunks featurize, encode under the build-time quantizer
-    * ([[graft.operators.Similarity.sq8EncodeFrozen]] — clamped for
-    * out-of-range coordinates) and assign under the build-time
-    * centroids; cells/nProbe never re-derive (the [[RagIndex.cells]]
-    * freeze). Chunk ids must be new — document ids unique across
-    * base ∪ delta (the append contract; [[ragIndexRetire]] frees one).
-    * Delta artifacts checkpoint; base payloads ride as lazy unions, so
-    * chained appends never re-materialize the corpus.
-    */
-  private[graft] def ragIndexAppend(idx: RagIndex,
-      newDocs: org.apache.spark.sql.DataFrame): RagIndex = {
-    import graft.operators.Similarity
-    val dtoks = ragChunkToksOf(newDocs)
-    val tfD = dtoks.groupBy(col("xid"), col("term")).agg(count(lit(1)).as("tf"))
-    // dl = Σ_term tf — same single-pass derivation as the build
-    val clD = tfD.groupBy(col("xid")).agg(sum(col("tf")).as("dl"))
-    val postingsD = tfD.join(clD, "xid").localCheckpoint(true)
-    // a LOADED index carries the term-bucket partition column; delta rows
-    // compute theirs so bucket pruning stays exact over the union
-    val withTb = idx.postings.columns.contains("tb")
-    def tbOf(d: org.apache.spark.sql.DataFrame) =
-      if (withTb)
-        d.withColumn("tb", (Hashing.hash32(col("term")) % 64).cast("int"))
-      else d
-    val postings2 = idx.postings.unionByName(tbOf(postingsD))
-    val dfD = postingsD.groupBy(col("term")).agg(count(lit(1)).as("dfd"))
-    val termStats2 = tbOf(
-      idx.termStats.drop("tb").join(dfD, Seq("term"), "full_outer")
-        .withColumn("df",
-          coalesce(col("df"), lit(0L)) + coalesce(col("dfd"), lit(0L)))
-        .drop("dfd"))
-      .localCheckpoint(true)
-    val totD = postingsD.agg(
-      count_distinct(col("xid")).as("ndd"), sum(col("tf")).as("ttd"))
-    val tot2 = broadcast(idx.tot.crossJoin(totD)
-      .select((col("nd") + col("ndd")).as("nd"),
-        (col("tt") + coalesce(col("ttd"), lit(0L))).as("tt"))
-      .localCheckpoint(true))
-    val corpusD = ragChunkVectors(dtoks).localCheckpoint(true)
-    val nD = corpusD.count()
-    // align the delta's cid dtype to the stored index's (a loaded store
-    // infers the partition column) so filters keep pruning the base side
-    val cidT = idx.index.schema(idx.index.schema.fieldIndex("cid")).dataType
-    val codesD = Similarity.sq8EncodeFrozen(corpusD, idx.stats)
-      .join(Similarity.cellAssign(corpusD, idx.centroids), "xid")
-      .withColumn("cid", col("cid").cast(cidT))
-      .localCheckpoint(true)
-    RagIndex(postings2, termStats2, tot2, idx.corpusCount + nD,
-      idx.centroids, idx.index.unionByName(codesD), idx.stats, idx.cells)
-  }
-
-  /** RETIRE documents from the chunk index (tombstone deletes — the
-    * dual of [[ragIndexAppend]]): every artifact here is count-shaped,
-    * so deletion is EXACT with no frozen-config caveat at all — the
-    * retired docs' posting rows leave, per-term document frequencies
-    * decrement by exactly the rows that left (terms reaching zero drop
-    * out of the stats), the totals row subtracts their chunk and token
-    * counts, and their SQ8 codes anti-join away. `docIds` is the
-    * tombstone batch (first column taken as the doc id),
-    * broadcast-sized by contract.
-    */
-  private[graft] def ragIndexRetire(idx: RagIndex,
-      docIds: org.apache.spark.sql.DataFrame): RagIndex = {
-    val del = docIds.select(col(docIds.columns.head).cast("long").as("del_doc"))
-      .distinct().localCheckpoint(true)
-    val onDel = docIdOf("xid") === col("del_doc")
-    val removedP = idx.postings.join(broadcast(del), onDel)
-      .localCheckpoint(true) // feeds df decrements, totals, and the chunk count
-    val postings2 = idx.postings.join(broadcast(del), onDel, "left_anti")
-    val dfR = removedP.groupBy(col("term")).agg(count(lit(1)).as("dfr"))
-    val termStats2 = idx.termStats.join(dfR, Seq("term"), "left")
-      .withColumn("df", col("df") - coalesce(col("dfr"), lit(0L)))
-      .filter(col("df") > 0)
-      .drop("dfr")
-      .localCheckpoint(true)
-    val totR = removedP.agg(
-      count_distinct(col("xid")).as("ndr"), sum(col("tf")).as("ttr"))
-    val tot2 = broadcast(idx.tot.crossJoin(totR)
-      .select((col("nd") - col("ndr")).as("nd"),
-        (col("tt") - coalesce(col("ttr"), lit(0L))).as("tt"))
-      .localCheckpoint(true))
-    val nR = removedP.select(col("xid")).distinct().count()
-    RagIndex(postings2, termStats2, tot2, idx.corpusCount - nR,
-      idx.centroids,
-      idx.index.join(broadcast(del), onDel, "left_anti"),
-      idx.stats, idx.cells)
-  }
-
-  /** [[graft.operators.Similarity.indexStaleness]] over two [[RagIndex]]
-    * states (base = the persisted build, cur = after its appends): the
-    * dense half shares the k-NN family's config-decay modes exactly —
-    * frozen √n cells, frozen SQ8 quantizer, cell occupancy — because it
-    * IS the same artifact shape (the cell-partitioned SQ8 code store).
-    * The sparse half never goes stale: counts are counts.
-    */
-  private[graft] def ragStaleness(base: RagIndex, cur: RagIndex) =
-    graft.operators.Similarity.indexStaleness(
-      base.index.select(col("xid"), col("rx")),
-      cur.index.select(col("xid"), col("rx")),
-      base.index.select(col("cid")),
-      cur.index.select(col("cid")),
-      cur.stats, cur.cells) // cur's frozen geometry (≡ base's while cur
-                            // descends from it; right after a rebuild)
-
-  /** [[graft.core.IndexFamily.maintain]] over a persisted RAG store:
-    * `docs` is the raw (doc_id, text) corpus the re-index runs from
-    * (q150j gates this call against q150i's oracle).
-    */
-  private[graft] def ragMaintain(s: org.apache.spark.sql.SparkSession,
-      path: String, docs: org.apache.spark.sql.DataFrame
-  ): org.apache.spark.sql.DataFrame =
-    graft.core.IndexFamily.maintain[RagIndex](s, path, docs)
 
   /** The RAG serve from DISK artifacts — q150c made the build/serve
     * split's cost honest; this row makes it DEPLOYABLE: the index is
@@ -2448,52 +1871,6 @@ object TextQueries {
     * is the same parameterized hybrid SQL — green proves
     * disk-artifact-path ≡ inline-path, pruning included.
     */
-  /** A query doc's distinct terms — the sparse-side query payload the
-    * disk serve buckets on.
-    */
-  private[graft] def ragQueryTermsOf(docs: org.apache.spark.sql.DataFrame,
-      qdoc: Long): org.apache.spark.sql.DataFrame = {
-    import graft.operators.Dedup
-    docs.filter(col("doc_id") === qdoc)
-      .select(explode(Dedup.tokens(col("text"))).as("term")).distinct()
-  }
-
-  /** Hybrid serve over a LOADED [[RagIndex]] with both reads statically
-    * pruned: the query's term buckets and probed cells are bounded sets
-    * (≤ 64 and nProbe — the same bounded-probe class as the 1-row
-    * concentration probes), collected once and pushed as isin partition
-    * filters, so the sparse read touches only directories the query's
-    * terms hash to and the dense read only probed cells (PlanSpec pins
-    * both PartitionFilters). Shared by q150d and the fresh-JVM
-    * [[graft.RagServeMain]].
-    */
-  private[graft] def ragServeDisk(idx: RagIndex,
-      qt: org.apache.spark.sql.DataFrame,
-      qv: org.apache.spark.sql.DataFrame,
-      k: Int): org.apache.spark.sql.DataFrame = {
-    import graft.operators.Similarity
-    // the `tb` bucket column exists on persisted+loaded indexes (and on
-    // appends over them); an index straight from ragIndexBuildOf has no
-    // buckets to prune, so the sparse side serves unfiltered — same
-    // answer, just without the directory skip (the guard ragIndexAppend
-    // already applies on its side)
-    val sparse = if (!idx.postings.columns.contains("tb")) idx else {
-      val tbs = qt.select((Hashing.hash32(col("term")) % 64).cast("int").as("tb"))
-        .distinct().collect().map(_.getInt(0)).toSeq
-      idx.copy(
-        postings = idx.postings.filter(col("tb").isin(tbs: _*)),
-        termStats = idx.termStats.filter(col("tb").isin(tbs: _*)))
-    }
-    val nProbe = Similarity.ivfProbesFor(idx.cells)
-    val cids = Similarity.cellProbes(qv, idx.centroids, nProbe)
-      .select(col("cid")).distinct().collect().map(_.getLong(0)).toSeq
-    val dense = Similarity.ivfSq8Serve(
-        idx.index.filter(col("cid").isin(cids: _*)), qv, idx.centroids,
-        nProbe, k)
-      .select(col("xid"), col("rank").as("cos_rank"))
-    ragFuse(ragBm25Serve(sparse, qt, k), dense)
-  }
-
   val q150dRagServeDisk = Q.checked(
     "q150d_rag_serve_disk",
     ragHybridOracleSql(13)) { (s, dir) =>
@@ -3035,7 +2412,6 @@ object TextQueries {
       |r AS (SELECT doc_id, score,
       |  row_number() OVER (ORDER BY score DESC, doc_id) AS rank FROM agg)
       |SELECT doc_id, score, CAST(rank AS BIGINT) AS rank FROM r WHERE rank <= 10""") { (s, dir) =>
-    import org.apache.spark.sql.expressions.Window
     import graft.operators.Dedup
     val toks = table(s, dir, "documents")
       .select(col("doc_id"), explode(Dedup.tokens(col("text"))).as("term"))
@@ -3044,10 +2420,7 @@ object TextQueries {
       .agg(count(lit(1)).as("tf"))
     val dl = toks.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val qt = broadcast(df
-      .orderBy(col("df").desc, col("term")).limit(10) // bound BEFORE ranking
-      .withColumn("rk", row_number().over(
-        Window.orderBy(col("df").desc, col("term"))))
+    val qt = broadcast(ranked(df, "df", 10, "rk", Seq("term")) // bound BEFORE ranking
       .filter(col("rk").between(6, 10))
       .select(col("term"), col("df")))
     val tot = broadcast(toks.agg(
@@ -3055,16 +2428,11 @@ object TextQueries {
     val qtf = tf.join(qt, "term").localCheckpoint(true) // membership + scoring
     val hit = qtf.groupBy(col("doc_id")).agg(count(lit(1)).as("nq"))
       .filter(col("nq") === 5).select(col("doc_id"))
-    qtf.join(hit, "doc_id")
-      .join(dl, "doc_id")
-      .crossJoin(tot)
-      .select(col("doc_id"),
-        expr("""(1000000 * 44 * tf * (2 * nd - 2 * df + 1)) div
-               ((2 * df + 1) * (20 * tf + 6 + (18 * dl * nd) div tt))""").as("sc"))
-      .groupBy(col("doc_id")).agg(sum(col("sc")).as("score"))
-      .orderBy(col("score").desc, col("doc_id")).limit(10)
-      .withColumn("rank", row_number().over(
-        Window.orderBy(col("score").desc, col("doc_id"))).cast("long"))
+    bm25TopK(qtf.join(hit, "doc_id")
+        .join(dl, "doc_id")
+        .crossJoin(tot)
+        .select(col("doc_id"), bm25Term.as("sc")), 10, "rank", "doc_id")
+      .withColumn("rank", col("rank").cast("long"))
   }
 
   /** BPE train→APPLY capstone — the handoff q105b's training loop feeds:

@@ -1,8 +1,7 @@
 package graft
 
 import graft.core.Ingest
-import graft.operators.{Dedup, Similarity}
-import graft.queries.TextQueries
+import graft.operators.{Dedup, Retrieval, Similarity}
 import org.apache.spark.sql.SparkSession
 
 /** The three families' streaming ingests — each one
@@ -20,7 +19,7 @@ package object streaming {
   }
 
   /** RAG chunk-index ingest: micro-batches of (doc_id, text) rows. */
-  type RagIngest = Ingest[TextQueries.RagIndex]
+  type RagIngest = Ingest[Retrieval.RagIndex]
   object RagIngest {
     def resume(s: SparkSession, path: String): RagIngest = Ingest.resume(s, path)
   }

@@ -1,7 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, Similarity}
-import graft.queries.TextQueries
+import graft.operators.{Dedup, Retrieval, Similarity}
 import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -90,29 +89,29 @@ class IndexStoreSpec extends AnyFunSuite {
   test("rag store: a save crashing between tables keeps serving the prior version") {
     val docs = spark.read.parquet(s"${TestSpark.sf0001}/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val idx = TextQueries.ragIndexBuildOf(docs)
+    val idx = Retrieval.ragIndexBuildOf(docs)
     val path = graft.core.Graft.scratch("spec_store_rag")
 
-    TextQueries.ragIndexSave(idx, path) // v1, committed
-    val v1 = TextQueries.ragIndexLoad(spark, path)
+    Retrieval.ragIndexSave(idx, path) // v1, committed
+    val v1 = Retrieval.ragIndexLoad(spark, path)
     val v1Postings = v1.postings.drop("tb").localCheckpoint(true)
 
     // poison the CODES table (written last): every sparse table of the
     // torn version is fully on disk when the save dies
     val poisonedIdx = idx.copy(
       index = idx.index.withColumn("cid", poisoned("cid")))
-    intercept[Exception] { TextQueries.ragIndexSave(poisonedIdx, path) }
+    intercept[Exception] { Retrieval.ragIndexSave(poisonedIdx, path) }
 
-    val after = TextQueries.ragIndexLoad(spark, path)
+    val after = Retrieval.ragIndexLoad(spark, path)
     sameFrame(after.postings.drop("tb"), v1Postings,
       "postings after torn save")
     assert(after.corpusCount === v1.corpusCount)
     assert(graft.core.IndexStore.latest(spark, path).get.version === 1L)
 
-    TextQueries.ragIndexSave(idx, path, lastBatch = 3L)
+    Retrieval.ragIndexSave(idx, path, lastBatch = 3L)
     val c = graft.core.IndexStore.latest(spark, path).get
     assert(c.version > 1L && c.lastBatch === 3L)
-    sameFrame(TextQueries.ragIndexLoad(spark, path).postings.drop("tb"),
+    sameFrame(Retrieval.ragIndexLoad(spark, path).postings.drop("tb"),
       v1Postings, "postings after recovered save")
   }
 
@@ -359,8 +358,8 @@ class IndexStoreSpec extends AnyFunSuite {
     RacingLocalFs.register(spark)
     val docs = spark.read.parquet(s"${TestSpark.sf0001}/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val idx = TextQueries.ragIndexBuildOf(docs)
-    resumesOneVersion("rag")((p, b) => TextQueries.ragIndexSave(idx, p, lastBatch = b)) { p =>
+    val idx = Retrieval.ragIndexBuildOf(docs)
+    resumesOneVersion("rag")((p, b) => Retrieval.ragIndexSave(idx, p, lastBatch = b)) { p =>
       val in = graft.streaming.RagIngest.resume(spark, p)
       val i = in.index
       (in.lastBatch, Seq(i.postings, i.termStats, i.tot, i.centroids, i.index))

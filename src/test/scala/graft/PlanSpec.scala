@@ -427,12 +427,12 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q150d disk serve prunes postings to term buckets and codes to probed cells") {
-    import graft.queries.TextQueries
+    import graft.operators.Retrieval
     val dir = TestSpark.sf0001
-    val built = TextQueries.ragIndexBuild(spark, dir)
+    val built = Retrieval.ragIndexBuild(spark, dir)
     val path = graft.core.Graft.scratch("planspec_rag_index")
-    TextQueries.ragIndexSave(built, path)
-    val idx = TextQueries.ragIndexLoad(spark, path)
+    Retrieval.ragIndexSave(built, path)
+    val idx = Retrieval.ragIndexLoad(spark, path)
     import org.apache.spark.sql.functions.col
     val sp = idx.postings.filter(col("tb").isin(3, 17, 41))
       .queryExecution.executedPlan.toString
@@ -446,12 +446,12 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q150g retired index: bucket/cell pruning survives the tombstone anti-joins") {
-    import graft.queries.TextQueries
+    import graft.operators.Retrieval
     import org.apache.spark.sql.functions.col
     val docs = spark.read.parquet(s"${TestSpark.sf0001}/documents.parquet")
     val path = graft.core.Graft.scratch("planspec_rag_retire")
-    TextQueries.ragIndexSave(TextQueries.ragIndexBuildOf(docs), path)
-    val idx = TextQueries.ragIndexRetire(TextQueries.ragIndexLoad(spark, path),
+    Retrieval.ragIndexSave(Retrieval.ragIndexBuildOf(docs), path)
+    val idx = Retrieval.ragIndexRetire(Retrieval.ragIndexLoad(spark, path),
       docs.filter(col("doc_id") % 9 === 4).select(col("doc_id")))
     // the serve's isin sits on TOP of the retire's broadcast left-anti;
     // pushdown must carry it past the join into the FileScan's
@@ -468,14 +468,14 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q150e appended index: the bucket filter prunes the base store through the union") {
-    import graft.queries.TextQueries
+    import graft.operators.Retrieval
     import org.apache.spark.sql.functions.col
     val docs = spark.read.parquet(s"${TestSpark.sf0001}/documents.parquet")
     val path = graft.core.Graft.scratch("planspec_rag_append")
-    TextQueries.ragIndexSave(
-      TextQueries.ragIndexBuildOf(docs.filter(col("doc_id") % 50 =!= 49)), path)
-    val app = TextQueries.ragIndexAppend(
-      TextQueries.ragIndexLoad(spark, path), docs.filter(col("doc_id") % 50 === 49))
+    Retrieval.ragIndexSave(
+      Retrieval.ragIndexBuildOf(docs.filter(col("doc_id") % 50 =!= 49)), path)
+    val app = Retrieval.ragIndexAppend(
+      Retrieval.ragIndexLoad(spark, path), docs.filter(col("doc_id") % 50 === 49))
     // the serve's isin lands on a union of (loaded base store, delta
     // checkpoint); predicate pushdown must carry it through the Union
     // into the base FileScan's PartitionFilters — else every appended
@@ -492,14 +492,14 @@ class PlanSpec extends AnyFunSuite {
     // on the postings plan; the serve's isin must still reach the base
     // FileScan's PartitionFilters through ALL of them, or a long-running
     // ingest silently degrades every serve to a full-store scan
-    import graft.queries.TextQueries
+    import graft.operators.Retrieval
     import graft.streaming.RagIngest
     import org.apache.spark.sql.functions.col
     val docs = spark.read.parquet(s"${TestSpark.sf0001}/documents.parquet")
     val path = graft.core.Graft.scratch("planspec_rag_stream")
-    TextQueries.ragIndexSave(
-      TextQueries.ragIndexBuildOf(docs.filter(col("doc_id") % 50 =!= 49)), path)
-    val ingest = new RagIngest(TextQueries.ragIndexLoad(spark, path))
+    Retrieval.ragIndexSave(
+      Retrieval.ragIndexBuildOf(docs.filter(col("doc_id") % 50 =!= 49)), path)
+    val ingest = new RagIngest(Retrieval.ragIndexLoad(spark, path))
     val delta = docs.filter(col("doc_id") % 50 === 49)
     (0 until 3).foreach { r =>
       ingest.foldBatch(delta.filter(col("doc_id") % 3 === r), r.toLong)

@@ -1,7 +1,6 @@
 package graft
 
-import graft.operators.Similarity
-import graft.queries.TextQueries
+import graft.operators.{Retrieval, Similarity}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -30,14 +29,14 @@ class RagIndexSpec extends AnyFunSuite {
     */
   private def assemble(docs: DataFrame, stats: Seq[(Long, Long)],
       centroids: DataFrame): (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val ctoks = TextQueries.ragChunkToksOf(docs)
+    val ctoks = Retrieval.ragChunkToksOf(docs)
     val tf = ctoks.groupBy(col("xid"), col("term")).agg(count(lit(1)).as("tf"))
     val cl = ctoks.groupBy(col("xid")).agg(count(lit(1)).as("dl"))
     val postings = tf.join(cl, "xid").localCheckpoint(true)
     val termStats = postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val tot = postings.agg(
       count_distinct(col("xid")).as("nd"), sum(col("tf")).as("tt"))
-    val corpus = TextQueries.ragChunkVectors(ctoks).localCheckpoint(true)
+    val corpus = Retrieval.ragChunkVectors(ctoks).localCheckpoint(true)
     val codes = Similarity.sq8EncodeFrozen(corpus, stats)
       .join(Similarity.cellAssign(corpus, centroids), "xid")
     (postings, termStats, tot, codes)
@@ -47,7 +46,7 @@ class RagIndexSpec extends AnyFunSuite {
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
       s"$what diverged from the frozen-config assembly")
 
-  private def checkAgainst(idx: TextQueries.RagIndex,
+  private def checkAgainst(idx: Retrieval.RagIndex,
                            docs: DataFrame): Unit = {
     val (p, ts, tot, codes) = assemble(docs, idx.stats, idx.centroids)
     same(idx.postings.select(col("xid"), col("term"), col("tf"), col("dl")),
@@ -62,24 +61,24 @@ class RagIndexSpec extends AnyFunSuite {
   test("append merges the sparse half exactly and encodes the delta under the frozen config") {
     val base = docsAll.filter(col("doc_id") % 50 =!= 49)
     val delta = docsAll.filter(col("doc_id") % 50 === 49)
-    val idx = TextQueries.ragIndexBuildOf(base)
-    val app = TextQueries.ragIndexAppend(idx, delta)
+    val idx = Retrieval.ragIndexBuildOf(base)
+    val app = Retrieval.ragIndexAppend(idx, delta)
     assert(app.cells === idx.cells && app.stats === idx.stats,
       "append must not re-derive the frozen config")
     checkAgainst(app, docsAll)
   }
 
   test("retire removes documents exactly from every artifact") {
-    val idx = TextQueries.ragIndexBuildOf(docsAll)
+    val idx = Retrieval.ragIndexBuildOf(docsAll)
     val del = docsAll.filter(col("doc_id") % 25 === 3).select(col("doc_id"))
-    val ret = TextQueries.ragIndexRetire(idx, del)
+    val ret = Retrieval.ragIndexRetire(idx, del)
     checkAgainst(ret, docsAll.join(del, Seq("doc_id"), "left_anti"))
     // no retired doc's chunks may survive anywhere
     val delC = del.select(col("doc_id").as("del_doc"))
     assert(ret.postings.join(broadcast(delC),
-      TextQueries.docIdOf("xid") === col("del_doc")).isEmpty)
+      Retrieval.docIdOf("xid") === col("del_doc")).isEmpty)
     assert(ret.index.join(broadcast(delC),
-      TextQueries.docIdOf("xid") === col("del_doc")).isEmpty)
+      Retrieval.docIdOf("xid") === col("del_doc")).isEmpty)
   }
 
   test("rag staleness probe: quiet on the daily append, fires on pathological growth") {
@@ -94,9 +93,9 @@ class RagIndexSpec extends AnyFunSuite {
     // sizing is what actually degrades the probe-pruned serve.
     val daily = {
       val base = docsAll.filter(col("doc_id") % 50 =!= 49)
-      val idx = TextQueries.ragIndexBuildOf(base)
-      TextQueries.ragStaleness(idx,
-        TextQueries.ragIndexAppend(idx, docsAll.filter(col("doc_id") % 50 === 49)))
+      val idx = Retrieval.ragIndexBuildOf(base)
+      Retrieval.ragStaleness(idx,
+        Retrieval.ragIndexAppend(idx, docsAll.filter(col("doc_id") % 50 === 49)))
         .first()
     }
     info(s"rag daily probe: $daily")
@@ -105,9 +104,9 @@ class RagIndexSpec extends AnyFunSuite {
 
     val grown = {
       val base = docsAll.filter(col("doc_id") % 3 =!= 0)
-      val idx = TextQueries.ragIndexBuildOf(base)
-      TextQueries.ragStaleness(idx,
-        TextQueries.ragIndexAppend(idx, docsAll.filter(col("doc_id") % 3 === 0)))
+      val idx = Retrieval.ragIndexBuildOf(base)
+      Retrieval.ragStaleness(idx,
+        Retrieval.ragIndexAppend(idx, docsAll.filter(col("doc_id") % 3 === 0)))
         .first()
     }
     info(s"rag grown probe: $grown")
@@ -120,13 +119,13 @@ class RagIndexSpec extends AnyFunSuite {
     val delta = docsAll.filter(col("doc_id") % 50 === 49)
     val del = base.filter(col("doc_id") % 25 === 3).select(col("doc_id"))
     val p1 = graft.core.Graft.scratch("spec_rag_cycle1")
-    TextQueries.ragIndexSave(TextQueries.ragIndexBuildOf(base), p1)
-    val day1 = TextQueries.ragIndexRetire(
-      TextQueries.ragIndexAppend(TextQueries.ragIndexLoad(spark, p1), delta),
+    Retrieval.ragIndexSave(Retrieval.ragIndexBuildOf(base), p1)
+    val day1 = Retrieval.ragIndexRetire(
+      Retrieval.ragIndexAppend(Retrieval.ragIndexLoad(spark, p1), delta),
       del)
     val p2 = graft.core.Graft.scratch("spec_rag_cycle2")
-    TextQueries.ragIndexSave(day1, p2)
-    val reloaded = TextQueries.ragIndexLoad(spark, p2)
+    Retrieval.ragIndexSave(day1, p2)
+    val reloaded = Retrieval.ragIndexLoad(spark, p2)
     checkAgainst(reloaded,
       docsAll.join(del, Seq("doc_id"), "left_anti"))
   }

@@ -298,15 +298,15 @@ class RecallSpec extends AnyFunSuite {
     // (b) the IVF x SQ8 served top-20 q150b actually runs, and require
     // the fused top-10 lists to overlap. BM25 anchors half the fusion
     // mass, so even a mediocre dense recall holds the fused floor.
-    import graft.queries.TextQueries
+    import graft.operators.Retrieval
     val sf = TestSpark.sf0001
-    val ctoks = TextQueries.ragChunkToks(spark, sf)
-    val corpus = TextQueries.ragChunkVectors(ctoks).localCheckpoint()
+    val ctoks = Retrieval.ragChunkToks(spark, sf)
+    val corpus = Retrieval.ragChunkVectors(ctoks).localCheckpoint()
     val cells = Similarity.ivfCellsFor(corpus.count())
     val centroids = corpus.orderBy(col("xid")).limit(cells)
       .select(col("xid").as("cid"), col("xvec").as("cvec"))
-    val qv = TextQueries.ragQueryVector(spark, sf)
-    val bm = TextQueries.ragBm25Top(spark, sf, ctoks, 20).localCheckpoint()
+    val qv = Retrieval.ragQueryVector(spark, sf)
+    val bm = Retrieval.ragBm25Top(spark, sf, ctoks, 20).localCheckpoint()
     // materialize each dense top-20 ONCE (the build localCheckpoints a
     // fresh SQ8 encode per call) and derive both the fused lists and the
     // recall sets from the same result
@@ -315,7 +315,7 @@ class RecallSpec extends AnyFunSuite {
       Similarity.ivfSq8Build(corpus, centroids), qv, centroids,
       Similarity.ivfProbesFor(cells), 20).localCheckpoint()
     def fusedTop(dense: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
-      TextQueries.ragFuse(bm, dense.select(col("xid"), col("rank").as("cos_rank")))
+      Retrieval.ragFuse(bm, dense.select(col("xid"), col("rank").as("cos_rank")))
         .select(col("doc_id"), col("chunk_id")).as[(Long, Long)].collect().toSeq
     val exact = fusedTop(exactDense)
     val served = fusedTop(servedDense)

@@ -733,7 +733,7 @@ class SoakTest extends AnyFunSuite {
     // daily pipeline stores), and a 5-query batch serves from the loaded
     // index — the amortization claim priced: build once, serve cheap.
     import graft.operators.Similarity
-    import graft.queries.TextQueries
+    import graft.operators.Retrieval
     val base = "/root/testdata/sf0.1"
     val dir = s"${System.getProperty("java.io.tmpdir")}/graft-soak-q150c"
     val docs = spark.read.parquet(s"$base/documents.parquet")
@@ -747,7 +747,7 @@ class SoakTest extends AnyFunSuite {
       println(f"SOAK150C $name%-22s ${(System.nanoTime() - t0) / 1e9}%7.1fs  rows=$rows")
     }
     time("build_persist_index") {
-      val idx = TextQueries.ragIndexBuild(spark, dir)
+      val idx = Retrieval.ragIndexBuild(spark, dir)
       idx.postings.write.mode("overwrite").parquet(s"$dir/postings.parquet")
       idx.termStats.write.mode("overwrite").parquet(s"$dir/termstats.parquet")
       idx.tot.write.mode("overwrite").parquet(s"$dir/tot.parquet")
@@ -760,7 +760,7 @@ class SoakTest extends AnyFunSuite {
       val n = index.count()
       // stats are unused on this serve path (codes are pre-encoded);
       // cells re-derives from the build-time count
-      TextQueries.RagIndex(
+      Retrieval.RagIndex(
         spark.read.parquet(s"$dir/postings.parquet"),
         spark.read.parquet(s"$dir/termstats.parquet"),
         broadcast(spark.read.parquet(s"$dir/tot.parquet")),
@@ -776,9 +776,9 @@ class SoakTest extends AnyFunSuite {
           .select(explode(graft.operators.Dedup.tokens(col("text"))).as("term"))
           .distinct()
         val dense = Similarity.ivfSq8Serve(loaded.index,
-            TextQueries.ragQueryVector(spark, dir, qd), loaded.centroids, nProbe, 20)
+            Retrieval.ragQueryVector(spark, dir, qd), loaded.centroids, nProbe, 20)
           .select(col("xid"), col("rank").as("cos_rank"))
-        TextQueries.ragFuse(TextQueries.ragBm25Serve(loaded, qt, 20), dense).count()
+        Retrieval.ragFuse(Retrieval.ragBm25Serve(loaded, qt, 20), dense).count()
       }.sum
     time("serve_5_query_batch") { serveBatch(5L) }
     // the marginal-cost curve: per-query wall at batch 50 vs batch 5
@@ -935,7 +935,7 @@ class SoakTest extends AnyFunSuite {
     // the q150c amortization made cross-session: build + ragIndexSave
     // once (~500k docs), then a child JVM serves one hybrid query from
     // the term-bucketed/cell-partitioned artifacts alone
-    import graft.queries.TextQueries
+    import graft.operators.Retrieval
     val base = "/root/testdata/sf0.1"
     val dir = s"${System.getProperty("java.io.tmpdir")}/graft-soak-q150d"
     val docs = spark.read.parquet(s"$base/documents.parquet")
@@ -944,7 +944,7 @@ class SoakTest extends AnyFunSuite {
       .repartition(64)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val t0 = System.nanoTime()
-    TextQueries.ragIndexSave(TextQueries.ragIndexBuild(spark, dir), s"$dir/index")
+    Retrieval.ragIndexSave(Retrieval.ragIndexBuild(spark, dir), s"$dir/index")
     println(f"SOAK150D build_save          ${(System.nanoTime() - t0) / 1e9}%7.1fs")
     val line = freshJvm(
       Map("SPARK_GRAFT_CPUS" -> "32", "SPARK_DRIVER_MEM" -> "16g"),
@@ -959,12 +959,12 @@ class SoakTest extends AnyFunSuite {
       .filter(col("doc_id") % 20 === 7)
       .withColumn("doc_id", col("doc_id") + lit(500000000L))
     val t1 = System.nanoTime()
-    val app = graft.queries.TextQueries.ragIndexAppend(
-      graft.queries.TextQueries.ragIndexLoad(spark, s"$dir/index"), newDocs)
-    val served = graft.queries.TextQueries.ragServeDisk(app,
-      graft.queries.TextQueries.ragQueryTermsOf(
+    val app = graft.operators.Retrieval.ragIndexAppend(
+      graft.operators.Retrieval.ragIndexLoad(spark, s"$dir/index"), newDocs)
+    val served = graft.operators.Retrieval.ragServeDisk(app,
+      graft.operators.Retrieval.ragQueryTermsOf(
         spark.read.parquet(s"$dir/documents.parquet"), 7L).localCheckpoint(true),
-      graft.queries.TextQueries.ragQueryVector(spark, dir, 7L)
+      graft.operators.Retrieval.ragQueryVector(spark, dir, 7L)
         .localCheckpoint(true), 20).count()
     println(f"SOAK150D append_1pct_serve   ${(System.nanoTime() - t1) / 1e9}%7.1fs  hits=$served")
     assert(served == 10, s"appended-index serve returned $served hits")
@@ -984,7 +984,7 @@ class SoakTest extends AnyFunSuite {
     // MECHANISM soak (concurrency across processes), not a pricing
     // one, so it runs the un-replicated sf0.1 corpus and asserts no
     // walls.
-    import graft.queries.TextQueries
+    import graft.operators.Retrieval
     import scala.jdk.CollectionConverters._
     val base = "/root/testdata/sf0.1"
     val dir = s"${System.getProperty("java.io.tmpdir")}/graft-soak-2jvm"
@@ -995,19 +995,19 @@ class SoakTest extends AnyFunSuite {
     spark.read.parquet(s"$base/documents.parquet")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    TextQueries.ragIndexSave(TextQueries.ragIndexBuildOf(docs), s"$dir/index")
+    Retrieval.ragIndexSave(Retrieval.ragIndexBuildOf(docs), s"$dir/index")
     assert(graft.core.IndexStore.latest(spark, s"$dir/index").get.version == 1L)
-    def checksum(idx: TextQueries.RagIndex): Long = {
+    def checksum(idx: Retrieval.RagIndex): Long = {
       val row = docs.filter(col("doc_id") === qdoc).localCheckpoint(true)
-      val res = TextQueries.ragServeDisk(idx,
-        TextQueries.ragQueryTermsOf(row, qdoc).localCheckpoint(true),
-        TextQueries.ragQueryVectorOf(row, qdoc).localCheckpoint(true), 20)
+      val res = Retrieval.ragServeDisk(idx,
+        Retrieval.ragQueryTermsOf(row, qdoc).localCheckpoint(true),
+        Retrieval.ragQueryVectorOf(row, qdoc).localCheckpoint(true), 20)
         .localCheckpoint(true)
       res.agg(coalesce(
-        expr(s"sum((doc_id * ${TextQueries.ChunkIdBase} + chunk_id) * rank)"),
+        expr(s"sum((doc_id * ${Retrieval.ChunkIdBase} + chunk_id) * rank)"),
         lit(0L))).first().getLong(0)
     }
-    val expectV1 = checksum(TextQueries.ragIndexLoad(spark, s"$dir/index"))
+    val expectV1 = checksum(Retrieval.ragIndexLoad(spark, s"$dir/index"))
     // READER child: the same query doc 20 times, re-resolving between
     val pb = new ProcessBuilder(Seq("/root/repo/tools/run.sh",
       "graft.RagServeMain", s"$dir/index", s"$dir/documents.parquet",
@@ -1046,7 +1046,7 @@ class SoakTest extends AnyFunSuite {
     ingest.save(s"$dir/index")
     println(f"SOAK2JVM writer commit+prune ${(System.nanoTime() - tW) / 1e9}%7.1fs")
     assert(graft.core.IndexStore.latest(spark, s"$dir/index").get.version == 2L)
-    val expectV2 = checksum(TextQueries.ragIndexLoad(spark, s"$dir/index"))
+    val expectV2 = checksum(Retrieval.ragIndexLoad(spark, s"$dir/index"))
     assert(expectV1 != expectV2,
       "fixture must change the answer across the flip, or the soak is vacuous")
     val out = new String(proc.getInputStream.readAllBytes(),

@@ -790,7 +790,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("rag ingest stream: micro-batch appends equal one append of the union") {
-    import graft.queries.TextQueries
+    import graft.operators.Retrieval
     import graft.streaming.RagIngest
     import org.apache.spark.sql.functions._
     import spark.implicits._
@@ -799,7 +799,7 @@ class StreamingSpec extends AnyFunSuite {
       .select(col("doc_id"), col("text"))
     val base = docs.filter(col("doc_id") % 50 =!= 49)
     val delta = docs.filter(col("doc_id") % 50 === 49)
-    val idx0 = TextQueries.ragIndexBuildOf(base)
+    val idx0 = Retrieval.ragIndexBuildOf(base)
     val ingest = new RagIngest(idx0)
     val in = MemoryStream[Doc]
     val q = in.toDS().toDF()
@@ -810,7 +810,7 @@ class StreamingSpec extends AnyFunSuite {
       batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
       assert(batches.size >= 3, "fixture must exercise several micro-batches")
       val got = ingest.index
-      val want = TextQueries.ragIndexAppend(idx0, delta)
+      val want = Retrieval.ragIndexAppend(idx0, delta)
       def same(a: org.apache.spark.sql.DataFrame,
                b: org.apache.spark.sql.DataFrame, what: String): Unit =
         assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
@@ -864,12 +864,12 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   private def ragLifecycle = {
-    import graft.queries.TextQueries
+    import graft.operators.Retrieval
     import org.apache.spark.sql.functions._
-    new Lifecycle[TextQueries.RagIndex]("rag", "doc_id", { () =>
+    new Lifecycle[Retrieval.RagIndex]("rag", "doc_id", { () =>
       val docs = spark.read.parquet(s"${TestSpark.sf0001}/documents.parquet")
         .select(col("doc_id"), col("text"))
-      (TextQueries.ragIndexBuildOf(docs.filter(col("doc_id") % 50 =!= 49)),
+      (Retrieval.ragIndexBuildOf(docs.filter(col("doc_id") % 50 =!= 49)),
         docs.filter(col("doc_id") % 50 === 49))
     }, i => Seq(
       i.postings.select("xid", "term", "tf", "dl"),
@@ -1056,7 +1056,7 @@ class StreamingSpec extends AnyFunSuite {
     // the source replays from batch 0 — the resumed ingest must skip the
     // already-folded prefix and fold only batch 2, landing exactly on the
     // one-shot append of all three batches.
-    import graft.queries.TextQueries
+    import graft.operators.Retrieval
     import graft.streaming.RagIngest
     import org.apache.spark.sql.functions._
     val docs = spark.read.parquet(s"${TestSpark.sf0001}/documents.parquet")
@@ -1065,7 +1065,7 @@ class StreamingSpec extends AnyFunSuite {
     val delta = docs.filter(col("doc_id") % 50 === 49)
     val b = (0 until 3).map(r =>
       delta.filter(col("doc_id") % 3 === r).localCheckpoint(true))
-    val idx0 = TextQueries.ragIndexBuildOf(base)
+    val idx0 = Retrieval.ragIndexBuildOf(base)
     val ingest = new RagIngest(idx0)
     ingest.foldBatch(b(0), 0L)
     ingest.foldBatch(b(1), 1L)
@@ -1078,7 +1078,7 @@ class StreamingSpec extends AnyFunSuite {
     resumed.foldBatch(b(1), 1L) // source replay — must skip
     resumed.foldBatch(b(2), 2L) // the genuine suffix
     val got = resumed.index
-    val want = TextQueries.ragIndexAppend(TextQueries.ragIndexLoad(spark, path)
+    val want = Retrieval.ragIndexAppend(Retrieval.ragIndexLoad(spark, path)
       .copy(), b(2)) // same loaded artifacts, one append of the suffix
     def same(a: org.apache.spark.sql.DataFrame,
              bd: org.apache.spark.sql.DataFrame, what: String): Unit =

@@ -25,8 +25,8 @@ if grep -qE 'src/main/scala/graft/(operators|queries|api|sources|functions|core|
 fi
 OUT=$(mktemp -d /tmp/gate.XXXXXX)
 tools/run.sh graft.Verify "$SF" "$OUT" 2>&1 | grep -v '^2[0-9]' || true
-python3 tools/check.py "$SF" "$OUT"
-rc=$?
+# && / || so a failing check can't set -e us out before the cleanup
+python3 tools/check.py "$SF" "$OUT" && rc=0 || rc=$?
 rm -rf "$OUT"
 [ $rc -ne 0 ] && exit $rc
 # Bench-regression gate: full min-of-2 bench at sf0.1, each query compared
