@@ -64,8 +64,8 @@ object Bench {
     }.getOrElse(Map.empty)
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.core.Graft.session("graft-bench", cpus, cpus.toInt)
+    val cpus = graft.core.Graft.cores
+    val spark = graft.core.Graft.session("graft-bench", cpus.toString, cpus)
     // warm the JVM/codegen/scan/agg/join paths so the first measured query
     // isn't charged for JIT + classloading (~5s on a cold session)
     locally {

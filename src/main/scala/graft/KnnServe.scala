@@ -41,8 +41,8 @@ object KnnServeMain {
       sys.exit(2)
     }
     val indexPath = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.Graft.session("graft-knn-serve", cpus, cpus.toInt)
+    val cpus = graft.core.Graft.cores
+    val spark = graft.core.Graft.session("graft-knn-serve", cpus.toString, cpus)
     // serving posture: pin the NARROW artifacts (ids/cells/ranks — ~1% of
     // the index bytes) so the serve's repeated uses don't re-list the
     // cell-partitioned store; the wide vector/code tables stream from disk
@@ -115,8 +115,8 @@ object RagServeMain {
       System.err.println(s"$usage\n  bad k '${args(3)}' (expected an int)")
       sys.exit(2)
     } else 20
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.Graft.session("graft-rag-serve", cpus, cpus.toInt)
+    val cpus = graft.core.Graft.cores
+    val spark = graft.core.Graft.session("graft-rag-serve", cpus.toString, cpus)
     val t0 = System.nanoTime()
     // as in KnnServeMain: `v` is always the version the query read
     val (c0, idx0) = IndexFamily.load[Retrieval.RagIndex](spark, indexPath)

@@ -18,8 +18,8 @@ object PlanDump {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "target/plans")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "before")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.Graft.session("graft-plandump", cpus, cpus.toInt)
+    val cpus = graft.core.Graft.cores
+    val spark = graft.core.Graft.session("graft-plandump", cpus.toString, cpus)
     val byName = SparkEntry.registry.map(q => q.name -> q).toMap
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     args.foreach { name =>

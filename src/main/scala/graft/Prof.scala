@@ -17,8 +17,8 @@ package graft
 object Prof {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.Graft.session("graft-prof", cpus, cpus.toInt)
+    val cpus = graft.core.Graft.cores
+    val spark = graft.core.Graft.session("graft-prof", cpus.toString, cpus)
     // per-job seconds with descriptions, so phases decompose into jobs
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {

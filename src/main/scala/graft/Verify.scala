@@ -9,8 +9,8 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Seq[String]] =
       if (args.length > 2) Some(args(2).split(',').toSeq) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.core.Graft.session("graft-verify", cpus, cpus.toInt)
+    val cpus = graft.core.Graft.cores
+    val spark = graft.core.Graft.session("graft-verify", cpus.toString, cpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }

@@ -2,6 +2,7 @@ package graft.api
 
 import java.util.regex.Pattern
 
+import graft.core.Graft
 import graft.operators.{KeyFieldSpec, Pipe}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -491,8 +492,7 @@ object StreamJob {
         args.reduceTasks.fold(agg)(n => agg.repartition(n, col("key")))
       }
       else {
-        val parts = args.reduceTasks
-          .getOrElse(spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+        val parts = args.reduceTasks.getOrElse(Graft.width(spark))
         val partCols: Seq[Column] = args.partitioner match {
           case Some(p) if p.contains("KeyFieldBasedPartitioner") =>
             args.conf.get("mapred.text.key.partitioner.options") match {

@@ -24,15 +24,27 @@ object Graft {
     */
   val CodegenCacheEntries = 8192
 
+  /** Local cores for an engine main: `SPARK_GRAFT_CPUS`, else every core
+    * the JVM sees. The one place that variable is read.
+    */
+  def cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The session's shuffle width (`spark.sql.shuffle.partitions`) — the
+    * one width policy: every explicit `repartition`/`repartitionByRange`
+    * that pins a stage to session parallelism reads it here. An explicit
+    * count is exempt from AQE coalescing, so a pinned stage keeps it.
+    */
+  def width(s: SparkSession): Int = s.sessionState.conf.numShufflePartitions
+
   /** Create (or reuse) a tuned local session — the ONE session factory:
     * the codegen cache size is a static conf Spark reads once per JVM, so
     * a session built elsewhere runs at the default and recompiles every
-    * pass. `cores` defaults to `SPARK_GRAFT_CPUS`; on a real cluster the
-    * same conf minus `master` applies.
+    * pass. Mains pass [[cores]] for both `cores` and `shufflePartitions`;
+    * on a real cluster the same conf minus `master` applies.
     */
-  def session(appName: String = "graft",
-              cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
-              shufflePartitions: Int = 32): SparkSession = {
+  def session(appName: String, cores: String,
+              shufflePartitions: Int): SparkSession = {
     val spark = SparkSession
       .builder()
       .master(s"local[$cores]")

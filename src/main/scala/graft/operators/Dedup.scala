@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Graft
 import graft.functions.Hashing
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -75,7 +76,7 @@ object Dedup {
     * itself. Deterministic under retries (sort-before-repartition is on).
     */
   private[graft] def widen(df: DataFrame): DataFrame = {
-    val p = df.sparkSession.sessionState.conf.numShufflePartitions
+    val p = Graft.width(df.sparkSession)
     if (df.rdd.getNumPartitions < p) df.repartition(p) else df
   }
 
@@ -343,7 +344,7 @@ object Dedup {
       // explicit shuffle width: repartition(col) alone lets AQE coalesce a
       // small shuffle to one partition, serializing every band directory's
       // write through a single task (see the k-NN family's write)
-      idx.bands.repartition(s.sessionState.conf.numShufflePartitions, col("band"))
+      idx.bands.repartition(Graft.width(s), col("band"))
         .write.mode("overwrite").partitionBy("band").parquet(s"$dir/bands")
       idx.labels.write.mode("overwrite").parquet(s"$dir/labels")
       Seq((idx.nBands.toLong, idx.rowsPerBand.toLong, idx.docCount))
@@ -758,8 +759,7 @@ object Dedup {
         // small store to ~1 partition, and the checkpoint would freeze
         // that — serializing the prefix explode + candidate-exchange map
         // stage downstream (same trap as [[setSimSorted]]'s width pin)
-        .repartition(docs.sparkSession.sessionState.conf.numShufflePartitions,
-          col("id"))
+        .repartition(Graft.width(docs.sparkSession), col("id"))
         .localCheckpoint(true)
     val cand = setSimCandidates(sorted, tPct)
     val repPairs = cand
@@ -827,8 +827,7 @@ object Dedup {
     val reps = sortedAll
       .join(memb.filter(col("id") === col("rid")).select(col("id")), "id")
       // re-pin p partitions before freezing (see [[setSimJoin]])
-      .repartition(docs.sparkSession.sessionState.conf.numShufflePartitions,
-        col("id"))
+      .repartition(Graft.width(docs.sparkSession), col("id"))
       .localCheckpoint(true)
     val repPairs = setSimCandidates(reps, tPct)
       .join(reps.select(col("id").as("a"), col("ws").as("wa"), col("n").as("na")), "a")
@@ -928,8 +927,7 @@ object Dedup {
       else sortedAll
         .join(memb.filter(col("id") === col("rid")).select(col("id")), "id")
         // re-pin p partitions before freezing (see [[setSimJoin]])
-        .repartition(docs.sparkSession.sessionState.conf.numShufflePartitions,
-          col("id"))
+        .repartition(Graft.width(docs.sparkSession), col("id"))
         .localCheckpoint(true)
     val pref = sorted.select(col("id"), col("n"),
       posexplode(expr(s"slice(ws, 1, n - (($tPct * n + 99) div 100) + 1)"))
@@ -1059,7 +1057,7 @@ object Dedup {
     // attach) runs as ONE task — a core-count-invariant serialized stage
     // (measured 4.3 s of the 9 s query at 32 cores; the save-width fix's
     // twin, guide §2.4).
-    val p = docs.sparkSession.sessionState.conf.numShufflePartitions
+    val p = Graft.width(docs.sparkSession)
     tok.join(dfreq, "wh")
       .repartition(p, col("id"))
       .groupBy(col("id"))
@@ -1112,7 +1110,7 @@ object Dedup {
     // 3.5M pair rows out, serialized through a single core at any core
     // count — the r20 q128 regression). A user-pinned width is exempt
     // from coalescing while leaving AQE's join-strategy rewrite free.
-    val p = sorted.sparkSession.sessionState.conf.numShufflePartitions
+    val p = Graft.width(sorted.sparkSession)
     val prefH = pref.select(col("id"), col("n"), col("p"),
         xxhash64(col("w")).as("wh"))
       .repartition(p, col("wh"))

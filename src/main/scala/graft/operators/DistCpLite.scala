@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Graft
 import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.SparkSession
 
@@ -28,7 +29,7 @@ object DistCpLite {
       .toSeq
     fs.mkdirs(new Path(dst))
     val stats = spark.sparkContext
-      .parallelize(files, math.max(1, math.min(files.size, 32)))
+      .parallelize(files, math.max(1, math.min(files.size, Graft.width(spark))))
       .map { case (f, len) =>
         val hc = conf.value
         val from = new Path(f)

@@ -1,7 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.reflect.ClassTag
+
+import graft.core.Graft
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Training-sequence packing (builder brief: what a large-scale training
@@ -11,278 +15,164 @@ import org.apache.spark.storage.StorageLevel
   * token span `[start_off, start_off + n_tokens)` and lands in sequences
   * `start_off / seqLen .. (start_off + n_tokens - 1) / seqLen`.
   *
-  * The whole operator is one DISTRIBUTED prefix sum — the classic
-  * two-pass shape, same family as `RDD.zipWithIndex`: range-partition by
-  * the corpus order key and sort within partitions, compute one token
-  * subtotal per partition, scan those few numbers on the driver (one Long
-  * per partition — the SortValidate boundary-stats pattern, NOT a data
-  * collect), then stream each partition once adding its offset. No
+  * Every operator here is one DISTRIBUTED prefix scan, [[prefixScan]] —
+  * the classic two-pass shape, same family as `RDD.zipWithIndex`:
+  * range-partition by the order key and sort within partitions, compute
+  * one summary per partition, scan those few values on the driver (one
+  * Long per partition — the SortValidate boundary-stats pattern, NOT a
+  * data collect), then stream each partition once with its offset. No
   * single-partition window, no global sort barrier beyond the range
   * exchange; at 100 TB the per-partition pass is the scan and the driver
   * sees kilobytes.
   */
 object Packing {
 
-  /** Per-doc token offsets in doc_id order: `(doc_id, n_tokens,
-    * start_off)`. `parts` controls the range partitioning of the pass.
+  /** The one two-pass distributed prefix scan ([[Percentiles]] runs it
+    * too). `in` is range-partitioned by the total `order` at the session
+    * width ([[Graft.width]]) and sorted within partitions, then persisted
+    * so both passes see identical partition contents. Pass 1 sends one
+    * `summary` per partition to the driver, where `scan` turns them (in
+    * partition order) into each partition's starting state — the
+    * `scanLeft` shape, its last element the grand total. Pass 2 streams
+    * each partition once through `emit` with its state. The output (of
+    * schema `out`) rides on eager localCheckpoint blocks so the persisted
+    * input is freed here; the session sweep or `Dedup.release` frees the
+    * checkpoint. Returns the output and the grand total.
     */
-  def tokenOffsets(docs: DataFrame, parts: Int = 32): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // Both passes MUST see identical partition contents; persisting the
-    // shuffled+sorted frame makes that contract explicit (rather than
-    // leaning on shuffle-output reuse) and skips re-running the
-    // within-partition sort in the second job. The result rides on eager
-    // localCheckpoint blocks so the intermediate can be freed here and
-    // now — the Dedup persistence idiom; the session sweep (or
-    // Dedup.release) frees the checkpoint blocks after consumption.
-    val sorted = docs
-      .select(col("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("n_tokens"))
-      .repartitionByRange(parts, col("doc_id"))
-      .sortWithinPartitions(col("doc_id"))
-      .as[(Long, Long)]
+  private[operators] def prefixScan[S: ClassTag, A](
+      in: DataFrame, order: Seq[Column], out: StructType)(
+      summary: Iterator[Row] => S)(scan: Array[S] => Array[A])(
+      emit: (A, Iterator[Row]) => Iterator[Row]): (DataFrame, A) = {
+    val sorted = in
+      .repartitionByRange(Graft.width(in.sparkSession), order: _*)
+      .sortWithinPartitions(order: _*)
       .rdd
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val partSums = sorted
-      .mapPartitionsWithIndex { case (i, it) =>
-        Iterator.single(i -> it.map(_._2).sum)
-      }
-      .collect().sortBy(_._1).map(_._2)
-    val offsets = partSums.scanLeft(0L)(_ + _)
-    val out = sorted
-      .mapPartitionsWithIndex { case (i, it) =>
-        var acc = offsets(i)
-        it.map { case (id, n) => val s = acc; acc += n; (id, n, s) }
-      }
-      .toDF("doc_id", "n_tokens", "start_off")
+    val states = scan(sorted.mapPartitions(it => Iterator.single(summary(it))).collect())
+    val res = in.sparkSession
+      .createDataFrame(sorted.mapPartitionsWithIndex((i, it) => emit(states(i), it)), out)
       .localCheckpoint(true)
     sorted.unpersist(false)
-    out
+    (res, states.last)
   }
+
+  /** [[prefixScan]] of a Long sum: `emit` gets the total `size` of every
+    * row in earlier partitions. Accumulates in Long, so a partition past
+    * 2^31 rows cannot overflow the offsets.
+    */
+  private def prefixSum(in: DataFrame, order: Seq[Column], out: StructType)(
+      size: Row => Long)(emit: (Long, Iterator[Row]) => Iterator[Row]): DataFrame =
+    prefixScan(in, order, out)(_.foldLeft(0L)((n, r) => n + size(r)))(
+      _.scanLeft(0L)(_ + _))(emit)._1
+
+  private def longs(names: String*): StructType =
+    StructType(names.map(StructField(_, LongType, nullable = false)))
+
+  /** Per-doc token offsets in doc_id order: `(doc_id, n_tokens,
+    * start_off)` — [[sizeOffsets]] over the token count.
+    */
+  def tokenOffsets(docs: DataFrame): DataFrame =
+    sizeOffsets(docs.select(col("doc_id"),
+      size(split(col("text"), " ")).as("n_tokens")), "doc_id", "n_tokens")
 
   /** Budget-capped corpus selection — the data-selection primitive of
     * budget-constrained training (keep the best documents until B tokens
     * are filled): documents are taken in (`score` DESC, doc_id) order
     * while the RUNNING token total stays within `budget`. Returns
     * `(doc_id, n_tokens, cum_tokens)` for the selected documents.
-    *
-    * Same two-pass distributed prefix sum as [[tokenOffsets]] — range-
-    * partition on the selection order, one subtotal per partition to the
-    * driver, stream each partition once — never a single-partition
-    * window. Partitions whose START offset already exceeds the budget
-    * are skipped outright (their input is never iterated), so at 100 TB
-    * a tight budget touches only the leading partitions of the
-    * score-ordered corpus after the subtotal pass.
+    * Partitions whose START offset already reaches the budget are skipped
+    * outright (their input is never iterated), so at 100 TB a tight
+    * budget touches only the leading partitions of the score-ordered
+    * corpus after the subtotal pass.
     */
-  def selectUnderBudget(docs: DataFrame, score: Column, budget: Long,
-                        parts: Int = 32): DataFrame = {
+  def selectUnderBudget(docs: DataFrame, score: Column, budget: Long): DataFrame = {
     require(budget >= 0, s"budget must be non-negative: $budget")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val sorted = docs
-      .select(score.cast("long").as("score"), col("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("n_tokens"))
-      .repartitionByRange(parts, col("score").desc, col("doc_id"))
-      .sortWithinPartitions(col("score").desc, col("doc_id"))
-      .as[(Long, Long, Long)]
-      .rdd
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val partSums = sorted
-      .mapPartitionsWithIndex { case (i, it) =>
-        Iterator.single(i -> it.map(_._3).sum)
+    prefixSum(docs.select(score.cast("long").as("score"), col("doc_id").cast("long"),
+        size(split(col("text"), " ")).cast("long").as("n_tokens")),
+        Seq(col("score").desc, col("doc_id")),
+        longs("doc_id", "n_tokens", "cum_tokens"))(_.getLong(2)) { (off, it) =>
+      if (off >= budget) Iterator.empty
+      else {
+        var acc = off
+        it.map { r => acc += r.getLong(2); Row(r.getLong(1), r.getLong(2), acc) }
+          .takeWhile(_.getLong(2) <= budget)
       }
-      .collect().sortBy(_._1).map(_._2)
-    val offsets = partSums.scanLeft(0L)(_ + _)
-    val out = sorted
-      .mapPartitionsWithIndex { case (i, it) =>
-        if (offsets(i) >= budget) Iterator.empty
-        else {
-          var acc = offsets(i)
-          it.map { case (_, id, n) => acc += n; (id, n, acc) }
-            .takeWhile(_._3 <= budget)
-        }
-      }
-      .toDF("doc_id", "n_tokens", "cum_tokens")
-      .localCheckpoint(true)
-    sorted.unpersist(false)
-    out
+    }
   }
 
-  /** [[tokenOffsets]] generalized to an arbitrary LONG size column:
-    * `(id, size, start_off)` where `start_off` is the exact sum of the
-    * sizes of all rows before this one in `idCol` order — the same
-    * two-pass distributed prefix sum, sizes supplied instead of counted
-    * from text. The id order must be unique or the offsets are not
-    * reproducible.
+  /** Exact start offsets of an arbitrary LONG size column: `(id, size,
+    * start_off)` where `start_off` is the sum of the sizes of all rows
+    * before this one in `idCol` order. The id order must be unique or the
+    * offsets are not reproducible.
     */
-  def sizeOffsets(df: DataFrame, idCol: String, sizeCol: String,
-                  parts: Int = 32): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val sorted = df
-      .select(col(idCol).cast("long"), col(sizeCol).cast("long"))
-      .repartitionByRange(parts, col(idCol))
-      .sortWithinPartitions(col(idCol))
-      .as[(Long, Long)]
-      .rdd
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val partSums = sorted
-      .mapPartitionsWithIndex { case (i, it) =>
-        Iterator.single(i -> it.map(_._2).sum)
-      }
-      .collect().sortBy(_._1).map(_._2)
-    val offsets = partSums.scanLeft(0L)(_ + _)
-    val out = sorted
-      .mapPartitionsWithIndex { case (i, it) =>
-        var acc = offsets(i)
-        it.map { case (id, n) => val s = acc; acc += n; (id, n, s) }
-      }
-      .toDF(idCol, sizeCol, "start_off")
-      .localCheckpoint(true)
-    sorted.unpersist(false)
-    out
-  }
+  def sizeOffsets(df: DataFrame, idCol: String, sizeCol: String): DataFrame =
+    prefixSum(df.select(col(idCol).cast("long"), col(sizeCol).cast("long")),
+        Seq(col(idCol)), longs(idCol, sizeCol, "start_off"))(_.getLong(1)) { (off, it) =>
+      var acc = off
+      it.map { r => val s = acc; acc += r.getLong(1); Row(r.getLong(0), r.getLong(1), s) }
+    }
 
   /** Global 0-based rank in `(orderCols…)` order, appended as a `rank`
     * column — `RDD.zipWithIndex` semantics but over an EXPLICIT total
-    * order: the same two-pass distributed prefix sum as [[tokenOffsets]],
-    * counting rows instead of tokens (range-partition by the order key,
-    * sort within partitions, one row-count per partition to the driver,
-    * stream offsets back). The order must be total (include a unique
-    * tiebreak column) or the rank is not reproducible.
+    * order: a prefix sum of row counts. The order must be total (include
+    * a unique tiebreak column) or the rank is not reproducible.
     */
-  def globalRank(df: DataFrame, orderCols: Seq[String], parts: Int = 32): DataFrame = {
-    val spark = df.sparkSession
-    val keys = orderCols.map(col)
-    val sorted = df
-      .repartitionByRange(parts, keys: _*)
-      .sortWithinPartitions(keys: _*)
-      .rdd
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val counts = sorted
-      // accumulate in Long: Iterator.size returns Int and a range
-      // partition past 2^31 rows would silently overflow the offsets
-      .mapPartitionsWithIndex { case (i, it) =>
-        Iterator.single(i -> it.foldLeft(0L)((n, _) => n + 1))
-      }
-      .collect().sortBy(_._1).map(_._2)
-    val offsets = counts.scanLeft(0L)(_ + _)
-    val ranked = sorted.mapPartitionsWithIndex { case (i, it) =>
-      var acc = offsets(i)
-      it.map { row =>
-        val r = org.apache.spark.sql.Row.fromSeq(row.toSeq :+ acc)
-        acc += 1
-        r
-      }
+  def globalRank(df: DataFrame, orderCols: Seq[String]): DataFrame =
+    prefixSum(df, orderCols.map(col),
+        df.schema.add("rank", LongType, nullable = false))(_ => 1L) { (off, it) =>
+      var acc = off
+      it.map { r => val row = Row.fromSeq(r.toSeq :+ acc); acc += 1; row }
     }
-    val out = spark.createDataFrame(ranked,
-        df.schema.add("rank", org.apache.spark.sql.types.LongType, nullable = false))
-      .localCheckpoint(true)
-    sorted.unpersist(false)
-    out
-  }
 
   /** EXCLUSIVE running maximum of LONG `valueCol` in `(orderCols…)`
     * order, appended as nullable `cummax_excl` (null on the global first
-    * row) — the max-monoid sibling of [[runningTotal]], same two-pass
-    * distributed prefix shape: one (partition → max) pair to the driver,
-    * offsets streamed back. Exclusive (strictly-preceding rows only)
-    * because the consumers are dominance tests — "does anything EARLIER
-    * in the order beat me" (skyline/Pareto fronts, high-water-mark
-    * audits). The order must be total (unique key); descending orders
-    * pre-negate the sort key.
+    * row) — the max-monoid sibling of [[runningTotal]]. Exclusive
+    * (strictly-preceding rows only) because the consumers are dominance
+    * tests — "does anything EARLIER in the order beat me" (skyline/Pareto
+    * fronts, high-water-mark audits). The order must be total (unique
+    * key); descending orders pre-negate the sort key.
     */
-  def runningMax(df: DataFrame, orderCols: Seq[String], valueCol: String,
-                 parts: Int = 32): DataFrame = {
-    val spark = df.sparkSession
-    val keys = orderCols.map(col)
+  def runningMax(df: DataFrame, orderCols: Seq[String], valueCol: String): DataFrame = {
     val vIdx = df.schema.fieldIndex(valueCol)
-    val sorted = df
-      .repartitionByRange(parts, keys: _*)
-      .sortWithinPartitions(keys: _*)
-      .rdd
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val maxes = sorted
-      .mapPartitionsWithIndex { case (i, it) =>
-        var m = Long.MinValue; var any = false
-        it.foreach { r =>
-          val v = r.getLong(vIdx); if (!any || v > m) { m = v; any = true }
-        }
-        Iterator.single(i -> (if (any) Some(m) else None))
+    def max(a: Option[Long], b: Option[Long]) = (a ++ b).reduceOption(math.max(_, _))
+    prefixScan(df, orderCols.map(col),
+        df.schema.add("cummax_excl", LongType, nullable = true))(
+        _.foldLeft(Option.empty[Long])((m, r) => max(m, Some(r.getLong(vIdx)))))(
+        _.scanLeft(Option.empty[Long])(max)) { (off, it) =>
+      var acc = off
+      it.map { r =>
+        val row = Row.fromSeq(r.toSeq :+ acc.map(Long.box).orNull)
+        acc = max(acc, Some(r.getLong(vIdx)))
+        row
       }
-      .collect().sortBy(_._1).map(_._2)
-    val offsets: Array[Option[Long]] =
-      maxes.scanLeft(Option.empty[Long]) {
-        case (Some(a), Some(b)) => Some(math.max(a, b))
-        case (Some(a), None)    => Some(a)
-        case (None, b)          => b
-      }
-    val out = sorted.mapPartitionsWithIndex { case (i, it) =>
-      var acc = offsets(i)
-      it.map { row =>
-        val prev = acc
-        val v = row.getLong(vIdx)
-        acc = Some(acc.fold(v)(math.max(_, v)))
-        org.apache.spark.sql.Row.fromSeq(
-          row.toSeq :+ prev.map(java.lang.Long.valueOf).orNull)
-      }
-    }
-    val res = spark.createDataFrame(out,
-        df.schema.add("cummax_excl", org.apache.spark.sql.types.LongType,
-          nullable = true))
-      .localCheckpoint(true)
-    sorted.unpersist(false)
-    res
+    }._1
   }
 
   /** INCLUSIVE running total of LONG `valueCol` in `(orderCols…)` order,
-    * appended as `cum` — the value-weighted sibling of [[globalRank]]
-    * (same two-pass distributed prefix sum; the driver sees one partial
-    * sum per partition, never data). The order must be total (include a
-    * unique tiebreak column); descending orders are expressed by
-    * pre-negating the sort key. Accumulates in Long — callers own the
-    * no-overflow bound on Σ|value| (document it at the call site).
+    * appended as `cum` — the value-weighted sibling of [[globalRank]]. The
+    * order must be total (include a unique tiebreak column); descending
+    * orders are expressed by pre-negating the sort key. Accumulates in
+    * Long — callers own the no-overflow bound on Σ|value| (document it at
+    * the call site).
     */
-  def runningTotal(df: DataFrame, orderCols: Seq[String], valueCol: String,
-                   parts: Int = 32): DataFrame = {
-    val spark = df.sparkSession
-    val keys = orderCols.map(col)
+  def runningTotal(df: DataFrame, orderCols: Seq[String], valueCol: String): DataFrame = {
     val vIdx = df.schema.fieldIndex(valueCol)
-    val sorted = df
-      .repartitionByRange(parts, keys: _*)
-      .sortWithinPartitions(keys: _*)
-      .rdd
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val sums = sorted
-      .mapPartitionsWithIndex { case (i, it) =>
-        Iterator.single(i -> it.foldLeft(0L)((n, r) => n + r.getLong(vIdx)))
-      }
-      .collect().sortBy(_._1).map(_._2)
-    val offsets = sums.scanLeft(0L)(_ + _)
-    val cum = sorted.mapPartitionsWithIndex { case (i, it) =>
-      var acc = offsets(i)
-      it.map { row =>
-        acc += row.getLong(vIdx)
-        org.apache.spark.sql.Row.fromSeq(row.toSeq :+ acc)
-      }
+    prefixSum(df, orderCols.map(col),
+        df.schema.add("cum", LongType, nullable = false))(_.getLong(vIdx)) { (off, it) =>
+      var acc = off
+      it.map { r => acc += r.getLong(vIdx); Row.fromSeq(r.toSeq :+ acc) }
     }
-    val out = spark.createDataFrame(cum,
-        df.schema.add("cum", org.apache.spark.sql.types.LongType, nullable = false))
-      .localCheckpoint(true)
-    sorted.unpersist(false)
-    out
   }
 
   /** [[tokenOffsets]] plus the sequence assignment at `seqLen` tokens:
     * first/last sequence index per doc and whether the doc straddles a
     * sequence boundary (the span a loader must reassemble).
     */
-  def packed(docs: DataFrame, seqLen: Int, parts: Int = 32): DataFrame = {
+  def packed(docs: DataFrame, seqLen: Int): DataFrame = {
     require(seqLen > 0, s"seqLen must be positive: $seqLen")
     val first = expr(s"start_off DIV $seqLen")
     val last = expr(s"(start_off + n_tokens - 1) DIV $seqLen")
-    tokenOffsets(docs, parts)
+    tokenOffsets(docs)
       .select(col("doc_id"), col("n_tokens"), col("start_off"),
         first.as("first_seq"), last.as("last_seq"),
         (first =!= last).as("crosses_boundary"))

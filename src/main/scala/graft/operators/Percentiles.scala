@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Exact grouped percentiles at scale — the nearest-rank method computed
   * WITHOUT a per-group raw-row window.
@@ -15,11 +17,11 @@ import org.apache.spark.storage.StorageLevel
   *  1. collapse rows to a per-(group, value) HISTOGRAM — one map-side
   *     combined aggregation; the sort domain drops from row count to
   *     value-NDV per group;
-  *  2. a two-pass distributed prefix sum over the histogram (the
-  *     [[Packing]] / SortValidate pattern): range-partition by
-  *     (group, value), per-partition per-group subtotals to the driver —
-  *     #partitions × #groups longs, never data — then one streaming pass
-  *     adds offsets, yielding each value's cumulative count;
+  *  2. [[Packing.prefixScan]] over the histogram (the SortValidate
+  *     pattern): range-partition by (group, value), per-partition
+  *     per-group subtotals to the driver — #partitions × #groups longs,
+  *     never data — then one streaming pass adds offsets, yielding each
+  *     value's cumulative count;
   *  3. the p-th percentile (nearest-rank: smallest v with
   *     cum ≥ ⌈p·n/100⌉, all-integer target arithmetic) falls out of one
   *     bounded join + min aggregation.
@@ -41,21 +43,21 @@ object Percentiles {
     * percents in (0, 100].
     *
     * CONTRACT: the driver holds Σ per-partition distinct groups subtotal
-    * longs (≤ `parts` × #groups), so `groupCol` must be LOW-cardinality —
-    * a dimension like event type or language, not a key. The guard
-    * refuses past [[MaxDriverGroups]] inside the ONE subtotal job: each
-    * partition caps the map it ships (counting group boundaries of its
-    * sorted stream beyond the cap), so the blow-up the guard refuses
-    * never reaches the driver and the hot path pays a single scan of
-    * the persisted histogram; for high-NDV group
+    * longs (≤ session width × #groups), so `groupCol` must be
+    * LOW-cardinality — a dimension like event type or language, not a
+    * key. The guard refuses past [[MaxDriverGroups]] inside the ONE
+    * subtotal job: each partition caps the map it ships (counting group
+    * boundaries of its sorted stream beyond the cap), so the blow-up the
+    * guard refuses never reaches the driver and the hot path pays a
+    * single scan of the persisted histogram; for high-NDV group
     * columns compute the per-group offsets distributively instead
     * (aggregate per-(partition, group) subtotals, prefix-sum per group
-    * with a window over the ≤ parts rows each group owns, and join
+    * with a window over the ≤ width rows each group owns, and join
     * back) — same answer, no driver state.
     */
   def exact(df: DataFrame, groupCol: String, valueCol: String,
-            ps: Seq[Int], parts: Int = 32): DataFrame =
-    exactImpl(df, groupCol, valueCol, lit(1L), ps, parts)
+            ps: Seq[Int]): DataFrame =
+    exactImpl(df, groupCol, valueCol, lit(1L), ps)
 
   /** WEIGHTED nearest-rank percentiles: each row counts `weightCol`
     * units of mass instead of 1 (weighted median of price by quantity,
@@ -67,89 +69,66 @@ object Percentiles {
     * never become the crossing value).
     */
   def exactWeighted(df: DataFrame, groupCol: String, valueCol: String,
-                    weightCol: Column, ps: Seq[Int],
-                    parts: Int = 32): DataFrame =
-    exactImpl(df, groupCol, valueCol, weightCol, ps, parts)
+                    weightCol: Column, ps: Seq[Int]): DataFrame =
+    exactImpl(df, groupCol, valueCol, weightCol, ps)
 
   private def exactImpl(df: DataFrame, groupCol: String, valueCol: String,
-                        weight: Column, ps: Seq[Int],
-                        parts: Int): DataFrame = {
+                        weight: Column, ps: Seq[Int]): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val hist = df
-      .groupBy(col(groupCol).as("g"), col(valueCol).as("v"))
+      .groupBy(col(groupCol).cast("string").as("g"), col(valueCol).cast("long").as("v"))
       .agg(sum(weight.cast("long")).as("c")) // integer-weight contract
       // zero-mass cells can never be a crossing value, and dropping them
       // makes an ALL-zero-weight group vanish entirely — exactly what
       // exact() over the w-times-replicated input (zero rows) returns;
       // keeping them would emit spurious n=0 rows for such a group
       .filter(col("c") > 0)
-    // pass 1+2: cumulative counts over the (g, v)-ordered histogram;
-    // persisted so both passes see identical partition contents
-    val sorted = hist
-      .repartitionByRange(parts, col("g"), col("v"))
-      .sortWithinPartitions(col("g"), col("v"))
-      .as[(String, Long, Long)]
-      .rdd
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // guard + collect in ONE job (ADVICE r13 — the separate size-probe
-    // pass doubled scans of the persisted histogram on the hot path):
-    // each partition streams its (g, v)-sorted iterator, so distinct
-    // groups arrive contiguously — the subtotal map grows one entry per
-    // group BOUNDARY. A partition whose distinct count alone passes
-    // MaxDriverGroups stops STORING (drops its map, keeps counting), so
-    // the executor→driver payload stays bounded even in the refuse path;
-    // the driver then checks the Σ bound exactly as before. If the sum
-    // is within bound, every per-partition count is too, so every map
-    // survived — same guard semantics, one pass.
-    val partGroupSums: Array[Map[String, Long]] = {
-      val raw = sorted
-        .mapPartitionsWithIndex { case (i, it) =>
-          var m = scala.collection.mutable.Map.empty[String, Long]
-          var distinct = 0L
-          var cur: String = null
-          it.foreach { case (g, _, c) =>
-            if (cur == null || g != cur) { distinct += 1; cur = g }
-            if (m != null) {
-              m.update(g, m.getOrElse(g, 0L) + c)
-              if (m.size > MaxDriverGroups) m = null // refuse path: count only
-            }
-          }
-          Iterator.single((i, distinct, Option(m).map(_.toMap)))
+    def plus(a: Map[String, Long], b: Map[String, Long]) =
+      b.foldLeft(a) { case (m, (g, c)) => m.updated(g, m.getOrElse(g, 0L) + c) }
+    // cumulative counts over the (g, v)-ordered histogram: the state
+    // before partition i maps g to its rows in partitions before i
+    val (cum, totals) = Packing.prefixScan(hist, Seq(col("g"), col("v")),
+        StructType(Seq(StructField("g", StringType),
+          StructField("v", LongType, nullable = false),
+          StructField("cum", LongType, nullable = false)))) { it =>
+      // guard + subtotals in ONE job (ADVICE r13 — a separate size-probe
+      // pass doubled scans of the persisted histogram on the hot path):
+      // the (g, v)-sorted stream brings each group contiguously, so the
+      // subtotal map grows one entry per group BOUNDARY. A partition
+      // whose distinct count alone passes MaxDriverGroups stops STORING
+      // (drops its map, keeps counting), so the executor→driver payload
+      // stays bounded even in the refuse path; if the driver's Σ is
+      // within bound, every per-partition count is too, so every map
+      // survived.
+      var m = mutable.Map.empty[String, Long]
+      var distinct = 0L
+      var cur: String = null
+      it.foreach { r =>
+        val g = r.getString(0)
+        if (cur == null || g != cur) { distinct += 1; cur = g }
+        if (m != null) {
+          m.update(g, m.getOrElse(g, 0L) + r.getLong(2))
+          if (m.size > MaxDriverGroups) m = null // refuse path: count only
         }
-        .collect()
-      val driverEntries = raw.map(_._2).sum
+      }
+      (distinct, Option(m).map(_.toMap))
+    } { sums =>
+      val driverEntries = sums.map(_._1).sum
       require(driverEntries <= MaxDriverGroups,
         s"Percentiles.exact: $driverEntries (partition, group) subtotal " +
           s"entries exceed the driver bound ($MaxDriverGroups); use a " +
           "distributed per-group offset join for high-NDV group columns " +
           "(see scaladoc)")
-      val byIdx = raw.map { case (i, _, m) => i -> m.get }.toMap
-      Array.tabulate(sorted.getNumPartitions)(i => byIdx.getOrElse(i, Map.empty))
-    }
-    // offsets(i)(g) = rows of group g in partitions before i
-    val offsets: Array[Map[String, Long]] =
-      partGroupSums.scanLeft(Map.empty[String, Long]) { (acc, m) =>
-        (acc.keySet ++ m.keySet).iterator
-          .map(g => g -> (acc.getOrElse(g, 0L) + m.getOrElse(g, 0L))).toMap
-      }.init
-    val totals: Map[String, Long] = partGroupSums.foldLeft(Map.empty[String, Long]) {
-      (acc, m) =>
-        (acc.keySet ++ m.keySet).iterator
-          .map(g => g -> (acc.getOrElse(g, 0L) + m.getOrElse(g, 0L))).toMap
-    }
-    val cum = sorted
-      .mapPartitionsWithIndex { case (i, it) =>
-        val acc = scala.collection.mutable.Map[String, Long](offsets(i).toSeq: _*)
-        it.map { case (g, v, c) =>
-          val next = acc.getOrElse(g, 0L) + c
-          acc.update(g, next)
-          (g, v, next)
-        }
+      sums.map(_._2.get).scanLeft(Map.empty[String, Long])(plus)
+    } { (off, it) =>
+      val acc = mutable.Map(off.toSeq: _*)
+      it.map { r =>
+        val (g, v) = (r.getString(0), r.getLong(1))
+        acc.update(g, acc.getOrElse(g, 0L) + r.getLong(2))
+        Row(g, v, acc(g))
       }
-      .toDF("g", "v", "cum")
-      .localCheckpoint(true)
-    sorted.unpersist(false)
+    }
     val n = totals.toSeq.toDF("g", "n")
     val pdf = ps.map(_.toLong).toDF("p")
     // target rank ⌈p·n/100⌉ in pure integers: (p·n + 99) div 100

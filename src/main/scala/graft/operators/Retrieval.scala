@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.core.Graft.table
-import graft.core.{IndexFamily, IndexStore}
+import graft.core.{Graft, IndexFamily, IndexStore}
 import graft.functions.Hashing
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -300,7 +300,7 @@ object Retrieval {
       // shuffle parallelism — scale-adaptive, not a local constant) keeps
       // the writers parallel; each bucket/cell still lands wholly in one
       // task, so the one-file-per-directory layout is unchanged.
-      val p = idx.postings.sparkSession.sessionState.conf.numShufflePartitions
+      val p = Graft.width(idx.postings.sparkSession)
       def tb(d: DataFrame) = d.withColumn("tb", termBucket).repartition(p, col("tb"))
       tb(idx.postings)
         .write.mode("overwrite").partitionBy("tb").parquet(s"$path/postings")

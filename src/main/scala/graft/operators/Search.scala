@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Graft
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** Distributed backtracking search — the DistributedPentomino/Sudoku
@@ -21,7 +22,7 @@ object Search {
     } yield (a, b)
     if (prefixes.isEmpty) return solveFrom(n, Nil) // n <= 2: no valid fan-out
     spark.createDataset(prefixes)
-      .repartition(math.min(prefixes.size, 32))
+      .repartition(math.min(prefixes.size, Graft.width(spark)))
       .mapPartitions(_.map { case (a, b) => solveFrom(n, List(b, a)) })
       .reduce(_ + _)
   }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Graft
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -711,7 +712,7 @@ object Similarity {
       // coalesces the small shuffle to one partition and a single task
       // writes every cell directory sequentially — the measured bulk of
       // the save wall. One file per cell either way.
-      val p = s.sessionState.conf.numShufflePartitions
+      val p = Graft.width(s)
       idx.enc
         .join(idx.assignD2.select(col("nid").as("xid"), col("cid"), col("d2")), "xid")
         .join(idx.servable.select(col("nid").as("xid"), col("cid"),

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Q
+import graft.core.Graft
 import graft.core.Graft.table
 import graft.operators.Dedup
 import org.apache.spark.sql.functions._
@@ -1539,7 +1540,7 @@ object DedupQueries {
     // listener; guide §2.5 input skew). One cheap text shuffle (~22 MB)
     // spreads it across every core.
     val f = (65536L / n + 1L).toInt
-    val p = docs.sparkSession.sessionState.conf.numShufflePartitions
+    val p = Graft.width(docs.sparkSession)
     val cur = (0 until f).map(j => docs.select(
         (col("doc_id") + lit(j.toLong * 100000000L)).as("doc_id"),
         col("text")))
@@ -1587,7 +1588,7 @@ object DedupQueries {
     // same grown-union repartition as q183e: spread the re-index's
     // minhash map stage across the session's shuffle width
     val f = (65536L / n + 1L).toInt
-    val p = docs.sparkSession.sessionState.conf.numShufflePartitions
+    val p = Graft.width(docs.sparkSession)
     val cur = (0 until f).map(j => docs.select(
         (col("doc_id") + lit(j.toLong * 100000000L)).as("doc_id"),
         col("text")))

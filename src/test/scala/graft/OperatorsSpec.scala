@@ -115,8 +115,8 @@ class OperatorsSpec extends AnyFunSuite {
     assert(spark.sparkContext.getPersistentRDDs.nonEmpty)
     assert(!releaseQuietly(q58).contains("nothing was freed"),
       "q58's projected plan no longer exposes its localCheckpoint to release")
-    val offsets = Packing.tokenOffsets(
-      Seq((1L, "a b c"), (2L, "d e")).toDF("doc_id", "text"), parts = 2)
+    val offsets = TestSpark.atWidth(2)(Packing.tokenOffsets(
+      Seq((1L, "a b c"), (2L, "d e")).toDF("doc_id", "text")))
     offsets.collect()
     assert(!releaseQuietly(offsets).contains("nothing was freed"),
       "tokenOffsets' checkpointed result no longer exposes its RDD to release")

@@ -66,10 +66,14 @@ class RetrievalTieSpec extends AnyFunSuite {
   test("equal RRF sums rank the smaller xid first (ragFuse)") {
     // 24 chunks (doc d, chunk d % 3), each ranked 1 by one list alone —
     // all at rrf = 10⁶ div 61 — the larger ids first in each list: the cut
-    // at 10 keeps docs 0–9 in id order
+    // at 10 keeps docs 0–9 in id order. Each list arrives hash-partitioned
+    // on xid over 3 partitions, so the fusion join runs on 3 partitions
+    // and its output is xid-sorted only within each one.
     def chunks(docs: Range) = docs.map(d => d * Retrieval.ChunkIdBase + d % 3)
     val bm = chunks(23 to 12 by -1).map((_, 1)).toDF("xid", "bm25_rank")
+      .repartition(3, col("xid"))
     val dense = chunks(11 to 0 by -1).map((_, 1L)).toDF("xid", "cos_rank")
+      .repartition(3, col("xid"))
     val fused = Retrieval.ragFuse(bm, dense).orderBy(col("rank"))
       .select(col("doc_id"), col("chunk_id"), col("rrf")).as[(Long, Long, Long)]
       .collect().toSeq

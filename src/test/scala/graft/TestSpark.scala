@@ -26,4 +26,14 @@ object TestSpark {
     s
   }
   val sf0001 = "/root/testdata/sf0.001"
+
+  /** Runs `body` at session shuffle width `w` (`Graft.width`), then
+    * restores the previous width.
+    */
+  def atWidth[T](w: Int)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, w.toString)
+    try body finally spark.conf.set(key, prev)
+  }
 }
