@@ -207,10 +207,13 @@ object Bench {
     // full-fidelity record goes to a file (benchgate + gate.sh read it);
     // written BEFORE the stdout lines so the stderr note can't trail them;
     // only it carries codegen_compiles (of each query's min pass; ~0 warm)
+    // and the host shape (session cores, JVM-visible cores) benchgate
+    // checks before comparing against a baseline
     scala.util.Try {
       val p = java.nio.file.Paths.get("target/bench_latest.json")
       java.nio.file.Files.createDirectories(p.getParent)
-      val record = json.dropRight(1) + s""","codegen_compiles":${perQuery(compiles)}}"""
+      val record = json.dropRight(1) + s""","codegen_compiles":${perQuery(compiles)},""" +
+        s""""cpus":$cpus,"available_processors":${Runtime.getRuntime.availableProcessors}}"""
       java.nio.file.Files.write(p, (record + "\n").getBytes("UTF-8"))
       System.err.println(s"[bench] wrote ${p.toAbsolutePath}")
     }

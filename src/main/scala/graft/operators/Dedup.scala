@@ -118,6 +118,14 @@ object Dedup {
       .select(col("id"), col("bk.band").as("band"), col("bk.key").as("key"))
   }
 
+  /** The band table `(id, band, key)` of a `(doc_id, text)` corpus:
+    * [[lshBands]] over the [[minhash]] of its word [[bigrams]] at the
+    * given geometry — the one composition every near-dup build uses.
+    */
+  def textBands(docs: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
+    lshBands(minhash(docs, col("doc_id"), bigrams(col("text")), bands * rowsPerBand),
+      bands, rowsPerBand)
+
   /** Distinct candidate pairs (a < b) from any shared band bucket — within
     * buckets only, never all-pairs. One grouped pass: bucket ids are
     * collected (sorted, so a < b falls out of position order) and pairs
@@ -386,10 +394,7 @@ object Dedup {
       val batchN = batch.count()
       if (batchN == 0) None
       else {
-        val db = lshBands(
-          minhash(batch, col("doc_id"), bigrams(col("text")),
-            idx.nBands * idx.rowsPerBand),
-          idx.nBands, idx.rowsPerBand).localCheckpoint(true)
+        val db = textBands(batch, idx.nBands, idx.rowsPerBand).localCheckpoint(true)
         val labels = ccIncrementalServe(idx.labels,
             ccDeltaStarEdges(idx.bands, db))
           .select(col("doc_id").as("id"), col("component").as("lbl"))
@@ -410,9 +415,7 @@ object Dedup {
       */
     def rebuild(cur: CcIndex, corpus: DataFrame, n: => Long): CcIndex = {
       val (b2, r2) = lshGeometry(n)
-      val bands2 = lshBands(
-        minhash(corpus, col("doc_id"), bigrams(col("text")), b2 * r2),
-        b2, r2).localCheckpoint(true)
+      val bands2 = textBands(corpus, b2, r2).localCheckpoint(true)
       CcIndex(bands2, connectedComponents(bucketStarEdges(bands2)), b2, r2, n)
     }
   }

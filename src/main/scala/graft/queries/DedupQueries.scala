@@ -3,7 +3,7 @@ package graft.queries
 import graft.Q
 import graft.core.Graft
 import graft.core.Graft.table
-import graft.operators.Dedup
+import graft.operators.{Dedup, Graph}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators over `documents` (SURVEY extension §7.1-11 /
@@ -33,9 +33,7 @@ object DedupQueries {
     */
   private def autoBands(docs: org.apache.spark.sql.DataFrame) = {
     val (b, r) = Dedup.lshGeometry(docs.count())
-    Dedup.lshBands(
-      Dedup.minhash(docs, col("doc_id"), Dedup.bigrams(col("text")), b * r),
-      b, r)
+    Dedup.textBands(docs, b, r)
   }
 
   /** The simulated re-crawl — ONE definition of the doubled corpus (and
@@ -442,28 +440,13 @@ object DedupQueries {
       |  FROM edges e JOIN i2 r ON r.node = e.src JOIN deg g ON g.src = e.src
       |  GROUP BY e.dst)
       |SELECT node, pr FROM i3""") { (s, dir) =>
-    val pairs = table(s, dir, "events")
-      .select(col("user_id"), col("event_type")).distinct()
-    val edges = pairs
-      .select(concat(lit("u:"), col("user_id")).as("src"),
-        concat(lit("t:"), col("event_type")).as("dst"))
-      .unionByName(pairs
-        .select(concat(lit("t:"), col("event_type")).as("src"),
-          concat(lit("u:"), col("user_id")).as("dst")))
-      .localCheckpoint(true) // reused by deg + every iteration
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
-    var ranks = deg.select(col("src").as("node"), lit(1000000L).as("pr"))
-    for (_ <- 1 to 3) {
-      ranks = edges
-        .join(ranks, col("src") === col("node"))
-        .join(deg, "src")
-        .select(col("dst"), expr("pr div d").as("contrib"))
-        .groupBy(col("dst"))
-        .agg((lit(150000L) + expr("(85 * sum(contrib)) div 100")).as("pr"))
-        .select(col("dst").as("node"), col("pr"))
-        .localCheckpoint(true)
+    val edges = Graph.userTypeEdges(table(s, dir, "events")
+      .select(col("user_id"), col("event_type")).distinct())
+    val deg = Graph.outDegree(edges)
+    Graph.rounds(deg.select(col("src").as("node"), lit(1000000L).as("pr"))) { r =>
+      Graph.pagerankContrib(edges, deg)(r)
+        .select(col("node"), (lit(150000L) + col("pr")).as("pr"))
     }
-    ranks
   }
 
   /** Exact set-similarity self-join ([[Dedup.setSimJoin]], AllPairs/
@@ -764,19 +747,13 @@ object DedupQueries {
     val (b110, r110) = Dedup.lshGeometry(docs.count())
     // nightly build: base bands persisted (uncapped — the cap is applied
     // at pair time over the union, exactly as the from-scratch q51 does)
-    Dedup.lshBands(
-      Dedup.minhash(docs.filter(col("doc_id") % 13 =!= 4),
-        col("doc_id"), Dedup.bigrams(col("text")), b110 * r110),
-      b110, r110)
+    Dedup.textBands(docs.filter(col("doc_id") % 13 =!= 4), b110, r110)
       .write.mode("overwrite").parquet(bandDir)
     // incremental run: delta-only signature work + persisted read-back.
     // deltaBands appears twice in the plan (union side + semi-join side);
     // recomputing it costs 1/13 of one signature pass, cheaper than an
     // eager checkpoint's blocking materialization at every scale tested.
-    val deltaBands = Dedup.lshBands(
-      Dedup.minhash(docs.filter(col("doc_id") % 13 === 4),
-        col("doc_id"), Dedup.bigrams(col("text")), b110 * r110),
-      b110, r110)
+    val deltaBands = Dedup.textBands(docs.filter(col("doc_id") % 13 === 4), b110, r110)
     val allBands = s.read.parquet(bandDir).unionByName(deltaBands)
     // Round-9 (from the 100× soak finding that pair LISTING dominates the
     // incremental run): only buckets CONTAINING a delta member can yield a
@@ -956,29 +933,10 @@ object DedupQueries {
       |    SELECT dst, lbl, row_number() OVER (PARTITION BY dst ORDER BY c DESC, lbl) AS rn
       |    FROM c3) WHERE rn = 1)
       |SELECT node, lbl FROM l3""") { (s, dir) =>
-    val pairs = table(s, dir, "events")
-      .select(col("user_id"), col("event_type")).distinct()
-    val edges = pairs
-      .select(concat(lit("u:"), col("user_id")).as("src"),
-        concat(lit("t:"), col("event_type")).as("dst"))
-      .unionByName(pairs
-        .select(concat(lit("t:"), col("event_type")).as("src"),
-          concat(lit("u:"), col("user_id")).as("dst")))
-      .localCheckpoint(true) // reused by init + every round
-    var labels = edges.select(col("src").as("node")).distinct()
-      .withColumn("lbl", col("node"))
-    for (_ <- 1 to 3) {
-      labels = edges
-        .join(labels, col("src") === col("node"))
-        .groupBy(col("dst"), col("lbl")).agg(count(lit(1)).as("c"))
-        // argmax by (count DESC, label ASC) as a pure aggregation:
-        // struct ordering compares -c first, then lbl
-        .groupBy(col("dst"))
-        .agg(min(struct((-col("c")).as("nc"), col("lbl"))).as("top"))
-        .select(col("dst").as("node"), col("top.lbl").as("lbl"))
-        .localCheckpoint(true)
-    }
-    labels
+    val edges = Graph.userTypeEdges(table(s, dir, "events")
+      .select(col("user_id"), col("event_type")).distinct())
+    Graph.rounds(edges.select(col("src").as("node")).distinct()
+      .withColumn("lbl", col("node")))(Graph.labelProp(edges))
   }
 
   /** Cross-source content-overlap matrix — the corpus-contamination
@@ -1118,25 +1076,10 @@ object DedupQueries {
       |    SELECT e.dst AS node, r.dist + 1 AS dist
       |    FROM edges e JOIN d2 r ON r.node = e.src) GROUP BY node)
       |SELECT node, dist FROM d3""") { (s, dir) =>
-    val pairs = table(s, dir, "events")
-      .select(col("user_id"), col("event_type")).distinct()
-    val edges = pairs
-      .select(concat(lit("u:"), col("user_id")).as("src"),
-        concat(lit("t:"), col("event_type")).as("dst"))
-      .unionByName(pairs
-        .select(concat(lit("t:"), col("event_type")).as("src"),
-          concat(lit("u:"), col("user_id")).as("dst")))
-      .localCheckpoint(true) // reused every round
-    var dist = s.range(1).select(lit("t:click").as("node"), lit(0L).as("dist"))
-    for (_ <- 1 to 3) {
-      dist = dist
-        .unionByName(edges
-          .join(dist, col("src") === col("node"))
-          .select(col("dst").as("node"), (col("dist") + 1L).as("dist")))
-        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint(true)
-    }
-    dist
+    val edges = Graph.userTypeEdges(table(s, dir, "events")
+      .select(col("user_id"), col("event_type")).distinct())
+    Graph.rounds(s.range(1).select(Graph.typeNode(lit("click")).as("node"),
+      lit(0L).as("dist")))(Graph.relax(edges, lit(1L)))
   }
 
   /** k-core decomposition (iterative peeling) over the near-dup candidate
@@ -1175,20 +1118,9 @@ object DedupQueries {
        |e3 AS (SELECT e.src, e.dst FROM e2 e JOIN k3 x ON x.src = e.src JOIN k3 y ON y.src = e.dst)
        |SELECT src AS doc_id, count(*) AS deg FROM e3 GROUP BY src""") { (s, dir) =>
     val docs = table(s, dir, "documents")
-    val cand = Dedup.candidatePairs(autoBands(docs))
-    var e = cand.select(col("a").as("src"), col("b").as("dst"))
-      .unionByName(cand.select(col("b").as("src"), col("a").as("dst")))
-      .localCheckpoint(true)
-    for (_ <- 1 to 3) {
-      val keep = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= 3).select(col("src").as("node"))
-        .localCheckpoint(true) // feeds both endpoint restrictions
-      e = e
-        .join(keep.select(col("node").as("src")), Seq("src"), "left_semi")
-        .join(keep.select(col("node").as("dst")), Seq("dst"), "left_semi")
-        .localCheckpoint(true)
-    }
-    e.groupBy(col("src").as("doc_id")).agg(count(lit(1)).as("deg"))
+    val e0 = Graph.symmetric(Dedup.candidatePairs(autoBands(docs))).localCheckpoint(true)
+    Graph.rounds(e0)(Graph.peel)
+      .groupBy(col("src").as("doc_id")).agg(count(lit(1)).as("deg"))
   }
 
   /** INCREMENTAL connected components — the daily-graph-update answer the
@@ -1244,18 +1176,14 @@ object DedupQueries {
     // convention: the incremental day reuses the stored signatures, it
     // does not re-derive geometry from the grown corpus)
     val (bnd, rpb) = Dedup.lshGeometry(base.count())
-    def bandsOf(d: org.apache.spark.sql.DataFrame) =
-      Dedup.lshBands(
-        Dedup.minhash(d, col("doc_id"), Dedup.bigrams(col("text")), bnd * rpb),
-        bnd, rpb)
     // BUILD: base-only components, computed "yesterday" and checkpointed —
     // the artifact production persists (the fixture necessarily rebuilds
     // it in-query; the SERVE half below is what a daily run pays)
     val baseLabels = Dedup.connectedComponents(
-        Dedup.bucketStarEdges(bandsOf(base)))
+        Dedup.bucketStarEdges(Dedup.textBands(base, bnd, rpb)))
       .localCheckpoint(true)
     // today's full-bucket star edges, restricted to delta involvement
-    val deltaEdges = Dedup.bucketStarEdges(bandsOf(docs))
+    val deltaEdges = Dedup.bucketStarEdges(Dedup.textBands(docs, bnd, rpb))
       .filter(col("a") % 10 === 0 || col("b") % 10 === 0)
     // SERVE: contract through base labels, CC the delta-scale graph,
     // compose the label layers back ([[Dedup.ccIncrementalServe]])
@@ -1294,9 +1222,7 @@ object DedupQueries {
     val docs = table(s, dir, "documents")
     val base = docs.filter(col("doc_id") % 10 =!= 0)
     val (bnd, rpb) = Dedup.lshGeometry(base.count())
-    val baseBands = Dedup.lshBands(
-      Dedup.minhash(base, col("doc_id"), Dedup.bigrams(col("text")), bnd * rpb),
-      bnd, rpb).localCheckpoint(true)
+    val baseBands = Dedup.textBands(base, bnd, rpb).localCheckpoint(true)
     val baseLabels = Dedup.connectedComponents(Dedup.bucketStarEdges(baseBands))
     // BUILD persists; the ingest RESUMES from the committed version —
     // the daily pipeline's actual cross-session shape
@@ -1370,9 +1296,7 @@ object DedupQueries {
     // geometry frozen at BUILD time over the full corpus (the q110/q183
     // convention — retire never re-derives it from the shrunk corpus)
     val (bnd, rpb) = Dedup.lshGeometry(docs.count())
-    val bands = Dedup.lshBands(
-      Dedup.minhash(docs, col("doc_id"), Dedup.bigrams(col("text")), bnd * rpb),
-      bnd, rpb).localCheckpoint(true)
+    val bands = Dedup.textBands(docs, bnd, rpb).localCheckpoint(true)
     val labels = Dedup.connectedComponents(Dedup.bucketStarEdges(bands))
       .localCheckpoint(true) // tombstone derivation AND retire input
     val dels = labels
@@ -1527,9 +1451,7 @@ object DedupQueries {
     val docs = table(s, dir, "documents").select(col("doc_id"), col("text"))
     val n = docs.count()
     val (bnd, rpb) = Dedup.lshGeometry(n) // frozen at build
-    val bands = Dedup.lshBands(
-      Dedup.minhash(docs, col("doc_id"), Dedup.bigrams(col("text")), bnd * rpb),
-      bnd, rpb)
+    val bands = Dedup.textBands(docs, bnd, rpb)
     val labels = Dedup.connectedComponents(Dedup.bucketStarEdges(bands))
       .localCheckpoint(true)
     // growth across the geometry step: F id-shifted corpus copies.
@@ -1552,9 +1474,7 @@ object DedupQueries {
     // the geometry dial FIRED — re-index the grown corpus at the
     // re-derived config (the production response the dial schedules)
     val (b2, r2) = Dedup.lshGeometry(curN)
-    val bands2 = Dedup.lshBands(
-      Dedup.minhash(cur, col("doc_id"), Dedup.bigrams(col("text")), b2 * r2),
-      b2, r2)
+    val bands2 = Dedup.textBands(cur, b2, r2)
     val labels2 = Dedup.connectedComponents(Dedup.bucketStarEdges(bands2))
       .localCheckpoint(true)
     val after = Dedup.ccDials(curN, b2, r2, labels2)
@@ -1579,9 +1499,7 @@ object DedupQueries {
     val docs = table(s, dir, "documents").select(col("doc_id"), col("text"))
     val n = docs.count()
     val (bnd, rpb) = Dedup.lshGeometry(n)
-    val bands = Dedup.lshBands(
-      Dedup.minhash(docs, col("doc_id"), Dedup.bigrams(col("text")), bnd * rpb),
-      bnd, rpb).localCheckpoint(true)
+    val bands = Dedup.textBands(docs, bnd, rpb).localCheckpoint(true)
     val labels = Dedup.connectedComponents(Dedup.bucketStarEdges(bands))
     val path = graft.core.Graft.scratch("q183f_cc_index")
     Dedup.ccIndexSave(Dedup.CcIndex(bands, labels, bnd, rpb, n), path)
@@ -1634,29 +1552,16 @@ object DedupQueries {
       |  UNION ALL
       |  SELECT e.dst, d.dist + e.w FROM d2 d JOIN ed e ON e.src = d.node) GROUP BY node)
       |SELECT node, dist FROM d3""") { (s, dir) =>
-    import s.implicits._
     val pc = table(s, dir, "events")
       .groupBy(col("user_id"), col("event_type"))
       .agg(count(lit(1)).as("cnt"))
-    val w = (lit(1) + col("cnt") % 7).cast("long")
-    val ed = pc.select(concat(lit("u:"), col("user_id")).as("esrc"),
-        concat(lit("t:"), col("event_type")).as("edst"), w.as("w"))
-      .unionByName(pc.select(concat(lit("t:"), col("event_type")).as("esrc"),
-        concat(lit("u:"), col("user_id")).as("edst"), w.as("w")))
-      .localCheckpoint(true) // three relaxation rounds read it
+    val ed = Graph.userTypeEdges(pc, (lit(1) + col("cnt") % 7).cast("long").as("w"))
     // source derived IN the plan from pc (no second events scan), via
     // NULL-propagating concat so an empty/all-null fixture yields the
     // oracle's NULL-node row instead of the string "t:null"
-    var d = pc.agg(min(col("event_type")).as("t"))
-      .select(concat(lit("t:"), col("t")).as("node"), lit(0L).as("dist"))
-    for (_ <- 1 to 3) {
-      val relaxed = d.join(ed, d("node") === ed("esrc"))
-        .select(col("edst").as("node"), (col("dist") + col("w")).as("dist"))
-      d = d.unionByName(relaxed)
-        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint(true)
-    }
-    d
+    Graph.rounds(pc.agg(min(col("event_type")).as("t"))
+      .select(Graph.typeNode(col("t")).as("node"), lit(0L).as("dist")))(
+      Graph.relax(ed, col("w")))
   }
 
   /** k-anonymity audit — the privacy gate a training-data release runs
@@ -2084,8 +1989,7 @@ object DedupQueries {
         concat_ws(" ", slice(w, lit(1), greatest(size(w) - 5, lit(1)))).as("text")))
       .localCheckpoint(true) // feeds count, bands, and the verify sets
     val (b, r) = Dedup.lshGeometry(crawl.count())
-    val bands = Dedup.lshBands(
-      Dedup.minhash(crawl, col("doc_id"), Dedup.bigrams(col("text")), b * r), b, r)
+    val bands = Dedup.textBands(crawl, b, r)
       .localCheckpoint(true) // both sides of the bucket join
     // lshBands emits the id column as `id`
     val isEval = (col("id") % 97 === 0) && (col("id") < 1000000L)
@@ -2154,32 +2058,16 @@ object DedupQueries {
     val pairs = table(s, dir, "events")
       .select(col("user_id"), col("event_type")).distinct()
       .localCheckpoint(true) // feeds edges AND the seed derivation
-    val edges = pairs
-      .select(concat(lit("u:"), col("user_id")).as("src"),
-        concat(lit("t:"), col("event_type")).as("dst"))
-      .unionByName(pairs
-        .select(concat(lit("t:"), col("event_type")).as("src"),
-          concat(lit("u:"), col("user_id")).as("dst")))
-      .localCheckpoint(true) // reused by deg + every iteration
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
+    val edges = Graph.userTypeEdges(pairs)
+    val deg = Graph.outDegree(edges)
     val seed = pairs.agg(min(col("event_type")).as("t"))
-      .select(concat(lit("t:"), col("t")).as("node"))
+      .select(Graph.typeNode(col("t")).as("node"))
       .localCheckpoint(true) // injected into every iteration
-    var ranks = seed.select(col("node"), lit(1000000L).as("pr"))
-    for (_ <- 1 to 3) {
-      val contribs = edges
-        .join(ranks, col("src") === col("node"))
-        .join(deg, "src")
-        .select(col("dst"), expr("pr div d").as("contrib"))
-        .groupBy(col("dst"))
-        .agg(expr("(85 * sum(contrib)) div 100").as("pr"))
-        .select(col("dst").as("node"), col("pr"))
-      ranks = contribs
+    Graph.rounds(seed.select(col("node"), lit(1000000L).as("pr"))) { r =>
+      Graph.pagerankContrib(edges, deg)(r)
         .unionByName(seed.select(col("node"), lit(150000L).as("pr")))
         .groupBy(col("node")).agg(sum(col("pr")).as("pr"))
-        .localCheckpoint(true)
     }
-    ranks
   }
 
   /** DEGREE DISTRIBUTION of the near-dup candidate graph — the
@@ -2308,12 +2196,11 @@ object DedupQueries {
     val docs = table(s, dir, "documents")
     val cand = Dedup.candidatePairs(autoBands(docs))
       .localCheckpoint(true) // feeds the symmetrized list twice
-    val e2 = cand.select(col("a").as("s"), col("b").as("d"))
-      .unionByName(cand.select(col("b").as("s"), col("a").as("d")))
-    val deg = e2.groupBy(col("s").as("id")).agg(count(lit(1)).as("dg"))
+    val e2 = Graph.symmetric(cand)
+    val deg = Graph.outDegree(e2)
     val j = e2
-      .join(deg.select(col("id").as("s"), col("dg").as("x")), "s")
-      .join(deg.select(col("id").as("d"), col("dg").as("y")), "d")
+      .join(deg.select(col("src"), col("d").as("x")), "src")
+      .join(deg.select(col("src").as("dst"), col("d").as("y")), "dst")
     val st = j.agg(count(lit(1)).as("n"),
       sum(col("x")).cast("long").as("sx"), sum(col("y")).cast("long").as("sy"),
       sum(col("x") * col("y")).cast("long").as("sxy"),

@@ -31,7 +31,7 @@ class BenchRetrySpec extends AnyFunSuite {
   }
 
   test("loadBaseline parses the queries map; absent file is empty") {
-    val f = java.nio.file.Files.createTempFile("bench-base", ".json")
+    val f = TestSpark.tempFile("bench-base", ".json")
     java.nio.file.Files.write(f,
       """{"metric":"total","value":3.5,"queries":{"q1_agg":1.25,"q2_grep":2.25},
         |"calib_par_ms":900.0}""".stripMargin.replace("\n", "").getBytes("UTF-8"))
@@ -40,7 +40,7 @@ class BenchRetrySpec extends AnyFunSuite {
     java.nio.file.Files.delete(f)
     assert(Bench.loadBaseline("/nonexistent/path.json").isEmpty)
     // malformed JSON must degrade to "no retries", never throw
-    val g = java.nio.file.Files.createTempFile("bench-bad", ".json")
+    val g = TestSpark.tempFile("bench-bad", ".json")
     java.nio.file.Files.write(g, "{not json".getBytes("UTF-8"))
     assert(Bench.loadBaseline(g.toString).isEmpty)
     java.nio.file.Files.delete(g)

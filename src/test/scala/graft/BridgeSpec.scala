@@ -99,8 +99,8 @@ class BridgeSpec extends AnyFunSuite {
   }
 
   test("distcp copies a directory tree with -update skip semantics") {
-    val src = java.nio.file.Files.createTempDirectory("graft-cp-src")
-    val dst = java.nio.file.Files.createTempDirectory("graft-cp-dst").toString
+    val src = TestSpark.tempDir("graft-cp-src")
+    val dst = TestSpark.tempDir("graft-cp-dst").toString
     java.nio.file.Files.writeString(src.resolve("a.txt"), "hello")
     java.nio.file.Files.writeString(src.resolve("b.txt"), "world!")
     val first = DistCpLite.copy(spark, src.toString, dst)

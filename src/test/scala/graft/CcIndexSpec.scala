@@ -19,18 +19,13 @@ class CcIndexSpec extends AnyFunSuite {
     spark.read.parquet(s"${TestSpark.sf0001}/documents.parquet")
       .select(col("doc_id"), col("text"))
 
-  private def bandsOf(d: DataFrame, bnd: Int, rpb: Int): DataFrame =
-    Dedup.lshBands(
-      Dedup.minhash(d, col("doc_id"), Dedup.bigrams(col("text")), bnd * rpb),
-      bnd, rpb)
-
   private def same(a: DataFrame, b: DataFrame, what: String): Unit =
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
       s"$what diverged from the rebuild")
 
   test("ccRetire equals a full rebuild over the surviving band table — hub deletions included") {
     val (bnd, rpb) = Dedup.lshGeometry(docs.count())
-    val bands = bandsOf(docs, bnd, rpb).localCheckpoint(true)
+    val bands = Dedup.textBands(docs, bnd, rpb).localCheckpoint(true)
     val labels = Dedup.connectedComponents(Dedup.bucketStarEdges(bands))
       .localCheckpoint(true)
     // tombstone the HUBS: component minima are the bucket stars' centers,
@@ -56,7 +51,7 @@ class CcIndexSpec extends AnyFunSuite {
     val base = docs.filter(col("doc_id") % 10 =!= 0)
     val delta = docs.filter(col("doc_id") % 10 === 0)
     val (bnd, rpb) = Dedup.lshGeometry(base.count())
-    val baseBands = bandsOf(base, bnd, rpb).localCheckpoint(true)
+    val baseBands = Dedup.textBands(base, bnd, rpb).localCheckpoint(true)
     val baseLabels = Dedup.connectedComponents(
       Dedup.bucketStarEdges(baseBands)).localCheckpoint(true)
     // retire some base hubs, then stream the delta in — the daily mixed
@@ -68,10 +63,10 @@ class CcIndexSpec extends AnyFunSuite {
       base.count() - dels.count()))
     ingest.foldBatch(delta, 0L)
 
-    val net = bandsOf(base, bnd, rpb)
+    val net = Dedup.textBands(base, bnd, rpb)
       .join(dels.withColumnRenamed("id", "d"), col("id") === col("d"), "left_anti")
       .select("id", "band", "key")
-      .unionByName(bandsOf(delta, bnd, rpb))
+      .unionByName(Dedup.textBands(delta, bnd, rpb))
     val rebuilt = Dedup.connectedComponents(Dedup.bucketStarEdges(net))
     same(ingest.index.labels, rebuilt, "retire→append chain")
   }
@@ -88,7 +83,7 @@ class CcIndexSpec extends AnyFunSuite {
     val base = docs.filter(col("doc_id") % 10 =!= 0)
     val delta = docs.filter(col("doc_id") % 10 === 0).localCheckpoint(true)
     val (bnd, rpb) = Dedup.lshGeometry(base.count())
-    val baseBands = bandsOf(base, bnd, rpb).localCheckpoint(true)
+    val baseBands = Dedup.textBands(base, bnd, rpb).localCheckpoint(true)
     val baseLabels = Dedup.connectedComponents(Dedup.bucketStarEdges(baseBands))
     val p = graft.core.Graft.scratch("spec_cc_cycle")
     Dedup.ccIndexSave(
@@ -111,7 +106,7 @@ class CcIndexSpec extends AnyFunSuite {
     assert((bndL, rpbL) === ((bnd, rpb)), "frozen geometry must round-trip")
     assert(cntL === ingest.index.docCount - dels.count(),
       "the corpus-count definition must round-trip")
-    val net = bandsOf(base, bnd, rpb).unionByName(bandsOf(delta, bnd, rpb))
+    val net = Dedup.textBands(base, bnd, rpb).unionByName(Dedup.textBands(delta, bnd, rpb))
       .join(dels.withColumnRenamed("id", "d"), col("id") === col("d"),
         "left_anti")
       .select("id", "band", "key")

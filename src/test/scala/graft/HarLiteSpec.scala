@@ -16,7 +16,7 @@ class HarLiteSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
 
   private def mkTree(): String = {
-    val root = Files.createTempDirectory("harsrc")
+    val root = TestSpark.tempDir("harsrc")
     Files.write(root.resolve("a.txt"), "alpha".getBytes(UTF_8))
     Files.write(root.resolve("b.bin"), Array[Byte](0, 1, 2, -1, 127))
     val sub = Files.createDirectories(root.resolve("sub/deep"))
@@ -26,7 +26,7 @@ class HarLiteSpec extends AnyFunSuite {
 
   test("pack + ls + cat round trip, nested paths preserved") {
     val src = mkTree()
-    val arch = Files.createTempDirectory("hararch").toString
+    val arch = TestSpark.tempDir("hararch").toString
     HarLite.build(spark, src, arch)
 
     val listing = HarLite.ls(spark, arch)
@@ -44,7 +44,7 @@ class HarLiteSpec extends AnyFunSuite {
 
   test("cat's point filter reaches the parquet scan as a pushed filter") {
     val src = mkTree()
-    val arch = Files.createTempDirectory("hararch").toString
+    val arch = TestSpark.tempDir("hararch").toString
     HarLite.build(spark, src, arch)
     val plan = HarLite.cat(spark, arch, "a.txt")
       .queryExecution.executedPlan.toString
@@ -53,12 +53,12 @@ class HarLiteSpec extends AnyFunSuite {
   }
 
   test("small partBytes splits the archive into multiple sorted parts") {
-    val root = Files.createTempDirectory("harsrc")
+    val root = TestSpark.tempDir("harsrc")
     (0 until 40).foreach { i =>
       Files.write(root.resolve(f"f$i%02d.txt"),
         ("x" * 100 + i).getBytes(UTF_8))
     }
-    val arch = Files.createTempDirectory("hararch").toString
+    val arch = TestSpark.tempDir("hararch").toString
     HarLite.build(spark, root.toString, arch, partBytes = 1024)
     val parts = Paths.get(arch, "part").toFile.listFiles()
       .count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
@@ -70,8 +70,8 @@ class HarLiteSpec extends AnyFunSuite {
   }
 
   test("empty source fails loudly") {
-    val src = Files.createTempDirectory("harempty").toString
-    val arch = Files.createTempDirectory("hararch").toString
+    val src = TestSpark.tempDir("harempty").toString
+    val arch = TestSpark.tempDir("hararch").toString
     val e = intercept[Exception] {
       HarLite.build(spark, src, arch)
     }

@@ -41,9 +41,7 @@ class IndexStoreSpec extends AnyFunSuite {
   private def ccIndexOf(docs: DataFrame): Dedup.CcIndex = {
     val n = docs.count()
     val (bnd, rpb) = Dedup.lshGeometry(n)
-    val bands = Dedup.lshBands(
-      Dedup.minhash(docs, col("doc_id"), Dedup.bigrams(col("text")), bnd * rpb),
-      bnd, rpb).localCheckpoint(true)
+    val bands = Dedup.textBands(docs, bnd, rpb).localCheckpoint(true)
     Dedup.CcIndex(bands,
       Dedup.connectedComponents(Dedup.bucketStarEdges(bands))
         .localCheckpoint(true), bnd, rpb, n)

@@ -306,7 +306,7 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("named side outputs: one cached frame, N filtered sinks (MultipleOutputs)") {
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft-sideout"
+    val base = TestSpark.tempDir("graft-sideout").toString
     val df = Seq((1, "even"), (2, "odd"), (3, "even"), (4, "odd"), (5, "even"))
       .toDF("id", "tag").cache()
     try {
@@ -320,7 +320,7 @@ class OperatorsSpec extends AnyFunSuite {
   test("parquet compression codecs round-trip (snappy, zstd, gzip)") {
     val df = Seq((1L, "x"), (2L, "y")).toDF("k", "v")
     for (codec <- Seq("snappy", "zstd", "gzip")) {
-      val out = s"${System.getProperty("java.io.tmpdir")}/graft-codec-$codec"
+      val out = TestSpark.tempDir(s"graft-codec-$codec").toString
       df.write.mode("overwrite").option("compression", codec).parquet(out)
       assert(spark.read.parquet(out).count() == 2, codec)
     }

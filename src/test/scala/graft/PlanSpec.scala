@@ -1,6 +1,9 @@
 package graft
 
+import graft.operators.{Dedup, Graph}
 import graft.queries.{CoreQueries, JoinQueries}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan assertions: the scale posture is part of correctness.
@@ -77,8 +80,7 @@ class PlanSpec extends AnyFunSuite {
     import graft.operators.Dedup
     import org.apache.spark.sql.functions._
     val docs = spark.read.parquet(s"${TestSpark.sf0001}/documents.parquet")
-    val sig = Dedup.minhash(docs, col("doc_id"), Dedup.bigrams(col("text")), 16)
-    val edges = Dedup.bucketStarEdges(Dedup.lshBands(sig, 8, 2))
+    val edges = Dedup.bucketStarEdges(Dedup.textBands(docs, 8, 2))
     val p1 = edges.queryExecution.executedPlan.toString
     assert(!p1.contains("CartesianProduct")
       && !p1.contains("BroadcastNestedLoopJoin"), p1)
@@ -93,7 +95,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("partitioned layout prunes partitions at the scan") {
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft-prune-test"
+    val out = TestSpark.tempDir("graft-prune-test").toString
     import org.apache.spark.sql.functions._
     spark.read.parquet(s"${TestSpark.sf0001}/orders.parquet")
       .select(col("o_orderkey"), col("o_orderstatus"))
@@ -566,8 +568,7 @@ class PlanSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val docs = spark.read.parquet(s"${TestSpark.sf0001}/documents.parquet")
     import graft.operators.Dedup
-    val sig = Dedup.minhash(docs, col("doc_id"), Dedup.bigrams(col("text")), 16)
-    val edges = Dedup.bucketStarEdges(Dedup.lshBands(sig, 8, 2))
+    val edges = Dedup.bucketStarEdges(Dedup.textBands(docs, 8, 2))
       .filter(col("a") % 10 === 0 || col("b") % 10 === 0)
     val labels = edges.select(col("a").as("id")).distinct()
       .withColumn("lbl", col("id")).localCheckpoint(true)
@@ -584,33 +585,36 @@ class PlanSpec extends AnyFunSuite {
       && !p.contains("BroadcastNestedLoopJoin"), p.take(3000))
   }
 
-  // q188's rounds each end in a localCheckpoint, so build one relaxation
-  // round the way the query does and pin its shape: an equi join
-  // frontier→edges plus a map-side-combined min — never a window, never
-  // a nested loop.
+  // Every graph query's rounds end in a localCheckpoint
+  // (`Graph.rounds`), so a query's own plan is a checkpoint scan. Pin one
+  // round instead: the engine's round step over the engine's edge list —
+  // an equi join plus, where the step aggregates, a map-side-combined
+  // aggregate; never a window, never a nested loop.
+  private lazy val userTypePairs = spark.read.parquet(s"${TestSpark.sf0001}/events.parquet")
+    .select(col("user_id"), col("event_type")).distinct()
+  private lazy val userTypeEdges = Graph.userTypeEdges(userTypePairs)
+
+  private def assertRound(name: String, round: DataFrame, combined: Boolean): Unit = {
+    val p = round.queryExecution.executedPlan.toString
+    assert(!p.contains("Window"), s"$name round must not plan a window:\n" + p.take(3000))
+    assert(!p.contains("CartesianProduct")
+      && !p.contains("BroadcastNestedLoopJoin"), s"$name:\n" + p.take(3000))
+    if (combined)
+      assert("HashAggregate".r.findAllIn(p).size >= 2,
+        s"$name per-node aggregate must map-side combine:\n" + p.take(3000))
+  }
+
   test("q188 relaxation round is one equi join + partial-agg min, no window") {
-    import org.apache.spark.sql.functions._
     val pc = spark.read.parquet(s"${TestSpark.sf0001}/events.parquet")
       .groupBy(col("user_id"), col("event_type"))
       .agg(count(lit(1)).as("cnt"))
-    val w = (lit(1) + col("cnt") % 7).cast("long")
-    val ed = pc.select(concat(lit("u:"), col("user_id")).as("esrc"),
-        concat(lit("t:"), col("event_type")).as("edst"), w.as("w"))
-      .localCheckpoint(true)
+    val ed = Graph.userTypeEdges(pc, (lit(1) + col("cnt") % 7).cast("long").as("w"))
     val d = pc.agg(min(col("event_type")).as("t"))
-      .select(concat(lit("t:"), col("t")).as("node"), lit(0L).as("dist"))
+      .select(Graph.typeNode(col("t")).as("node"), lit(0L).as("dist"))
       .localCheckpoint(true)
-    val round = d.unionByName(
-        d.join(ed, d("node") === ed("esrc"))
-          .select(col("edst").as("node"), (col("dist") + col("w")).as("dist")))
-      .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-    val p = round.queryExecution.executedPlan.toString
-    assert(!p.contains("Window"), "relaxation must not plan a window:\n" + p.take(3000))
-    assert(!p.contains("CartesianProduct")
-      && !p.contains("BroadcastNestedLoopJoin"), p.take(3000))
-    // the min must partial-aggregate map-side: two HashAggregate levels
-    assert("HashAggregate".r.findAllIn(p).size >= 2,
-      "per-node min must map-side combine:\n" + p.take(3000))
+    assertRound("q188", Graph.relax(ed, col("w"))(d), combined = true)
+    // q160 is the same relaxation at unit weight
+    assertRound("q160", Graph.relax(userTypeEdges, lit(1L))(d), combined = true)
   }
 
   test("q189 lead window is partitioned by user; final join broadcasts the out-degree side") {
@@ -696,34 +700,31 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q196 personalized pagerank rounds are equi joins with map-side combined sums") {
-    // each round ends in a localCheckpoint — build one round the way the
-    // query does (the q188 convention) and pin its shape
-    import org.apache.spark.sql.functions._
-    val pairs = spark.read.parquet(s"${TestSpark.sf0001}/events.parquet")
-      .select(col("user_id"), col("event_type")).distinct()
-    val edges = pairs
-      .select(concat(lit("u:"), col("user_id")).as("src"),
-        concat(lit("t:"), col("event_type")).as("dst"))
+    val deg = Graph.outDegree(userTypeEdges)
+    val seed = userTypePairs.agg(min(col("event_type")).as("t"))
+      .select(Graph.typeNode(col("t")).as("node"))
       .localCheckpoint(true)
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
-    val seed = pairs.agg(min(col("event_type")).as("t"))
-      .select(concat(lit("t:"), col("t")).as("node"))
-      .localCheckpoint(true)
-    val ranks = seed.select(col("node"), lit(1000000L).as("pr"))
-    val round = edges
-      .join(ranks, col("src") === col("node"))
-      .join(deg, "src")
-      .select(col("dst"), expr("pr div d").as("contrib"))
-      .groupBy(col("dst"))
-      .agg(expr("(85 * sum(contrib)) div 100").as("pr"))
-      .select(col("dst").as("node"), col("pr"))
+    val round = Graph.pagerankContrib(userTypeEdges, deg)(
+        seed.select(col("node"), lit(1000000L).as("pr")))
       .unionByName(seed.select(col("node"), lit(150000L).as("pr")))
       .groupBy(col("node")).agg(sum(col("pr")).as("pr"))
-    val p = round.queryExecution.executedPlan.toString
-    assert(!p.contains("CartesianProduct")
-      && !p.contains("BroadcastNestedLoopJoin"), p.take(3000))
-    assert("HashAggregate".r.findAllIn(p).size >= 2,
-      "per-node sum must map-side combine:\n" + p.take(3000))
+    assertRound("q196", round, combined = true)
+  }
+
+  test("q127 pagerank, q142 label-prop and q168 k-core rounds are windowless equi joins") {
+    val deg = Graph.outDegree(userTypeEdges)
+    assertRound("q127", Graph.pagerankContrib(userTypeEdges, deg)(
+      deg.select(col("src").as("node"), lit(1000000L).as("pr"))), combined = true)
+    assertRound("q142", Graph.labelProp(userTypeEdges)(
+      userTypeEdges.select(col("src").as("node")).distinct()
+        .withColumn("lbl", col("node"))), combined = true)
+    // the peel's degree count runs inside its survivor checkpoint, so the
+    // round itself is the two endpoint semi joins
+    val docs = spark.read.parquet(s"${TestSpark.sf0001}/documents.parquet")
+    val (b, r) = Dedup.lshGeometry(docs.count())
+    val e0 = Graph.symmetric(Dedup.candidatePairs(Dedup.textBands(docs, b, r)))
+      .localCheckpoint(true)
+    assertRound("q168", Graph.peel(e0), combined = false)
   }
 
   test("q197 cell balance argmin prunes map-side; only the bounded centroid cross join") {

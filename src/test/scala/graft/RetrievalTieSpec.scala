@@ -22,7 +22,7 @@ class RetrievalTieSpec extends AnyFunSuite {
   // df: a* = 5 (ranks 1–5), k* = 3 (ranks 6–10: q186's query terms),
   // x/y = 2, the rest 1. Docs 42, 9 and 3 hold every k* term.
   private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-retrieval-ties").toString
+    val d = TestSpark.tempDir("graft-retrieval-ties").toString
     Seq(
       (42L, "a1 a2 a3 a4 a5 k1 k2 k3 k4 k5 z"),
       (9L, "a1 a2 a3 a4 a5 k1 k2 k3 k4 k5 x y"),

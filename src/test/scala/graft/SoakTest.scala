@@ -492,9 +492,7 @@ class SoakTest extends AnyFunSuite {
     val (bnd, rpb) = Dedup.lshGeometry(baseDocs.count())
     println(s"SOAK183 geometry: bands=$bnd rows=$rpb")
     def bandsOf(d: org.apache.spark.sql.DataFrame) =
-      Dedup.lshBands(
-        Dedup.minhash(d, col("doc_id"), Dedup.bigrams(col("text")), bnd * rpb),
-        bnd, rpb)
+      Dedup.textBands(d, bnd, rpb)
     def time(name: String)(f: => Long): Unit = {
       val t0 = System.nanoTime()
       val rows = f
@@ -557,9 +555,7 @@ class SoakTest extends AnyFunSuite {
     val deltaDocs = docs.filter(col("doc_id") % 10 === 0)
     val (bnd, rpb) = Dedup.lshGeometry(baseDocs.count())
     def bandsOf(d: org.apache.spark.sql.DataFrame) =
-      Dedup.lshBands(
-        Dedup.minhash(d, col("doc_id"), Dedup.bigrams(col("text")), bnd * rpb),
-        bnd, rpb)
+      Dedup.textBands(d, bnd, rpb)
     def time(name: String)(f: => Long): Unit = {
       val t0 = System.nanoTime()
       val rows = f
@@ -1428,26 +1424,15 @@ class SoakTest extends AnyFunSuite {
       graft.queries.DedupQueries.q127Pagerank.run(spark, s"$dir/pagerank").count()
     }
     locally {
-      val pairs = spark.read.parquet(s"$dir/pagerank/events.parquet")
-        .select(col("user_id"), col("event_type")).distinct()
-      val edges = pairs
-        .select(concat(lit("u:"), col("user_id")).as("src"),
-          concat(lit("t:"), col("event_type")).as("dst"))
-        .unionByName(pairs
-          .select(concat(lit("t:"), col("event_type")).as("src"),
-            concat(lit("u:"), col("user_id")).as("dst")))
-        .localCheckpoint(true)
-      val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
+      import graft.operators.Graph
+      val edges = Graph.userTypeEdges(spark.read.parquet(s"$dir/pagerank/events.parquet")
+        .select(col("user_id"), col("event_type")).distinct())
+      val deg = Graph.outDegree(edges)
       var ranks = deg.select(col("src").as("node"), lit(1000000L).as("pr"))
       for (it <- 1 to 10) {
         val t0 = System.nanoTime()
-        ranks = edges
-          .join(ranks, col("src") === col("node"))
-          .join(deg, "src")
-          .select(col("dst"), expr("pr div d").as("contrib"))
-          .groupBy(col("dst"))
-          .agg((lit(150000L) + expr("(85 * sum(contrib)) div 100")).as("pr"))
-          .select(col("dst").as("node"), col("pr"))
+        ranks = Graph.pagerankContrib(edges, deg)(ranks)
+          .select(col("node"), (lit(150000L) + col("pr")).as("pr"))
           .localCheckpoint(true)
         println(f"SOAK100C q127 iter $it%2d: ${(System.nanoTime() - t0) / 1e9}%5.1fs")
       }

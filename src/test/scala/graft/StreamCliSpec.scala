@@ -8,7 +8,7 @@ class StreamCliSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def writeLines(name: String, lines: Seq[String]): String = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft-$name")
+    val dir = TestSpark.tempDir(s"graft-$name")
     java.nio.file.Files.write(dir.resolve("part-00000"),
       lines.mkString("\n").getBytes("UTF-8"))
     dir.toString
@@ -386,7 +386,7 @@ class StreamCliSpec extends AnyFunSuite {
   test("-outputformat SequenceFileOutputFormat writes a real seqfile, keys with tabs survive") {
     import spark.implicits._
     val in = writeLines("seqoutin", Seq("a\tx\t1", "b\ty\t2"))
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft-seqout-${System.nanoTime()}"
+    val out = s"${TestSpark.tempDir("graft-seqout")}/out"
     // 2-field keys mean the KEY ITSELF contains the separator — the text
     // sink's read-back re-splits framing, the seqfile sink stores records
     val got = StreamJob.run(spark, Seq(
@@ -469,7 +469,7 @@ class StreamCliSpec extends AnyFunSuite {
   test("custom field separator and -output round trip") {
     import spark.implicits._
     val in = writeLines("sepout", Seq("a,1", "b,2", "a,3"))
-    val out = java.nio.file.Files.createTempDirectory("graft-sepout").toString
+    val out = TestSpark.tempDir("graft-sepout").toString
     val got = StreamJob.run(spark, Seq(
       "-input", in, "-output", out,
       "-reducer", "NONE",

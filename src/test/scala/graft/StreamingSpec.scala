@@ -71,7 +71,7 @@ class StreamingSpec extends AnyFunSuite {
     // aggregate per event_type, compare against the batch answer
     val dir = TestSpark.sf0001
     // file sources watch a directory; stage the fixture into one
-    val streamDir = java.nio.file.Files.createTempDirectory("graft-stream")
+    val streamDir = TestSpark.tempDir("graft-stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$dir/events.parquet"),
       streamDir.resolve("events.parquet"))
@@ -407,7 +407,7 @@ class StreamingSpec extends AnyFunSuite {
     val days = obs.groupBy(_.day).toSeq.sortBy(_._1)
     val types = obs.map(_.eventType).distinct.toSeq
     val sentinel = obs.map(_.day).max + 100
-    val root = java.nio.file.Files.createTempDirectory("graft-ewma-ck").toString
+    val root = TestSpark.tempDir("graft-ewma-ck").toString
     val (srcDir, outDir, ckDir) = (s"$root/src", s"$root/out", s"$root/ck")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
     var fileNo = 0
@@ -888,9 +888,7 @@ class StreamingSpec extends AnyFunSuite {
       val base = docs.filter(col("doc_id") % 10 =!= 0)
       val n = base.count()
       val (bnd, rpb) = Dedup.lshGeometry(n)
-      val bands = Dedup.lshBands(
-        Dedup.minhash(base, col("doc_id"), Dedup.bigrams(col("text")), bnd * rpb),
-        bnd, rpb).localCheckpoint(true)
+      val bands = Dedup.textBands(base, bnd, rpb).localCheckpoint(true)
       val labels = Dedup.connectedComponents(Dedup.bucketStarEdges(bands))
         .localCheckpoint(true)
       (Dedup.CcIndex(bands, labels, bnd, rpb, n),
@@ -1015,9 +1013,7 @@ class StreamingSpec extends AnyFunSuite {
     val delta = docs.filter(col("doc_id") % 10 === 0)
     val (bnd, rpb) = Dedup.lshGeometry(base.count())
     def bandsOf(d: org.apache.spark.sql.DataFrame) =
-      Dedup.lshBands(
-        Dedup.minhash(d, col("doc_id"), Dedup.bigrams(col("text")), bnd * rpb),
-        bnd, rpb)
+      Dedup.textBands(d, bnd, rpb)
     val baseBands = bandsOf(base).localCheckpoint(true)
     val baseLabels = Dedup.connectedComponents(Dedup.bucketStarEdges(baseBands))
       .localCheckpoint(true)

@@ -19,13 +19,26 @@ object TestSpark {
       .config("spark.sql.codegen.cache.maxEntries",
         graft.core.Graft.CodegenCacheEntries.toString)
       .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
+        tempDir("graft-wh").toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }
   val sf0001 = "/root/testdata/sf0.001"
+
+  // under the per-JVM run root (`Graft.scratch`), whose shutdown hook
+  // deletes it when the forked test JVM exits
+  private lazy val tmpRoot = java.nio.file.Files.createDirectories(
+    java.nio.file.Paths.get(graft.core.Graft.scratch("tmp")))
+
+  /** A fresh directory that is deleted when the test JVM exits. */
+  def tempDir(prefix: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(tmpRoot, prefix)
+
+  /** A fresh file that is deleted when the test JVM exits. */
+  def tempFile(prefix: String, suffix: String): java.nio.file.Path =
+    java.nio.file.Files.createTempFile(tmpRoot, prefix, suffix)
 
   /** Runs `body` at session shuffle width `w` (`Graft.width`), then
     * restores the previous width.

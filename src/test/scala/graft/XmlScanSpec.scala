@@ -9,7 +9,7 @@ class XmlScanSpec extends AnyFunSuite {
 
   test("multi-line records crossing split boundaries are all recovered") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-xmlscan")
+    val dir = TestSpark.tempDir("graft-xmlscan")
     // one big file, records of varying width with embedded newlines and
     // inter-record junk; tiny splits force records across split boundaries
     val body = (1 to 200).map { i =>
@@ -34,7 +34,7 @@ class XmlScanSpec extends AnyFunSuite {
 
   test("gzip input is one unsplittable split and parses identically") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-xmlgz")
+    val dir = TestSpark.tempDir("graft-xmlgz")
     val body = (1 to 200).map { i =>
       s"<rec>\n  <name>doc-$i${"x" * (i % 17)}</name>\n  <key>$i</key>\n</rec>"
     }.mkString("\n junk \n")
@@ -62,7 +62,7 @@ class XmlScanSpec extends AnyFunSuite {
 
   test("recordsExact keeps nested begin tags inside one record") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-xmlnest")
+    val dir = TestSpark.tempDir("graft-xmlnest")
     // the reference's begin-then-end scan: the nested <doc> stays inside
     // the record, which ends at the FIRST </doc> after its begin
     java.nio.file.Files.write(dir.resolve("n.xml"),
@@ -74,7 +74,7 @@ class XmlScanSpec extends AnyFunSuite {
 
   test("recordsExact matches records() on non-nested multi-record files") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-xmlboth")
+    val dir = TestSpark.tempDir("graft-xmlboth")
     val body = (1 to 50).map(i => s"<rec>\n<key>$i</key>\n</rec>")
       .mkString("\njunk\n")
     java.nio.file.Files.write(dir.resolve("b.xml"), body.getBytes("UTF-8"))
@@ -87,7 +87,7 @@ class XmlScanSpec extends AnyFunSuite {
 
   test("a truncated trailing record is dropped, not fabricated") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-xmltrunc")
+    val dir = TestSpark.tempDir("graft-xmltrunc")
     // file cut off mid-record: the unterminated '<rec><key>3' must NOT be
     // emitted as a well-formed record
     java.nio.file.Files.write(dir.resolve("t.xml"),

@@ -3,11 +3,15 @@
 
 Usage: tools/benchgate.py <bench.json> [baseline.json] [max_ratio]
 
-Compares a fresh `graft.Bench` line (min-of-2, post round-6 harness fix)
-against the committed BENCH_BASELINE.json, after normalizing by the
-all-cores calibration ratio (calib_par_ms) so a contended host doesn't
-fire false alarms. Fails (exit 1) when any query exceeds max_ratio
-(default 2.0) times its baseline, or errored, or vanished.
+Compares a fresh `graft.Bench` record (target/bench_latest.json, or the
+full stdout line; min-of-2, post round-6 harness fix) against the
+committed BENCH_BASELINE.json, after normalizing by the all-cores
+calibration ratio (calib_par_ms) so a contended host doesn't fire false
+alarms. Fails (exit 1) when any query exceeds max_ratio (default 2.0)
+times its baseline, or errored, or vanished. Warns CROSS-SHAPE when the
+record's core count (`cpus`) differs from the baseline's or the baseline
+records none: the calibration probe cannot see core count, so such a
+ratio compares host shapes, not code.
 
 Refresh the baseline deliberately (never silently) by copying a healthy
 run's JSON over BENCH_BASELINE.json in the same commit that explains why.
@@ -50,6 +54,9 @@ def main():
     norm = (c_cur / c_base) if (c_cur and c_base) else 1.0
     # a FASTER host must not hide a regression; only slower hosts get slack
     norm = max(norm, 1.0)
+    if base.get("cpus") is None or cur.get("cpus") != base.get("cpus"):
+        print(f"CROSS-SHAPE  record cpus={cur.get('cpus')} vs baseline "
+              f"cpus={base.get('cpus')}: the ratios below compare host shapes")
     bad = []
     floor = 0.25  # sub-250ms queries are noise-dominated even at min-of-2
     for name, b in sorted(base["queries"].items()):
