@@ -29,11 +29,32 @@ import org.apache.spark.sql.functions.col
   * [[graft.core.IndexStore.prune]] grace window the two-JVM soak
   * exercises against a live writer.
   *
+  * Each batch line, and the final line for the load, carries `compiles`:
+  * the generated classes compiled in that step ([[graft.core.Graft
+  * .codegenCompiles]]). From the third batch on it should read ~0.
+  *
   * Usage: KnnServeMain <indexPath> <deltaParquet> [<deltaParquet2> ...]
   * (delta parquet schema: xid long, xvec array<float>; ids unique
   * across index ∪ all deltas — the append contract)
   */
 object KnnServeMain {
+  /** The delta schema of the usage line. */
+  private val DeltaSchema =
+    org.apache.spark.sql.types.StructType.fromDDL("xid BIGINT, xvec ARRAY<FLOAT>")
+
+  /** One delta batch, read with [[DeltaSchema]] instead of an inference
+    * job. A file whose column has another type fails in the parquet
+    * reader; a file without `xid` or `xvec` reads them as nulls, which
+    * fail here.
+    */
+  def readDelta(spark: org.apache.spark.sql.SparkSession,
+                path: String): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.{lit, raise_error, when}
+    def present(c: String) = when(col(c).isNull, raise_error(
+      lit(s"KnnServeMain: delta $path has a null or missing $c"))).otherwise(col(c)).as(c)
+    spark.read.schema(DeltaSchema).parquet(path).select(present("xid"), present("xvec"))
+  }
+
   def main(args: Array[String]): Unit = {
     if (args.length < 2) {
       System.err.println(
@@ -51,6 +72,7 @@ object KnnServeMain {
       probes = raw.probes.localCheckpoint(true),
       assignD2 = raw.assignD2.localCheckpoint(true),
       directed = raw.directed.localCheckpoint(true))
+    val compiles0 = graft.core.Graft.codegenCompiles
     val t0 = System.nanoTime()
     // every load reads the directory of the one commit it resolved, so
     // `v` is always the version the batch was answered from
@@ -58,22 +80,25 @@ object KnnServeMain {
     var v = c0.version
     var idx = pinned(idx0)
     val load = (System.nanoTime() - t0) / 1e9
+    val loadCompiles = graft.core.Graft.codegenCompiles - compiles0
     val batches = args.drop(1).toSeq.map { deltaPath =>
       val t1 = System.nanoTime()
+      val cc1 = graft.core.Graft.codegenCompiles
       val c = IndexStore.committed(spark, indexPath)
       if (c.version != v) { // a writer moved the store — refresh before folding
         idx = pinned(IndexFamily.read[Similarity.KnnIndex](spark, indexPath, c))
         v = c.version
       }
-      val delta = spark.read.parquet(deltaPath).select(col("xid"), col("xvec"))
-      idx = graft.operators.Similarity.knnGraphAppend(idx, delta)
+      idx = graft.operators.Similarity.knnGraphAppend(idx, readDelta(spark, deltaPath))
       val edges = graft.operators.Similarity.mutualize(idx.directed).count()
       val line =
-        f"""{"edges":$edges,"v":$v,"sec":${(System.nanoTime() - t1) / 1e9}%.1f}"""
+        f"""{"edges":$edges,"v":$v,"sec":${(System.nanoTime() - t1) / 1e9}%.1f,""" +
+          s""""compiles":${graft.core.Graft.codegenCompiles - cc1}}"""
       System.err.println(s"KNNSERVE_BATCH $line") // streamed for 2-JVM soaks
       line
     }
-    println(f"""{"load_sec":$load%.1f,"batches":[${batches.mkString(",")}]}""")
+    println(f"""{"load_sec":$load%.1f,"batches":[${batches.mkString(",")}],""" +
+      s""""compiles":$loadCompiles}""")
     spark.stop()
   }
 }
@@ -123,6 +148,7 @@ object RagServeMain {
     var v = c0.version
     var idx = idx0
     val load = (System.nanoTime() - t0) / 1e9
+    val docs = spark.read.parquet(docsPath) // its schema inferred once
     val queries = qdocs.map { qdoc =>
       val t1 = System.nanoTime()
       val c = IndexStore.committed(spark, indexPath)
@@ -132,7 +158,7 @@ object RagServeMain {
       }
       // the query doc is ONE row — scan the corpus for it once (pushdown
       // on doc_id), then derive terms and the dense vector from that row
-      val qdocRow = spark.read.parquet(docsPath)
+      val qdocRow = docs
         .filter(col("doc_id") === qdoc).localCheckpoint(true)
       val res = Retrieval.ragServeDisk(idx,
         Retrieval.ragQueryTermsOf(qdocRow, qdoc).localCheckpoint(true),

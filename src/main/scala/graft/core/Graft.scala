@@ -11,18 +11,48 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * knobs live on one tuned `SparkSession`. All settings are chosen for the
   * 100 TB posture: AQE on (runtime re-plan, skew-join splitting, partition
   * coalescing), explicit shuffle parallelism, and broadcast joins enabled so
-  * small dimension tables never shuffle.
+  * small dimension tables never shuffle. Generated classes are cached for
+  * the JVM and named by their code, not their codegen stage id, so a plan
+  * that only renumbers its stages (a chained append) reuses them
+  * ([[SharedConf]]).
   */
 object Graft {
 
   /** Size of Spark's JVM-wide LRU cache of compiled whole-stage classes
     * (`spark.sql.codegen.cache.maxEntries`, default 100). Passes repeat
     * the same queries, so a cache below the working set recompiles most
-    * classes every pass. Distinct classes measured at sf0.001: 126 for
-    * the eleven `etl` queries, ~400 for the k-NN arc, 4,655 for the
-    * 285-query board (whose metaspace grows 268 → 302 MB at this size).
+    * classes every pass. Classes compiled in one fresh JVM at sf0.001:
+    * 122 for the eleven `etl` queries, 470 for the ten q167 k-NN queries,
+    * and 4,655 for the 285-query board (whose metaspace grows 268 → 302
+    * MB at this size; counted while class names still carried stage ids,
+    * which put the q167 queries at 829).
     */
   val CodegenCacheEntries = 8192
+
+  /** The confs every session of an engine JVM shares — applied by
+    * [[session]] and by the test sessions, so no copy can miss one.
+    *
+    * `spark.sql.codegen.useIdInClassName=false` names each generated
+    * class by its code alone. Spark's default names it after the
+    * whole-stage codegen stage id, and the cache keys on the source, so
+    * two plans whose stages differ only in numbering miss each other's
+    * classes. A chained k-NN append adds one union child per batch and
+    * shifts every later stage id: `KnnServeMain` over the sf0.01 `index`
+    * store and three chained 50-vector deltas compiled 160 / 82–87 /
+    * 62–75 classes (load + batch 0 / batch 1 / batch 2) with ids in the
+    * names, 126–128 / 22–29 / 0–5 without. The name is the only thing it
+    * changes.
+    */
+  val SharedConf: Map[String, String] = Map(
+    "spark.sql.session.timeZone" -> "UTC",
+    // tolerate a TIMESTAMP(NANOS) events fixture (one generation of the
+    // fixture shipped that): read it as epoch-nanos LongType instead of
+    // erroring.
+    // [[tsUs]] normalizes whichever shape arrives.
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString,
+    "spark.sql.codegen.useIdInClassName" -> "false",
+    "spark.ui.enabled" -> "false")
 
   /** Local cores for an engine main: `SPARK_GRAFT_CPUS`, else every core
     * the JVM sees. The one place that variable is read.
@@ -40,8 +70,9 @@ object Graft {
   /** Create (or reuse) a tuned local session — the ONE session factory:
     * the codegen cache size is a static conf Spark reads once per JVM, so
     * a session built elsewhere runs at the default and recompiles every
-    * pass. Mains pass [[cores]] for both `cores` and `shufflePartitions`;
-    * on a real cluster the same conf minus `master` applies.
+    * pass (test sessions apply [[SharedConf]] for the same reason).
+    * Mains pass [[cores]] for both `cores` and `shufflePartitions`; on a
+    * real cluster the same conf minus `master` applies.
     */
   def session(appName: String, cores: String,
               shufflePartitions: Int): SparkSession = {
@@ -54,13 +85,7 @@ object Graft {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      // tolerate a TIMESTAMP(NANOS) events fixture (one driver generation
-      // shipped that): read it as epoch-nanos LongType instead of erroring.
-      // [[tsUs]] normalizes whichever shape arrives.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
-      .config("spark.ui.enabled", "false")
+      .config(SharedConf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -488,12 +488,11 @@ object Similarity {
     * re-materializes the base payloads.
     */
   def knnGraphAppend(idx: KnnIndex, delta: DataFrame): KnnIndex = {
+    // narrow views of cellRanked's checkpoint: no recompute to cut
     val dRanked = cellRanked(delta, idx.centroids, idx.nProbe)
     val dAssign = dRanked.filter(col("rn") === 1)
       .select(col("xid").as("nid"), col("cid"), col("d2"))
-      .localCheckpoint(true) // feeds touched, servTouched, and the new index
     val dProbes = dRanked.select(col("xid").as("qid"), col("cid"))
-      .localCheckpoint(true) // feeds fullDirected and the new index
     val touched = dAssign.select(col("cid")).distinct().localCheckpoint(true)
     val servTouched = capCells(idx.assignD2.unionByName(dAssign)
         .join(broadcast(touched), "cid"), idx.cap)

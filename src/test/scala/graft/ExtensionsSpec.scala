@@ -18,9 +18,7 @@ class ExtensionsSpec extends AnyFunSuite {
         .master("local[2]")
         .appName("graft-ext-test")
         .config("spark.sql.shuffle.partitions", "2")
-        .config("spark.sql.codegen.cache.maxEntries",
-          graft.core.Graft.CodegenCacheEntries.toString)
-        .config("spark.ui.enabled", "false")
+        .config(graft.core.Graft.SharedConf)
         .withExtensions(new GraftExtensions)
         .getOrCreate()
       val got = s.sql("SELECT graft_hash32('a') AS h, graft_hash32('a', 1) AS h1")

@@ -257,4 +257,25 @@ class KnnIncrementalSpec extends AnyFunSuite {
     assert(got.exceptAll(want).isEmpty, "cycle rows missing from rebuild")
     assert(want.exceptAll(got).isEmpty, "rebuild rows missing from cycle")
   }
+
+  test("the serve CLI reads a delta of its declared schema and fails loudly on another") {
+    val emb = spark.read.parquet(s"${TestSpark.sf0001}/embeddings.parquet")
+      .filter(col("vec_id") < 20)
+    val dir = TestSpark.tempDir("graft-knn-delta")
+    def write(name: String, cols: org.apache.spark.sql.Column*): String = {
+      val p = s"$dir/$name"
+      emb.select(cols: _*).coalesce(1).write.parquet(p)
+      p
+    }
+    val good = write("good", col("vec_id").as("xid"), col("embedding").as("xvec"))
+    val got = KnnServeMain.readDelta(spark, good)
+    assert(got.schema.map(f => f.name -> f.dataType.simpleString) ==
+      Seq("xid" -> "bigint", "xvec" -> "array<float>"))
+    assert(got.count() == 20)
+    val wide = write("double", col("vec_id").as("xid"),
+      col("embedding").cast("array<double>").as("xvec"))
+    val renamed = write("renamed", col("vec_id").as("xid"), col("embedding").as("vec"))
+    for (bad <- Seq(wide, renamed))
+      intercept[Exception](KnnServeMain.readDelta(spark, bad).collect())
+  }
 }

@@ -195,16 +195,15 @@ class PlanSpec extends AnyFunSuite {
       "corpus-sized cartesian:\n" + p.take(3000))
   }
 
-  test("q127 pagerank and q128 set-sim join never plan a cartesian") {
-    // both are equi-join families: pagerank's per-iteration (src) joins
-    // and set-sim's prefix-token + verify joins must all key-match — a
-    // nested-loop anywhere means the pruning structure was lost
-    for (q <- Seq(graft.queries.DedupQueries.q127Pagerank,
-        graft.queries.DedupQueries.q128SetsimJoin)) {
-      val p = plan(q)
-      assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
-        s"${q.name} planned a nested loop:\n" + p.take(3000))
-    }
+  test("q128 set-sim join never plans a cartesian") {
+    // an equi-join family: set-sim's prefix-token + verify joins must all
+    // key-match — a nested loop anywhere means the pruning structure was
+    // lost. (q127 returns its last round's checkpoint scan, so its plan
+    // shows no join; the round-step test below pins its rounds.)
+    val q = graft.queries.DedupQueries.q128SetsimJoin
+    val p = plan(q)
+    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
+      s"${q.name} planned a nested loop:\n" + p.take(3000))
   }
 
   test("q149 star join broadcasts its dims and pushes the status filter; no cartesian") {

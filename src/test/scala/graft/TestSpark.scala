@@ -12,15 +12,11 @@ object TestSpark {
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("GRAFT_TEST_SHUFFLE", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // same codegen cache as Graft.session: static, sized at the JVM's
-      // first compile, so this first session of the test JVM fixes it
-      .config("spark.sql.codegen.cache.maxEntries",
-        graft.core.Graft.CodegenCacheEntries.toString)
+      // the confs of Graft.session; the codegen cache size is static,
+      // sized at the JVM's first compile, so this first session fixes it
+      .config(graft.core.Graft.SharedConf)
       .config("spark.sql.warehouse.dir",
         tempDir("graft-wh").toString)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
