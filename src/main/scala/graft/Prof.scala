@@ -11,6 +11,10 @@ package graft
   * store_schemas, or any registered query name (PHASE
   * `<name> build` times frame construction, eager checkpoints included,
   * then PHASE `<name>` the drain).
+  * setsim_detail splits q128's set-similarity join (t = 0.8, no
+  * exact-set collapse) into its phases — sorted store, prefix rows,
+  * candidate distinct, and `Dedup.setSimVerify`, the join's own verify —
+  * then runs the full `Dedup.setSimJoin`.
   * PHASE lines also count generated classes compiled: name a lane twice,
   * and a warm phase that still compiles has outgrown the codegen cache.
   */
@@ -136,12 +140,7 @@ object Prof {
         phase("setsim pref count")(drain(pref.select(col("id"))))
         val c = phase("setsim cand distinct")(cand.localCheckpoint(true))
         System.err.println(s"[prof] cand rows ${c.count()}")
-        phase("setsim verify join")(drain(
-          c.join(sorted.select(col("id").as("a"), col("ws").as("wa"), col("n").as("na")), "a")
-            .join(sorted.select(col("id").as("b"), col("ws").as("wb"), col("n").as("nb")), "b")
-            .withColumn("inter", size(array_intersect(col("wa"), col("wb"))).cast("long"))
-            .filter(lit(100) * col("inter") >= lit(80) * (col("na") + col("nb") - col("inter")))
-            .select(col("a"), col("b"), col("inter"), col("na"), col("nb"))))
+        phase("setsim verify join")(drain(Dedup.setSimVerify(c, sorted, 80)))
         phase("setsim FULL q128")(drain(Dedup.setSimJoin(docs, 80)))
       case "vec_micro" =>
         // isolates the quantize/encode kernels (ScaleLongs/Sq8Recon255 vs

@@ -28,7 +28,7 @@ import java.io.ByteArrayOutputStream
   * }}}
   *
   * Scale posture: one video = one binary cell; decode runs inside the
-  * [[Multimodal]] per-partition batched pipeline (no driver involvement),
+  * [[Multimodal]] per-partition decode pipeline (no driver involvement),
   * and FRAME SAMPLING — the curation operation the brief names — happens
   * at the container level, so unsampled frames' JPEG payloads are never
   * entropy-decoded: sampling an every-k-th-frame subset costs the chunk

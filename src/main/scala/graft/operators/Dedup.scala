@@ -211,12 +211,7 @@ object Dedup {
     val touched = deltaBands.select(col("band"), col("key")).distinct()
     val members = bands.unionByName(deltaBands)
       .join(touched, Seq("band", "key"), "left_semi")
-    val bucket = Window.partitionBy(col("band"), col("key"))
-    val star = members
-      .select(col("id"), min(col("id")).over(bucket).as("hub"))
-      .filter(col("id") =!= col("hub"))
-      .select(col("id").as("a"), col("hub").as("b"))
-      .distinct()
+    val star = bucketStarEdges(members)
       .localCheckpoint(true) // both involvement semijoins read it
     val deltaIds = deltaBands.select(col("id")).distinct()
     star.join(deltaIds.withColumnRenamed("id", "a"), Seq("a"), "left_semi")
@@ -252,7 +247,7 @@ object Dedup {
     *
     * Returns (bands, labels) — the updated index. Parity: ≡ a full
     * [[connectedComponents]] rebuild over the surviving band table
-    * (CcRetireSpec asserts the two-way exceptAll, hub deletions and
+    * (CcIndexSpec asserts the two-way exceptAll, hub deletions and
     * component splits included).
     */
   def ccRetire(bands: DataFrame, labels: DataFrame,
@@ -269,13 +264,7 @@ object Dedup {
     val touched = bands2.join(broadcast(affected), "id")
       .select(col("band"), col("key")).distinct()
     val members = bands2.join(touched, Seq("band", "key"), "left_semi")
-    val bucket = Window.partitionBy(col("band"), col("key"))
-    val subEdges = members
-      .select(col("id"), min(col("id")).over(bucket).as("hub"))
-      .filter(col("id") =!= col("hub"))
-      .select(col("id").as("a"), col("hub").as("b"))
-      .distinct()
-    val subLabels = connectedComponents(subEdges)
+    val subLabels = connectedComponents(bucketStarEdges(members))
     // the USING-key anti join fronts `lbl`; restore the (id, lbl) build
     // order so consumers can rely on one column layout
     val labels2 = labels.join(broadcast(delComps), Seq("lbl"), "left_anti")
@@ -503,7 +492,6 @@ object Dedup {
     * sweep leaked snapshots between queries as a backstop).
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    val ccT0 = System.nanoTime()
     // undirected: propagate both ways. One explode, not a 2-branch union —
     // a union would evaluate the (unpersisted) upstream candidate-pair
     // pipeline once per branch
@@ -520,9 +508,6 @@ object Dedup {
       .agg(min(col("b")).as("nb"))
       .select(col("id"), least(col("id"), col("nb")).as("lbl"))
       .localCheckpoint(true)
-    if (sys.env.contains("SPARK_GRAFT_CC_TRACE"))
-      System.err.println(f"[cc] seed (incl. upstream build) " +
-        f"${(System.nanoTime() - ccT0) / 1e9}%.2f s")
     var labels = ckpt
     // every init label is fresh, so round 0's frontier is all of them
     var frontier = ckpt
@@ -552,8 +537,6 @@ object Dedup {
       val nextFrontier = next.filter(col("lbl") < col("old"))
         .select(col("id"), col("lbl"))
       val nChanged = nextFrontier.count()
-      if (sys.env.contains("SPARK_GRAFT_CC_TRACE"))
-        System.err.println(s"[cc] round ${it + 1}: frontier $nChanged")
       // Dataset.unpersist is a no-op for localCheckpoint blocks (they live
       // at the RDD level, outside the CacheManager) — free the superseded
       // round's snapshot through its LogicalRDD, or maxIter corpus-sized
@@ -566,9 +549,6 @@ object Dedup {
       it += 1
     }
     edges.unpersist()
-    if (sys.env.contains("SPARK_GRAFT_CC_TRACE"))
-      System.err.println(f"[cc] converged in $it rounds, " +
-        f"${(System.nanoTime() - ccT0) / 1e9}%.2f s")
     if (!converged)
       sys.error(s"connectedComponents: no fixpoint after $maxIter rounds " +
         "(graph diameter exceeds the bound — raise maxIter)")
@@ -706,6 +686,34 @@ object Dedup {
         probe.getLong(1) * 5L >= probe.getLong(2))
   }
 
+  /** The REPRESENTATIVE store: one row of [[setSimSorted]]'s store per
+    * distinct token set (its min id), re-pinned to the session width and
+    * frozen — the rep join's exchange AQE-coalesces this small store to
+    * ~1 partition, and the checkpoint would freeze that, serializing the
+    * prefix explode + candidate-exchange map stage downstream (the same
+    * trap as [[setSimSorted]]'s width pin).
+    */
+  private def representatives(sortedAll: DataFrame, memb: DataFrame): DataFrame =
+    sortedAll
+      .join(memb.filter(col("id") === col("rid")).select(col("id")), "id")
+      .repartition(Graft.width(sortedAll.sparkSession), col("id"))
+      .localCheckpoint(true)
+
+  /** The collapse gate's choice of store, shared by [[setSimJoin]] and
+    * [[containmentJoin]]: (membership map, whether the collapse engaged,
+    * the store the join runs on — [[representatives]] under the collapse,
+    * else the full store). Both paths compute the identical exact answer.
+    */
+  private def gatedStore(sortedAll: DataFrame): (DataFrame, Boolean, DataFrame) = {
+    val memb = setMembership(sortedAll)
+    val collapse = collapseEngaged(memb)
+    (memb, collapse, if (collapse) representatives(sortedAll, memb) else sortedAll)
+  }
+
+  /** The one threshold guard of the set-similarity family. */
+  private def checkT(op: String, tPct: Int): Unit =
+    require(tPct > 0 && tPct <= 100, s"$op: tPct in (0,100], got $tPct")
+
   /** EXACT set-similarity join with prefix filtering (AllPairs/PPJoin —
     * Bayardo 2007, Xiao 2008): every pair of documents with token-set
     * Jaccard ≥ t, found WITHOUT LSH — the exact-recall complement to
@@ -727,23 +735,22 @@ object Dedup {
     * Scale shape: token-frequency agg (map-side combined), one join to
     * attach dfs, per-doc array sort (document-bounded), prefix explode
     * (≈ (1−t)·tokens rows), equi-join on the prefix token, distinct,
-    * then the [[jaccard]]-style array-intersect verify. All integer
+    * then the array-intersect verify ([[setSimVerify]]). All integer
     * compares: 100·|∩| ≥ tPct·(na + nb − |∩|).
     *
-    * Replica defense: the EXACT-SET COLLAPSE ([[setMembership]] /
-    * [[collapseEngaged]], shared with [[containmentJoin]]) — identical
-    * token sets are Jaccard-1.0 cliques, so under the concentration gate
-    * one representative per distinct set runs the join and verdicts
-    * expand back through the membership map (Jaccard is a set property)
-    * plus the intra-group cliques; candidate volume then scales with
-    * DISTINCT sets, not documents.
+    * Replica defense: the EXACT-SET COLLAPSE ([[gatedStore]], shared
+    * with [[containmentJoin]]) — identical token sets are Jaccard-1.0
+    * cliques, so under the concentration gate one representative per
+    * distinct set runs the join and verdicts expand back through the
+    * membership map (Jaccard is a set property) plus the intra-group
+    * cliques; candidate volume then scales with DISTINCT sets, not
+    * documents.
     *
     * Input: (id, toks) with toks DISTINCT per row. Output:
     * (a, b, inter, na, nb) for every qualifying pair, a < b.
     */
   def setSimJoin(docs: DataFrame, tPct: Int): DataFrame = {
-    require(tPct > 0 && tPct <= 100, s"setSimJoin: tPct in (0,100], got $tPct")
-    val sortedAll = setSimSorted(docs)
+    checkT("setSimJoin", tPct)
     // exact-set collapse (the round-16 containmentJoin defense, extended
     // here): identical token sets are Jaccard-1.0 cliques, so a
     // replica-heavy corpus otherwise pays k² through BOTH candidate sides
@@ -752,25 +759,8 @@ object Dedup {
     // member pair inherits its reps' verdict) and results expand back
     // through the membership map; intra-group pairs are J = 1.0 ≥ any t
     // by definition. Both paths exact; the gate is [[collapseEngaged]].
-    val memb = setMembership(sortedAll)
-    val collapse = collapseEngaged(memb)
-    val sorted =
-      if (!collapse) sortedAll
-      else sortedAll
-        .join(memb.filter(col("id") === col("rid")).select(col("id")), "id")
-        // re-pin p partitions: the rep join's exchange AQE-coalesces this
-        // small store to ~1 partition, and the checkpoint would freeze
-        // that — serializing the prefix explode + candidate-exchange map
-        // stage downstream (same trap as [[setSimSorted]]'s width pin)
-        .repartition(Graft.width(docs.sparkSession), col("id"))
-        .localCheckpoint(true)
-    val cand = setSimCandidates(sorted, tPct)
-    val repPairs = cand
-      .join(sorted.select(col("id").as("a"), col("ws").as("wa"), col("n").as("na")), "a")
-      .join(sorted.select(col("id").as("b"), col("ws").as("wb"), col("n").as("nb")), "b")
-      .withColumn("inter", size(array_intersect(col("wa"), col("wb"))).cast("long"))
-      .filter(lit(100) * col("inter") >= lit(tPct) * (col("na") + col("nb") - col("inter")))
-      .select(col("a"), col("b"), col("inter"), col("na"), col("nb"))
+    val (memb, collapse, sorted) = gatedStore(setSimSorted(docs))
+    val repPairs = setSimVerify(setSimPrefCand(sorted, tPct)._2, sorted, tPct)
     if (!collapse) return repPairs
     // expansion: rep verdicts fan out to members. The output contract is
     // a < b with (na, nb) = |A|, |B| — member ids need not preserve their
@@ -821,22 +811,13 @@ object Dedup {
     * is this content, and how entangled with near-duplicates").
     */
   def setSimCliqueSummary(docs: DataFrame, tPct: Int): DataFrame = {
-    require(tPct > 0 && tPct <= 100,
-      s"setSimCliqueSummary: tPct in (0,100], got $tPct")
+    checkT("setSimCliqueSummary", tPct)
     val sortedAll = setSimSorted(docs)
     val memb = setMembership(sortedAll)
     val sizes = memb.groupBy(col("rid")).agg(count(lit(1)).as("m"))
       .localCheckpoint(true) // feeds both cross sides + intra + the final join
-    val reps = sortedAll
-      .join(memb.filter(col("id") === col("rid")).select(col("id")), "id")
-      // re-pin p partitions before freezing (see [[setSimJoin]])
-      .repartition(Graft.width(docs.sparkSession), col("id"))
-      .localCheckpoint(true)
-    val repPairs = setSimCandidates(reps, tPct)
-      .join(reps.select(col("id").as("a"), col("ws").as("wa"), col("n").as("na")), "a")
-      .join(reps.select(col("id").as("b"), col("ws").as("wb"), col("n").as("nb")), "b")
-      .withColumn("inter", size(array_intersect(col("wa"), col("wb"))).cast("long"))
-      .filter(lit(100) * col("inter") >= lit(tPct) * (col("na") + col("nb") - col("inter")))
+    val reps = representatives(sortedAll, memb)
+    val repPairs = setSimVerify(setSimPrefCand(reps, tPct)._2, reps, tPct)
       .select(col("a"), col("b"))
     val withSizes = repPairs
       .join(sizes.select(col("rid").as("a"), col("m").as("ma")), "a")
@@ -911,30 +892,16 @@ object Dedup {
     */
   def containmentJoin(docs: DataFrame, tPct: Int,
       broadcastTokenBudget: Long = ContainmentBroadcastTokens): DataFrame = {
-    require(tPct > 0 && tPct <= 100, s"containmentJoin: tPct in (0,100], got $tPct")
+    checkT("containmentJoin", tPct)
     // hash-keyed df aggregation + join — see [[setSimSorted]]: any shared
     // total order satisfies the prefix theorem, so the 8-byte hash key
-    // replaces the token string through both exchanges
-    val sortedAll = setSimSorted(docs) // p-width checkpointed store —
-      // feeds collapse, prefix explode, B side, verify
-    // exact-set collapse membership + concentration gate (shared with
-    // [[setSimJoin]] — see [[setMembership]] / [[collapseEngaged]])
-    val memb = setMembership(sortedAll)
-    val collapse = collapseEngaged(memb)
-    // under collapse the algorithm below sees REPRESENTATIVES only:
-    // candidate volume scales with distinct sets, not documents (df
-    // values keep their all-docs counts — only their ORDER matters to
-    // the prefix theorem)
-    val sorted =
-      if (!collapse) sortedAll
-      else sortedAll
-        .join(memb.filter(col("id") === col("rid")).select(col("id")), "id")
-        // re-pin p partitions before freezing (see [[setSimJoin]])
-        .repartition(Graft.width(docs.sparkSession), col("id"))
-        .localCheckpoint(true)
-    val pref = sorted.select(col("id"), col("n"),
-      posexplode(expr(s"slice(ws, 1, n - (($tPct * n + 99) div 100) + 1)"))
-        .as(Seq("pa", "w")))
+    // replaces the token string through both exchanges. Exact-set
+    // collapse membership + concentration gate shared with [[setSimJoin]]
+    // ([[gatedStore]]): under collapse the algorithm below sees
+    // REPRESENTATIVES only — candidate volume scales with distinct sets,
+    // not documents (df values keep their all-docs counts — only their
+    // ORDER matters to the prefix theorem)
+    val (memb, collapse, sorted) = gatedStore(setSimSorted(docs))
     // First-match positional bound — the containment form of the PPJoin
     // prune [[setSimParts]] carries: A's and B's common tokens occupy the
     // same relative order in both df-sorted arrays, and any common token
@@ -949,8 +916,8 @@ object Dedup {
     // ADD candidate rows, and the min-position bound below can only
     // LOOSEN from extra rows (min over more positions) — a superset of
     // candidates, each verified exactly downstream
-    val cand = pref.select(col("id").as("a"), col("n").as("na"),
-        col("pa"), xxhash64(col("w")).as("wh"))
+    val cand = prefixRows(sorted, tPct).select(col("id").as("a"),
+        col("n").as("na"), col("p").as("pa"), xxhash64(col("w")).as("wh"))
       .join(sorted.select(col("id").as("b"), col("n").as("nb"),
         posexplode(col("ws")).as(Seq("pb", "w")))
         .select(col("b"), col("nb"), col("pb"), xxhash64(col("w")).as("wh")), "wh")
@@ -1022,7 +989,7 @@ object Dedup {
     * candidate pairs the verify phase consumes.
     */
   def setSimParts(docs: DataFrame, tPct: Int): (DataFrame, DataFrame, DataFrame) = {
-    require(tPct > 0 && tPct <= 100, s"setSimJoin: tPct in (0,100], got $tPct")
+    checkT("setSimParts", tPct)
     val sorted = setSimSorted(docs)
     val (pref, cand) = setSimPrefCand(sorted, tPct)
     (sorted, pref, cand)
@@ -1030,8 +997,8 @@ object Dedup {
 
   /** Per-doc tokens in global (df, w) order + the plain token array for
     * the verify intersect; materialized once — three consumers (both
-    * candidate sides and the verify). The token-df-sort build shared by
-    * [[setSimParts]] and [[setSimJoin]].
+    * candidate sides and the verify). The token-df-sort build every
+    * set-similarity entry point starts from.
     */
   private def setSimSorted(docs: DataFrame): DataFrame = {
     // The global token order only has to be a TOTAL order shared by every
@@ -1071,17 +1038,34 @@ object Dedup {
       .localCheckpoint(true)
   }
 
-  /** Candidate pairs over a (possibly collapsed) sorted store. */
-  private def setSimCandidates(sorted: DataFrame, tPct: Int): DataFrame =
-    setSimPrefCand(sorted, tPct)._2
-
-  private def setSimPrefCand(sorted: DataFrame, tPct: Int): (DataFrame, DataFrame) = {
-    // prefix length n - ceil(t*n) + 1; ceil(t*n) = (tPct*n + 99) div 100.
-    // posexplode keeps each prefix token's position for the PPJoin
-    // positional filter below.
-    val pref = sorted.select(col("id"), col("n"),
+  /** The prefix rows of a (possibly collapsed) sorted store: each doc's
+    * first n − ⌈t·n⌉ + 1 df-ordered tokens, ⌈t·n⌉ = (tPct·n + 99) div
+    * 100, as (id, n, p, w) — posexplode keeps each token's 0-based
+    * position p for the positional filters.
+    */
+  private def prefixRows(sorted: DataFrame, tPct: Int): DataFrame =
+    sorted.select(col("id"), col("n"),
       posexplode(expr(s"slice(ws, 1, n - (($tPct * n + 99) div 100) + 1)"))
         .as(Seq("p", "w")))
+
+  /** The one exact Jaccard verify: candidate (a, b) pairs attach both
+    * sides' df-sorted arrays from `sorted` and keep
+    * 100·|A∩B| ≥ tPct·(na + nb − |A∩B|), as (a, b, inter, na, nb).
+    */
+  private[graft] def setSimVerify(cand: DataFrame, sorted: DataFrame,
+                                  tPct: Int): DataFrame =
+    cand
+      .join(sorted.select(col("id").as("a"), col("ws").as("wa"), col("n").as("na")), "a")
+      .join(sorted.select(col("id").as("b"), col("ws").as("wb"), col("n").as("nb")), "b")
+      .withColumn("inter", size(array_intersect(col("wa"), col("wb"))).cast("long"))
+      .filter(lit(100) * col("inter") >= lit(tPct) * (col("na") + col("nb") - col("inter")))
+      .select(col("a"), col("b"), col("inter"), col("na"), col("nb"))
+
+  /** The prefix rows and the candidate pairs over a (possibly collapsed)
+    * sorted store.
+    */
+  private def setSimPrefCand(sorted: DataFrame, tPct: Int): (DataFrame, DataFrame) = {
+    val pref = prefixRows(sorted, tPct)
     // PPJoin positional filter (Xiao 2008): a match at (0-based) prefix
     // positions (pa, pb) bounds the overlap at 1 + min suffix length —
     // all common tokens sit at or after the FIRST common one in the

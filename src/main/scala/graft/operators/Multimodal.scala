@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 
 /** Multimodal (binary) column handling for training-data pipelines: treat
@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   * zlib DEFLATE via the JDK's `java.util.zip.Inflater`, CRC-verified
   * chunk walk, and all five scanline filters un-applied — and
   * [[graft.operators.Jpeg]] decodes baseline grayscale JFIF (stream-read
-  * Huffman tables, dequant, IDCT). Each runs through the same batched
-  * per-partition decode pipeline — q55b/c/d/e prove decode(encode(x))
+  * Huffman tables, dequant, IDCT). Each runs through the same
+  * per-partition decode pipeline ([[mapBins]]) — q55b/c/d/e prove decode(encode(x))
   * reproduces x's features against oracles that never touch a byte.
   * Codecs needing a real external library (H.264/Opus/color-subsampled
   * JPEG profiles) stay behind `decodeStub` — the one documented stub
@@ -128,33 +128,40 @@ object Multimodal {
     WavAudio(rate, channels, bits, samples)
   }
 
-  /** Batched REAL-decode pipeline over (id, bin) WAV payloads: per-batch
+  /** REAL-decode pipeline over (id, bin) WAV payloads: per-row
     * decode via [[wavDecode]], emitting integral audio features (sample
     * rate, channel count, sample count, peak amplitude, energy Σx²) —
     * exact-arithmetic outputs an engine-independent oracle can recompute
     * from the generation formula without parsing a byte.
     */
-  def decodeWavBatched(df: DataFrame, batchSize: Int = 64): DataFrame = {
+  def decodeWavBatched(df: DataFrame): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    mapBins(df) { (id, bytes) =>
+      val w = wavDecode(bytes)
+      var peak = 0L
+      var sumSq = 0L
+      w.samples.foreach { s =>
+        peak = math.max(peak, math.abs(s.toLong))
+        sumSq += s.toLong * s
+      }
+      Iterator.single((id, w.sampleRate.toLong, w.channels.toLong,
+        w.samples.length.toLong, peak, sumSq))
+    }.toDF("id", "sample_rate", "channels", "n_samples", "peak", "sum_sq")
+  }
+
+  /** The one per-partition shape every (id, bin) pipeline here runs:
+    * each payload row maps to its output rows through `f` inside
+    * `mapPartitions`, one row at a time (no decoder here has per-batch
+    * set-up to amortize).
+    */
+  private def mapBins[T: Encoder](df: DataFrame)(
+      f: (Long, Array[Byte]) => Iterator[T]): Dataset[T] = {
     val spark = df.sparkSession
     import spark.implicits._
     df.select(col("id"), col("bin"))
       .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.grouped(batchSize).flatMap { batch =>
-          batch.iterator.map { case (id, bytes) =>
-            val w = wavDecode(bytes)
-            var peak = 0L
-            var sumSq = 0L
-            w.samples.foreach { s =>
-              peak = math.max(peak, math.abs(s.toLong))
-              sumSq += s.toLong * s
-            }
-            (id, w.sampleRate.toLong, w.channels.toLong,
-              w.samples.length.toLong, peak, sumSq)
-          }
-        }
-      }
-      .toDF("id", "sample_rate", "channels", "n_samples", "peak", "sum_sq")
+      .mapPartitions(_.flatMap { case (id, bytes) => f(id, bytes) })
   }
 
   /** Decoded image: row-major top-down 0xRRGGBB pixels. */
@@ -264,18 +271,18 @@ object Multimodal {
       f"content: unrecognized payload magic 0x${bytes(0)}%02x${bytes(1)}%02x...")
   }
 
-  /** Batched decoded-content canonicalization over (id, fmt, bin) — the
-    * q55 decode-pipeline shape (mapPartitions, fixed-size batches) with
+  /** Decoded-content canonicalization over (id, fmt, bin) — the q55
+    * decode-pipeline shape (mapPartitions, one row at a time) with
     * [[contentCanonical]] in the decoder slot, emitting (id, fmt, canon).
     */
-  def contentCanonicalBatched(df: DataFrame, batchSize: Int = 64): DataFrame = {
+  def contentCanonicalBatched(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     df.select(col("id"), col("fmt"), col("bin"))
       .as[(Long, String, Array[Byte])]
-      .mapPartitions(_.grouped(batchSize).flatMap(_.iterator.map {
+      .mapPartitions(_.map {
         case (id, fmt, bytes) => (id, fmt, contentCanonical(bytes))
-      }))
+      })
       .toDF("id", "fmt", "canon")
   }
 
@@ -291,45 +298,35 @@ object Multimodal {
     BmpImage(ow, oh, out)
   }
 
-  /** Batched REAL image decode + resize over (id, bin) BMP payloads:
-    * [[bmpDecode]] then [[resizeNearest]] to `ow`×`oh` per batch,
+  /** REAL image decode + resize over (id, bin) BMP payloads:
+    * [[bmpDecode]] then [[resizeNearest]] to `ow`×`oh` per row,
     * emitting source dimensions and the resized image's exact per-channel
-    * sums — the same batched per-partition shape as [[decodeWavBatched]],
+    * sums — the same per-partition shape as [[decodeWavBatched]],
     * kept in ONE place so the two modalities cannot drift.
     */
-  def decodeBmpResizeBatched(df: DataFrame, ow: Int, oh: Int,
-                             batchSize: Int = 64): DataFrame =
-    decodeImageResizeBatched(df, bmpDecode, ow, oh, batchSize)
+  def decodeBmpResizeBatched(df: DataFrame, ow: Int, oh: Int): DataFrame =
+    decodeImageResizeBatched(df, bmpDecode, ow, oh)
 
-  /** PNG sibling of [[decodeBmpResizeBatched]]: same batched shape, same
+  /** PNG sibling of [[decodeBmpResizeBatched]]: same shape, same
     * output schema, [[pngDecode]] in the decoder slot.
     */
-  def decodePngResizeBatched(df: DataFrame, ow: Int, oh: Int,
-                             batchSize: Int = 64): DataFrame =
-    decodeImageResizeBatched(df, pngDecode, ow, oh, batchSize)
+  def decodePngResizeBatched(df: DataFrame, ow: Int, oh: Int): DataFrame =
+    decodeImageResizeBatched(df, pngDecode, ow, oh)
 
   private def decodeImageResizeBatched(df: DataFrame,
                                        decode: Array[Byte] => BmpImage,
-                                       ow: Int, oh: Int,
-                                       batchSize: Int): DataFrame = {
+                                       ow: Int, oh: Int): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col("id"), col("bin"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.grouped(batchSize).flatMap { batch =>
-          batch.iterator.map { case (id, bytes) =>
-            val src = decode(bytes)
-            val img = resizeNearest(src, ow, oh)
-            var sr = 0L; var sg = 0L; var sb = 0L
-            img.pixels.foreach { p =>
-              sr += (p >> 16) & 0xff; sg += (p >> 8) & 0xff; sb += p & 0xff
-            }
-            (id, src.width.toLong, src.height.toLong, sr, sg, sb)
-          }
-        }
+    mapBins(df) { (id, bytes) =>
+      val src = decode(bytes)
+      val img = resizeNearest(src, ow, oh)
+      var sr = 0L; var sg = 0L; var sb = 0L
+      img.pixels.foreach { p =>
+        sr += (p >> 16) & 0xff; sg += (p >> 8) & 0xff; sb += p & 0xff
       }
-      .toDF("id", "width", "height", "sum_r", "sum_g", "sum_b")
+      Iterator.single((id, src.width.toLong, src.height.toLong, sr, sg, sb))
+    }.toDF("id", "width", "height", "sum_r", "sum_g", "sum_b")
   }
 
   /** Feature EXTRACTION over decoded images — the builder brief's
@@ -337,130 +334,99 @@ object Multimodal {
     * luminance histogram (BT.601 weights in exact integer arithmetic,
     * `lum = (299r + 587g + 114b) div 1000`, `bin = lum div 32`) — the
     * cheap content descriptor a curation pipeline hashes, embeds, or
-    * near-dups on. Same batched mapPartitions shape as the decode
-    * pipelines (the mapInPandas batch contract); one row per non-empty
+    * near-dups on. Same mapPartitions shape as the decode
+    * pipelines ([[mapBins]]); one row per non-empty
     * (id, bin) with the pixel count, so downstream treats the features
     * as a sparse vector.
     */
-  def lumHistBatched(df: DataFrame, decode: Array[Byte] => BmpImage,
-                     batchSize: Int = 64): DataFrame = {
+  def lumHistBatched(df: DataFrame, decode: Array[Byte] => BmpImage): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col("id"), col("bin"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.grouped(batchSize).flatMap { batch =>
-          batch.iterator.flatMap { case (id, bytes) =>
-            val img = decode(bytes)
-            val hist = new Array[Long](8)
-            img.pixels.foreach { p =>
-              val lum = (299 * ((p >> 16) & 0xff) + 587 * ((p >> 8) & 0xff) +
-                114 * (p & 0xff)) / 1000
-              hist(lum / 32) += 1L
-            }
-            (0 until 8).iterator.filter(hist(_) > 0)
-              .map(b => (id, b.toLong, hist(b)))
-          }
-        }
+    mapBins(df) { (id, bytes) =>
+      val img = decode(bytes)
+      val hist = new Array[Long](8)
+      img.pixels.foreach { p =>
+        val lum = (299 * ((p >> 16) & 0xff) + 587 * ((p >> 8) & 0xff) +
+          114 * (p & 0xff)) / 1000
+        hist(lum / 32) += 1L
       }
-      .toDF("id", "bin_idx", "n_px")
+      (0 until 8).iterator.filter(hist(_) > 0)
+        .map(b => (id, b.toLong, hist(b)))
+    }.toDF("id", "bin_idx", "n_px")
   }
 
-  /** JPEG sibling of the batched decode pipelines: baseline grayscale
-    * JFIF payloads ([[graft.operators.Jpeg.decode]]) reduced to integral
-    * luminance features (dimensions, sum, min, max) an oracle can replay
-    * from the generation formula.
-    */
-  /** Batched MJPEG-AVI decode + FRAME SAMPLING ([[Avi]] container walk +
+  /** MJPEG-AVI decode + FRAME SAMPLING ([[Avi]] container walk +
     * [[Jpeg]] per sampled frame): per video, header geometry, total frame
     * count, and luminance features over the every-`stride`-th frames
     * ONLY — unsampled frames' JPEG payloads are never entropy-decoded,
     * which is the whole point of sampling at curation scale. Same
-    * per-partition batch shape as [[decodeJpegBatched]].
+    * per-partition shape as [[decodeJpegBatched]].
     */
-  def decodeAviSampleBatched(df: DataFrame, stride: Int,
-                             batchSize: Int = 64): DataFrame = {
+  def decodeAviSampleBatched(df: DataFrame, stride: Int): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col("id"), col("bin"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.grouped(batchSize).flatMap { batch =>
-          batch.iterator.map { case (id, bytes) =>
-            val v = Avi.decode(bytes)
-            var sum = 0L; var mn = 255L; var mx = 0L; var sampled = 0L
-            Avi.sampleFrames(v, stride).foreach { case (_, jpeg) =>
-              sampled += 1
-              val img = Jpeg.decode(jpeg)
-              img.pixels.foreach { p =>
-                sum += p; mn = math.min(mn, p.toLong); mx = math.max(mx, p.toLong)
-              }
-            }
-            (id, v.width.toLong, v.height.toLong, v.usecPerFrame.toLong,
-              v.frames.length.toLong, sampled, sum, mn, mx)
-          }
+    mapBins(df) { (id, bytes) =>
+      val v = Avi.decode(bytes)
+      var sum = 0L; var mn = 255L; var mx = 0L; var sampled = 0L
+      Avi.sampleFrames(v, stride).foreach { case (_, jpeg) =>
+        sampled += 1
+        val img = Jpeg.decode(jpeg)
+        img.pixels.foreach { p =>
+          sum += p; mn = math.min(mn, p.toLong); mx = math.max(mx, p.toLong)
         }
       }
-      .toDF("id", "width", "height", "usec_per_frame", "n_frames",
-        "n_sampled", "sum_lum", "min_lum", "max_lum")
+      Iterator.single((id, v.width.toLong, v.height.toLong, v.usecPerFrame.toLong,
+        v.frames.length.toLong, sampled, sum, mn, mx))
+    }.toDF("id", "width", "height", "usec_per_frame", "n_frames",
+      "n_sampled", "sum_lum", "min_lum", "max_lum")
   }
 
-  /** Batched audio+video AVI pipeline — [[decodeAviSampleBatched]]'s
+  /** Audio+video AVI pipeline — [[decodeAviSampleBatched]]'s
     * sampled-frame features PLUS the q55b audio features (sample rate,
     * count, peak, energy) of the container's PCM track, decoded in the
     * same single container walk: the complete multimodal shape for an AV
     * asset (one binary cell in, one integral feature row out), with
     * frame sampling still at the container level.
     */
-  def decodeAviAvBatched(df: DataFrame, stride: Int,
-                         batchSize: Int = 64): DataFrame = {
+  def decodeAviAvBatched(df: DataFrame, stride: Int): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col("id"), col("bin"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.grouped(batchSize).flatMap { batch =>
-          batch.iterator.map { case (id, bytes) =>
-            val v = Avi.decode(bytes)
-            var sum = 0L; var sampled = 0L
-            Avi.sampleFrames(v, stride).foreach { case (_, jpeg) =>
-              sampled += 1
-              Jpeg.decode(jpeg).pixels.foreach { p => sum += p }
-            }
-            var peak = 0L
-            var sumSq = 0L
-            v.audio.foreach { sa =>
-              peak = math.max(peak, math.abs(sa.toLong))
-              sumSq += sa.toLong * sa
-            }
-            (id, v.width.toLong, v.height.toLong, v.frames.length.toLong,
-              sampled, sum, v.audioRate.toLong, v.audio.length.toLong,
-              peak, sumSq)
-          }
-        }
+    mapBins(df) { (id, bytes) =>
+      val v = Avi.decode(bytes)
+      var sum = 0L; var sampled = 0L
+      Avi.sampleFrames(v, stride).foreach { case (_, jpeg) =>
+        sampled += 1
+        Jpeg.decode(jpeg).pixels.foreach { p => sum += p }
       }
-      .toDF("id", "width", "height", "n_frames", "n_sampled", "sum_lum",
-        "sample_rate", "n_samples", "peak", "sum_sq")
+      var peak = 0L
+      var sumSq = 0L
+      v.audio.foreach { sa =>
+        peak = math.max(peak, math.abs(sa.toLong))
+        sumSq += sa.toLong * sa
+      }
+      Iterator.single((id, v.width.toLong, v.height.toLong, v.frames.length.toLong,
+        sampled, sum, v.audioRate.toLong, v.audio.length.toLong,
+        peak, sumSq))
+    }.toDF("id", "width", "height", "n_frames", "n_sampled", "sum_lum",
+      "sample_rate", "n_samples", "peak", "sum_sq")
   }
 
-  def decodeJpegBatched(df: DataFrame, batchSize: Int = 64): DataFrame = {
+  /** JPEG sibling of the decode pipelines: baseline grayscale
+    * JFIF payloads ([[graft.operators.Jpeg.decode]]) reduced to integral
+    * luminance features (dimensions, sum, min, max) an oracle can replay
+    * from the generation formula.
+    */
+  def decodeJpegBatched(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col("id"), col("bin"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.grouped(batchSize).flatMap { batch =>
-          batch.iterator.map { case (id, bytes) =>
-            val img = Jpeg.decode(bytes)
-            var sum = 0L; var mn = 255L; var mx = 0L
-            img.pixels.foreach { p =>
-              sum += p; mn = math.min(mn, p.toLong); mx = math.max(mx, p.toLong)
-            }
-            (id, img.width.toLong, img.height.toLong, sum, mn, mx)
-          }
-        }
+    mapBins(df) { (id, bytes) =>
+      val img = Jpeg.decode(bytes)
+      var sum = 0L; var mn = 255L; var mx = 0L
+      img.pixels.foreach { p =>
+        sum += p; mn = math.min(mn, p.toLong); mx = math.max(mx, p.toLong)
       }
-      .toDF("id", "width", "height", "sum_lum", "min_lum", "max_lum")
+      Iterator.single((id, img.width.toLong, img.height.toLong, sum, mn, mx))
+    }.toDF("id", "width", "height", "sum_lum", "min_lum", "max_lum")
   }
 
   /** PNG Paeth predictor (RFC 2083 §6.6): closest of left/up/up-left to
@@ -657,35 +623,26 @@ object Multimodal {
     BmpImage(width, height, pixels)
   }
 
-  /** Batched decode pipeline — the mapInPandas-equivalent shape: payloads
-    * stream through `mapPartitions` in fixed-size batches (real decoders
-    * amortize model/codec setup per batch, not per record), emitting
-    * (id, feature vector). The decoder itself is the documented STUB —
-    * a deterministic byte-derived vector; swap in the real codec call and
-    * nothing else changes: schema, batching, partitioning are the
+  /** Decode pipeline — the mapInPandas-equivalent shape: payloads
+    * stream through `mapPartitions` one row at a time ([[mapBins]]),
+    * emitting (id, feature vector). The decoder itself is the documented
+    * STUB — a deterministic byte-derived vector; swap in the real codec
+    * call and nothing else changes: schema and partitioning are the
     * production plumbing.
     */
-  def decodeBatched(df: DataFrame, batchSize: Int = 64): DataFrame = {
+  def decodeBatched(df: DataFrame): DataFrame = {
     // df: (id: Long, bin: Array[Byte])
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col("id"), col("bin"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.grouped(batchSize).flatMap { batch =>
-          // per-batch "decoder init" happens here in production
-          batch.iterator.map { case (id, bytes) =>
-            // STUB decode: 4-dim feature from byte statistics
-            val sum = bytes.foldLeft(0L)((a, b) => a + (b & 0xff))
-            val feature = Array(
-              bytes.length.toFloat,
-              (sum.toDouble / bytes.length.max(1)).toFloat,
-              (bytes.headOption.map(_ & 0xff).getOrElse(0)).toFloat,
-              (bytes.lastOption.map(_ & 0xff).getOrElse(0)).toFloat)
-            (id, feature)
-          }
-        }
-      }
-      .toDF("id", "feature")
+    mapBins(df) { (id, bytes) =>
+      // STUB decode: 4-dim feature from byte statistics
+      val sum = bytes.foldLeft(0L)((a, b) => a + (b & 0xff))
+      val feature = Array(
+        bytes.length.toFloat,
+        (sum.toDouble / bytes.length.max(1)).toFloat,
+        (bytes.headOption.map(_ & 0xff).getOrElse(0)).toFloat,
+        (bytes.lastOption.map(_ & 0xff).getOrElse(0)).toFloat)
+      Iterator.single((id, feature))
+    }.toDF("id", "feature")
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** External-process operator — the reference's any-language UDF surface.
@@ -116,115 +116,77 @@ object Pipe {
 
   /** RawBytes pipe mode (`-io rawbytes`, `io/RawBytesOutputReader.java`):
     * length-prefixed key and value frames, no type tags — the fastest
-    * binary interchange. Same fork/stream shape as typedbytes.
+    * binary interchange. Same [[pipeFramed]] core as typedbytes.
     */
   def pipeRawBytes(spark: SparkSession, df: DataFrame, cmd: Seq[String]): DataFrame = {
     import spark.implicits._
-    val piped = df.select(col("key").cast("binary"), col("value").cast("binary"))
-      .as[(Array[Byte], Array[Byte])]
-      .mapPartitions { rows =>
-        if (!rows.hasNext) Iterator.empty
-        else {
-          val proc = new ProcessBuilder(cmd: _*)
-            .redirectError(ProcessBuilder.Redirect.INHERIT) // drain stderr
-            .start()
-          val writer = new Thread(() => {
-            val out = new java.io.DataOutputStream(
-              new java.io.BufferedOutputStream(proc.getOutputStream))
-            try {
-              rows.foreach { case (k, v) =>
-                out.writeInt(k.length); out.write(k)
-                out.writeInt(v.length); out.write(v)
-              }
-              out.flush()
-            } finally out.close()
-          })
-          writer.setDaemon(true)
-          writer.start()
-          val in = new java.io.DataInputStream(
-            new java.io.BufferedInputStream(proc.getInputStream))
-          def readFrame(): Array[Byte] = {
-            val n = in.readInt(); val b = new Array[Byte](n); in.readFully(b); b
-          }
-          new Iterator[(Array[Byte], Array[Byte])] {
-            private var pending: (Array[Byte], Array[Byte]) = _
-            private var done = false
-            private def advance(): Unit =
-              if (!done && pending == null) {
-                try pending = (readFrame(), readFrame())
-                catch {
-                  case _: java.io.EOFException =>
-                    done = true; in.close()
-                    val rc = proc.waitFor()
-                    if (rc != 0)
-                      throw new java.io.IOException(s"pipe command exited $rc")
-                }
-              }
-            def hasNext: Boolean = { advance(); pending != null }
-            def next(): (Array[Byte], Array[Byte]) = {
-              advance(); val p = pending; pending = null; p
-            }
-          }
-        }
-      }
-    piped.toDF("key", "value")
+    def readFrame(in: java.io.DataInputStream): Array[Byte] = {
+      val n = in.readInt(); val b = new Array[Byte](n); in.readFully(b); b
+    }
+    pipeFramed(df.select(col("key").cast("binary"), col("value").cast("binary"))
+      .as[(Array[Byte], Array[Byte])], cmd)(
+      { case (out, (k, v)) =>
+        out.writeInt(k.length); out.write(k)
+        out.writeInt(v.length); out.write(v)
+      },
+      in => (readFrame(in), readFrame(in)))
   }
 
   /** TypedBytes pipe mode (`-io typedbytes`): frame (key, value) records
     * with the TypedBytes codec over the child's stdin/stdout — binary-safe,
-    * no line/separator ambiguity. A writer thread feeds stdin while the
-    * task thread consumes stdout (both directions stream; neither side
-    * buffers a partition).
+    * no line/separator ambiguity.
     */
   def pipeTypedBytes(spark: SparkSession, df: DataFrame, cmd: Seq[String]): DataFrame = {
     import graft.functions.TypedBytes
     import spark.implicits._
-    val piped = df.select(col("key").cast("string"), col("value").cast("string"))
-      .as[(String, String)]
-      .mapPartitions { rows =>
-        if (!rows.hasNext) Iterator.empty
-        else {
-          val proc = new ProcessBuilder(cmd: _*)
-            .redirectError(ProcessBuilder.Redirect.INHERIT) // drain stderr
-            .start()
-          val writer = new Thread(() => {
-            val out = new java.io.DataOutputStream(
-              new java.io.BufferedOutputStream(proc.getOutputStream))
-            try {
-              rows.foreach { case (k, v) =>
-                TypedBytes.write(out, k); TypedBytes.write(out, v)
+    pipeFramed(df.select(col("key").cast("string"), col("value").cast("string"))
+      .as[(String, String)], cmd)(
+      { case (out, (k, v)) => TypedBytes.write(out, k); TypedBytes.write(out, v) },
+      in => (TypedBytes.read(in).toString, TypedBytes.read(in).toString))
+  }
+
+  /** The framed binary pipe both modes run: one `cmd` fork per non-empty
+    * partition, a writer thread feeding each row to the child's stdin
+    * through `write` while the task thread reads `read` frames back from
+    * its stdout until EOF (both directions stream; neither side buffers a
+    * partition). A child that exits non-zero fails the task.
+    */
+  private def pipeFramed[T: Encoder](rows: Dataset[T], cmd: Seq[String])(
+      write: (java.io.DataOutputStream, T) => Unit,
+      read: java.io.DataInputStream => T): DataFrame =
+    rows.mapPartitions { it =>
+      if (!it.hasNext) Iterator.empty
+      else {
+        val proc = new ProcessBuilder(cmd: _*)
+          .redirectError(ProcessBuilder.Redirect.INHERIT) // drain stderr
+          .start()
+        val writer = new Thread(() => {
+          val out = new java.io.DataOutputStream(
+            new java.io.BufferedOutputStream(proc.getOutputStream))
+          try { it.foreach(write(out, _)); out.flush() }
+          finally out.close()
+        })
+        writer.setDaemon(true)
+        writer.start()
+        val in = new java.io.DataInputStream(
+          new java.io.BufferedInputStream(proc.getInputStream))
+        new Iterator[T] {
+          private var pending: Option[T] = None
+          private var done = false
+          private def advance(): Unit =
+            if (!done && pending.isEmpty) {
+              try pending = Some(read(in))
+              catch {
+                case _: java.io.EOFException =>
+                  done = true; in.close()
+                  val rc = proc.waitFor()
+                  if (rc != 0)
+                    throw new java.io.IOException(s"pipe command exited $rc")
               }
-              out.flush()
-            } finally out.close()
-          })
-          writer.setDaemon(true)
-          writer.start()
-          val in = new java.io.DataInputStream(
-            new java.io.BufferedInputStream(proc.getInputStream))
-          new Iterator[(String, String)] {
-            private var pending: (String, String) = _
-            private var done = false
-            private def advance(): Unit =
-              if (!done && pending == null) {
-                try {
-                  val k = TypedBytes.read(in).toString
-                  val v = TypedBytes.read(in).toString
-                  pending = (k, v)
-                } catch {
-                  case _: java.io.EOFException =>
-                    done = true; in.close()
-                    val rc = proc.waitFor()
-                    if (rc != 0)
-                      throw new java.io.IOException(s"pipe command exited $rc")
-                }
-              }
-            def hasNext: Boolean = { advance(); pending != null }
-            def next(): (String, String) = {
-              advance(); val p = pending; pending = null; p
             }
-          }
+          def hasNext: Boolean = { advance(); pending.isDefined }
+          def next(): T = { advance(); val p = pending.get; pending = None; p }
         }
       }
-    piped.toDF("key", "value")
-  }
+    }.toDF("key", "value")
 }

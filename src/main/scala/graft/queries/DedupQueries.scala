@@ -1243,7 +1243,7 @@ object DedupQueries {
   }
 
   /** RETIRE documents from the dedup index, on the board
-    * ([[Dedup.ccRetire]] — the parity CcRetireSpec proves, now in the
+    * ([[Dedup.ccRetire]] — the parity CcIndexSpec proves, now in the
     * driver's gate currency; the third family's q167g/q150g twin):
     * build the band table + component labels over the full corpus at
     * frozen geometry, tombstone the DELIBERATELY-HARD set — every

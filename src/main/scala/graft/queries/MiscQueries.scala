@@ -397,14 +397,14 @@ object MiscQueries {
 
   /** REAL multimodal decode, end-to-end: deterministic 16-bit PCM
     * waveforms are synthesized per document, encoded as RIFF/WAVE files
-    * (real 44-byte headers + chunks), and run through the batched decode
-    * pipeline whose parser ([[Multimodal.wavDecode]]) walks the chunks
+    * (real 44-byte headers + chunks), and run through the per-partition
+    * decode pipeline whose parser ([[Multimodal.wavDecode]]) walks the chunks
     * and decodes the samples — no codec library, PCM is just bytes. The
     * oracle recomputes the audio features (count, peak, energy) from the
     * generation FORMULA without ever seeing a byte, so a green row proves
     * decode(encode(x)) recovered exactly the waveform x. Compressed
     * codecs remain behind `decodeStub` (no libs in this environment);
-    * this pins the decode PIPELINE — batching, schema, feature shape —
+    * this pins the decode PIPELINE — partitioning, schema, feature shape —
     * with a real decoder in the slot.
     */
   val q55bWavDecode = Q.checked(
@@ -577,7 +577,7 @@ object MiscQueries {
     * clip — 3–6 block-constant grayscale frames whose per-frame formula
     * depends on the frame index — is encoded as a standards-shaped AVI
     * ([[graft.operators.Avi]]: RIFF hdrl/avih/strl/movi/idx1, real JPEG
-    * frames via [[graft.operators.Jpeg]]) and run through the batched
+    * frames via [[graft.operators.Jpeg]]) and run through the
     * decode+sample pipeline, keeping every 2nd frame. Sampling happens
     * at the CONTAINER level, so skipped frames are never entropy-decoded
     * — the curation shape for frame-sampling petabytes of video. The
@@ -1269,7 +1269,7 @@ object MiscQueries {
     * multimodal family's feature-extract verb (q55c decodes+resizes,
     * q55d/e decode compressed codecs, this row reduces decoded pixels to
     * the descriptor a curation pipeline consumes): q55c's deterministic
-    * BMP corpus decoded by the batched pipeline and reduced per image to
+    * BMP corpus decoded by the per-partition pipeline and reduced per image to
     * an 8-bin BT.601 luminance histogram in exact integer arithmetic.
     * The oracle never touches a byte — it replays the pixel generation
     * formula and the same integer luminance/bin math over the full

@@ -187,7 +187,7 @@ class OperatorsSpec extends AnyFunSuite {
     val df = Seq((1L, "abc"), (2L, ""), (3L, "zz"))
       .toDF("id", "t")
       .select(col("id"), encode(col("t"), "UTF-8").as("bin"))
-    val got = Multimodal.decodeBatched(df, batchSize = 2)
+    val got = Multimodal.decodeBatched(df)
       .as[(Long, Seq[Float])].collect().toMap
     assert(got(1L) == Seq(3f, ((97 + 98 + 99) / 3).toFloat, 97f, 99f))
     assert(got(2L) == Seq(0f, 0f, 0f, 0f))

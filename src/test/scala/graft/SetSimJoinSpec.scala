@@ -84,6 +84,33 @@ class SetSimJoinSpec extends AnyFunSuite {
     }
   }
 
+  test("containmentJoin equals brute force on both corpora and both verify paths") {
+    import spark.implicits._
+    // plain corpus: no identical sets, so the collapse stays off; the
+    // replica-heavy one (docs 0 and 3 replicated 18x, clique 19 >=
+    // CollapseCliqueMin) engages it and its member expansion. Budget 0
+    // forces the narrow-row verify, the default the broadcast-array one.
+    val heavy = docs ++ (0 until 36).map { j =>
+      (1000L + j, docs(if (j % 2 == 0) 0 else 3)._2)
+    }
+    for (corpus <- Seq(docs, heavy); t <- Seq(80, 50);
+         budget <- Seq(Dedup.ContainmentBroadcastTokens, 0L)) {
+      val sets = corpus.map { case (id, ws) => id -> ws.toSet }
+      val want = (for {
+        (a, sa) <- sets; (b, sb) <- sets if a != b
+        inter = (sa & sb).size.toLong
+        if 100 * inter >= t * sa.size
+      } yield (a, b, inter, sa.size.toLong)).toSet
+      val got = Dedup.containmentJoin(corpus.toDF("id", "toks"), t, budget)
+        .as[(Long, Long, Long, Long)].collect().toSet
+      assert(got == want,
+        s"n=${corpus.size} t=$t budget=$budget: missing=${(want -- got).take(5)} " +
+          s"extra=${(got -- want).take(5)} (got ${got.size}, want ${want.size})")
+      // each corpus exercises strict (partial) containment too
+      assert(want.exists { case (_, _, i, na) => i < na })
+    }
+  }
+
   test("clique summary reconciles with the enumerated join (arithmetic ≡ counting)") {
     import spark.implicits._
     // the q128b contract, unit-level: setSimCliqueSummary's per-clique

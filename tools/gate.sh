@@ -4,8 +4,9 @@
 # When engine code (operators/queries/api/sources/functions/core/streaming)
 # is touched, also run the plan-guard suites so a plan regression
 # (unbounded window, lost broadcast, lost pushdown) can't land silently,
-# and the codegen-cache suite so a recompiling warm pass or chained
-# append can't either.
+# the codegen-cache suite so a recompiling warm pass or chained
+# append can't either, and the set-similarity suite, the only check of
+# the exact-set collapse path (the board corpus never engages it).
 # Usage: tools/gate.sh [sfDir]   (default /root/testdata/sf0.001)
 set -e -o pipefail
 cd /root/repo
@@ -22,7 +23,7 @@ if grep -qE 'src/main/scala/graft/(operators|queries|api|sources|functions|core|
     <<< "$CHANGED"; then
   ENGINE_TOUCHED=1
   echo "[gate] engine code touched -> running plan-guard suites"
-  sbt -batch 'testOnly graft.PlanSpec graft.WindowGuardSpec graft.ScaleSpec graft.CodegenCacheSpec' 2>&1 \
+  sbt -batch 'testOnly graft.PlanSpec graft.WindowGuardSpec graft.ScaleSpec graft.CodegenCacheSpec graft.SetSimJoinSpec' 2>&1 \
     | grep -E 'Tests:|\*\*\*' | tail -2
 fi
 OUT=$(mktemp -d /tmp/gate.XXXXXX)
