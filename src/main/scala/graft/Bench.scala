@@ -63,81 +63,45 @@ object Bench {
       node.fields().asScala.map(e => e.getKey -> e.getValue.asDouble()).toMap
     }.getOrElse(Map.empty)
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = Harness.sfDir
     val cpus = graft.core.Graft.cores
-    val spark = graft.core.Graft.session("graft-bench", cpus.toString, cpus)
-    // warm the JVM/codegen/scan/agg/join paths so the first measured query
-    // isn't charged for JIT + classloading (~5s on a cold session)
-    locally {
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.types.DecimalType
-      // tolerate a partial data dir (e.g. pointing at soak fixtures that
-      // carry only the tables under test) — warmup is best-effort
-      scala.util.Try {
-        val n = spark.read.parquet(s"$sfDir/nation.parquet")
-        n.groupBy(col("n_regionkey"))
-          .agg(sum(col("n_nationkey").cast(DecimalType(18, 4))), count(lit(1)))
-          .collect()
-        n.join(n.select(col("n_nationkey").as("k")), col("n_nationkey") === col("k"))
-          .count()
-      }
-      // touch the big fact/doc scans too: the first query over each file
-      // otherwise pays its parquet-footer + column-reader JIT inside the
-      // measured window (q01 was ~1.4s warmup + ~0.3s compute)
-      Seq("lineitem", "orders", "events", "documents").foreach { t =>
-        scala.util.Try(
-          spark.read.parquet(s"$sfDir/$t.parquet").agg(count(lit(1))).collect())
-      }
-    }
+    val spark = Harness.session("graft-bench")
+    Harness.warmUp(spark, sfDir)
     // fixed-work CPU calibration (single-thread xorshift): query seconds
     // divided by this constant are comparable across rounds even when the
     // host is contended (observed: 10% steal + forced idle turns the same
     // binary 3x slower) — same work every run, so it moves with the noise.
     // Sampled BEFORE and AFTER the query loop: contention arriving
     // mid-bench shows up as pre/post divergence, not silently.
-    def calibMs: Double = {
-      val t0 = System.nanoTime()
+    def spin(): Unit = {
       var x = 0x9E3779B97F4A7C15L
       var i = 0
       while (i < 200000000) { x ^= x << 13; x ^= x >>> 7; x ^= x << 17; i += 1 }
       if (x == 42) System.err.println("") // defeat dead-code elimination
+    }
+    def timedMs(f: => Unit): Double = {
+      val t0 = System.nanoTime()
+      f
       (System.nanoTime() - t0) / 1e6
     }
+    def calibMs: Double = timedMs(spin())
     // same fixed work on EVERY core at once: scales with how much of the
     // MACHINE is actually available, which the 1-thread spin can't see
-    def calibParMs: Double = {
-      val n = Runtime.getRuntime.availableProcessors()
-      val t0 = System.nanoTime()
-      val threads = (1 to n).map { _ =>
-        new Thread(() => {
-          var x = 0x9E3779B97F4A7C15L
-          var i = 0
-          while (i < 200000000) { x ^= x << 13; x ^= x >>> 7; x ^= x << 17; i += 1 }
-          if (x == 42) System.err.println("")
-        })
-      }
+    def calibParMs: Double = timedMs {
+      val threads = (1 to Runtime.getRuntime.availableProcessors()).map(_ => new Thread(() => spin()))
       threads.foreach(_.start()); threads.foreach(_.join())
-      (System.nanoTime() - t0) / 1e6
     }
     def gcTotalMs: Long = {
       import scala.jdk.CollectionConverters._
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
         .asScala.map(_.getCollectionTime).sum
     }
-    // sweep engine state a query leaked (pinned localCheckpoints, caches,
-    // temp views) so it can't tax the NEXT query's timing
-    def sweep(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      spark.catalog.clearCache()
-    }
     val calibPre = calibMs
     val calibParPre = calibParMs
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toVector)
-    val byName = SparkEntry.registry.map(q => q.name -> q).toMap
     val selected = only match {
-      case Some(names) => names.map(n =>
-        byName.getOrElse(n, sys.error(s"unknown query '$n' in SPARK_GRAFT_BENCH_ONLY")))
+      case Some(names) => names.map(Harness.query)
       case None => SparkEntry.registry
     }
     val repeat = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEAT", "2").toInt
@@ -152,10 +116,7 @@ object Bench {
       val cc0 = graft.core.Graft.codegenCompiles
       val t0 = System.nanoTime()
       val ok =
-        // execute the query's OWN physical plan (toRdd) — a .count() would
-        // let Catalyst prune projections/regex work out of map-only
-        // queries and time a metadata count instead
-        try { q.run(spark, sfDir).queryExecution.toRdd.count(); true }
+        try { Harness.drain(q.run(spark, sfDir)); true }
         catch {
           case e: Throwable =>
             System.err.println(s"[bench] ${q.name} FAILED: ${e.getMessage}")
@@ -168,7 +129,7 @@ object Bench {
       // the "slow with flat gc => host noise" triage misfires
       val gcMs = gcTotalMs - gc0
       val ccN = graft.core.Graft.codegenCompiles - cc0
-      sweep()
+      Harness.sweep(spark)
       System.err.println(f"[bench] pass $pass ${q.name} ${sec}%.3f s gc $gcMs ms compiles $ccN")
       if (ok && sec < best.getOrElse(q.name, Double.MaxValue)) {
         best += q.name -> sec
@@ -187,7 +148,7 @@ object Bench {
     outliers(best, baseline, retryRatio).foreach { n =>
       System.err.println(f"[bench] RETRY $n: min ${best(n)}%.3f s > " +
         f"$retryRatio%.1fx baseline ${baseline(n)}%.3f s — one extra pass")
-      runOne(byName(n), "retry")
+      runOne(Harness.query(n), "retry")
     }
     val results = selected.toVector.map(q => q.name -> best.getOrElse(q.name, -1.0))
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }

@@ -15,16 +15,12 @@ package graft
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "target/plans")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "before")
-    val cpus = graft.core.Graft.cores
-    val spark = graft.core.Graft.session("graft-plandump", cpus.toString, cpus)
-    val byName = SparkEntry.registry.map(q => q.name -> q).toMap
+    val spark = Harness.session("graft-plandump")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     args.foreach { name =>
-      val q = byName.getOrElse(name, sys.error(s"unknown query '$name'"))
-      val df = q.run(spark, sfDir)
+      val df = Harness.query(name).run(spark, Harness.sfDir)
       val txt = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       val p = java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt")

@@ -9,8 +9,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Seq[String]] =
       if (args.length > 2) Some(args(2).split(',').toSeq) else None
-    val cpus = graft.core.Graft.cores
-    val spark = graft.core.Graft.session("graft-verify", cpus.toString, cpus)
+    val spark = Harness.session("graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
@@ -20,10 +19,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // sweep state a query leaked (pinned localCheckpoints, caches) so 86
-      // queries in one session don't accumulate pinned executor memory
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      spark.catalog.clearCache()
+      Harness.sweep(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

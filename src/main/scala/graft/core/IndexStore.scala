@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Crash-atomic versioning for the persisted index stores
   * ([[graft.operators.Similarity]]'s k-NN index,
-  * [[graft.queries.TextQueries]]'s RAG chunk index,
+  * [[graft.operators.Retrieval]]'s RAG chunk index,
   * [[graft.operators.Dedup]]'s CC index) — the two-phase commit
   * discipline the reference applies to every job's output
   * (`src/mapred/org/apache/hadoop/mapred/FileOutputCommitter.java:41-42,121`

@@ -1052,8 +1052,8 @@ object Dedup {
     * sides' df-sorted arrays from `sorted` and keep
     * 100·|A∩B| ≥ tPct·(na + nb − |A∩B|), as (a, b, inter, na, nb).
     */
-  private[graft] def setSimVerify(cand: DataFrame, sorted: DataFrame,
-                                  tPct: Int): DataFrame =
+  private def setSimVerify(cand: DataFrame, sorted: DataFrame,
+                           tPct: Int): DataFrame =
     cand
       .join(sorted.select(col("id").as("a"), col("ws").as("wa"), col("n").as("na")), "a")
       .join(sorted.select(col("id").as("b"), col("ws").as("wb"), col("n").as("nb")), "b")

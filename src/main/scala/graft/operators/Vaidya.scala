@@ -1,37 +1,6 @@
 package graft.operators
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import scala.collection.mutable.ArrayBuffer
-
-/** vaidya-lite: rule-based post-hoc performance diagnosis — the reference's
-  * contrib/vaidya advisor (`src/contrib/vaidya/src/java/org/apache/hadoop/
-  * vaidya/postexdiagnosis/tests/postex_diagnosis_tests.xml` and the five
-  * DiagnosticTest classes beside it) re-expressed over Spark's task
-  * metrics. Each rule computes an impact in [0, 1]; impact ≥ the rule's
-  * success threshold means TEST POSITIVE (the problem is detected), and
-  * the report carries the reference's prescription text shape.
-  *
-  * Sources differ by necessity: the reference reads JobHistory counters
-  * (MAP_INPUT_BYTES, REDUCE_INPUT_RECORDS, LAUNCHED_MAPS…); here a
-  * [[VaidyaListener]] snapshots the same facts from `SparkListenerTaskEnd`
-  * task metrics — records/bytes through each stage's shuffle boundary,
-  * spill volume, extra attempts. Stage-level framing replaces job-level:
-  * a Spark job is a DAG of map/reduce-like stages, so skew and
-  * re-execution are diagnosed per stage and the report lists every
-  * positive stage (the reference's single map/reduce phase is the special
-  * case). Evaluation itself is a pure function over the probe rows, so
-  * the rules unit-test without a cluster — and the probe volume is one
-  * small row PER TASK, held on the driver only for the queries the user
-  * chose to diagnose (bounded by tasks-per-job, never by data).
-  */
-final case class TaskProbe(
-    stageId: Int,
-    attemptNumber: Int,
-    failed: Boolean,
-    shuffleReadRecords: Long,
-    shuffleWriteBytes: Long,
-    inputBytes: Long,
-    spillBytes: Long)
+import graft.core.TaskProbe
 
 /** One rule verdict. `positive` = impact ≥ threshold = problem detected
   * (the reference's TEST POSITIVE convention).
@@ -46,6 +15,28 @@ final case class Finding(
     detail: String,
     prescription: String)
 
+/** vaidya-lite: rule-based post-hoc performance diagnosis — the reference's
+  * contrib/vaidya advisor (`src/contrib/vaidya/src/java/org/apache/hadoop/
+  * vaidya/postexdiagnosis/tests/postex_diagnosis_tests.xml` and the five
+  * DiagnosticTest classes beside it) re-expressed over Spark's task
+  * metrics. Each rule computes an impact in [0, 1]; impact ≥ the rule's
+  * success threshold means TEST POSITIVE (the problem is detected), and
+  * the report carries the reference's prescription text shape.
+  *
+  * Sources differ by necessity: the reference reads JobHistory counters
+  * (MAP_INPUT_BYTES, REDUCE_INPUT_RECORDS, LAUNCHED_MAPS…); here the
+  * engine's run listener ([[graft.core.RunListener]]) snapshots the same
+  * facts from `SparkListenerTaskEnd` task metrics, one [[TaskProbe]] per
+  * attempt — records/bytes through each stage's shuffle boundary,
+  * spill volume, extra attempts. Stage-level framing replaces job-level:
+  * a Spark job is a DAG of map/reduce-like stages, so skew and
+  * re-execution are diagnosed per stage and the report lists every
+  * positive stage (the reference's single map/reduce phase is the special
+  * case). Evaluation itself is a pure function over the probe rows, so
+  * the rules unit-test without a cluster — and the probe volume is one
+  * small row PER TASK, held on the driver only for the queries the user
+  * chose to diagnose (bounded by tasks-per-job, never by data).
+  */
 object Vaidya {
 
   /** Run every diagnostic rule over the collected probes. Thresholds and
@@ -181,40 +172,4 @@ object Vaidya {
     }
     (pos ++ neg).map(fmt).mkString("\n")
   }
-}
-
-/** Collects one [[TaskProbe]] per completed task attempt. Register around
-  * the queries to diagnose, then feed [[Vaidya.diagnose]]:
-  * {{{
-  * val l = new VaidyaListener
-  * spark.sparkContext.addSparkListener(l)
-  * try { query.collect() } finally spark.sparkContext.removeSparkListener(l)
-  * // the listener bus is async: in tests, poll until l.probes stabilizes
-  * val findings = Vaidya.diagnose(l.probes)
-  * }}}
-  * Driver memory is one small case class per task — bounded by the
-  * diagnosed job's task count, not by data volume.
-  */
-final class VaidyaListener extends SparkListener {
-  private val buf = ArrayBuffer.empty[TaskProbe]
-
-  override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
-    val m = e.taskMetrics
-    // taskMetrics is routinely null for FAILED attempts; dropping those
-    // rows would make the re-execution rule undercount launched attempts
-    // (or see distinct=0) — exactly the retry storms it exists to flag.
-    // Record the attempt with zeroed metrics instead.
-    if (e.taskInfo != null) {
-      buf += TaskProbe(
-        stageId = e.stageId,
-        attemptNumber = e.taskInfo.attemptNumber,
-        failed = !e.taskInfo.successful,
-        shuffleReadRecords = if (m != null) m.shuffleReadMetrics.recordsRead else 0L,
-        shuffleWriteBytes = if (m != null) m.shuffleWriteMetrics.bytesWritten else 0L,
-        inputBytes = if (m != null) m.inputMetrics.bytesRead else 0L,
-        spillBytes = if (m != null) m.memoryBytesSpilled + m.diskBytesSpilled else 0L)
-    }
-  }
-
-  def probes: Seq[TaskProbe] = synchronized(buf.toVector)
 }

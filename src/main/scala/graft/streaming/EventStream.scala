@@ -662,8 +662,4 @@ object EventStream {
           out.iterator
       }
   }
-
-  /** Output mode each sink should use. */
-  val windowedMode: OutputMode = OutputMode.Append()
-  val statefulMode: OutputMode = OutputMode.Update()
 }

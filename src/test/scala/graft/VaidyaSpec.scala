@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.{Finding, TaskProbe, Vaidya, VaidyaListener}
+import graft.core.{RunListener, TaskProbe}
+import graft.operators.{Finding, Vaidya}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,7 +15,7 @@ class VaidyaSpec extends AnyFunSuite {
   private def probe(stage: Int, recs: Long, attempt: Int = 0,
                     write: Long = 0L, in: Long = 0L, spill: Long = 0L,
                     failed: Boolean = false) =
-    TaskProbe(stage, attempt, failed, recs, write, in, spill)
+    TaskProbe(stage, attempt, failed, recs, write, in, spill, 0L)
 
   private def rule(fs: Seq[Finding], name: String, stage: Option[Int] = None): Finding =
     fs.find(f => f.rule == name && (stage.isEmpty || f.stageId == stage))
@@ -86,7 +87,7 @@ class VaidyaSpec extends AnyFunSuite {
   test("listener + diagnosis flags a real skewed aggregation, clears a balanced one") {
     import spark.implicits._
     def run(key: org.apache.spark.sql.Column): Seq[TaskProbe] = {
-      val l = new VaidyaListener
+      val l = new RunListener
       spark.sparkContext.addSparkListener(l)
       try {
         spark.range(0, 100000)
@@ -98,11 +99,11 @@ class VaidyaSpec extends AnyFunSuite {
         // poll until the probe count stabilizes
         var prev = -1
         var tries = 0
-        while (l.probes.size != prev && tries < 100) {
-          prev = l.probes.size; tries += 1; Thread.sleep(100)
+        while (l.tasks.size != prev && tries < 100) {
+          prev = l.tasks.size; tries += 1; Thread.sleep(100)
         }
       } finally spark.sparkContext.removeSparkListener(l)
-      l.probes
+      l.tasks
     }
     // all rows on ONE key -> one reducer holds everything
     val skewFs = Vaidya.diagnose(run(lit(0L)))

@@ -1,12 +1,13 @@
 #!/bin/bash
 # Commit gate: compile (main + test), run the full verify dump at sf0.001,
 # and oracle-check it with DuckDB. Every commit must pass this first.
-# When engine code (operators/queries/api/sources/functions/core/streaming)
-# is touched, also run the plan-guard suites so a plan regression
-# (unbounded window, lost broadcast, lost pushdown) can't land silently,
-# the codegen-cache suite so a recompiling warm pass or chained
-# append can't either, and the set-similarity suite, the only check of
-# the exact-set collapse path (the board corpus never engages it).
+# When engine code (operators/queries/api/sources/functions/core/streaming,
+# or the top-level mains in src/main/scala/graft/*.scala) is touched,
+# also run the plan-guard suites so a plan regression (unbounded window,
+# lost broadcast, lost pushdown) can't land silently, the codegen-cache
+# suite so a recompiling warm pass or chained append can't either, and
+# the set-similarity suite, the only check of the exact-set collapse
+# path (the board corpus never engages it).
 # Usage: tools/gate.sh [sfDir]   (default /root/testdata/sf0.001)
 set -e -o pipefail
 cd /root/repo
@@ -19,7 +20,7 @@ ENGINE_TOUCHED=0
 # silently skipped the plan-guard + bench gates whenever the match came
 # early in the output
 CHANGED=$({ git status --porcelain; git diff --name-only HEAD~1 2>/dev/null; } || true)
-if grep -qE 'src/main/scala/graft/(operators|queries|api|sources|functions|core|streaming)/' \
+if grep -qE 'src/main/scala/graft/((operators|queries|api|sources|functions|core|streaming)/|[^/]+\.scala$)' \
     <<< "$CHANGED"; then
   ENGINE_TOUCHED=1
   echo "[gate] engine code touched -> running plan-guard suites"
@@ -44,7 +45,10 @@ if [ "${GATE_BENCH:-$ENGINE_TOUCHED}" = "1" ]; then
   # write fails), a stale file from a previous run must not be gated as
   # this run's record
   rm -f target/bench_latest.json
-  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
+  # at the host's core count: a pinned width oversubscribes a smaller
+  # host, and benchgate's CROSS-SHAPE warning flags a baseline taken at
+  # another shape
+  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=$(nproc) \
     tools/run.sh graft.Bench > /dev/null 2>&1
   # gate on the full record (it carries the host shape); it stays under
   # target/ — archiving it into a tracked BENCH_*.json is a separate,
